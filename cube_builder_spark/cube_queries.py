@@ -1452,8 +1452,8 @@ FROM agg
 def k1_cog_structure(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K1 COG writer (sinks/cog.write_cog_band; reference
     image.py:309-378 cog_translate): each tile's scene is encoded as a
-    REAL tiled+overview COG on the executors, decoded back with the
-    paired IFD-walking reader, and the STRUCTURE becomes oracle-checked
+    REAL tiled+overview COG on the executors, decoded back with
+    sources/cog_reader.CogReader, and the STRUCTURE becomes oracle-checked
     columns — internal tile size, overview count, IFDs-lead-data and
     overview-data-first layout (the range-request properties that make
     a COG a COG), NewSubfileType flags, nodata tag, and value checksums
@@ -1462,7 +1462,8 @@ def k1_cog_structure(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from .sinks.cog import read_cog, write_cog_band
+    from .sinks.cog import write_cog_band
+    from .sources.cog_reader import BytesFetcher, CogReader
 
     nrows, ncols = 16, 32
     px = (pixel_plane(spark, sf_dir)
@@ -1475,19 +1476,20 @@ def k1_cog_structure(spark: SparkSession, sf_dir: str) -> DataFrame:
         tile = int(pdf["tile_id"].iloc[0])
         buf = write_cog_band(arr.reshape(nrows, ncols), tile=8,
                              origin=(tile * ncols * 30.0, 0.0))
-        got = read_cog(buf)
-        full = got["array"].astype(np.int64)
-        ovs = got["overviews"]
+        r = CogReader("<bytes>", fetcher=BytesFetcher(buf))
+        full = r.read_level(0).astype(np.int64)
+        ovs = r.levels[1:]
         return pd.DataFrame([{
             "tile_id": tile,
             "width": full.shape[1], "height": full.shape[0],
-            "tile": got["tile"], "n_overviews": len(ovs),
-            "ifds_lead_data": bool(got["ifds_lead_data"]),
-            "overview_data_first": bool(got["overview_data_first"]),
-            "ov_subfile_ok": all(t == 1 for t in got["overview_subfile_types"]),
-            "nodata": got["nodata"],
+            "tile": r.levels[0]["block"][0], "n_overviews": len(ovs),
+            "ifds_lead_data": r.ifds_lead_data,
+            "overview_data_first": r.overview_data_first,
+            "ov_subfile_ok": all(lv["subfile_type"] == 1 for lv in ovs),
+            "nodata": r.geo["nodata"],
             "full_sum": int(full.sum()),
-            "ov_sum": int(ovs[0].astype(np.int64).sum()) if ovs else 0,
+            "ov_sum": (int(r.read_level(1).astype(np.int64).sum())
+                       if ovs else 0),
         }])
 
     return px.groupBy("tile_id").applyInPandas(

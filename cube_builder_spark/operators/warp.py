@@ -611,7 +611,7 @@ def warp_scenes(files: DataFrame, tiles: list[dict], dst_crs,
                 nodata: int = -9999,
                 extra_cols: tuple[str, ...] = ()) -> DataFrame:
     """Executor-side warp (processing.py:303-316 as mapInPandas): each
-    input row is a stdlib-GeoTIFF scene (binaryFile ``content`` +
+    input row is a GeoTIFF/COG scene (binaryFile ``content`` +
     passthrough columns); each output row a destination-grid pixel.
 
     ``tiles``: list of {tile_id, west, north, width, height, res} in
@@ -620,7 +620,7 @@ def warp_scenes(files: DataFrame, tiles: list[dict], dst_crs,
     (corner bbox test in dst space), so disjoint (scene, tile) pairs
     cost nothing. All heavy math is vectorized numpy inside the Arrow
     batch; no shuffle here at all."""
-    from ..sinks.cog import read_geotiff_band
+    from ..sources.cog_reader import read_tiff_band
 
     dst_crs_p, src_crs_p = parse_crs(dst_crs), parse_crs(src_crs)
     extra_cols = list(extra_cols)
@@ -648,7 +648,7 @@ def warp_scenes(files: DataFrame, tiles: list[dict], dst_crs,
         for pdf in batches:
             frames = []
             for i in range(len(pdf)):
-                got = read_geotiff_band(bytes(pdf["content"].iloc[i]))
+                got = read_tiff_band(bytes(pdf["content"].iloc[i]))
                 xmin, xmax, ymin, ymax = scene_bbox_dst(got)
                 src_tr = Affine.from_origin(got["origin"][0], got["origin"][1],
                                             got["pixel_size"][0],

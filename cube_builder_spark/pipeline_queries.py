@@ -1582,19 +1582,6 @@ def s_archive_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                                             _tgz_member_bytes,
                                             _zip_member_from_bytes)
 
-        class _MemFetcher:
-            """RangeFetcher protocol over in-memory bytes (the graded
-            twin of the HTTP range path — same get/size surface)."""
-
-            def __init__(self, buf):
-                self.buf = buf
-
-            def size(self):
-                return len(self.buf)
-
-            def get(self, start, length):
-                return self.buf[start:start + length]
-
         def tar_add(tf, name, payload):
             ti = tarfile.TarInfo(name)
             ti.size = len(payload)
@@ -1638,7 +1625,7 @@ def s_archive_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                     tar_add(tf, f"{scene}_B4.TIF", payload)
                 tar = _remote_tar_member(
                     "mem://archive.tar", "B4", scene,
-                    fetcher=_MemFetcher(pb.getvalue()))
+                    fetcher=BytesFetcher(pb.getvalue()))
                 # BigTIFF: closed-form array -> v43 encode -> zip with
                 # decoy -> band-group resolve -> CogReader decode
                 ii = np.arange(4)[:, None]

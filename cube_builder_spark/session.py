@@ -119,9 +119,8 @@ def get_spark(app_name: str = "cube-builder-spark", cpus: int | None = None,
     # spark_daemon.py with pandas/pyarrow already imported (COW), so a
     # worker-pool cull mid-session costs milliseconds instead of a
     # ~2.3 s/worker import storm. The daemon is spawned by the JVM
-    # with the inherited PYTHONPATH, so the repo root must be on it
-    # BEFORE the JVM starts; both steps are skipped if a different
-    # daemon is already configured via env.
+    # with the inherited PYTHONPATH, so the repo root is put on it
+    # BEFORE the JVM starts.
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     pp = os.environ.get("PYTHONPATH", "")
     if repo_root not in pp.split(os.pathsep):
@@ -142,12 +141,12 @@ def get_spark(app_name: str = "cube-builder-spark", cpus: int | None = None,
         # Long-session hygiene (r15): a bench/ETL driver that runs
         # hundreds of distinct queries in one session accumulates
         # per-query status state (job/stage/SQL-execution records with
-        # full plan graphs) in the driver heap even with the UI off,
-        # in the driver heap even with the UI off. Bound the status
-        # stores. (A shorter spark.cleaner.periodicGC.interval was
-        # tried and rejected: a forced full System.gc() can land
-        # inside a timed query; CPython's refcounting already releases
-        # py4j-held JVM state promptly.)
+        # full plan graphs) in the driver heap even with the UI off.
+        # Bound the status stores. (A shorter
+        # spark.cleaner.periodicGC.interval was tried and rejected: a
+        # forced full System.gc() can land inside a timed query;
+        # CPython's refcounting already releases py4j-held JVM state
+        # promptly.)
         .config("spark.ui.retainedJobs", "200")
         .config("spark.ui.retainedStages", "200")
         .config("spark.ui.retainedTasks", "5000")

@@ -1,23 +1,23 @@
-"""K1 — GeoTIFF export of cube bands.
+"""K1 — GeoTIFF export of cube bands, pure stdlib (struct + zlib).
 
 Reference: ``image.py:309-378`` (save_as_cog / generate_cogs: tiled
-deflate GeoTIFF with georeferencing). Two paths here:
+deflate GeoTIFF with georeferencing). One IFD writer, ``_encode_tiff``,
+lays out every file: the header, each IFD followed by its external tag
+payloads, then the block data in reverse IFD order. It switches to
+BigTIFF when classic 32-bit offsets would overflow. Two band encoders
+call it:
 
-- ``write_geotiff_band``: a REAL minimal GeoTIFF encoder in pure
-  stdlib (struct + zlib): single-band, striped, deflate-compressed,
-  with ModelPixelScale/ModelTiepoint georeferencing tags and the
-  GeoTIFF nodata ASCII tag. Enough for GDAL/QGIS to open the band
-  correctly placed. Verified by the paired ``read_geotiff_band``.
-- ``write_cog_band``: a REAL Cloud-Optimized GeoTIFF, still pure
-  stdlib — internal 2^n tiling, per-tile deflate, nearest-resampled
-  2x overview pyramid in chained IFDs, IFDs leading the file and tile
-  data ordered smallest-overview-first (the range-request-friendly
-  COG layout). Verified by the paired ``read_cog``.
-``write_cog_band`` IS the production writer here: its output is a
-structurally valid COG (tiled + overview IFDs, checked by
-tests/test_cog.py's layout checker and round-tripped by ``read_cog``),
-so no separate rasterio-gated path exists — a GDAL-blessed variant
-would only re-encode the same layout.
+- ``write_geotiff_band``: one IFD holding one image-wide strip,
+  deflate-compressed or raw.
+- ``write_cog_band``: a Cloud-Optimized GeoTIFF — internal 2^n tiling,
+  per-tile deflate, a nearest-resampled 2x overview pyramid in chained
+  IFDs. With data in reverse IFD order, all IFDs lead the file and tile
+  data runs smallest overview first, full resolution last (the
+  range-request-friendly COG layout).
+
+Both carry ModelPixelScale/ModelTiepoint georeferencing and the GDAL
+nodata ASCII tag, enough for GDAL/QGIS to open the band correctly
+placed. ``sources/cog_reader.CogReader`` reads everything written here.
 
 The Spark side (``export_band_tiffs``) is an ``applyInPandas`` over
 (tile, period, band) groups — the same per-product fan-out the
@@ -40,122 +40,118 @@ _TAG_TYPES = {"SHORT": 3, "LONG": 4, "DOUBLE": 12, "ASCII": 2, "LONG8": 16}
 _CLASSIC_OFFSET_MAX = 0xFFFFFFFF
 
 
-def _ifd_entry(tag: int, ttype: int, count: int, value_or_offset: int) -> bytes:
-    return struct.pack("<HHII", tag, ttype, count, value_or_offset)
+def _pack_tag_values(ttype: str, values) -> bytes:
+    if isinstance(values, bytes):
+        return values
+    fmt = {"SHORT": "H", "LONG": "I", "DOUBLE": "d", "LONG8": "Q"}[ttype]
+    return struct.pack(f"<{len(values)}{fmt}", *values)
+
+
+def _band_tags(w: int, h: int, compression: int) -> list:
+    """Tags of one single-band int16 image: (tag, type, values)."""
+    return [(256, "SHORT", [w]), (257, "SHORT", [h]),     # width, length
+            (258, "SHORT", [16]),                         # BitsPerSample
+            (259, "SHORT", [compression]),                # 1 none, 8 deflate
+            (262, "SHORT", [1]),                          # BlackIsZero
+            (277, "SHORT", [1]),                          # SamplesPerPixel
+            (339, "SHORT", [2])]                          # signed int
+
+
+def _geo_tags(pixel_size, origin, nodata: int | None) -> list:
+    tags = [(33550, "DOUBLE", struct.pack(               # ModelPixelScale
+                "<3d", pixel_size[0], pixel_size[1], 0.0)),
+            (33922, "DOUBLE", struct.pack(               # ModelTiepoint
+                "<6d", 0.0, 0.0, 0.0, origin[0], origin[1], 0.0))]
+    if nodata is not None:
+        tags.append((42113, "ASCII", (str(nodata) + "\x00").encode()))
+    return tags
+
+
+def _encode_tiff(images: list, bigtiff: bool = False) -> bytes:
+    """The one IFD writer. ``images`` holds (tags, blocks, tiled) per
+    IFD; the block offset/byte-count tags (TileOffsets/TileByteCounts,
+    or StripOffsets/StripByteCounts) are added here. Two passes: lay out
+    header, IFDs with their external payloads and the block data, then
+    assemble with the offsets known. BigTIFF widens every structural
+    field: 16-byte header, 8-byte entry counts, 20-byte entries, 8-byte
+    inline values and next-IFD pointers, LONG8 block offsets/counts."""
+    word = "LONG8" if bigtiff else "LONG"
+    ifds = []
+    for tags, blocks, tiled in images:
+        off_tag, cnt_tag = (324, 325) if tiled else (273, 279)
+        ifds.append(sorted(tags + [(off_tag, word, [0] * len(blocks)),
+                                   (cnt_tag, word, [len(b) for b in blocks])],
+                           key=lambda e: e[0]))
+    n_len, e_len, inline = (8, 20, 8) if bigtiff else (2, 12, 4)
+    ptr = "Q" if bigtiff else "I"
+
+    # Pass 1 — layout.
+    pos = 16 if bigtiff else 8
+    ifd_offsets, ext_bases = [], []
+    for ifd in ifds:
+        ifd_offsets.append(pos)
+        pos += n_len + len(ifd) * e_len + inline
+        ext_bases.append(pos)
+        for _t, ttype, values in ifd:
+            payload = _pack_tag_values(ttype, values)
+            if len(payload) > inline:
+                pos += len(payload)
+    # block data in reverse IFD order: a pyramid's smallest overview
+    # first, full resolution last
+    block_offsets = [None] * len(images)
+    for i in reversed(range(len(images))):
+        block_offsets[i] = []
+        for b in images[i][1]:
+            block_offsets[i].append(pos)
+            pos += len(b)
+    if not bigtiff and pos > _CLASSIC_OFFSET_MAX:
+        # classic LONG offsets would overflow — restart in BigTIFF
+        # (the reference's rio_cogeo profile is BIGTIFF=IF_SAFER:
+        # silently upgrade rather than emit wrapped offsets)
+        return _encode_tiff(images, bigtiff=True)
+
+    # Pass 2 — assemble.
+    out = [struct.pack("<2sHHHQ", b"II", 43, 8, 0, 16) if bigtiff
+           else struct.pack("<2sHI", b"II", 42, 8)]
+    for i, ifd in enumerate(ifds):
+        ext_off = ext_bases[i]
+        entries, ext = [struct.pack("<" + ("Q" if bigtiff else "H"),
+                                    len(ifd))], []
+        for t, ttype, values in ifd:
+            if t in (273, 324):
+                values = block_offsets[i]
+            payload = _pack_tag_values(ttype, values)
+            count = (len(payload) // 8 if ttype == "DOUBLE" else
+                     len(payload) if ttype == "ASCII" else len(values))
+            if len(payload) > inline:
+                ref = struct.pack("<" + ptr, ext_off)
+                ext_off += len(payload)
+                ext.append(payload)
+            else:
+                ref = payload.ljust(inline, b"\x00")
+            entries.append(struct.pack("<HH" + ptr, t, _TAG_TYPES[ttype],
+                                       count) + ref)
+        next_ifd = ifd_offsets[i + 1] if i + 1 < len(ifds) else 0
+        entries.append(struct.pack("<" + ptr, next_ifd))
+        out += entries + ext
+    for i in reversed(range(len(images))):
+        out += images[i][1]
+    return b"".join(out)
 
 
 def write_geotiff_band(arr: np.ndarray, *, pixel_size=(30.0, 30.0),
                        origin=(0.0, 0.0), nodata: int | None = -9999,
                        compress: bool = True) -> bytes:
-    """Encode an (h, w) int16 array as a little-endian GeoTIFF."""
+    """Encode an (h, w) int16 array as a little-endian GeoTIFF with one
+    image-wide strip."""
     arr = np.ascontiguousarray(arr, dtype="<i2")
     h, w = arr.shape
     raw = arr.tobytes()
-    data = zlib.compress(raw, 6) if compress else raw
-
-    entries = []        # (tag, type, count, inline_value or payload bytes)
-    def tag(t, ttype, values):
-        entries.append((t, ttype, values))
-
-    nodata_ascii = (str(nodata) + "\x00").encode() if nodata is not None else None
-    scale = struct.pack("<3d", pixel_size[0], pixel_size[1], 0.0)
-    tiepoint = struct.pack("<6d", 0.0, 0.0, 0.0, origin[0], origin[1], 0.0)
-
-    tag(256, "SHORT", [w])                 # ImageWidth
-    tag(257, "SHORT", [h])                 # ImageLength
-    tag(258, "SHORT", [16])                # BitsPerSample
-    tag(259, "SHORT", [8 if compress else 1])   # Compression: deflate/none
-    tag(262, "SHORT", [1])                 # Photometric: BlackIsZero
-    tag(273, "LONG", None)                 # StripOffsets (patched)
-    tag(277, "SHORT", [1])                 # SamplesPerPixel
-    tag(278, "SHORT", [h])                 # RowsPerStrip (single strip)
-    tag(279, "LONG", [len(data)])          # StripByteCounts
-    tag(339, "SHORT", [2])                 # SampleFormat: signed int
-    tag(33550, "DOUBLE", scale)            # ModelPixelScale
-    tag(33922, "DOUBLE", tiepoint)         # ModelTiepoint
-    if nodata_ascii:
-        tag(42113, "ASCII", nodata_ascii)  # GDAL_NODATA
-
-    header = struct.pack("<2sHI", b"II", 42, 8)
-    ifd_off = 8
-    n = len(entries)
-    ifd_size = 2 + n * 12 + 4
-    ext_off = ifd_off + ifd_size           # external payloads follow IFD
-    ext = b""
-    body_entries = []
-    for t, ttype, values in entries:
-        code = _TAG_TYPES[ttype]
-        if t == 273:
-            body_entries.append((t, code, 1, None))     # patch later
-            continue
-        if ttype in ("SHORT", "LONG") and len(values) == 1:
-            v = values[0]
-            packed = struct.pack("<H2x", v) if ttype == "SHORT" else struct.pack("<I", v)
-            body_entries.append((t, code, 1, packed.ljust(4, b"\x00")))
-        else:
-            payload = values if isinstance(values, bytes) else b"".join(
-                struct.pack("<H", v) for v in values)
-            count = (len(payload) // 8 if ttype == "DOUBLE"
-                     else len(payload) if ttype == "ASCII" else len(values))
-            body_entries.append((t, code, count, ext_off + len(ext)))
-            ext += payload
-    strip_off = ext_off + len(ext)
-
-    ifd = struct.pack("<H", n)
-    for t, code, count, val in body_entries:
-        if t == 273:
-            ifd += _ifd_entry(273, _TAG_TYPES["LONG"], 1, strip_off)
-        elif isinstance(val, bytes):
-            ifd += struct.pack("<HHI4s", t, code, count, val)
-        else:
-            ifd += _ifd_entry(t, code, count, val)
-    ifd += struct.pack("<I", 0)            # next IFD = none
-    return header + ifd + ext + data
-
-
-def read_geotiff_band(buf: bytes) -> dict:
-    """Paired minimal reader (tests): parse IFD, return array + geo."""
-    assert buf[:4] == b"II\x2a\x00"
-    (ifd_off,) = struct.unpack_from("<I", buf, 4)
-    (n,) = struct.unpack_from("<H", buf, ifd_off)
-    tags = {}
-    for i in range(n):
-        t, code, count, raw = struct.unpack_from("<HHI4s", buf, ifd_off + 2 + i * 12)
-        tags[t] = (code, count, raw)
-
-    def val(t):
-        code, count, raw = tags[t]
-        if code == 3:
-            return struct.unpack("<H2x", raw)[0]
-        if code == 4:
-            return struct.unpack("<I", raw)[0]
-        (off,) = struct.unpack("<I", raw)
-        if code == 12:
-            return struct.unpack_from(f"<{count}d", buf, off)
-        if code == 2:
-            return buf[off:off + count].rstrip(b"\x00").decode()
-        raise AssertionError(code)
-
-    w, h = val(256), val(257)
-    off, cnt = val(273), val(279)
-    data = buf[off:off + cnt]
-    if val(259) == 8:
-        data = zlib.decompress(data)
-    arr = np.frombuffer(data, "<i2").reshape(h, w)
-    scale, tie = val(33550), val(33922)
-    return {"array": arr, "pixel_size": (scale[0], scale[1]),
-            "origin": (tie[3], tie[4]),
-            "nodata": int(val(42113)) if 42113 in tags else None}
-
-
-# COG — internal tiling + overview pyramid (still pure stdlib) ---------------
-
-
-def _pack_tag_values(ttype: str, values) -> bytes:
-    if isinstance(values, bytes):
-        return values
-    fmt = {"SHORT": "H", "LONG": "I", "DOUBLE": "d", "LONG8": "Q"}[ttype]
-    return b"".join(struct.pack("<" + fmt, v) for v in values)
+    tags = (_band_tags(w, h, 8 if compress else 1)
+            + [(278, "SHORT", [h])]                       # RowsPerStrip
+            + _geo_tags(pixel_size, origin, nodata))
+    return _encode_tiff(
+        [(tags, [zlib.compress(raw, 6) if compress else raw], False)])
 
 
 def _tile_grid(arr: np.ndarray, tile: int) -> list[bytes]:
@@ -190,174 +186,17 @@ def write_cog_band(arr: np.ndarray, *, tile: int = 512,
     levels = [arr]
     while min(levels[-1].shape) > tile:
         levels.append(np.ascontiguousarray(levels[-1][::2, ::2]))
-
-    level_tiles = [_tile_grid(a, tile) for a in levels]
-
-    nodata_ascii = (str(nodata) + "\x00").encode() if nodata is not None else None
-    scale = struct.pack("<3d", pixel_size[0], pixel_size[1], 0.0)
-    tiepoint = struct.pack("<6d", 0.0, 0.0, 0.0, origin[0], origin[1], 0.0)
-
-    # Per-level IFD entries (tags ascending): TileOffsets(324) patched
-    # once the data region is laid out.
-    level_entries = []
-    for li, (a, tiles) in enumerate(zip(levels, level_tiles)):
+    images = []
+    for li, a in enumerate(levels):
         h, w = a.shape
-        e = []
-        if li > 0:
-            e.append((254, "LONG", [1]))          # NewSubfileType: overview
-        e += [(256, "SHORT", [w]), (257, "SHORT", [h]),
-              (258, "SHORT", [16]), (259, "SHORT", [8]),
-              (262, "SHORT", [1]), (277, "SHORT", [1]),
-              (322, "SHORT", [tile]), (323, "SHORT", [tile]),
-              (324, "LONG", [0] * len(tiles)),
-              (325, "LONG", [len(t) for t in tiles]),
-              (339, "SHORT", [2])]
-        if li == 0:
-            e += [(33550, "DOUBLE", scale), (33922, "DOUBLE", tiepoint)]
-            if nodata_ascii:
-                e.append((42113, "ASCII", nodata_ascii))
-        level_entries.append(e)
-
-    # Pass 1 — layout: header, then each IFD + its external payloads.
-    # BigTIFF widens every structural field: 16-byte header, 8-byte
-    # entry counts, 20-byte entries, 8-byte inline values and next-IFD
-    # pointers; tile offsets/counts become LONG8.
-    if bigtiff:
-        for e in level_entries:
-            for i, (t, ttype, values) in enumerate(e):
-                if t in (324, 325):
-                    e[i] = (t, "LONG8", values)
-    hdr_len = 16 if bigtiff else 8
-    ifd_fixed = (8, 20, 8) if bigtiff else (2, 12, 4)  # count, entry, next
-    inline_max = 8 if bigtiff else 4
-    pos = hdr_len
-    ifd_offsets, ext_bases = [], []
-    for e in level_entries:
-        ifd_offsets.append(pos)
-        pos += ifd_fixed[0] + len(e) * ifd_fixed[1] + ifd_fixed[2]
-        ext_bases.append(pos)
-        for _t, ttype, values in e:
-            payload = _pack_tag_values(ttype, values)
-            if len(payload) > inline_max:
-                pos += len(payload)
-    # Tile data: smallest overview first, full-res last.
-    tile_offsets = [None] * len(levels)
-    for li in range(len(levels) - 1, -1, -1):
-        offs = []
-        for t in level_tiles[li]:
-            offs.append(pos)
-            pos += len(t)
-        tile_offsets[li] = offs
-    if not bigtiff and pos > _CLASSIC_OFFSET_MAX:
-        # classic LONG offsets would overflow — restart in BigTIFF
-        # (the reference's rio_cogeo profile is BIGTIFF=IF_SAFER:
-        # silently upgrade rather than emit wrapped offsets)
-        return write_cog_band(arr, tile=tile, pixel_size=pixel_size,
-                              origin=origin, nodata=nodata, bigtiff=True)
-
-    # Pass 2 — assemble.
-    if bigtiff:
-        out = [struct.pack("<2sHHHQ", b"II", 43, 8, 0, 16)]
-    else:
-        out = [struct.pack("<2sHI", b"II", 42, 8)]
-    for li, e in enumerate(level_entries):
-        ext_off = ext_bases[li]
-        ifd = [struct.pack("<Q" if bigtiff else "<H", len(e))]
-        ext = []
-        for t, ttype, values in e:
-            if t == 324:
-                values = tile_offsets[li]
-            payload = _pack_tag_values(ttype, values)
-            count = (len(payload) // 8 if ttype == "DOUBLE" else
-                     len(payload) if ttype == "ASCII" else len(values))
-            code = _TAG_TYPES[ttype]
-            if bigtiff:
-                if len(payload) > 8:
-                    ifd.append(struct.pack(
-                        "<HHQQ", t, code, count,
-                        ext_off + sum(map(len, ext))))
-                    ext.append(payload)
-                else:
-                    ifd.append(struct.pack("<HHQ8s", t, code, count,
-                                           payload.ljust(8, b"\x00")))
-            elif len(payload) > 4:
-                ifd.append(_ifd_entry(t, code, count, ext_off + sum(map(len, ext))))
-                ext.append(payload)
-            else:
-                ifd.append(struct.pack("<HHI4s", t, code, count,
-                                       payload.ljust(4, b"\x00")))
-        next_ifd = ifd_offsets[li + 1] if li + 1 < len(levels) else 0
-        ifd.append(struct.pack("<Q" if bigtiff else "<I", next_ifd))
-        out += ifd + ext
-    for li in range(len(levels) - 1, -1, -1):
-        out += level_tiles[li]
-    return b"".join(out)
-
-
-def read_cog(buf: bytes) -> dict:
-    """Paired reader: walk the IFD chain, decode deflate tiles, crop
-    padding; returns full-res array, overview arrays, geo tags, and the
-    physical layout facts the tests assert on (tile size, IFD count,
-    whether tile data trails the IFDs)."""
-    assert buf[:4] == b"II\x2a\x00"
-    (ifd_off,) = struct.unpack_from("<I", buf, 4)
-    levels, geo, max_ifd_end = [], {}, 0
-    first = True
-    while ifd_off:
-        (n,) = struct.unpack_from("<H", buf, ifd_off)
-        max_ifd_end = max(max_ifd_end, ifd_off + 2 + n * 12 + 4)
-        tags = {}
-        for i in range(n):
-            t, code, count, raw = struct.unpack_from(
-                "<HHI4s", buf, ifd_off + 2 + i * 12)
-            tags[t] = (code, count, raw)
-
-        def val(t):
-            code, count, raw = tags[t]
-            if count == 1 and code == 3:
-                return struct.unpack("<H2x", raw)[0]
-            if count == 1 and code == 4:
-                return struct.unpack("<I", raw)[0]
-            (off,) = struct.unpack("<I", raw)
-            if code == 12:
-                return struct.unpack_from(f"<{count}d", buf, off)
-            if code == 2:
-                return buf[off:off + count].rstrip(b"\x00").decode()
-            fmt = {3: "H", 4: "I"}[code]
-            return struct.unpack_from(f"<{count}{fmt}", buf, off)
-
-        w, h, tile = val(256), val(257), val(322)
-        offs = val(324)
-        cnts = val(325)
-        if isinstance(offs, int):
-            offs, cnts = (offs,), (cnts,)
-        tx = (w + tile - 1) // tile
-        ty = (h + tile - 1) // tile
-        full = np.zeros((ty * tile, tx * tile), "<i2")
-        for i, (o, c) in enumerate(zip(offs, cnts)):
-            block = np.frombuffer(zlib.decompress(buf[o:o + c]),
-                                  "<i2").reshape(tile, tile)
-            r, col = divmod(i, tx)
-            full[r * tile:(r + 1) * tile, col * tile:(col + 1) * tile] = block
-        levels.append({"array": full[:h, :w], "tile": tile,
-                       "min_tile_offset": min(offs),
-                       "subfile_type": val(254) if 254 in tags else 0})
-        if first:
-            scale, tie = val(33550), val(33922)
-            geo = {"pixel_size": (scale[0], scale[1]),
-                   "origin": (tie[3], tie[4]),
-                   "nodata": int(val(42113)) if 42113 in tags else None}
-            first = False
-        (ifd_off,) = struct.unpack_from("<I", buf, ifd_off + 2 + n * 12)
-    return {"array": levels[0]["array"], "tile": levels[0]["tile"],
-            "overviews": [lv["array"] for lv in levels[1:]],
-            "overview_subfile_types": [lv["subfile_type"] for lv in levels[1:]],
-            "ifds_lead_data": max_ifd_end <= min(lv["min_tile_offset"]
-                                                 for lv in levels),
-            "overview_data_first": (len(levels) < 2 or
-                                    levels[-1]["min_tile_offset"]
-                                    < levels[0]["min_tile_offset"]),
-            **geo}
+        tags = _band_tags(w, h, 8) + [(322, "SHORT", [tile]),
+                                      (323, "SHORT", [tile])]
+        if li:
+            tags.append((254, "LONG", [1]))      # NewSubfileType: overview
+        else:
+            tags += _geo_tags(pixel_size, origin, nodata)
+        images.append((tags, _tile_grid(a, tile), True))
+    return _encode_tiff(images, bigtiff)
 
 
 def export_band_tiffs(cube: DataFrame, out_dir: str, ncols: int = 32,

@@ -1,17 +1,25 @@
-"""S5 (remote half) — ranged Cloud-Optimized-GeoTIFF reader, stdlib
-only.
+"""The program's one TIFF reader, stdlib only (S5).
+
+``CogReader`` parses every TIFF the engine reads: striped scene files
+from ``sinks/cog.write_geotiff_band``, tiled COGs with overview
+pyramids from ``write_cog_band``, classic TIFF and BigTIFF. Bytes come
+through a fetcher: ``RangeFetcher`` for local paths, file:// and
+http(s):// URIs, ``BytesFetcher`` for buffers already in memory
+(binaryFile content, archive members). ``read_tiff_band`` is the
+whole-band decode the ingest path uses. Only little-endian,
+single-band int16 files with no or deflate compression are read;
+anything else raises ``ValueError``.
 
 Reference: GDAL ``/vsicurl`` access with ``GDAL_DISABLE_READDIR_ON_OPEN``
 and HTTP range reads (``config.py:85-88``,
 ``drivers/datasets/__init__.py:78-83``): open a remote COG, read its
-header/IFDs cheaply, then fetch only the tile byte-ranges a requested
-window intersects. This module reproduces that access pattern with
-``urllib`` + the repo's own GeoTIFF codec (sinks/cog.py) — no GDAL.
+header/IFDs cheaply, then fetch only the block byte-ranges a requested
+window intersects.
 
 Layout contract (what makes the range pattern work, and what
 ``write_cog_band`` produces): IFDs lead the file, tile data trails,
 overviews' data precede full-res data — so header + overview reads
-touch only the file's head.
+touch only the file's head. The reader reports both facts.
 
 Executor use: the fetcher is plain Python/urllib, so a pandas-UDF
 reader can window remote COGs per task exactly like the reference's
@@ -28,11 +36,17 @@ import numpy as np
 
 _BLOCK = 16 * 1024
 
+# TIFF field type code -> (bytes per value, struct format); ASCII (2)
+# is decoded as text
+_FIELD_TYPES = {2: (1, None), 3: (2, "H"), 4: (4, "I"), 12: (8, "d"),
+                16: (8, "Q")}
+_UINT, _DOUBLE, _ASCII = (3, 4, 16), (12,), (2,)
+
 
 class BytesFetcher:
     """RangeFetcher interface over an in-memory buffer — lets
-    CogReader parse archive-member bytes (e.g. a BigTIFF inside a
-    zip/tar) without spooling to disk."""
+    CogReader parse binaryFile content and archive-member bytes (and
+    the tar walk resolve members) without spooling to disk."""
 
     def __init__(self, data: bytes):
         self._d = data
@@ -158,29 +172,41 @@ class RangeFetcher:
 
 
 class CogReader:
-    """Lazy COG: parses the IFD chain from ranged reads at open; tile
-    payloads are fetched only when a window asks for them."""
+    """Lazy TIFF: parses the IFD chain from ranged reads at open; block
+    payloads are fetched only when a window asks for them.
 
-    def __init__(self, uri: str, fetcher: RangeFetcher | None = None):
+    Each level (IFD) is a grid of blocks: ``block`` is the (rows, cols)
+    of a tile, or (RowsPerStrip, image width) for a striped file, whose
+    last strip may be short. ``header_end`` is the end of the furthest
+    structural read (IFDs and their tag payloads), from which the COG
+    layout facts ``ifds_lead_data`` and ``overview_data_first`` follow."""
+
+    def __init__(self, uri: str,
+                 fetcher: RangeFetcher | BytesFetcher | None = None):
         self.fetcher = fetcher or RangeFetcher(uri)
-        get = self.fetcher.get
         self.levels: list[dict] = []
         self.geo: dict = {}
-        # corrupt-input posture (differential-fuzz hardened, round 8):
-        # every malformed header/IFD must surface as a clean ValueError
-        # — never a hang (IFD cycle), a multi-GB fetch (bogus count),
-        # an OSError'd seek (bogus offset), or a silent wrong array.
-        # struct/KeyError/unicode failures from flipped bytes are
-        # normalized below.
+        self.header_end = 0
+        # corrupt-input posture (differential-fuzz hardened): every
+        # malformed or unsupported header/IFD must surface as a clean
+        # ValueError — never a hang (IFD cycle), a multi-GB fetch
+        # (bogus count), an OSError'd seek (bogus offset), or a silent
+        # wrong array. struct/KeyError/unicode failures from flipped
+        # bytes are normalized below.
         try:
-            self._parse_header(uri, get)
-        except (struct.error, KeyError, UnicodeDecodeError,
+            self._parse_header(uri)
+        except (struct.error, KeyError, IndexError, UnicodeDecodeError,
                 OverflowError, MemoryError) as e:
             raise ValueError(f"corrupt TIFF structure: {e!r}") from e
         if not self.levels:
             raise ValueError("corrupt TIFF: empty IFD chain")
 
-    def _parse_header(self, uri: str, get):
+    def _get(self, start: int, length: int) -> bytes:
+        self.header_end = max(self.header_end, start + length)
+        return self.fetcher.get(start, length)
+
+    def _parse_header(self, uri: str):
+        get = self._get
         magic = get(0, 4)
         if magic == b"II\x2a\x00":                 # classic TIFF (42)
             big = False
@@ -198,26 +224,20 @@ class CogReader:
         else:
             raise ValueError(f"not a little-endian TIFF: {uri!r}")
         self.bigtiff = big
-        # structural widths: (count-field, entry, entry-fmt, inline,
-        # offset-fmt)
+        # structural widths: count field, entry, entry format, inline
+        # value bytes, offset format
         n_len, e_len, e_fmt, inline, off_fmt = (
             (8, 20, "<HHQ8s", 8, "<Q") if big else
             (2, 12, "<HHI4s", 4, "<I"))
-        self._parse_ifds(get, ifd_off, big, n_len, e_len, e_fmt,
-                         inline, off_fmt, set())
-
-    def _parse_ifds(self, get, ifd_off, big, n_len, e_len, e_fmt,
-                    inline, off_fmt, seen_offsets):
-        first = True
+        seen = set()
         while ifd_off:
-            if ifd_off in seen_offsets or len(seen_offsets) > 64:
+            if ifd_off in seen or len(seen) > 64:
                 # a cycle (or absurd chain length) in the next-IFD
                 # pointers would loop forever on corrupt input
                 raise ValueError(
                     f"corrupt IFD chain: cycle or >64 IFDs at {ifd_off}")
-            seen_offsets.add(ifd_off)
-            (n,) = struct.unpack(
-                "<Q" if big else "<H", get(ifd_off, n_len))
+            seen.add(ifd_off)
+            (n,) = struct.unpack("<Q" if big else "<H", get(ifd_off, n_len))
             # classic TIFF bounds n at 65535 by its 16-bit count field;
             # BigTIFF's 64-bit count would let a corrupt/truncated file
             # drive a multi-GB ranged fetch here. No real IFD carries
@@ -232,90 +252,133 @@ class CogReader:
                 t, code, count, raw = struct.unpack_from(
                     e_fmt, raw_entries, i * e_len)
                 tags[t] = (code, count, raw)
-
-            def val(t, tags=tags, get=get):
-                if t not in tags:
-                    raise ValueError(f"corrupt TIFF: missing tag {t}")
-                code, count, raw = tags[t]
-                esize = {2: 1, 3: 2, 4: 4, 12: 8, 16: 8, 17: 8}[code]
-                fmt = {3: "H", 4: "I", 12: "d", 16: "Q", 17: "q"}.get(code)
-                size = esize * count
-                # a corrupt count field must not drive an unbounded
-                # fetch/allocation — no tag payload can exceed the file
-                if size > self.fetcher.size():
-                    raise ValueError(
-                        f"corrupt TIFF: tag {t} payload {size}B exceeds "
-                        f"file size")
-                if size <= inline:
-                    if code == 2:
-                        return raw[:size].rstrip(b"\x00").decode()
-                    vals = struct.unpack_from(f"<{count}{fmt}", raw)
-                else:
-                    (off,) = struct.unpack_from(off_fmt, raw)
-                    payload = get(off, size)
-                    if code == 2:
-                        return payload.rstrip(b"\x00").decode()
-                    vals = struct.unpack(f"<{count}{fmt}", payload)
-                return vals[0] if count == 1 else vals
-
-            w, h, tile = val(256), val(257), val(322)
-            offs, cnts = val(324), val(325)
-            if isinstance(offs, int):
-                offs, cnts = (offs,), (cnts,)
-            self.levels.append({
-                "width": w, "height": h, "tile": tile,
-                "offsets": tuple(offs), "counts": tuple(cnts),
-                "subfile_type": val(254) if 254 in tags else 0})
-            if first:
-                scale, tie = val(33550), val(33922)
-                self.geo = {"pixel_size": (scale[0], scale[1]),
-                            "origin": (tie[3], tie[4]),
-                            "nodata": (int(val(42113))
-                                       if 42113 in tags else None)}
-                first = False
+            self._add_level(tags, inline, off_fmt)
             (ifd_off,) = struct.unpack(
-                "<Q" if big else "<I",
-                get(ifd_off + n_len + n * e_len, n_len if big else 4))
+                off_fmt, get(ifd_off + n_len + n * e_len, inline))
+
+    def _add_level(self, tags: dict, inline: int, off_fmt: str):
+        def vals(t, codes=_UINT):
+            if t not in tags:
+                raise ValueError(f"corrupt TIFF: missing tag {t}")
+            code, count, raw = tags[t]
+            if code not in codes:
+                raise ValueError(f"corrupt TIFF: tag {t} has type {code}")
+            esize, fmt = _FIELD_TYPES[code]
+            size = esize * count
+            # a corrupt count field must not drive an unbounded
+            # fetch/allocation — no tag payload can exceed the file
+            if count == 0 or size > self.fetcher.size():
+                raise ValueError(
+                    f"corrupt TIFF: tag {t} holds {count} values")
+            if size <= inline:
+                payload = raw[:size]
+            else:
+                payload = self._get(struct.unpack_from(off_fmt, raw)[0],
+                                    size)
+            if code == 2:
+                return payload.rstrip(b"\x00").decode()
+            return struct.unpack(f"<{count}{fmt}", payload)
+
+        def val(t, default=None):
+            return default if t not in tags and default is not None \
+                else vals(t)[0]
+
+        w, h = val(256), val(257)
+        compression = val(259, 1)
+        if compression not in (1, 8):
+            raise ValueError(f"unsupported TIFF compression {compression}")
+        if (val(258, 1) != 16 or val(339, 2) != 2 or val(277, 1) != 1
+                or val(317, 1) != 1):
+            raise ValueError("unsupported TIFF samples: only single-band "
+                             "int16 without predictor is read")
+        tiled = 322 in tags
+        if tiled:
+            block = (val(323), val(322))
+            offs, cnts = vals(324), vals(325)
+        else:
+            block = (min(val(278, h), h), w)
+            offs, cnts = vals(273), vals(279)
+        if min(w, h, *block) <= 0:
+            raise ValueError(f"corrupt TIFF: empty image or block "
+                             f"{(h, w)}/{block}")
+        n_blocks = -(-h // block[0]) * -(-w // block[1])
+        if len(offs) != n_blocks or len(cnts) != n_blocks:
+            raise ValueError(f"corrupt TIFF: {len(offs)} offsets and "
+                             f"{len(cnts)} counts for {n_blocks} blocks")
+        self.levels.append({
+            "width": w, "height": h, "block": block, "tiled": tiled,
+            "compression": compression, "offsets": offs, "counts": cnts,
+            "subfile_type": val(254, 0)})
+        if len(self.levels) == 1:
+            scale, tie = vals(33550, _DOUBLE), vals(33922, _DOUBLE)
+            self.geo = {"pixel_size": (scale[0], scale[1]),
+                        "origin": (tie[3], tie[4]),
+                        "nodata": (int(vals(42113, _ASCII))
+                                   if 42113 in tags else None)}
+
+    @property
+    def ifds_lead_data(self) -> bool:
+        """Every IFD and tag payload precedes all block data, so one
+        read of the file's head gets the whole structure."""
+        return self.header_end <= min(min(lv["offsets"])
+                                      for lv in self.levels)
+
+    @property
+    def overview_data_first(self) -> bool:
+        """The smallest overview's data precedes full-resolution data."""
+        return (len(self.levels) < 2 or min(self.levels[-1]["offsets"])
+                < min(self.levels[0]["offsets"]))
 
     def read_window(self, row0: int, col0: int, height: int, width: int,
                     level: int = 0) -> np.ndarray:
-        """Decode exactly the tiles intersecting the window at the given
-        pyramid level; bytes fetched ≈ the window's compressed tiles."""
+        """Decode exactly the blocks intersecting the window at the
+        given pyramid level; bytes fetched ≈ the window's compressed
+        blocks."""
         lv = self.levels[level]
-        tile, w, h = lv["tile"], lv["width"], lv["height"]
+        (bh, bw), w, h = lv["block"], lv["width"], lv["height"]
         row1 = min(row0 + height, h)
         col1 = min(col0 + width, w)
         if row0 < 0 or col0 < 0 or row0 >= h or col0 >= w:
             raise IndexError(f"window ({row0},{col0})+({height},{width}) "
                              f"outside level {level} shape ({h},{w})")
-        tx = (w + tile - 1) // tile
+        across = -(-w // bw)
         out = np.zeros((row1 - row0, col1 - col0), "<i2")
-        for tr in range(row0 // tile, (row1 - 1) // tile + 1):
-            for tc in range(col0 // tile, (col1 - 1) // tile + 1):
-                i = tr * tx + tc
-                if i >= len(lv["offsets"]) or i >= len(lv["counts"]):
-                    raise ValueError(
-                        f"corrupt TIFF: tile index {i} beyond offsets "
-                        f"array (level {level})")
+        for br in range(row0 // bh, (row1 - 1) // bh + 1):
+            # tiles are padded to the full block; a last strip is short
+            rows = bh if lv["tiled"] else min(bh, h - br * bh)
+            for bc in range(col0 // bw, (col1 - 1) // bw + 1):
+                i = br * across + bc
                 payload = self.fetcher.get(lv["offsets"][i], lv["counts"][i])
                 try:
-                    block = np.frombuffer(zlib.decompress(payload),
-                                          "<i2").reshape(tile, tile)
+                    if lv["compression"] == 8:
+                        payload = zlib.decompress(payload)
+                    block = np.frombuffer(payload, "<i2").reshape(rows, bw)
                 except (zlib.error, ValueError) as e:
-                    # truncated/undersized tile payload: clean error,
+                    # truncated/undersized block payload: clean error,
                     # never a partially-wrong array
                     raise ValueError(
-                        f"corrupt tile payload at index {i} "
+                        f"corrupt block payload at index {i} "
                         f"(level {level}): {e}") from e
-                # intersection of this tile with the window
-                r_lo = max(row0, tr * tile)
-                r_hi = min(row1, (tr + 1) * tile)
-                c_lo = max(col0, tc * tile)
-                c_hi = min(col1, (tc + 1) * tile)
+                # intersection of this block with the window
+                r_lo, r_hi = max(row0, br * bh), min(row1, br * bh + rows)
+                c_lo, c_hi = max(col0, bc * bw), min(col1, (bc + 1) * bw)
                 out[r_lo - row0:r_hi - row0, c_lo - col0:c_hi - col0] = \
-                    block[r_lo - tr * tile:r_hi - tr * tile,
-                          c_lo - tc * tile:c_hi - tc * tile]
+                    block[r_lo - br * bh:r_hi - br * bh,
+                          c_lo - bc * bw:c_hi - bc * bw]
         return out
+
+    def read_level(self, level: int = 0) -> np.ndarray:
+        """The whole image at one pyramid level."""
+        lv = self.levels[level]
+        return self.read_window(0, 0, lv["height"], lv["width"], level)
+
+
+def read_tiff_band(data: bytes) -> dict:
+    """Decode an in-memory single-band TIFF (striped scene, tiled COG,
+    classic or BigTIFF) into the {array, origin, pixel_size, nodata}
+    dict the ingest operators consume."""
+    r = CogReader("<bytes>", fetcher=BytesFetcher(data))
+    return {"array": r.read_level(), **r.geo}
 
 
 def read_cog_window(uri: str, row0: int, col0: int, height: int, width: int,

@@ -464,7 +464,7 @@ def open_raster(uri: str, band: str | None = None, sceneid: str | None = None):
     """S5 (base.py:30-135): open any raster URI. With rasterio present,
     GDAL handles every format via the dispatched /vsi path. Without it,
     the stdlib path reads the archive member (zip/SAFE/tgz) and decodes
-    TIFF content with the paired stdlib codec — returning the same
+    TIFF content with ``cog_reader.read_tiff_band`` — returning the
     {array, origin, pixel_size, nodata} dict the warp/mosaic operators
     consume. JP2 payloads (SAFE's native encoding) have no stdlib
     codec: clearly gated."""
@@ -472,19 +472,11 @@ def open_raster(uri: str, band: str | None = None, sceneid: str | None = None):
         info = dispatch_uri(uri, band, sceneid)
         return rasterio.open(info["gdal_path"])
     buf = read_member_bytes(uri, band, sceneid)
-    if buf[:4] in (b"II\x2a\x00", b"MM\x00\x2a"):
-        from ..sinks.cog import read_geotiff_band
-        return read_geotiff_band(buf)
-    if buf[:4] == b"II\x2b\x00":
-        # BigTIFF member (>4 GiB offsets; the reference's save_as_cog
-        # BIGTIFF option): parse via the COG reader over the bytes
-        from .cog_reader import BytesFetcher, CogReader
-        r = CogReader(uri, fetcher=BytesFetcher(buf))
-        lv = r.levels[0]
-        return {"array": r.read_window(0, 0, lv["height"], lv["width"]),
-                "origin": r.geo["origin"],
-                "pixel_size": r.geo["pixel_size"],
-                "nodata": r.geo["nodata"]}
+    if buf[:4] in (b"II\x2a\x00", b"II\x2b\x00", b"MM\x00\x2a"):
+        # classic TIFF or BigTIFF (the reference's save_as_cog BIGTIFF
+        # option); big-endian files raise ValueError in the reader
+        from .cog_reader import read_tiff_band
+        return read_tiff_band(buf)
     if buf[:4] == b"\x00\x00\x00\x0c" or buf[:2] == b"\xff\x4f":
         if _glymur() is not None:
             return decode_jp2(buf)
@@ -498,7 +490,7 @@ def open_raster(uri: str, band: str | None = None, sceneid: str | None = None):
 def decode_jp2(buf: bytes) -> dict:
     """Decode a JP2/J2K payload via glymur (OpenJPEG) into the same
     {array, origin, pixel_size, nodata} dict the warp/mosaic operators
-    consume (parity with sinks.cog.read_geotiff_band).
+    consume (parity with cog_reader.read_tiff_band).
 
     The reference decodes JP2 through GDAL (reference
     cube_builder/drivers/datasets/sentinel/sentinel2.py:44-111, which
@@ -512,7 +504,7 @@ def decode_jp2(buf: bytes) -> dict:
     exposes raw boxes, but the origin/offset live in a tiny XML
     fragment — parsed best-effort from the payload bytes directly
     (``gml:pos``/``offsetVector``); absent → origin (0,0), unit pixel,
-    matching the empty-georef contract of read_geotiff_band."""
+    matching the empty-georef contract of read_tiff_band."""
     gly = _glymur()
     if gly is None:
         raise NotImplementedError("glymur not importable")
@@ -530,7 +522,7 @@ def decode_jp2(buf: bytes) -> dict:
             os.unlink(path)
         except OSError:
             pass
-    # every consumer of the raster dict (warp/mosaic, read_geotiff_band
+    # every consumer of the raster dict (warp/mosaic, read_tiff_band
     # parity) expects a 2-D single-band array; a multi-component JP2
     # comes back (h, w, c) — squeeze a singleton component axis, reject
     # the rest loudly instead of letting 3-D arrays corrupt downstream.
@@ -624,8 +616,8 @@ def probe_assets_df(assets: DataFrame, read_bytes: bool = False) -> DataFrame:
 
 
 def decode_geotiff_pixels(files: DataFrame, extra_cols: list[str] = ()) -> DataFrame:
-    """Executor-side raster decode WITHOUT rasterio: parse the stdlib
-    GeoTIFF format (sinks/cog.py) from binaryFile content into pixel
+    """Executor-side raster decode WITHOUT rasterio: parse striped
+    GeoTIFF or tiled COG binaryFile content (cog_reader.py) into pixel
     rows (row-major pixel_id, nodata preserved as sentinel values).
 
     This is the same mapInPandas slot rasterio-based S5 plugs into —
@@ -633,7 +625,7 @@ def decode_geotiff_pixels(files: DataFrame, extra_cols: list[str] = ()) -> DataF
     pixel-row (or block-row) frame out. ``extra_cols`` pass through
     (band, date, tile_id... from the S4 path classification).
     """
-    from ..sinks.cog import read_geotiff_band
+    from .cog_reader import read_tiff_band
 
     extra_cols = list(extra_cols)
 
@@ -643,7 +635,7 @@ def decode_geotiff_pixels(files: DataFrame, extra_cols: list[str] = ()) -> DataF
             for c in extra_cols:
                 out[c] = []
             for i in range(len(pdf)):
-                got = read_geotiff_band(bytes(pdf["content"].iloc[i]))
+                got = read_tiff_band(bytes(pdf["content"].iloc[i]))
                 arr = got["array"].reshape(-1)
                 out["path"].extend([pdf["path"].iloc[i]] * len(arr))
                 out["pixel_id"].extend(range(len(arr)))

@@ -172,7 +172,7 @@ def fetch_asset_pixels(assets: DataFrame) -> DataFrame:
     of assets so the fetch fans out across executors."""
     import pandas as pd
 
-    from ..sinks.cog import read_geotiff_band
+    from .cog_reader import read_tiff_band
     from .raster_reader import read_member_bytes
 
     def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -182,7 +182,7 @@ def fetch_asset_pixels(assets: DataFrame) -> DataFrame:
             for r in pdf.itertuples(index=False):
                 buf = read_member_bytes(r.link, band=r.band,
                                         sceneid=r.sceneid)
-                arr = read_geotiff_band(buf)["array"].reshape(-1)
+                arr = read_tiff_band(buf)["array"].reshape(-1)
                 n = len(arr)
                 out["link"].extend([r.link] * n)
                 out["band"].extend([r.band] * n)

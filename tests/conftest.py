@@ -7,6 +7,11 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+# The session's driver JVM defaults to a 48g heap; on a machine with
+# less RAM it can grow until the OOM killer takes it, together with the
+# subprocess JVM test_cli.py starts (which inherits this setting).
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
+
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 

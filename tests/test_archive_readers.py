@@ -13,6 +13,7 @@ import numpy as np
 import pytest
 
 from cube_builder_spark.sinks.cog import write_geotiff_band
+from cube_builder_spark.sources.cog_reader import BytesFetcher
 from cube_builder_spark.sources.raster_reader import (open_raster,
                                                       probe_integrity,
                                                       read_member_bytes)
@@ -575,17 +576,6 @@ def _pad512(b: bytes) -> bytes:
     return b + b"\x00" * (-len(b) % 512)
 
 
-class _BytesFetcher:
-    def __init__(self, data: bytes):
-        self._d = data
-
-    def size(self):
-        return len(self._d)
-
-    def get(self, pos, n):
-        return self._d[pos:pos + n]
-
-
 def test_remote_tar_gnu_longlink_does_not_eat_longname(tmp_path):
     """Advisor round-7: a GNU 'K' (longlink) record between an 'L'
     (longname) record and its member must NOT consume the pending
@@ -610,7 +600,7 @@ def test_remote_tar_gnu_longlink_does_not_eat_longname(tmp_path):
                     + _pad512(data))
         blob = b"".join(recs) + b"\x00" * 1024
         got = _remote_tar_member("mem://t.tar", "SR_B4", sceneid,
-                                 fetcher=_BytesFetcher(blob))
+                                 fetcher=BytesFetcher(blob))
         assert got == data, order
 
 
@@ -642,7 +632,7 @@ def test_remote_tar_pax_size_override_keeps_walk_aligned():
         + _pad512(after),
     ]
     blob = b"".join(recs) + b"\x00" * 1024
-    f = _BytesFetcher(blob)
+    f = BytesFetcher(blob)
     assert _remote_tar_member("mem://t.tar", "SR_B9", sceneid,
                               fetcher=f) == big
     assert _remote_tar_member("mem://t.tar", "SR_B4", sceneid,

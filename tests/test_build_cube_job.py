@@ -177,8 +177,8 @@ def test_job_media_exports(spark, sf_dir, tmp_path):
     import glob
     import os
 
-    from cube_builder_spark.sinks.cog import read_cog
     from cube_builder_spark.sinks.quicklook import decode_png_rgb
+    from cube_builder_spark.sources.cog_reader import CogReader
     out = str(tmp_path / "media")
     obs = synth_observations(spark, sf_dir)
     res = build_cube(spark, obs, out,
@@ -190,8 +190,9 @@ def test_job_media_exports(spark, sf_dir, tmp_path):
     img = decode_png_rgb(open(png, "rb").read())
     assert img.shape[1] == 32 and img.shape[2] == 3
     tif = sorted(glob.glob(os.path.join(out, "tiff", "*.tif")))[0]
-    got = read_cog(open(tif, "rb").read())          # publish writes COGs now
-    assert got["array"].shape[1] == 32 and got["tile"] == 16
+    got = CogReader(tif)                            # publish writes COGs now
+    assert (got.read_level(0).shape[1] == 32
+            and got.levels[0]["block"] == (16, 16))
 
 
 def test_build_cube_bucketed_store(spark, sf_dir, tmp_path):

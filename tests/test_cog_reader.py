@@ -14,9 +14,10 @@ import threading
 import numpy as np
 import pytest
 
-from cube_builder_spark.sinks.cog import write_cog_band
+from cube_builder_spark.sinks.cog import write_cog_band, write_geotiff_band
 from cube_builder_spark.sources.cog_reader import (CogReader, RangeFetcher,
-                                                   read_cog_window)
+                                                   read_cog_window,
+                                                   read_tiff_band)
 
 H, W, TILE = 512, 768, 128
 
@@ -140,12 +141,11 @@ def test_remote_plain_raster_full_fetch(cog_file, http_url):
     Remote zip members read over HTTP ranges (below) and remote tar.gz
     members stream into spooled scratch (test_archive_readers) — no
     remote container is gated anymore."""
-    from cube_builder_spark.sinks.cog import read_cog
     from cube_builder_spark.sources.raster_reader import read_member_bytes
     path, arr, _ = cog_file
     buf = read_member_bytes(http_url)
     assert buf == open(path, "rb").read()
-    np.testing.assert_array_equal(read_cog(buf)["array"], arr)
+    np.testing.assert_array_equal(read_tiff_band(buf)["array"], arr)
 
 
 def test_remote_zip_member_over_ranges(tmp_path_factory, http_url, cog_file):
@@ -363,6 +363,96 @@ def test_auto_bigtiff_switch_when_offsets_overflow(tmp_path, monkeypatch):
     assert np.array_equal(r.read_window(0, 0, 64, 64), arr)
 
 
+def _three_strip_tiff(arr, rows_per_strip: int) -> bytes:
+    """A classic TIFF laid out as GDAL's default striped files are: one
+    deflate strip per RowsPerStrip rows (the last one short), the
+    StripOffsets/StripByteCounts arrays out of line, and the strips
+    stored last-first so offsets, not file order, place them."""
+    import struct
+    import zlib
+
+    h, w = arr.shape
+    strips = [zlib.compress(arr[r:r + rows_per_strip].tobytes())
+              for r in range(0, h, rows_per_strip)]
+    n = len(strips)
+    entries = [(256, 3, 1, w), (257, 3, 1, h), (258, 3, 1, 16),
+               (259, 3, 1, 8), (262, 3, 1, 1), (273, 4, n, None),
+               (277, 3, 1, 1), (278, 3, 1, rows_per_strip),
+               (279, 4, n, None), (339, 3, 1, 2), (33550, 12, 3, None),
+               (33922, 12, 6, None)]
+    ext_at = 8 + 2 + len(entries) * 12 + 4
+    data_at = ext_at + 8 * n + 24 + 48
+    offsets, pos = [0] * n, data_at
+    for i in reversed(range(n)):
+        offsets[i], pos = pos, pos + len(strips[i])
+    payloads = {273: struct.pack(f"<{n}I", *offsets),
+                279: struct.pack(f"<{n}I", *map(len, strips)),
+                33550: struct.pack("<3d", 30.0, 30.0, 0.0),
+                33922: struct.pack("<6d", 0, 0, 0, 5.0, 6.0, 0)}
+    ifd, ext = [struct.pack("<H", len(entries))], b""
+    for tag, code, count, value in entries:
+        if value is None:
+            ifd.append(struct.pack("<HHII", tag, code, count,
+                                   ext_at + len(ext)))
+            ext += payloads[tag]
+        else:
+            ifd.append(struct.pack("<HHIH2x", tag, code, count, value))
+    ifd.append(struct.pack("<I", 0))
+    head = struct.pack("<2sHI", b"II", 42, 8) + b"".join(ifd) + ext
+    assert len(head) == data_at
+    return head + b"".join(reversed(strips))
+
+
+def test_multi_strip_tiff(tmp_path):
+    """GDAL's default layout: several strips, the last one short. Whole
+    reads, windows across strip boundaries and the no-nodata geo dict
+    all come back exact."""
+    arr = (np.arange(13 * 7, dtype=np.int64) * 97 % 20001 - 10000) \
+        .astype("<i2").reshape(13, 7)
+    buf = _three_strip_tiff(arr, rows_per_strip=5)
+    got = read_tiff_band(buf)
+    np.testing.assert_array_equal(got["array"], arr)
+    assert got["origin"] == (5.0, 6.0) and got["nodata"] is None
+    p = tmp_path / "strips.tif"
+    p.write_bytes(buf)
+    r = CogReader(str(p))
+    assert r.levels[0]["block"] == (5, 7) and len(r.levels[0]["offsets"]) == 3
+    np.testing.assert_array_equal(r.read_window(3, 2, 9, 4), arr[3:12, 2:6])
+    np.testing.assert_array_equal(r.read_window(10, 0, 5, 7), arr[10:])
+
+
+def test_big_endian_and_unsupported_tiffs_rejected(tmp_path):
+    """The reader covers little-endian int16 with no or deflate
+    compression; a big-endian (MM) file or any other sample format or
+    codec is a clean ValueError, through open_raster too."""
+    import struct
+
+    from cube_builder_spark.sources.raster_reader import open_raster
+
+    arr = np.arange(24, dtype="<i2").reshape(4, 6)
+    le = write_geotiff_band(arr)
+    mm = b"MM\x00\x2a" + struct.pack(">I", 8) + le[8:]
+    p = tmp_path / "mm.tif"
+    p.write_bytes(mm)
+    with pytest.raises(ValueError, match="little-endian"):
+        read_tiff_band(mm)
+    with pytest.raises(ValueError, match="little-endian"):
+        open_raster(str(p))
+
+    def patched(tag: int, value: int) -> bytes:
+        # rewrite one inline SHORT value in the first IFD
+        (n,) = struct.unpack_from("<H", le, 8)
+        for i in range(n):
+            at = 10 + i * 12
+            if struct.unpack_from("<H", le, at)[0] == tag:
+                return le[:at + 8] + struct.pack("<H", value) + le[at + 10:]
+        raise AssertionError(tag)
+
+    for tag, value in ((259, 5), (258, 8), (339, 1), (277, 3)):
+        with pytest.raises(ValueError, match="unsupported"):
+            read_tiff_band(patched(tag, value))
+
+
 # ---------------------------------------------------------------------------
 # Round-8: malformed-input fuzz for the TIFF codec (the tar/zip walks
 # already have stdlib differential oracles; the codec gets the same
@@ -372,16 +462,17 @@ def test_auto_bigtiff_switch_when_offsets_overflow(tmp_path, monkeypatch):
 # and unbounded fetches are never an option.
 # ---------------------------------------------------------------------------
 
-def _fuzz_base(bigtiff: bool):
+def _fuzz_base(layout: str):
     arr = (np.arange(96 * 64, dtype=np.int64) * 13 % 20001 - 10000) \
         .astype("<i2").reshape(96, 64)
-    buf = write_cog_band(arr, tile=32, pixel_size=(10.0, 10.0),
-                         origin=(1.0, 2.0), nodata=-9999,
-                         bigtiff=bigtiff)
-    return arr, buf
+    geo = dict(pixel_size=(10.0, 10.0), origin=(1.0, 2.0), nodata=-9999)
+    if layout == "striped":
+        return arr, write_geotiff_band(arr, **geo)
+    return arr, write_cog_band(arr, tile=32, bigtiff=layout == "bigtiff",
+                               **geo)
 
 
-_FUZZ_BASES = {False: _fuzz_base(False), True: _fuzz_base(True)}
+_FUZZ_BASES = {k: _fuzz_base(k) for k in ("classic", "bigtiff", "striped")}
 
 
 def _read_all(path: str, arr):
@@ -393,16 +484,15 @@ def test_version_field_confusion_rejected(tmp_path):
     """Rewriting the version word (42<->43) must not mis-parse with the
     wrong offset widths: classic-as-BigTIFF fails the offset-size probe,
     BigTIFF-as-classic hits structural nonsense — both clean errors."""
-    for big in (False, True):
-        arr, buf = _FUZZ_BASES[big]
-        if big:
+    for layout, (arr, buf) in _FUZZ_BASES.items():
+        if layout == "bigtiff":
             # claim classic: II*\0 + classic expects 4-byte IFD offset
             forged = buf[:2] + b"\x2a\x00" + buf[4:]
         else:
             # claim BigTIFF: II+\0 then (offset-size, pad) read from
             # what is really the classic IFD offset field
             forged = buf[:2] + b"\x2b\x00" + buf[4:]
-        p = tmp_path / f"forged_{big}.tif"
+        p = tmp_path / f"forged_{layout}.tif"
         p.write_bytes(forged)
         with pytest.raises((ValueError, IndexError)):
             _read_all(p, arr)
@@ -412,8 +502,7 @@ def test_truncation_ladder_never_wrong(tmp_path):
     """Deterministic truncation sweep at byte resolution near the
     structure and coarse steps through the payload: every prefix either
     errors cleanly or reproduces the exact array."""
-    for big in (False, True):
-        arr, buf = _FUZZ_BASES[big]
+    for layout, (arr, buf) in _FUZZ_BASES.items():
         cuts = list(range(0, 400, 7)) + list(range(400, len(buf), 997))
         for cut in cuts:
             p = tmp_path / "t.tif"
@@ -423,7 +512,7 @@ def test_truncation_ladder_never_wrong(tmp_path):
             except (ValueError, IndexError):
                 continue
             assert np.array_equal(got, arr), \
-                f"truncation at {cut} (bigtiff={big}) gave a wrong array"
+                f"truncation at {cut} ({layout}) gave a wrong array"
 
 
 try:
@@ -432,21 +521,22 @@ try:
 
     @settings(max_examples=120, deadline=None)
     @given(
-        big=st.booleans(),
+        layout=st.sampled_from(sorted(_FUZZ_BASES)),
         mode=st.sampled_from(["flip", "truncate", "zero_run"]),
         pos=st.floats(0.0, 1.0),
         val=st.integers(0, 255),
         runlen=st.integers(1, 64),
     )
-    def test_cog_corruption_fuzz(big, mode, pos, val, runlen):
+    def test_cog_corruption_fuzz(layout, mode, pos, val, runlen):
         """Property: an arbitrary single-byte flip, truncation, or
-        zeroed run anywhere in a classic/BigTIFF COG yields either a
-        clean ValueError/IndexError or the exact original array (the
+        zeroed run anywhere in a classic/BigTIFF COG or a striped
+        GeoTIFF yields either a clean ValueError/IndexError or the
+        exact original array (the
         zlib adler32 makes payload damage detectable; structure damage
         is caught by the bounds/cycle/tag guards)."""
         import tempfile
 
-        arr, buf = _FUZZ_BASES[big]
+        arr, buf = _FUZZ_BASES[layout]
         i = min(int(pos * len(buf)), len(buf) - 1)
         if mode == "flip":
             if buf[i] == val:

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from cube_builder_spark.pixelplane import BAND_NODATA, pixel_plane
 from cube_builder_spark.plans.build_cube import CubeJobConfig, build_cube
-from cube_builder_spark.sinks.cog import write_geotiff_band
+from cube_builder_spark.sinks.cog import write_cog_band, write_geotiff_band
 from cube_builder_spark.sources.local_scan import scan_directory
 from cube_builder_spark.sources.raster_reader import decode_geotiff_pixels
 
@@ -116,23 +116,29 @@ def test_build_from_directory_warp_path(spark, tmp_path):
     """build-local with a grid: scenes carry real georeferencing, the
     warp stage places them on the target tiles, and the resulting cube
     equals the decode path's (identity grid, all pixels valid so the
-    two deliveries are the same observations)."""
+    two deliveries are the same observations). The same scenes written
+    as tiled COGs build the same cube."""
     from tools.build_local import build_from_directory
 
     res = 30.0
     warp_dir = tmp_path / "wscenes"
     warp_dir.mkdir()
+    cog_dir = tmp_path / "cscenes"
+    cog_dir.mkdir()
     rng = np.random.default_rng(3)
     for tile in (0, 1):
         for di, stamp in enumerate(("20200101", "20200103")):
             vals = rng.integers(1, 3000, NPX).astype(np.int16)
             qual = rng.integers(0, 12, NPX).astype(np.int16)
             for band, arr in (("B04", vals), ("SCL", qual)):
-                buf = write_geotiff_band(
-                    arr.reshape(NPX // NCOLS, NCOLS), pixel_size=(res, res),
-                    origin=(tile * NCOLS * res, 0.0), nodata=BAND_NODATA)
-                (warp_dir / f"S2A_t{tile:03d}_{stamp}T000000_{band}.tif"
-                 ).write_bytes(buf)
+                name = f"S2A_t{tile:03d}_{stamp}T000000_{band}.tif"
+                geo = dict(pixel_size=(res, res),
+                           origin=(tile * NCOLS * res, 0.0),
+                           nodata=BAND_NODATA)
+                arr = arr.reshape(NPX // NCOLS, NCOLS)
+                (warp_dir / name).write_bytes(write_geotiff_band(arr, **geo))
+                (cog_dir / name).write_bytes(
+                    write_cog_band(arr, tile=8, **geo))
 
     grid = [{"tile_id": t, "west": t * NCOLS * res, "north": 0.0,
              "width": NCOLS, "height": NPX // NCOLS, "res": res}
@@ -143,12 +149,17 @@ def test_build_from_directory_warp_path(spark, tmp_path):
                                  src_crs="EPSG:32722", dst_crs="EPSG:32722")
     res_d = build_from_directory(spark, str(warp_dir), str(tmp_path / "d"),
                                  cfg, fmt=FMT)
-    assert res_w["new_items"] == res_d["new_items"] > 0
+    res_c = build_from_directory(spark, str(cog_dir), str(tmp_path / "c"),
+                                 cfg, fmt=FMT, grid=grid,
+                                 src_crs="EPSG:32722", dst_crs="EPSG:32722")
+    assert res_w["new_items"] == res_d["new_items"] == res_c["new_items"] > 0
     key = ["tile_id", "period", "band", "pixel_id"]
     w = spark.read.parquet(res_w["cube_path"]).select(*key, "value")
     d = spark.read.parquet(res_d["cube_path"]).select(*key, "value")
-    assert w.count() == d.count() > 0
+    c = spark.read.parquet(res_c["cube_path"]).select(*key, "value")
+    assert w.count() == d.count() == c.count() > 0
     assert w.exceptAll(d).count() == 0
+    assert w.exceptAll(c).count() == 0
 
 
 def test_build_local_cli_api(spark, scene_dir, tmp_path):

@@ -129,14 +129,19 @@ def test_bdc_grid_utm_to_albers_roundtrip_area():
     assert np.allclose(y2, ys, atol=1e-4)
 
 
-def test_warp_scenes_spark(spark, tmp_path):
+@pytest.mark.parametrize("layout", ["striped", "cog"])
+def test_warp_scenes_spark(spark, tmp_path, layout):
     """Two UTM scenes -> one Albers-ish target tile via mapInPandas;
-    same-CRS translation case checked exactly."""
-    from cube_builder_spark.sinks.cog import write_geotiff_band
+    same-CRS translation case checked exactly. The scene decodes the
+    same from a one-strip GeoTIFF and from a tiled COG with an
+    overview."""
+    from cube_builder_spark.sinks.cog import write_cog_band, write_geotiff_band
 
     arr = np.arange(256, dtype=np.int16).reshape(16, 16)
-    buf = write_geotiff_band(arr, pixel_size=(30.0, 30.0),
-                             origin=(600000.0, 8000480.0), nodata=-9999)
+    geo = dict(pixel_size=(30.0, 30.0), origin=(600000.0, 8000480.0),
+               nodata=-9999)
+    buf = (write_geotiff_band(arr, **geo) if layout == "striped"
+           else write_cog_band(arr, tile=8, **geo))
     files = spark.createDataFrame(
         [("s1", bytearray(buf), "B04")], "path string, content binary, band string")
 
