@@ -18,15 +18,9 @@ from .pipeline_queries import (  # shared SQL fragments/helpers
     _IVF_SQL, _IVF_TAIL, _PQ_SQL, _PQ_TAIL, _QUANT_SQL, _bq_codes_sql,
     _bucket_sql, _dims_sql, _docs, _embs, _label_steps_sql, _mmr_sql)
 from .tables import local_df
+from .queries import register
 
 REGISTRY: list[tuple[str, object, str | None]] = []
-
-
-def register(name: str, sql: str | None):
-    def deco(fn):
-        REGISTRY.append((name, fn, sql))
-        return fn
-    return deco
 
 
 @register("a_ann_bruteforce_topk", f"""

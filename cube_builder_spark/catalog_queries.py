@@ -14,15 +14,9 @@ from .pixelplane import PIXELS_SQL, pixel_plane
 from .sinks.publish import publish_items
 from .timeline import timeline_rows
 from .tables import local_df
+from .queries import register
 
 REGISTRY: list[tuple[str, object, str | None]] = []
-
-
-def register(name: str, sql: str | None):
-    def deco(fn):
-        REGISTRY.append((name, fn, sql))
-        return fn
-    return deco
 
 
 # C17 -------------------------------------------------------------------------

@@ -17,15 +17,9 @@ from pyspark.sql import functions as F
 from .functions.numeric import bounded_collect
 from .tables import load_tables
 from .tables import local_df
+from .queries import register
 
 REGISTRY: list[tuple[str, object, str | None]] = []
-
-
-def register(name: str, sql: str | None):
-    def deco(fn):
-        REGISTRY.append((name, fn, sql))
-        return fn
-    return deco
 
 
 def _docs(spark, sf_dir):

@@ -17,15 +17,9 @@ from .operators import blend, indexes, masking, mosaic, rescale
 from .pixelplane import BAND_NODATA, N_DATES, PIXELS_SQL, pixel_plane
 from .functions.numeric import round_half_up_long
 from .tables import load_tables
+from .queries import register
 
 REGISTRY: list[tuple[str, object, str | None]] = []
-
-
-def register(name: str, sql: str | None):
-    def deco(fn):
-        REGISTRY.append((name, fn, sql))
-        return fn
-    return deco
 
 
 # Shared oracle fragments -----------------------------------------------------

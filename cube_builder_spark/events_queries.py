@@ -16,15 +16,9 @@ from .functions.numeric import bounded_collect, round_half_up_long
 
 from .tables import load_tables
 from .tables import local_df
+from .queries import register
 
 REGISTRY: list[tuple[str, object, str | None]] = []
-
-
-def register(name: str, sql: str | None):
-    def deco(fn):
-        REGISTRY.append((name, fn, sql))
-        return fn
-    return deco
 
 
 def _events(spark, sf_dir):

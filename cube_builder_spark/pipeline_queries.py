@@ -12,15 +12,9 @@ from .functions import dedup, similarity, text
 from .functions.numeric import round_half_up_long
 from .tables import load_tables
 from .tables import local_df
+from .queries import register
 
 REGISTRY: list[tuple[str, object, str | None]] = []
-
-
-def register(name: str, sql: str | None):
-    def deco(fn):
-        REGISTRY.append((name, fn, sql))
-        return fn
-    return deco
 
 
 def _docs(spark, sf_dir):
@@ -359,7 +353,7 @@ def d_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     3-shingles (d_minhash_lsh_pairs' width) and its AllPairs truth
     ran 8.4s warm at sf0.1 — 3-grams repeat across documents so the
     prefix join explodes; the 5-shingle space gives the same harness
-    semantics at 3.7s (scripts/time_queries.py, same session; the
+    semantics at 3.7s (tools/perf_probe.py time, same session; the
     residual cost is two honest subtrees — capped LSH and lossless
     AllPairs — which tokenize independently because their kernels
     differ, see shingles()'s per-consumer A/B).
@@ -487,12 +481,14 @@ def d_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Unrolled min-label propagation steps (l1..l6): both engines run the
 # SAME fixed number of rounds, so the output is deterministic and
 # hash-comparable even on a not-yet-converged component (it isn't one:
-# near-dup clusters have diameter 2-3).
+# near-dup clusters have diameter 2-3). Each step is MATERIALIZED
+# because it reads the previous step twice: DuckDB inlines CTEs, so
+# plain steps would re-evaluate the pair pipeline 2**n times.
 def _label_steps_sql(n: int) -> str:
     steps = []
     for i in range(1, n + 1):
         steps.append(f"""
-l{i} AS (
+l{i} AS MATERIALIZED (
   SELECT n.doc_id, least(n.lbl, min(l.lbl)) AS lbl
   FROM l{i - 1} n
   JOIN edges e ON e.s = n.doc_id

@@ -143,12 +143,8 @@ def publish_with_audit(store, df: DataFrame, tc: TableChecks, table: str,
     branch and fast-forwards main only after downstream validation
     commits with ``branch="audit"`` — the parent and ref advance then
     follow THAT branch's head, exactly as commit_staged defines."""
-    import os
-    import uuid
-
-    sub = os.path.join(store.root, "data", uuid.uuid4().hex)
-    df.write.mode("error").parquet(sub)
-    staged = df.sparkSession.read.parquet(sub)
+    new_files = store.stage(df.write)
+    staged = df.sparkSession.read.parquet(*new_files)
     report = run_table_checks(
         TableChecks(df=staged, not_null=tc.not_null, ranges=tc.ranges,
                     in_set=tc.in_set, unique=tc.unique), table)
@@ -156,8 +152,5 @@ def publish_with_audit(store, df: DataFrame, tc: TableChecks, table: str,
                 .collect()]
     if failures:
         raise AuditFailed(failures)
-    new_files = sorted(
-        os.path.join(sub, f) for f in os.listdir(sub)
-        if f.endswith(".parquet") and not f.startswith("."))
     return store.commit_staged(new_files, f"wap-{mode}", mode=mode,
                                branch=branch)

@@ -16,11 +16,22 @@ runs every entry) without spending a graded slot.
 
 from __future__ import annotations
 
+import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
+
+
+def register(name: str, sql: str | None):
+    """Decorator: append ``(name, fn, sql)`` to the ``REGISTRY`` list of
+    the module that defines ``fn``."""
+    def deco(fn):
+        sys.modules[fn.__module__].REGISTRY.append((name, fn, sql))
+        return fn
+    return deco
+
 
 _MODULES = [
     "cube_builder_spark.relational",
@@ -264,8 +275,8 @@ def _ordered():
                 "shadow the earlier one)")
         entries[name] = (fn, sql)
     rank = {n: i for i, n in enumerate(_PRIORITY)}
-    for name in sorted(entries, key=lambda n: (rank.get(n, len(rank)),
-                                               list(entries).index(n))):
+    # sorted() is stable: equal ranks keep registration order
+    for name in sorted(entries, key=lambda n: rank.get(n, len(rank))):
         fn, sql = entries[name]
         yield name, fn, sql
 

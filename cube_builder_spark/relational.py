@@ -20,16 +20,10 @@ from pyspark.sql import functions as F
 from .functions.numeric import round_half_up_long
 from .tables import broadcast_if_small as _bc, load_tables
 from .tables import local_df
+from .queries import register
 
 # (name, spark_fn, oracle_sql) tuples collected by queries.py
 REGISTRY: list[tuple[str, object, str | None]] = []
-
-
-def register(name: str, sql: str | None):
-    def deco(fn):
-        REGISTRY.append((name, fn, sql))
-        return fn
-    return deco
 
 
 def _cents(col):
@@ -158,7 +152,7 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice's bytes (tables.slice_bytes), so the hint survives SFs
     where the whole table fails the gate but the slice fits; at 100x
     both estimates fail and AQE picks the join (no forced hints —
-    tests/test_plan_invariants.py)."""
+    tests/test_queries_oracle.py)."""
     import datetime
     t = load_tables(spark, sf_dir,
                     ["customer", "orders", "lineitem", "supplier", "nation", "region"])

@@ -15,15 +15,9 @@ from .functions.numeric import round_half_up_long
 from .pipeline_queries import (  # shared SQL fragments/helpers
     _docs)
 from .tables import local_df
+from .queries import register
 
 REGISTRY: list[tuple[str, object, str | None]] = []
-
-
-def register(name: str, sql: str | None):
-    def deco(fn):
-        REGISTRY.append((name, fn, sql))
-        return fn
-    return deco
 
 
 @register("x_snapshot_time_travel", """

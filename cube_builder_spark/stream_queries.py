@@ -13,15 +13,9 @@ from .tables import load_tables
 from .pipeline_queries import (  # shared SQL fragments/helpers
     _GATES_SQL, _LSH_MAX_BUCKET, _SHINGLES_SQL, _docs)
 from .tables import local_df
+from .queries import register
 
 REGISTRY: list[tuple[str, object, str | None]] = []
-
-
-def register(name: str, sql: str | None):
-    def deco(fn):
-        REGISTRY.append((name, fn, sql))
-        return fn
-    return deco
 
 
 @register("x_incremental_near_dup", f"""

@@ -1,112 +1,13 @@
-"""Engine-wide physical-plan invariants over EVERY registered query.
-
-Two patterns must never appear at any scale:
-
-- ``CartesianProduct`` — an unconstrained pair space. Intentional
-  1-row/broadcast cross joins compile to BroadcastNestedLoopJoin,
-  which is allowed; a shuffled cartesian is always a bug.
-- ``BatchEvalPython`` — a row-at-a-time (pickled) Python UDF. All
-  executor-side Python in this engine must be Arrow-batched
-  (ArrowEvalPython / mapInPandas / applyInPandas*).
-
-Plans are built (not executed) at sf0.001; queries whose CONSTRUCTION
-runs bounded driver-side jobs (centroid collects, bloom builds,
-checkpoints) still only pay those bounded jobs.
-"""
+"""Physical-plan pins for single operators. The engine-wide per-query
+invariants (no CartesianProduct, no BatchEvalPython, no forced
+broadcast of a linear table) run on each query's one build in
+tests/test_queries_oracle.py."""
 
 from __future__ import annotations
-
-import pytest
 
 from cube_builder_spark.queries import all_queries
 
 QUERIES = all_queries()
-
-
-@pytest.mark.parametrize("name", sorted(QUERIES))
-def test_no_cartesian_no_pickled_udf(name, spark, sf_dir):
-    df = QUERIES[name](spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan, f"{name}: cartesian join"
-    assert "BatchEvalPython" not in plan, \
-        f"{name}: row-at-a-time Python UDF (use Arrow-batched forms)"
-
-
-# ---------------------------------------------------------------------------
-# No forced broadcast of a linearly-scaling table (round-5 invariant).
-#
-# A ``F.broadcast()`` hint on an unfiltered scan of a table that grows
-# with scale factor (customer/supplier/part/orders/lineitem/events/
-# documents/embeddings) wins at sf0.1 and OOMs a 1000-executor cluster
-# at 100x — and the hint *disables* AQE's ability to choose correctly.
-# Hints are allowed only when something between the hint and the scan
-# shrinks the data (Filter / Aggregate / Deduplicate / Limit / Join) —
-# e.g. a selective slice or a grouped summary.
-# ---------------------------------------------------------------------------
-
-import re
-
-# sentinel first-columns that identify each linearly-scaling relation
-_LINEAR = {
-    "c_custkey#": "customer", "s_suppkey#": "supplier",
-    "p_partkey#": "part", "o_orderkey#": "orders",
-    "l_orderkey#": "lineitem", "event_id#": "events",
-    "doc_id#": "documents", "vec_id#": "embeddings",
-}
-# logical nodes that reduce cardinality on the hint->scan path
-_SHRINKING = ("Filter", "Aggregate", "Deduplicate", "GlobalLimit",
-              "LocalLimit", "Join", "Window", "Generate", "MapInPandas",
-              "FlatMapGroupsInPandas", "Sample")
-
-_PREFIX = re.compile(r"^[:+\- ]*")
-
-
-def _forced_linear_broadcasts(analyzed: str) -> list[str]:
-    """Return names of linear tables scanned with no shrinking node
-    between an enclosing broadcast ResolvedHint and the scan."""
-    lines = analyzed.splitlines()
-    parsed = []  # (depth, node_text)
-    for ln in lines:
-        ind = _PREFIX.match(ln).end()
-        parsed.append((ind // 3, ln[ind:]))
-    bad = []
-    for i, (d, txt) in enumerate(parsed):
-        if not (txt.startswith("ResolvedHint") and "broadcast" in txt):
-            continue
-        # walk the hint's subtree
-        path = {}  # depth -> node text (current ancestor chain)
-        for j in range(i + 1, len(parsed)):
-            dj, tj = parsed[j]
-            if dj <= d:
-                break
-            path[dj] = tj
-            if tj.startswith("Relation"):
-                tbl = next((name for s, name in _LINEAR.items() if s in tj),
-                           None)
-                if tbl is None:
-                    continue
-                chain = [path[k] for k in range(d + 1, dj) if k in path]
-                if not any(c.startswith(_SHRINKING) for c in chain):
-                    bad.append(tbl)
-    return bad
-
-
-@pytest.mark.parametrize("name", sorted(QUERIES))
-def test_no_forced_broadcast_of_linear_table(name, spark, sf_dir,
-                                             monkeypatch):
-    # Simulate the 100 TB regime: every stats-gated hint
-    # (tables.broadcast_if_small) degrades to no-hint, and the plan
-    # built under THAT regime must contain no forced broadcast of a
-    # linear-scaling table. (At sf0.001 the gates legitimately fire —
-    # that is their point — so they are disabled for this invariant.)
-    from cube_builder_spark import tables
-    monkeypatch.setattr(tables, "FORCE_NO_BROADCAST_HINTS", True)
-    df = QUERIES[name](spark, sf_dir)
-    analyzed = df._jdf.queryExecution().analyzed().toString()
-    bad = _forced_linear_broadcasts(analyzed)
-    assert not bad, (
-        f"{name}: forced broadcast() of unfiltered linearly-scaling "
-        f"table(s) {bad} — drop the hint or gate it on table size")
 
 
 def test_c35_change_matrix_single_exchange_after_plane(spark, sf_dir):

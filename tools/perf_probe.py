@@ -1,7 +1,7 @@
 """Optimization-round measurement probe (guide §1).
 
 Usage:
-  python tools/perf_probe.py plan  TAG q1 q2 ...   # capture explain("formatted") to plans/r15/<q>_<TAG>.txt
+  python tools/perf_probe.py plan  DIR TAG q1 q2 ... # capture explain("formatted") to DIR/<q>_<TAG>.txt
   python tools/perf_probe.py time  N   q1 q2 ...   # min-of-N wall (collect, bench methodology)
   python tools/perf_probe.py noop  N   q1 q2 ...   # min-of-N wall (noop sink, isolates compute from collect)
 
@@ -22,22 +22,19 @@ from cube_builder_spark.session import get_spark
 
 
 def main() -> None:
-    mode = sys.argv[1]
-    arg2 = sys.argv[2]
-    names = sys.argv[3:]
+    mode, arg2, *names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("perf-probe")
     qs = all_queries()
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
     if mode == "plan":
-        out_dir = os.path.join(here, "plans", "r15")
+        out_dir, tag, names = arg2, names[0], names[1:]
         os.makedirs(out_dir, exist_ok=True)
         for n in names:
             df = qs[n](spark, sf_dir)
             txt = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted")
-            path = os.path.join(out_dir, f"{n}_{arg2}.txt")
+            path = os.path.join(out_dir, f"{n}_{tag}.txt")
             with open(path, "w") as fh:
                 fh.write(txt)
             n_ex = txt.count("Exchange")
