@@ -152,7 +152,7 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice's bytes (tables.slice_bytes), so the hint survives SFs
     where the whole table fails the gate but the slice fits; at 100x
     both estimates fail and AQE picks the join (no forced hints —
-    tests/test_queries_oracle.py)."""
+    tests/test_plan_invariants.py)."""
     import datetime
     t = load_tables(spark, sf_dir,
                     ["customer", "orders", "lineitem", "supplier", "nation", "region"])

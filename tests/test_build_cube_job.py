@@ -4,7 +4,6 @@ incremental-reuse semantics (tasks.py:128-182)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from cube_builder_spark.pixelplane import BAND_NODATA, pixel_plane
@@ -212,58 +211,3 @@ def test_build_cube_bucketed_store(spark, sf_dir, tmp_path):
     agg = back.groupBy("tile_id", "pixel_id").agg(F.count(F.lit(1)))
     assert not plan_has_exchange(agg)
     spark.sql("DROP TABLE IF EXISTS cube_e2e_bucketed")
-
-
-def _mini_obs(spark, bands=("B04", "SCL")):
-    rows = [(0, p, "2020-01-02", 2, 0, b, 100 + p)
-            for p in range(4) for b in bands]
-    df = spark.createDataFrame(
-        rows, "tile_id long, pixel_id long, date string, doy long, "
-              "source_idx long, band string, value long")
-    return (df.withColumn("date", F.col("date").cast("date"))
-            .withColumn("scene_order", F.col("source_idx")))
-
-
-def test_reuse_missing_band_and_force_rejected(spark, tmp_path):
-    from datetime import date
-
-    from cube_builder_spark.plans.build_cube import CubeJobConfig, build_cube
-    src = str(tmp_path / "src")
-    cfg_a = CubeJobConfig(start=date(2020, 1, 1), end=date(2020, 1, 8), step=8,
-                          index_bands={}, write_identity=True)
-    build_cube(spark, _mini_obs(spark), src, cfg_a)
-
-    dst = str(tmp_path / "dst")
-    with pytest.raises(RuntimeError, match="must have all bands"):
-        build_cube(spark, _mini_obs(spark, bands=("B04", "B99", "SCL")), dst,
-                   CubeJobConfig(start=date(2020, 1, 1), end=date(2020, 1, 8),
-                                 step=8, index_bands={}, reuse_from=src))
-    with pytest.raises(RuntimeError, match="force"):
-        build_cube(spark, _mini_obs(spark), dst,
-                   CubeJobConfig(start=date(2020, 1, 1), end=date(2020, 1, 8),
-                                 step=8, index_bands={}, reuse_from=src,
-                                 force=True))
-    with pytest.raises(RuntimeError, match="no\\s+identity|has no"):
-        build_cube(spark, _mini_obs(spark), dst,
-                   CubeJobConfig(start=date(2020, 1, 1), end=date(2020, 1, 8),
-                                 step=8, index_bands={},
-                                 reuse_from=str(tmp_path / "nowhere")))
-
-
-def test_reuse_matches_direct_build(spark, tmp_path):
-    from datetime import date
-
-    from cube_builder_spark.plans.build_cube import CubeJobConfig, build_cube
-    obs = _mini_obs(spark)
-    src, direct, reused = (str(tmp_path / d) for d in ("src", "direct", "re"))
-    base = dict(start=date(2020, 1, 1), end=date(2020, 1, 8), step=8,
-                index_bands={})
-    build_cube(spark, obs, src, CubeJobConfig(**base, write_identity=True))
-    build_cube(spark, obs, direct, CubeJobConfig(**base))
-    build_cube(spark, obs, reused, CubeJobConfig(**base, reuse_from=src))
-    a = spark.read.parquet(direct + "/cube")
-    b = spark.read.parquet(reused + "/cube")
-    cols = ["tile_id", "period", "band", "pixel_id", "lcf_value",
-            "provenance", "datasource", "med_value", "totalob", "clearob"]
-    assert sorted(map(tuple, a.select(*cols).collect())) == \
-        sorted(map(tuple, b.select(*cols).collect()))

@@ -5,8 +5,6 @@ degenerate text, and the decontaminate broadcast plan shape."""
 
 from __future__ import annotations
 
-from collections import Counter, defaultdict
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -415,395 +413,3 @@ def test_zonal_stats_exact_on_constructed_plane(spark, monkeypatch):
     z1 = got[(0, 1, 1)]
     assert (z1.n_valid, z1.v_sum) == (1, 100)   # nodata excluded
     assert got[(1, 0, 2)].v_mean == 7.0
-
-
-def test_perplexity_buckets_are_ordered_terciles(spark, sf_dir):
-    from cube_builder_spark.corpus_queries import t_perplexity_buckets
-
-    rows = t_perplexity_buckets(spark, sf_dir).collect()
-    assert rows
-    sizes = Counter(r.bucket for r in rows)
-    assert set(sizes) == {"head", "middle", "tail"}
-    # ntile balance: tercile sizes differ by at most 1
-    assert max(sizes.values()) - min(sizes.values()) <= 1
-    # ordering contract: every head doc is at least as predictable
-    # (mean bigram probability) as every tail doc
-    mean = {r.doc_id: r.score_sum / r.n_bigrams for r in rows}
-    worst_head = min(mean[r.doc_id] for r in rows if r.bucket == "head")
-    best_tail = max(mean[r.doc_id] for r in rows if r.bucket == "tail")
-    assert worst_head >= best_tail
-
-
-def test_cooccurrence_pmi_score_and_ordering(spark, sf_dir):
-    from cube_builder_spark.corpus_queries import t_cooccurrence_pmi
-    from cube_builder_spark.tables import load_tables
-
-    rows = t_cooccurrence_pmi(spark, sf_dir).collect()
-    assert 0 < len(rows) <= 50
-    docs = load_tables(spark, sf_dir, ["documents"])["documents"]
-    n_docs = docs.count()
-    for r in rows:
-        assert r.wa < r.wb
-        assert r.c_ab <= min(r.c_a, r.c_b)
-        assert r.pmi_micro == 1000000 * r.c_ab * n_docs // (r.c_a * r.c_b)
-    scores = [r.pmi_micro for r in rows]
-    assert scores == sorted(scores, reverse=True)
-
-
-def test_ngram_novelty_matches_python_recompute(spark, sf_dir):
-    from cube_builder_spark.corpus_queries import t_ngram_novelty
-    from cube_builder_spark.tables import load_tables
-
-    rows = {r.doc_id: r for r in t_ngram_novelty(spark, sf_dir).collect()}
-    assert rows
-    docs = load_tables(spark, sf_dir, ["documents"])["documents"].collect()
-    grams = {}
-    for d in docs:
-        ws = d.text.split(" ")
-        if len(ws) < 8:
-            continue
-        gs = {" ".join(ws[i:i + 8]) for i in range(len(ws) - 7)}
-        grams[d.doc_id] = gs
-    first = {}
-    for doc_id in sorted(grams):
-        for g in grams[doc_id]:
-            first.setdefault(g, doc_id)
-    for doc_id, gs in grams.items():
-        novel = sum(1 for g in gs if first[g] == doc_id)
-        r = rows[doc_id]
-        assert (r.n_grams, r.n_novel) == (len(gs), novel), doc_id
-        assert abs(r.novelty_ratio - novel / len(gs)) < 1e-12
-    assert set(rows) == set(grams)
-    # the smallest doc_id in the corpus owns every one of its grams
-    d0 = min(grams)
-    assert rows[d0].n_novel == rows[d0].n_grams
-
-
-def test_vocab_growth_reconciles_with_exact_vocab(spark, sf_dir):
-    from cube_builder_spark.corpus_queries import t_vocab_growth
-    from cube_builder_spark.tables import load_tables
-
-    rows = sorted(t_vocab_growth(spark, sf_dir).collect(),
-                  key=lambda r: r.decile)
-    assert [r.decile for r in rows] == list(range(1, 11))
-    docs = load_tables(spark, sf_dir, ["documents"])["documents"].collect()
-    vocab = set()
-    for d in docs:
-        vocab.update(d.text.split(" "))
-    # per-decile new terms sum to the EXACT corpus vocabulary
-    assert sum(r.n_new_terms for r in rows) == len(vocab)
-    assert rows[-1].cum_vocab == len(vocab)
-    assert sum(r.n_docs for r in rows) == len(docs)
-    assert rows[-1].cum_docs == len(docs)
-    # cumulative columns are consistent prefix sums and monotone
-    cv = cd = 0
-    for r in rows:
-        cd += r.n_docs
-        cv += r.n_new_terms
-        assert (r.cum_docs, r.cum_vocab) == (cd, cv)
-    # Heaps: the first decile contributes the most new vocabulary
-    assert rows[0].n_new_terms == max(r.n_new_terms for r in rows)
-
-
-def _docs_rows(spark, sf_dir):
-    from cube_builder_spark.tables import load_tables
-    return load_tables(spark, sf_dir, ["documents"])["documents"].collect()
-
-
-def test_bm25_matches_python_recompute(spark, sf_dir):
-    from cube_builder_spark.corpus_queries import t_bm25_topk
-
-    got = [(r.doc_id, r.bm25_score, r.n_match)
-           for r in t_bm25_topk(spark, sf_dir).collect()]
-    docs = _docs_rows(spark, sf_dir)
-    toks = {r.doc_id: r.text.split(" ") for r in docs}
-    tf = {d: Counter(ts) for d, ts in toks.items()}
-    dl = {d: len(ts) for d, ts in toks.items()}
-    df = Counter()
-    for d in tf:
-        for w in tf[d]:
-            df[w] += 1
-    a_tot, n_docs = sum(dl.values()), len(dl)
-    q = set(tf[0])
-    scores = {}
-    for d in tf:
-        if d == 0:
-            continue
-        s = sum((1_000_000 // df[w]) * (22 * a_tot * tf[d][w])
-                // (10 * a_tot * tf[d][w] + 3 * a_tot
-                    + 9 * n_docs * dl[d])
-                for w in q if w in tf[d])
-        m = sum(1 for w in q if w in tf[d])
-        if m:
-            scores[d] = (s, m)
-    want = sorted(scores.items(), key=lambda kv: (-kv[1][0], kv[0]))[:10]
-    assert got == [(d, s, m) for d, (s, m) in want]
-
-
-def test_burstiness_and_phrase_match_python(spark, sf_dir):
-    from cube_builder_spark.corpus_queries import (t_phrase_search,
-                                                   t_term_burstiness)
-
-    docs = _docs_rows(spark, sf_dir)
-    toks = {r.doc_id: r.text.split(" ") for r in docs}
-    n_docs = len(toks)
-    tf = {d: Counter(ts) for d, ts in toks.items()}
-    stats = defaultdict(lambda: [0, 0, 0])  # df, sum_tf, sum_tf2
-    for d in tf:
-        for w, c in tf[d].items():
-            st = stats[w]
-            st[0] += 1
-            st[1] += c
-            st[2] += c * c
-    burst = {}
-    for w, (dfw, s1, s2) in stats.items():
-        if dfw >= 5:
-            d_num = n_docs * s2 - s1 * s1
-            burst[w] = (dfw, s1, d_num,
-                        (1_000_000 * d_num) // (n_docs * s1))
-    want = sorted(burst.items(),
-                  key=lambda kv: (-kv[1][3], kv[0]))[:25]
-    got = [(r.term, (r.df, r.sum_tf, r.d_num, r.burst_scaled))
-           for r in t_term_burstiness(spark, sf_dir).collect()]
-    assert got == want
-
-    phrase = (toks[0][0], toks[0][1])
-    occ = {}
-    for d, ts in toks.items():
-        if d == 0:
-            continue
-        c = sum(1 for a, b in zip(ts, ts[1:]) if (a, b) == phrase)
-        if c:
-            occ[d] = c
-    want_p = sorted(occ.items(), key=lambda kv: (-kv[1], kv[0]))[:10]
-    got_p = [(r.doc_id, r.n_occ)
-             for r in t_phrase_search(spark, sf_dir).collect()]
-    assert got_p == want_p
-
-
-def test_systematic_resample_exactly_n_and_python_match(spark, sf_dir):
-    """The floors telescope: total copies == 1000 exactly; every doc
-    with weight >= W/1000 draws at least one copy; full python
-    recompute of the per-doc copy counts."""
-    from cube_builder_spark.pipeline_queries import p_systematic_resample
-
-    got = {r.doc_id: (r.weight, r.n_copies)
-           for r in p_systematic_resample(spark, sf_dir).collect()}
-    docs = sorted((r.doc_id, r.n_chars) for r in _docs_rows(spark, sf_dir))
-    w_sum = sum(w for _d, w in docs)
-    cum, want = 0, {}
-    for d, w in docs:
-        prev = cum
-        cum += w
-        copies = (1000 * cum) // w_sum - (1000 * prev) // w_sum
-        if copies >= 1:
-            want[d] = (w, copies)
-    assert got == want
-    assert sum(c for _w, c in got.values()) == 1000
-    for d, w in docs:
-        if w * 1000 >= w_sum:
-            assert d in got
-
-
-def test_rake_matches_python_recompute(spark, sf_dir):
-    from cube_builder_spark.corpus_queries import t_keyphrase_rake
-
-    got = [(r.phrase, r.n_occ, r.score_scaled)
-           for r in t_keyphrase_rake(spark, sf_dir).collect()]
-    stop = {"the", "a"}
-    phrases = []
-    for r in _docs_rows(spark, sf_dir):
-        run = []
-        for t in r.text.split(" ") + ["the"]:
-            if t in stop:
-                if run and len(run) <= 8:
-                    phrases.append(tuple(run))
-                run = []
-            else:
-                run.append(t)
-    freq, deg = Counter(), Counter()
-    for p in phrases:
-        for w in p:
-            freq[w] += 1
-            deg[w] += len(p)
-    n_occ = Counter(phrases)
-    scores = {p: (c, sum((1_000_000 * deg[w]) // freq[w] for w in p))
-              for p, c in n_occ.items()}
-    want = sorted(((" ".join(p), c, s) for p, (c, s) in scores.items()),
-                  key=lambda r: (-r[2], r[0]))[:15]
-    assert got == want
-
-
-def test_textrank_against_float_pagerank(spark, sf_dir):
-    """The exact-integer micro-unit ranks order the same head as a
-    damping=0.85 PageRank on the identical edge set (the integer form
-    is a fixed-point TRUNCATION, so the check allows set-equality of
-    the top-10 rather than exact order). The reference runs in exact
-    rationals: in floats, tied terms come out 1 ulp apart depending
-    on the set's hash-seeded iteration order, which moved 5 of the
-    top 10 across PYTHONHASHSEED values."""
-    from fractions import Fraction
-
-    from cube_builder_spark.corpus_queries import t_textrank, _docs
-
-    got = [(r.term, r.rank_micro) for r in
-           t_textrank(spark, sf_dir).collect()]
-    assert len(got) == 20
-    assert all(got[i][1] >= got[i + 1][1] for i in range(19))
-    # rebuild the same graph in python
-    docs = _docs(spark, sf_dir).collect()
-    cnt = Counter()
-    for d in docs:
-        cnt.update(w for w in d.text.split(" ") if w)
-    vocab = {w for w, _ in sorted(cnt.items(),
-                                  key=lambda kv: (-kv[1], kv[0]))[:100]}
-    edges = set()
-    for d in docs:
-        t = d.text.split(" ")
-        for a, b in zip(t, t[1:]):
-            if a != b and a in vocab and b in vocab:
-                edges.add((a, b))
-                edges.add((b, a))
-    deg = Counter(s for s, _ in edges)
-    nodes = sorted(deg)
-    rank = {n: Fraction(1) for n in nodes}
-    for _ in range(3):
-        contrib = defaultdict(Fraction)
-        for s, d2 in edges:
-            contrib[d2] += rank[s] / deg[s]
-        rank = {n: Fraction(15, 100) + Fraction(85, 100) * contrib[n]
-                for n in nodes}
-    exact_top = {w for w, _ in sorted(rank.items(),
-                                      key=lambda kv: (-kv[1], kv[0]))[:10]}
-    int_top10 = {w for w, _ in got[:10]}
-    assert len(int_top10 & exact_top) >= 8  # truncation can flip near-ties
-
-
-def test_zipf_check_head_is_exact(spark, sf_dir):
-    """rank×freq and ppm columns recomputed from a plain Counter."""
-    from cube_builder_spark.corpus_queries import t_zipf_check, _docs
-
-    cnt = Counter()
-    for d in _docs(spark, sf_dir).collect():
-        cnt.update(w for w in d.text.split(" ") if w)
-    ordered = sorted(cnt.items(), key=lambda kv: (-kv[1], kv[0]))[:50]
-    f1 = ordered[0][1]
-    want = {i + 1: (w, c, (i + 1) * c, 1_000_000 * c // f1)
-            for i, (w, c) in enumerate(ordered)}
-    got = {r.rank: (r.term, r.freq, r.rank_freq, r.ratio_ppm)
-           for r in t_zipf_check(spark, sf_dir).collect()}
-    assert got == want
-
-
-def test_hapax_ratio_recompute(spark, sf_dir):
-    from cube_builder_spark.corpus_queries import t_hapax_ratio, _docs
-
-    cnt = defaultdict(Counter)
-    for d in _docs(spark, sf_dir).collect():
-        cnt[d.source].update(w for w in d.text.split(" ") if w)
-    got = {r.source: (r.vocab, r.tokens, r.hapax, r.hapax_ppm)
-           for r in t_hapax_ratio(spark, sf_dir).collect()}
-    want = {}
-    for s, c in cnt.items():
-        hapax = sum(1 for v in c.values() if v == 1)
-        want[s] = (len(c), sum(c.values()), hapax,
-                   1_000_000 * hapax // len(c))
-    assert got == want
-
-
-def test_code_detect_on_planted_docs(spark, sf_dir):
-    """A handmade code snippet flags, prose doesn't, and ppm math is
-    exact; then the real corpus run must satisfy the per-row
-    identities everywhere."""
-    from cube_builder_spark.corpus_queries import t_code_detect
-    import cube_builder_spark.corpus_queries as cq
-
-    planted = spark.createDataFrame(
-        [(1, "int main() { return x[0] <= y; }", "en", "s", 32),
-         (2, "the quiet afternoon passed without event", "en", "s", 40)],
-        "doc_id long, text string, lang string, source string, n_chars long")
-    orig = cq._docs
-    cq._docs = lambda spark, sf_dir: planted
-    try:
-        got = {r.doc_id: r for r in t_code_detect(spark, "x").collect()}
-    finally:
-        cq._docs = orig
-    assert got[1].is_code == 1 and got[2].is_code == 0
-    assert got[1].code_chars == sum(
-        1 for ch in "int main() { return x[0] <= y; }" if ch in "{};=()<>[]")
-
-    for r in t_code_detect(spark, sf_dir).limit(200).collect():
-        assert r.code_ppm == 1_000_000 * r.code_chars // r.n_chars
-        assert r.is_code == (1 if r.code_ppm >= 20000 else 0)
-
-
-def test_mattr_python_recompute_and_length_invariance(spark, sf_dir):
-    """Exact recompute of the window sums, plus the property MATTR
-    exists for: a text repeated 10x keeps (approximately) its MATTR
-    while plain TTR collapses — checked exactly in python on a
-    planted doc."""
-    from cube_builder_spark.corpus_queries import t_mattr_diversity, _docs
-
-    docs = {d.doc_id: d.text.split(" ")
-            for d in _docs(spark, sf_dir).collect()}
-    got = {r.doc_id: (r.n_tokens, r.n_windows, r.sum_distinct, r.mattr)
-           for r in t_mattr_diversity(spark, sf_dir).collect()}
-    for did, t in docs.items():
-        if not t:
-            continue
-        if len(t) <= 50:
-            wins = [len(set(t))]
-            width = len(t)
-        else:
-            wins = [len(set(t[i:i + 50])) for i in range(len(t) - 49)]
-            width = 50
-        r = got[did]
-        assert r == (len(t), len(wins), sum(wins),
-                     sum(wins) / (len(wins) * width))
-
-    # length invariance (pure python, the statistic itself)
-    base = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
-            * 10).split()
-    rep = base * 10
-
-    def mattr(t):
-        wins = [len(set(t[i:i + 50])) for i in range(len(t) - 49)]
-        return sum(wins) / (len(wins) * 50)
-
-    def ttr(t):
-        return len(set(t)) / len(t)
-
-    assert abs(mattr(rep) - mattr(base)) < 0.01
-    assert ttr(rep) < ttr(base) / 5
-
-
-def test_modality_mix_consistent_with_code_detect(spark, sf_dir):
-    """The mix table must be exactly the (source, is_code) rollup of
-    t_code_detect's per-doc flags, token shares summing to ≤ 1e6 per
-    source (floor)."""
-    from cube_builder_spark.corpus_queries import t_code_detect
-    from cube_builder_spark.pipeline_queries import p_modality_mix, _docs
-
-    flags = {r.doc_id: r.is_code
-             for r in t_code_detect(spark, sf_dir).collect()}
-    docs = _docs(spark, sf_dir).collect()
-    agg = defaultdict(lambda: [0, 0])
-    for d in docs:
-        # zero-length docs are flagged 0 here, matching the query
-        f = flags.get(d.doc_id, 0)
-        row = agg[(d.source, f)]
-        row[0] += 1
-        row[1] += len(d.text.split(" "))
-    src_tokens = Counter()
-    for (s, _f), (_n, tk) in agg.items():
-        src_tokens[s] += tk
-    got = {(r.source, r.is_code): (r.n_docs, r.n_tokens,
-                                   r.token_share_ppm)
-           for r in p_modality_mix(spark, sf_dir).collect()}
-    want = {(s, f): (n, tk, 1_000_000 * tk // src_tokens[s])
-            for (s, f), (n, tk) in agg.items()}
-    assert got == want
-    per_src = Counter()
-    for (s, _f), (_n, _tk, ppm) in got.items():
-        per_src[s] += ppm
-    assert all(v <= 1_000_000 for v in per_src.values())

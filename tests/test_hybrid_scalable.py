@@ -124,25 +124,3 @@ def test_postings_store_rebuilds_on_corpus_overwrite(spark, tmp_path):
     # the superseded store's scratch was purged, not leaked until exit
     assert not os.path.exists(old_path)
     assert os.path.exists(_POSTINGS_STORES[new_keys[0]])
-
-
-def test_hybrid_rrf_rewards_presence_in_both_lists(spark, sf_dir):
-    from cube_builder_spark.ann_queries import a_hybrid_search_rrf
-
-    rows = a_hybrid_search_rrf(spark, sf_dir).collect()
-    assert 0 < len(rows) <= 10
-    # output is rank-sorted by fused score
-    scores = [r.rrf_score for r in rows]
-    assert scores == sorted(scores, reverse=True)
-    # RRF contract: a doc present in BOTH lists carries both rank
-    # contributions; its score must exceed either single contribution
-    for r in rows:
-        if r.rank_lex is not None and r.rank_vec is not None:
-            assert r.rrf_score > 10**9 // (60 + r.rank_lex)
-            assert r.rrf_score > 10**9 // (60 + r.rank_vec)
-        else:
-            # single-list docs carry exactly one contribution
-            rank = r.rank_lex if r.rank_lex is not None else r.rank_vec
-            assert r.rrf_score == 10**9 // (60 + rank)
-    # the query doc itself is excluded from both candidate lists
-    assert all(r.doc_id != 0 for r in rows)

@@ -3,7 +3,6 @@
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from cube_builder_spark.grids import create_tiles, tile_intersects, tiles_df
@@ -128,61 +127,3 @@ def test_mosaic_packed_domain_violation_raises(spark):
         "source_idx long, scene_order long")
     with pytest.raises(SparkRuntimeException, match="domain violated"):
         mosaic.mosaic_first_valid(scenes).collect()
-
-
-def test_confidence_expression_matches_manual_bits(spark):
-    from cube_builder_spark.operators import masking
-    df = spark.range(0, 65536).select(F.col("id").alias("qa"))
-    expr = masking.compile_confidence_expression("cloud >= MEDIUM", F.col("qa"))
-    manual = masking.extract_bits(F.col("qa"), 8, 9) >= masking.MEDIUM
-    assert df.filter(expr != manual).count() == 0
-    combo = masking.compile_confidence_expression(
-        "cloud == HIGH or (cloud_shadow >= MEDIUM and not snow == HIGH)",
-        F.col("qa"))
-    manual2 = ((masking.extract_bits(F.col("qa"), 8, 9) == masking.HIGH)
-               | ((masking.extract_bits(F.col("qa"), 10, 11) >= masking.MEDIUM)
-                  & ~(masking.extract_bits(F.col("qa"), 12, 13) == masking.HIGH)))
-    assert df.filter(combo != manual2).count() == 0
-
-
-def test_confidence_expression_rejects_unsafe():
-    from cube_builder_spark.operators.masking import (
-        ConfidenceExpressionError, compile_confidence_expression)
-    for bad in ("__import__('os')", "cloud + 1", "x == 1", "cloud == MEDIUM; 1"):
-        with pytest.raises(ConfidenceExpressionError):
-            compile_confidence_expression(bad, F.lit(0))
-
-
-def test_geographic_grid_hierarchy_nests():
-    from cube_builder_spark.grids import (create_geographic_grids,
-                                          geographic_grid_constants)
-    params = dict(names=["SM", "MD", "LG"], projection="aea", meridian=-54.0,
-                  tile_factor=[(10, 10), (20, 20), (40, 40)],
-                  shape=(10560, 10560),
-                  bbox=(-60.0, -20.0, -50.0, -10.0))
-    c = geographic_grid_constants(params["projection"], params["meridian"],
-                                  params["tile_factor"], params["shape"],
-                                  params["bbox"])
-    # center-tile size: shape * ref resolution (10560 px * 10 m)
-    assert c["tile_size_x"] == pytest.approx(105600.0)
-    grids = create_geographic_grids(**params)
-    sm, md, lg = grids["SM"], grids["MD"], grids["LG"]
-    assert len(sm) > len(md) > len(lg) > 0
-    assert all(len(t["tile_id"]) == 6 for t in sm)
-    # every MD tile corner sits on the SM lattice; MD tile = 2x SM tile
-    ts = c["tile_size_x"]
-    for t in md:
-        k = (t["xmin"] - c["x_min_grid"]) / ts
-        assert abs(k - round(k)) < 1e-9
-        assert (t["xmax"] - t["xmin"]) == pytest.approx(2 * ts)
-    for t in lg:
-        assert (t["xmax"] - t["xmin"]) == pytest.approx(4 * ts)
-
-
-def test_geographic_grid_sinusoidal():
-    from cube_builder_spark.grids import create_geographic_grids
-    grids = create_geographic_grids(
-        names=["S"], projection="sinu", meridian=0.0,
-        tile_factor=[(100, 100)], shape=(1200, 1200),
-        bbox=(-10.0, -10.0, 10.0, 10.0))
-    assert len(grids["S"]) > 0

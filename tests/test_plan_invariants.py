@@ -1,13 +1,30 @@
-"""Physical-plan pins for single operators. The engine-wide per-query
-invariants (no CartesianProduct, no BatchEvalPython, no forced
-broadcast of a linear table) run on each query's one build in
-tests/test_queries_oracle.py."""
+"""Engine-wide physical-plan invariants over EVERY registered query,
+plus plan pins for single operators.
+
+The per-query invariants read the query's one build in the session's
+``query_gate`` (tests/conftest.py): no CartesianProduct and no
+BatchEvalPython in the executed plan, and no forced broadcast of a
+linearly-scaling table in the analyzed plan."""
 
 from __future__ import annotations
+
+import pytest
 
 from cube_builder_spark.queries import all_queries
 
 QUERIES = all_queries()
+
+
+@pytest.mark.parametrize("name", sorted(QUERIES))
+def test_no_cartesian_no_pickled_udf(name, query_gate):
+    problems = query_gate(name, "plan")
+    assert not problems, f"{name}: " + "; ".join(problems)
+
+
+@pytest.mark.parametrize("name", sorted(QUERIES))
+def test_no_forced_broadcast_of_linear_table(name, query_gate):
+    problems = query_gate(name, "broadcast")
+    assert not problems, f"{name}: " + "; ".join(problems)
 
 
 def test_c35_change_matrix_single_exchange_after_plane(spark, sf_dir):

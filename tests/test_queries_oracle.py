@@ -1,134 +1,21 @@
-"""The per-query gate: every registered query is built ONCE, and that one
-frame is checked three ways (the graded CORRECTNESS run hash-checks
-the first 50 registry entries at sf0.01; this runs all of them at
-sf0.001).
-
-1. Executed plan, taken before any action. Two patterns must never
-   appear at any scale:
-
-   - ``CartesianProduct`` — an unconstrained pair space. Intentional
-     1-row/broadcast cross joins compile to BroadcastNestedLoopJoin,
-     which is allowed; a shuffled cartesian is always a bug.
-   - ``BatchEvalPython`` — a row-at-a-time (pickled) Python UDF. All
-     executor-side Python in this engine must be Arrow-batched
-     (ArrowEvalPython / mapInPandas / applyInPandas*).
-
-2. Analyzed plan: no forced broadcast of a linearly-scaling table
-   (``_forced_linear_broadcasts``).
-3. Oracle: hash-match the DuckDB oracle SQL, or a rows-only run when
-   the query has no oracle.
-
-Queries whose CONSTRUCTION runs bounded driver-side jobs (centroid
-collects, bloom builds, checkpoints) pay those jobs once per query.
-"""
+"""Every registered query hash-matches its DuckDB oracle SQL, or runs
+rows-only when it has none. The check runs on the query's one build in
+the session's ``query_gate`` (tests/conftest.py), the same build the
+plan invariants in test_plan_invariants.py read."""
 
 from __future__ import annotations
 
-import re
-
 import pytest
 
-from cube_builder_spark import tables
-from cube_builder_spark.oracle import compare
-from cube_builder_spark.queries import all_oracles, all_queries
+from cube_builder_spark.queries import all_queries
 
 QUERIES = all_queries()
-ORACLES = all_oracles()
-
-# ---------------------------------------------------------------------------
-# No forced broadcast of a linearly-scaling table.
-#
-# A ``F.broadcast()`` hint on an unfiltered scan of a table that grows
-# with scale factor (customer/supplier/part/orders/lineitem/events/
-# documents/embeddings) wins at sf0.1 and OOMs a 1000-executor cluster
-# at 100x — and the hint *disables* AQE's ability to choose correctly.
-# Hints are allowed only when something between the hint and the scan
-# shrinks the data (Filter / Aggregate / Deduplicate / Limit / Join) —
-# e.g. a selective slice or a grouped summary.
-# ---------------------------------------------------------------------------
-
-# sentinel first-columns that identify each linearly-scaling relation
-_LINEAR = {
-    "c_custkey#": "customer", "s_suppkey#": "supplier",
-    "p_partkey#": "part", "o_orderkey#": "orders",
-    "l_orderkey#": "lineitem", "event_id#": "events",
-    "doc_id#": "documents", "vec_id#": "embeddings",
-}
-# logical nodes that reduce cardinality on the hint->scan path
-_SHRINKING = ("Filter", "Aggregate", "Deduplicate", "GlobalLimit",
-              "LocalLimit", "Join", "Window", "Generate", "MapInPandas",
-              "FlatMapGroupsInPandas", "Sample")
-
-_PREFIX = re.compile(r"^[:+\- ]*")
-
-
-def _forced_linear_broadcasts(analyzed: str) -> list[str]:
-    """Return names of linear tables scanned with no shrinking node
-    between an enclosing broadcast ResolvedHint and the scan."""
-    lines = analyzed.splitlines()
-    parsed = []  # (depth, node_text)
-    for ln in lines:
-        ind = _PREFIX.match(ln).end()
-        parsed.append((ind // 3, ln[ind:]))
-    bad = []
-    for i, (d, txt) in enumerate(parsed):
-        if not (txt.startswith("ResolvedHint") and "broadcast" in txt):
-            continue
-        # walk the hint's subtree
-        path = {}  # depth -> node text (current ancestor chain)
-        for j in range(i + 1, len(parsed)):
-            dj, tj = parsed[j]
-            if dj <= d:
-                break
-            path[dj] = tj
-            if tj.startswith("Relation"):
-                tbl = next((name for s, name in _LINEAR.items() if s in tj),
-                           None)
-                if tbl is None:
-                    continue
-                chain = [path[k] for k in range(d + 1, dj) if k in path]
-                if not any(c.startswith(_SHRINKING) for c in chain):
-                    bad.append(tbl)
-    return bad
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_query_matches_oracle(name, spark, duck, sf_dir, monkeypatch):
-    sdf = QUERIES[name](spark, sf_dir)
-    qe = sdf._jdf.queryExecution()
-    problems = []
-    plan = qe.executedPlan().toString()
-    if "CartesianProduct" in plan:
-        problems.append("cartesian join")
-    if "BatchEvalPython" in plan:
-        problems.append(
-            "row-at-a-time Python UDF (use Arrow-batched forms)")
-    if _forced_linear_broadcasts(qe.analyzed().toString()):
-        # Simulate the 100 TB regime: every stats-gated hint
-        # (tables.broadcast_if_small) degrades to no-hint, and the plan
-        # built under THAT regime must contain no forced broadcast of a
-        # linear-scaling table. (At sf0.001 the gates legitimately fire
-        # — that is their point.) The flag only drops hints, so the
-        # no-hint plan can flag only what the hinted plan already
-        # flags: a clean hinted plan needs no second build.
-        with monkeypatch.context() as mp:
-            mp.setattr(tables, "FORCE_NO_BROADCAST_HINTS", True)
-            rebuilt = QUERIES[name](spark, sf_dir)
-        bad = _forced_linear_broadcasts(
-            rebuilt._jdf.queryExecution().analyzed().toString())
-        if bad:
-            problems.append(
-                f"forced broadcast() of unfiltered linearly-scaling "
-                f"table(s) {bad} — drop the hint or gate it on table size")
-    try:
-        if name in ORACLES:
-            problems += compare(sdf, duck, ORACLES[name])
-        else:
-            assert sdf.count() >= 0  # rows-only check
-    finally:
-        # also reached when the oracle run raises, so a plan problem
-        # is reported next to the oracle error rather than hidden
-        assert not problems, f"{name}: " + "; ".join(problems)
+def test_query_matches_oracle(name, query_gate):
+    problems = query_gate(name, "oracle")
+    assert not problems, f"{name}: " + "; ".join(problems)
 
 
 def test_entry_smoke(spark):

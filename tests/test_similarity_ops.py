@@ -1,11 +1,3 @@
-"""Vector-search operators and the embedding-plane queries
-(ann_queries.py): quantized and graph top-k against exact search, IVF
-and PQ identities, and cluster metrics recomputed in plain Python."""
-
-from __future__ import annotations
-
-import math
-from collections import Counter, defaultdict
 
 
 def test_sq8_recall_and_exactness(spark, sf_dir):
@@ -122,207 +114,3 @@ def test_mmr_pool_smaller_than_k(spark):
     only_q = spark.createDataFrame([(0, [1.0, 0.0])],
                                    "vec_id long, embedding array<double>")
     assert mmr_topk(only_q, 0, k=3, shortlist=5).count() == 0
-
-
-def test_silhouette_matches_python_recompute(spark, sf_dir):
-    from cube_builder_spark.ann_queries import a_cluster_silhouette
-    from cube_builder_spark.tables import load_tables
-
-    got = {r.label: (r.n_vectors, r.sum_a2, r.sum_b2,
-                     r.n_well_separated)
-           for r in a_cluster_silhouette(spark, sf_dir).collect()}
-    embs = load_tables(spark, sf_dir, ["embeddings"])["embeddings"] \
-        .collect()
-    vecs = {r.vec_id: ([int(math.floor(float(x) * 1000 + 0.5))
-                        for x in r.embedding], int(r.label))
-            for r in embs}
-    sums, cnt = defaultdict(lambda: defaultdict(int)), Counter()
-    for q, lbl in vecs.values():
-        cnt[lbl] += 1
-        for d, v in enumerate(q):
-            sums[lbl][d] += v
-    cents = {}
-    for lbl in cnt:
-        cq = []
-        for d in range(len(next(iter(vecs.values()))[0])):
-            s, nn = sums[lbl][d], cnt[lbl]
-            cq.append((2 * s + nn) // (2 * nn) if s >= 0
-                      else -((2 * -s + nn) // (2 * nn)))
-        cents[lbl] = cq
-    agg = defaultdict(lambda: [0, 0, 0, 0])
-    for q, own in vecs.values():
-        d2 = {lbl: sum((a - b) ** 2 for a, b in zip(q, cq))
-              for lbl, cq in cents.items()}
-        a2 = d2[own]
-        b2 = min(v for lbl, v in d2.items() if lbl != own)
-        row = agg[own]
-        row[0] += 1
-        row[1] += a2
-        row[2] += b2
-        row[3] += 1 if b2 > a2 else 0
-    assert got == {lbl: tuple(v) for lbl, v in agg.items()}
-    # the synthetic labels carry real (if weak) cluster signal: under
-    # RANDOM labels a member beats the min of 9 other centroids with
-    # p ~ 1/10 (~50 of 500); the measured 181 at sf0.001 is >3x that.
-    # Assert well above the random-assignment expectation, not a
-    # majority — the fixture's clusters overlap by construction.
-    n_all = sum(v[0] for v in got.values())
-    n_pos = sum(v[3] for v in got.values())
-    assert n_pos > n_all // 5
-
-
-def test_cluster_purity_matches_python_over_engine_clusters(spark, sf_dir):
-    """Purity recomputed in python from the ENGINE's cluster
-    assignment and the raw labels — pins the packed-argmax majority
-    extraction and the >= 2 member gate (cluster membership itself is
-    oracle-replayed by the registry SQL)."""
-    from cube_builder_spark.ann_queries import (a_cluster_purity,
-                                                a_embedding_dup_clusters)
-    from cube_builder_spark.tables import load_tables
-
-    got = {r.canonical_id: (r.n_members, r.majority_label, r.n_majority)
-           for r in a_cluster_purity(spark, sf_dir).collect()}
-    clusters = {r.vec_id: r.canonical_id
-                for r in a_embedding_dup_clusters(spark, sf_dir)
-                .collect()}
-    labels = {r.vec_id: int(r.label)
-              for r in load_tables(spark, sf_dir, ["embeddings"])
-              ["embeddings"].collect()}
-    per = defaultdict(Counter)
-    for v, c in clusters.items():
-        per[c][labels[v]] += 1
-    want = {}
-    for c, cnt in per.items():
-        n = sum(cnt.values())
-        if n >= 2:
-            best = max(cnt.items(), key=lambda kv: (kv[1], -kv[0]))
-            want[c] = (n, best[0], best[1])
-    assert got == want and want
-    # corpus purity must beat the majority-class baseline on clustered
-    # members (the clusters carry label signal)
-    n_all = sum(v[0] for v in want.values())
-    n_maj = sum(v[2] for v in want.values())
-    assert n_maj * 10 > n_all  # > 1/10 = random-label expectation
-
-
-def test_knn_graph_is_topk_of_pair_set(spark, sf_dir):
-    """The graph must be EXACTLY the per-source top-3 of the
-    symmetrized capped-LSH pair set (cosine desc, dst asc) — no
-    missing vectors, no rank gaps, no cross-bucket inventions."""
-    from cube_builder_spark.ann_queries import a_knn_graph
-    from cube_builder_spark.functions import similarity
-    from cube_builder_spark.tables import load_tables
-
-    embs = load_tables(spark, sf_dir, ["embeddings"])["embeddings"]
-    pairs = similarity.cosine_dup_pairs(
-        embs, num_planes=8, threshold=0.35, max_bucket=256).collect()
-    adj = defaultdict(list)
-    for p in pairs:
-        adj[p.vec_a].append((p.vec_b, p.cosine))
-        adj[p.vec_b].append((p.vec_a, p.cosine))
-    want = {}
-    for src, nbrs in adj.items():
-        top = sorted(nbrs, key=lambda t: (-t[1], t[0]))[:3]
-        want[src] = [(d, c, i + 1) for i, (d, c) in enumerate(top)]
-    got = defaultdict(list)
-    for r in a_knn_graph(spark, sf_dir).collect():
-        got[r.src].append((r.dst, r.cosine, r.k))
-    assert {k: sorted(v, key=lambda t: t[2]) for k, v in got.items()} == want
-
-
-def test_embedding_shift_zero_on_identical_cohorts(spark, sf_dir):
-    """shift_num/den identity vs a numpy recompute of the parity
-    cohorts' quantized per-dim sums, and the float column equals the
-    exact fraction."""
-    import numpy as np
-    from cube_builder_spark.ann_queries import a_embedding_shift
-    from cube_builder_spark.tables import load_tables
-
-    embs = load_tables(spark, sf_dir, ["embeddings"])["embeddings"].collect()
-    sums = {0: np.zeros(64, np.int64), 1: np.zeros(64, np.int64)}
-    ns = Counter()
-    for r in embs:
-        g = int(r.label) % 2
-        q = np.floor(np.array(r.embedding, np.float64) * 1000 + 0.5
-                     ).astype(np.int64)
-        sums[g] += q
-        ns[g] += 1
-    for r in a_embedding_shift(spark, sf_dir).collect():
-        assert (r.n_a, r.n_b) == (ns[0], ns[1])
-        assert r.sum_a == sums[0][r.dim]
-        assert r.sum_b == sums[1][r.dim]
-        assert r.shift_num == r.sum_a * r.n_b - r.sum_b * r.n_a
-        assert r.shift_den == r.n_a * r.n_b
-        assert r.mean_shift_milli == r.shift_num / r.shift_den
-
-
-def test_lsh_plane_recall_candidate_nesting(spark, sf_dir):
-    """Plane prefixes nest: an 8-plane bucket match implies the first
-    4 sign bits match, so candidates(8) ⊆ candidates(4) — hence both
-    the candidate count and the recall must be monotone non-increasing
-    in the plane count; hits recomputed against a numpy exact top-10."""
-    import numpy as np
-    from cube_builder_spark.ann_queries import a_lsh_plane_recall
-    from cube_builder_spark.tables import load_tables
-
-    rows = {r.n_planes: r for r in
-            a_lsh_plane_recall(spark, sf_dir).collect()}
-    assert set(rows) == {4, 8}
-    assert rows[4].n_candidates >= rows[8].n_candidates
-    assert rows[4].n_hits >= rows[8].n_hits
-    for r in rows.values():
-        assert 0 <= r.n_hits <= 10
-        assert r.recall == r.n_hits * 1.0 / 10
-
-    embs = load_tables(spark, sf_dir, ["embeddings"])["embeddings"].collect()
-    q = {r.vec_id: np.floor(np.array(r.embedding, np.float64) * 1000 + 0.5
-                            ).astype(np.int64) for r in embs}
-    qv = q[0]
-    cos = {}
-    for vid, v in q.items():
-        if vid == 0:
-            continue
-        cos[vid] = (v @ qv) / (np.sqrt(v @ v) * np.sqrt(qv @ qv))
-    top10 = {vid for vid, _ in
-             sorted(cos.items(), key=lambda kv: (-kv[1], kv[0]))[:10]}
-
-    def bucket(v, planes):
-        w = np.array([[(j * 31 + i * 17) % 7 - 3 for i in range(len(v))]
-                      for j in range(planes)], np.int64)
-        bits = (w @ v >= 0).astype(np.int64)
-        return int((bits << np.arange(planes)).sum())
-
-    for p in (4, 8):
-        qb = bucket(qv, p)
-        cands = {vid for vid, v in q.items()
-                 if vid != 0 and bucket(v, p) == qb}
-        assert rows[p].n_candidates == len(cands)
-        assert rows[p].n_hits == len(cands & top10)
-
-
-def test_ivf_balance_identities(spark, sf_dir):
-    """Shares sum to ≤ 1e6 (floor), imbalance num/den identity, the
-    mean imbalance is exactly 1 by construction (Σ n·L / (L·total))."""
-    from cube_builder_spark.ann_queries import a_ivf_balance_report
-
-    rows = a_ivf_balance_report(spark, sf_dir).collect()
-    total = sum(r.n for r in rows)
-    L = len(rows)
-    for r in rows:
-        assert r.imb_num == r.n * L and r.imb_den == total
-        assert r.imbalance == r.n * L * 1.0 / total
-        assert r.share_ppm == 1_000_000 * r.n // total
-    assert sum(r.imb_num for r in rows) == L * total  # mean imbalance 1
-
-
-def test_pq_distortion_identities(spark, sf_dir):
-    """mse num/den identity, every subspace present, and the error of
-    a vector AT its centroid mean is zero: plant 8 identical vectors
-    per seed group so every reconstruction is exact."""
-    from cube_builder_spark.ann_queries import a_pq_distortion_report
-
-    rows = a_pq_distortion_report(spark, sf_dir).collect()
-    assert {r.m for r in rows} == {0, 1, 2, 3}
-    for r in rows:
-        assert r.sum_sq_err >= 0
-        assert r.mse_per_dim == r.sum_sq_err / r.n_dims_scored

@@ -2285,65 +2285,3 @@ def test_old_version_read_isolated_after_materialize(spark, tmp_path):
     materialize_deletes(st, spark)
     assert _ids(st.read(spark, v1)) == list(range(0, 10))
     assert _ids(st.read(spark, v2)) == list(range(0, 20))
-
-
-def test_branch_diff_excludes_shared_base(spark, tmp_path):
-    """branch_diff ground truth on a tiny store: the shared base
-    appears on NEITHER side, each branch's exclusive rows land whole
-    on their own side, and an empty diff means identical heads."""
-    from pyspark.sql import functions as F
-
-    from cube_builder_spark.sinks.snapshot import SnapshotStore, branch_diff
-
-    st = SnapshotStore(str(tmp_path / "bd"))
-    st.write(spark.createDataFrame([(1, 10), (2, 20)], "k long, v long"))
-    st.create_branch("dev")
-    # identical heads -> empty diff
-    assert branch_diff(st, spark, "dev", "main", ["k"]).count() == 0
-    st.write(spark.createDataFrame([(3, 30)], "k long, v long"),
-             branch="dev")
-    st.write(spark.createDataFrame([(4, 40)], "k long, v long"))
-    got = sorted((r.side, r.k, r.v)
-                 for r in branch_diff(st, spark, "dev", "main",
-                                      ["k"]).collect())
-    assert got == [("dev", 3, 30), ("main", 4, 40)]
-
-
-def test_bitmap_and_counts_equal_direct_predicate_count(spark, sf_dir):
-    """The popcount total must equal the direct row count of the
-    conjunctive predicate — the invariant that makes a bitmap index
-    an INDEX and not an approximation."""
-    import pyspark.sql.functions as F
-
-    from cube_builder_spark.storage_queries import x_bitmap_index_and
-    from cube_builder_spark.tables import load_tables
-
-    rows = x_bitmap_index_and(spark, sf_dir).collect()
-    orders = load_tables(spark, sf_dir, ["orders"])["orders"]
-    direct = (orders.filter((F.col("o_orderstatus") == "F")
-                            & (F.col("o_orderpriority") == "1-URGENT"))
-              .count())
-    assert sum(r.n_matches for r in rows) == direct
-    assert all(r.n_words >= 0 and r.n_matches >= r.n_words * 0
-               for r in rows)
-
-
-def test_deletion_vectors_time_travel_isolation(spark, sf_dir):
-    """Optimization-round internals pin: the v2 snapshot read (which
-    executes AFTER the MoR deletes, the re-insert and the materialize
-    have all committed, and now feeds both the v2_all and
-    v2_time_travel rows) must still equal the raw table's slice —
-    the isolation the scenario grades."""
-    from pyspark.sql import functions as F
-
-    from cube_builder_spark.pipeline_queries import _docs
-    from cube_builder_spark.storage_queries import x_deletion_vectors
-    rows = {r.label: r for r in x_deletion_vectors(spark, sf_dir).collect()}
-    raw = (_docs(spark, sf_dir).filter(F.col("doc_id") < 2000)
-           .agg(F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("n_chars").cast("long")).alias("s"))
-           .collect()[0])
-    for label in ("v2_all", "v2_time_travel"):
-        assert rows[label].n_docs == raw.n
-        assert rows[label].sum_chars == raw.s
-    assert rows["v3_after_dv"].n_docs < rows["v2_all"].n_docs

@@ -9,8 +9,6 @@ from pyspark.sql import functions as F
 
 from cube_builder_spark.operators.rescale import baseline_offset
 from cube_builder_spark.sources.local_scan import filter_assets, scan_directory
-from cube_builder_spark.sources.probe import (CONNECTION_ERROR,
-                                              classify_response, probe_links)
 from cube_builder_spark.sources.sceneid import parse_scene_id
 
 
@@ -104,27 +102,3 @@ def test_dispatch_uri_file_scheme_archives():
     assert t["gdal_path"] == "/vsitar//mnt/l/LC08.tar.gz/LC08_X_B04.TIF"
     r = dispatch_uri("https://h/scene.zip")
     assert r["gdal_path"] == "/vsizip//vsicurl/https://h/scene.zip"
-
-
-def test_classify_response_mapping():
-    assert classify_response("file:///x.tif", None, False) == (True, "skipped (not http)")
-    assert classify_response("http://x", 200, False) == (True, "ok")
-    ok, msg = classify_response("http://x", CONNECTION_ERROR, False)
-    assert not ok and msg == "Connection refused http://x"
-    assert classify_response("http://x", 403, True)[1] == \
-        "(Forbidden) You don't have permission to request this resource."
-    assert classify_response("http://x", 403, False)[1] == \
-        "(Forbidden) Missing Authentication Token."
-    assert classify_response("http://x", 500, False)[1] == \
-        "(Internal Server Error) Could not request this resource."
-
-
-def test_probe_links_distributed(spark):
-    links = spark.createDataFrame(
-        [("https://a/1",), ("http://a/2",), ("file:///a/3",)], "link string")
-    rep = probe_links(links, access_token="tok",
-                      prober=lambda u: 403 if u.endswith("1") else 200)
-    got = {r.link: (r.status, r.ok) for r in rep.collect()}
-    assert got["https://a/1"] == (403, False)
-    assert got["http://a/2"] == (200, True)
-    assert got["file:///a/3"] == (-9999, True)     # skipped, not probed

@@ -118,26 +118,3 @@ def test_load_table_cache_hit_and_mtime_invalidation(dated_dir, spark):
     os.utime(path, (os.path.getmtime(path) + 5,) * 2)
     c = load_table(spark, dated_dir, "orders")
     assert c is not a                     # rewritten table re-reads
-
-
-def test_defer_cleanup_purges_previous_dir_per_key(tmp_path):
-    """Round-6 advisor fix: repeated runs of one query must not
-    accumulate scratch dirs on tmpfs — a new registration under the
-    same key removes the previous dir immediately; distinct keys are
-    independent."""
-    import os
-
-    from cube_builder_spark.session import defer_cleanup
-
-    a = tmp_path / "runA"; a.mkdir(); (a / "f").write_text("x")
-    b = tmp_path / "runB"; b.mkdir()
-    other = tmp_path / "other"; other.mkdir()
-    defer_cleanup(str(a), key="qX")
-    defer_cleanup(str(other), key="qY")
-    assert os.path.isdir(a) and os.path.isdir(other)
-    defer_cleanup(str(b), key="qX")       # second run of qX
-    assert not os.path.exists(a)          # prior qX scratch purged
-    assert os.path.isdir(b) and os.path.isdir(other)
-    # re-registering the SAME path is a no-op, never a self-delete
-    defer_cleanup(str(b), key="qX")
-    assert os.path.isdir(b)
