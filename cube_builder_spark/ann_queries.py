@@ -978,7 +978,7 @@ def query_term_buckets(spark: SparkSession, sf_dir: str,
         pairs = sorted({(r.w, r.b) for r in qrows})
         _QTERM_CACHE[key] = pairs
     qb = sorted({b for _w, b in pairs})
-    qterms_df = local_df(spark, 
+    qterms_df = local_df(spark,
         [(w,) for w, _b in pairs], "w string")
     return qterms_df, qb
 
@@ -1156,7 +1156,7 @@ def a_hybrid_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so the fusion's 4 reuses don't re-run the postings read.
     lrows = (_scalable_lex(spark, sf_dir)
              .orderBy(F.desc("score"), "doc_id").limit(50).collect())
-    ltop = local_df(spark, 
+    ltop = local_df(spark,
         [(int(r.doc_id), i + 1) for i, r in enumerate(lrows)],
         "doc_id long, rank_lex int")
     embs = _embs(spark, sf_dir)
@@ -1220,7 +1220,7 @@ def a_hybrid_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the lexical top-50 is already collected (lrows) — replicate it
     # per operating point driver-side instead of a crossJoin (which
     # plans as a CartesianProduct)
-    ltop4 = local_df(spark, 
+    ltop4 = local_df(spark,
         [(p, int(r.doc_id), i + 1) for p in (0, 1, 2, 4)
          for i, r in enumerate(lrows)],
         "p int, doc_id long, rank_lex int")
@@ -1247,7 +1247,7 @@ def a_hybrid_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (zero) row — the curve's worst point is the one that matters
     rows = [(p, len(by_p[p] & by_p[0]), len(by_p[p] & by_p[0]) / 10.0)
             for p in (1, 2, 4)]
-    return local_df(spark, 
+    return local_df(spark,
         rows, "nprobe long, n_hits long, recall double")
 
 
@@ -1834,7 +1834,7 @@ def a_knn_graph_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_probes = probes.agg(F.count(F.lit(1)).cast("long")
                           .alias("n_probes"))
     grid = (spark.range(1, 4).select(F.col("id").cast("long").alias("k"))
-            .crossJoin(local_df(spark, 
+            .crossJoin(local_df(spark,
                 [("gated8",), ("bucket8",), ("bucket4",)],
                 "variant string")))
     return (grid.join(hits, ["variant", "k"], "left")
@@ -1963,6 +1963,6 @@ def a_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     num = sum(v[i] * m[(i, j)] * v[j] for i in dims for j in dims)
     den = sum(x * x for x in v.values())
     eig = num // den
-    return local_df(spark, 
+    return local_df(spark,
         [(i, v[i] * sg, eig) for i in dims],
         "dim long, loading long, eigval long")

@@ -147,7 +147,7 @@ def bands_df(spark: SparkSession, defns: list[CubeDefinition]) -> DataFrame:
     rows = []
     for d in defns:
         rows.extend(create_cube(d)[1])
-    return local_df(spark, 
+    return local_df(spark,
         rows,
         schema=("collection string, name string, common_name string, data_type string, "
                 "nodata double, min_value double, max_value double, scale_mult double, "
@@ -158,7 +158,7 @@ def collections_df(spark: SparkSession, defns: list[CubeDefinition]) -> DataFram
     rows = []
     for d in defns:
         rows.extend(create_cube(d)[0])
-    return local_df(spark, 
+    return local_df(spark,
         rows,
         schema=("name string, version int, identifier string, composite_function string, "
                 "grid string, resolution double, quality_band string, source_collection string"))
@@ -199,13 +199,11 @@ def band_src_rows(defn: CubeDefinition) -> list[dict]:
 
 def quicklook_df(spark: SparkSession, defns: list[CubeDefinition]) -> DataFrame:
     rows = [r for d in defns for r in quicklook_rows(d)]
-    return local_df(spark, 
-        [(r["collection"], r["red"], r["green"], r["blue"]) for r in rows],
-        "collection string, red string, green string, blue string")
+    return local_df(spark, rows,
+                    "collection string, red string, green string, blue string")
 
 
 def band_src_df(spark: SparkSession, defns: list[CubeDefinition]) -> DataFrame:
     rows = [r for d in defns for r in band_src_rows(d)]
-    return local_df(spark, 
-        [(r["collection"], r["band"], r["src_band"]) for r in rows],
-        "collection string, band string, src_band string")
+    return local_df(spark, rows,
+                    "collection string, band string, src_band string")

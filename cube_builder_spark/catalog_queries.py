@@ -36,7 +36,7 @@ def c17_timeline_cyclic16(spark: SparkSession, sf_dir: str) -> DataFrame:
     test_cycle_year_16days)."""
     rows = timeline_rows("cyclic", date(2020, 1, 1), date(2020, 12, 31),
                          "day", 16, cycle=dict(unit="year", step=1))
-    return local_df(spark, 
+    return local_df(spark,
         rows, schema="period string, start_date date, end_date date")
 
 
@@ -55,7 +55,7 @@ def c17_timeline_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = timeline_rows(
         "continuous", date(2020, 1, 1), date(2020, 12, 31), "month", 3,
         intervals=["12-21_03-20", "03-21_06-20", "06-21_09-21", "09-22_12-20"])
-    return local_df(spark, 
+    return local_df(spark,
         rows, schema="period string, start_date date, end_date date")
 
 
@@ -165,7 +165,7 @@ def k6_asset_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tile, period) asset-list dump — in Spark-native form a DataFrame
     ready for df.write.json instead of driver-side file writes."""
     px = pixel_plane(spark, sf_dir)
-    periods = local_df(spark, 
+    periods = local_df(spark,
         [("2020-01-01_2020-01-08", "2020-01-01", "2020-01-08"),
          ("2020-01-09_2020-01-16", "2020-01-09", "2020-01-16")],
         "period string, ps string, pe string").select(
@@ -233,7 +233,7 @@ def p_missing_periods(spark: SparkSession, sf_dir: str) -> DataFrame:
     published items -> the re-run work list. The third period is past
     the data's end, so every tile reports it missing."""
     px = pixel_plane(spark, sf_dir)
-    periods = local_df(spark, 
+    periods = local_df(spark,
         [("2020-01-01_2020-01-08", "2020-01-01", "2020-01-08"),
          ("2020-01-09_2020-01-16", "2020-01-09", "2020-01-16"),
          ("2020-01-17_2020-01-24", "2020-01-17", "2020-01-24")],

@@ -1482,7 +1482,7 @@ def t_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
                     i += 1
             nxt.append((out, freq))
         vocab = nxt
-    return local_df(spark, 
+    return local_df(spark,
         merges, "rank long, sym_a string, sym_b string, cnt long")
 
 
@@ -1674,7 +1674,7 @@ def t_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 exact = v
                 break
         rows.append((p, exact, ok))
-    return local_df(spark, 
+    return local_df(spark,
         rows, "pct long, exact_value long, sketch_within_eps boolean")
 
 

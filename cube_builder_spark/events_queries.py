@@ -1420,7 +1420,7 @@ def e_trajectory_hausdorff_pruned(spark: SparkSession,
     seed_ids = [r["user_id"] for r in
                 summ.orderBy("max_x", "user_id").limit(21)
                 .select("user_id").collect()]
-    empty = local_df(spark, 
+    empty = local_df(spark,
         [], "user_a long, user_b long, hausdorff_sq long")
     if len(seed_ids) < 2:
         return empty
@@ -2704,7 +2704,7 @@ def e_attribution_shapley(spark: SparkSession, sf_dir: str) -> DataFrame:
     # engine-wide no-CartesianProduct invariant holds for all 317
     # plans, even 64-row ones)
     wt = {0: 6, 1: 2, 2: 2, 3: 6}
-    lattice = local_df(spark, 
+    lattice = local_df(spark,
         [(ch, bit, m, wt[bin(m).count("1")])
          for ch, bit in sorted(bit_of.items())
          for m in range(16) if (m & bit) == 0],

@@ -148,7 +148,7 @@ def create_geographic_grids(names: list[str], projection: str, meridian: float,
 
 
 def tiles_df(spark: SparkSession, tiles: list[dict]) -> DataFrame:
-    return local_df(spark, 
+    return local_df(spark,
         tiles, schema="grid string, tile_id string, xmin double, xmax double, ymax double, ymin double")
 
 

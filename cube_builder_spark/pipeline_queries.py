@@ -1919,7 +1919,7 @@ def x_analyze_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
              int(st.columns[c]["min"]), int(st.columns[c]["max"]),
              st.columns[c]["ndv"])
             for c in ("l_orderkey", "l_linenumber")]
-    return local_df(spark, 
+    return local_df(spark,
         rows, "col string, n_rows long, n_nulls long, "
               "min_v long, max_v long, ndv long")
 
@@ -1961,7 +1961,7 @@ def x_bloom_index_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
             rows.extend((r.doc_id, r.n_chars) for r in df.collect())
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    return local_df(spark, 
+    return local_df(spark,
         [(d, n, all_skipped) for d, n in rows],
         "doc_id long, n_chars long, bloom_skipped_files boolean")
 
@@ -2016,7 +2016,7 @@ def x_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
                               {"sum_chars": "n_chars"}).collect()
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    return local_df(spark, 
+    return local_df(spark,
         rows, "source string, n_rows long, sum_chars long")
 
 
@@ -2078,7 +2078,7 @@ def x_incremental_mv_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
             maxs={"max_chars": "n_chars"}).collect()
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    return local_df(spark, 
+    return local_df(spark,
         rows, "source string, n_rows long, min_chars long, max_chars long")
 
 

@@ -92,7 +92,7 @@ class CubeJobConfig:
 def periods_df(spark: SparkSession, cfg: CubeJobConfig) -> DataFrame:
     """C17 timeline → periods table (driver-side algebra, tiny)."""
     rows = timeline_rows(cfg.schema, cfg.start, cfg.end, cfg.unit, cfg.step)
-    return local_df(spark, 
+    return local_df(spark,
         [(r["period"], r["start_date"], r["end_date"]) for r in rows],
         "period string, period_start date, period_end date")
 
@@ -471,7 +471,7 @@ def _append_job_log(spark: SparkSession, out_dir: str, cfg: CubeJobConfig,
     row = [(f"{cfg.cube}-{cfg.version}", cfg.composite,
             float(time.time()), summary["new_items"], summary["reused_items"],
             "done" if summary["new_items"] or summary["reused_items"] else "empty")]
-    df = local_df(spark, 
+    df = local_df(spark,
         row, "cube string, composite string, ts double, "
              "new_items long, reused_items long, status string")
     df.write.mode("append").parquet(os.path.join(out_dir, "job_log"))

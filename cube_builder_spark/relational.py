@@ -1765,7 +1765,7 @@ def x_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
             contrib[dst] = contrib.get(dst, 0) + rank[src] // deg[src]
         rank = {n: 150_000 + (85 * contrib.get(n, 0)) // 100
                 for n in nodes}
-    return local_df(spark, 
+    return local_df(spark,
         sorted(rank.items()), "nationkey long, rank_micro long")
 
 
@@ -2225,7 +2225,7 @@ def x_point_in_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey",
         ((F.col("c_custkey") * 7 + 13) % 197).alias("px"),
         ((F.col("c_custkey") * 11 + 5) % 193).alias("py"))
-    edges = local_df(spark, 
+    edges = local_df(spark,
         _pip_edges(), "k int, x1 int, y1 int, x2 int, y2 int")
     return (points_in_polygons(pts, edges, id_col="c_custkey")
             .groupBy(F.col("k").alias("polygon_id"))
@@ -2431,7 +2431,7 @@ def x_kcore_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
             e = (e.join(alive.select(F.col("v").alias("pa")), "pa")
                  .join(alive.select(F.col("v").alias("pb")), "pb")
                  .localCheckpoint(eager=True))
-    return local_df(spark, 
+    return local_df(spark,
         rows, "round long, n_nodes long, n_edges long, max_deg long")
 
 
@@ -2758,7 +2758,7 @@ def x_hits_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         hub = {n: 0 for n in nodes}
         for src, dst in edge_rows:
             hub[src] += auth[dst]
-    return local_df(spark, 
+    return local_df(spark,
         [(n, hub[n], auth[n]) for n in sorted(nodes)],
         "nationkey long, hub long, authority long")
 

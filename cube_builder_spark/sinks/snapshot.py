@@ -1075,7 +1075,7 @@ def metadata_stats(store: SnapshotStore, spark: SparkSession,
                                 else max(a["max"], st.max))
     rows = [(c, n_rows, acc[c]["nulls"], acc[c]["min"], acc[c]["max"])
             for c in columns]
-    return local_df(spark, 
+    return local_df(spark,
         rows, "col_name string, n_rows long, n_nulls long, "
               "min_val long, max_val long")
 

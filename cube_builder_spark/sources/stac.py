@@ -8,7 +8,7 @@ common-name maps), ``_adapter.py:76-201`` (v1 pystac-client vs legacy
 the one zip asset).
 
 Spark-native: STAC is driver-side ingestion — the client walks pages
-and the feature→asset explosion lands in ``spark.createDataFrame``;
+and the feature→asset explosion lands in ``tables.local_df``;
 everything after that is DataFrame land. The HTTP transport is
 injectable so tests (and offline runs) use canned FeatureCollections;
 a requests-based transport drops in unchanged in production.
@@ -111,7 +111,7 @@ def features_to_asset_rows(features: list[dict], bands: list[str],
                            nodata: float = -9999.0) -> list[dict]:
     """S1 core (maestro.py:700-753): one row per (feature, band asset),
     with band aliasing applied. Pure driver-side Python — the output
-    feeds ``spark.createDataFrame``."""
+    feeds ``tables.local_df``."""
     aliases = {**DEFAULT_BAND_ALIASES, **(band_aliases or {})}
     wanted = set(bands)
     rows = []
@@ -137,10 +137,7 @@ ASSET_SCHEMA = ("link string, dataset string, platform string, band string, "
 
 def assets_df(spark: SparkSession, rows: list[dict]) -> DataFrame:
     """Asset rows → the assets DataFrame every downstream stage reads."""
-    return local_df(spark, 
-        [tuple(r[k] for k in ("link", "dataset", "platform", "band",
-                              "date", "sceneid", "tile_id", "nodata"))
-         for r in rows], ASSET_SCHEMA)
+    return local_df(spark, rows, ASSET_SCHEMA)
 
 
 def search_images(spark: SparkSession, client: StacClient, collection: str,

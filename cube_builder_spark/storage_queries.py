@@ -75,7 +75,7 @@ def x_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows = out.collect()                  # materialize BEFORE rmtree
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    return local_df(spark, 
+    return local_df(spark,
         rows, "label string, n_docs long, sum_chars long")
 
 
@@ -126,7 +126,7 @@ def x_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                    bool(after < before), bool(stable))]
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    return local_df(spark, 
+    return local_df(spark,
         result,
         "n_docs long, sum_chars long, files_reduced boolean, "
         "second_pass_stable boolean")
@@ -178,7 +178,7 @@ def x_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
                      .alias("value_cents"))).collect()
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    return local_df(spark, 
+    return local_df(spark,
         rows, "event_type string, n_events long, value_cents long")
 
 
@@ -355,7 +355,7 @@ def x_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
                      unchanged, pruned))
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    return local_df(spark, 
+    return local_df(spark,
         rows, "label string, n_docs long, sum_chars long, "
               "mor_files_unchanged boolean, materialize_pruned boolean")
 
@@ -436,7 +436,7 @@ def x_snapshot_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for r in out.collect()]
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    return local_df(spark, 
+    return local_df(spark,
         rows, "label string, n_docs long, sum_chars long, "
               "merge_pruned boolean")
 
@@ -492,7 +492,7 @@ def x_snapshot_branch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ("main_after_merge", ma.n, ma.s)]
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    return local_df(spark, 
+    return local_df(spark,
         rows, "label string, n_docs long, sum_chars long")
 
 
@@ -543,7 +543,7 @@ def x_metadata_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows = metadata_stats(st, spark, ["doc_id", "n_chars"]).collect()
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    return local_df(spark, 
+    return local_df(spark,
         rows, "col_name string, n_rows long, n_nulls long, "
               "min_val long, max_val long")
 
@@ -674,7 +674,7 @@ def x_snapshot_expire_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for r in out.collect()]
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    return local_df(spark, 
+    return local_df(spark,
         rows, "label string, n_docs long, sum_chars long, "
               "expired_old boolean, vacuum_reclaimed boolean, "
               "expired_unreadable boolean")
@@ -756,7 +756,7 @@ def x_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
                  "wap_bad" not in st.branches())]
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    return local_df(spark, 
+    return local_df(spark,
         rows, "label string, n_docs long, sum_chars long, "
               "audit_blocked_bad boolean, staging_invisible boolean")
 
@@ -833,7 +833,7 @@ def x_check_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
         add_check_constraint(st2, "chars_nonneg", "n_chars >= 0")
         try:
             checked_write(
-                st2, local_df(spark, 
+                st2, local_df(spark,
                     [(999999, None)], "doc_id long, n_chars long"))
             null_ok = True
         except ConstraintViolation:
@@ -844,7 +844,7 @@ def x_check_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
                  blocked, no_orphans, null_ok)]
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    return local_df(spark, 
+    return local_df(spark,
         rows, "label string, n_docs long, sum_chars long, "
               "violation_blocked boolean, no_orphan_files boolean, "
               "null_row_passes boolean")
@@ -1017,7 +1017,7 @@ def x_occ_append(spark: SparkSession, sf_dir: str) -> DataFrame:
                  rebased and not rebased_d, conflicted, no_orphans)]
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    return local_df(spark, 
+    return local_df(spark,
         rows, "label string, n_docs long, sum_chars long, "
               "blind_append_rebased boolean, overwrite_conflicted boolean, "
               "conflict_left_no_orphans boolean")
@@ -1086,7 +1086,7 @@ def x_snapshot_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows = out.collect()                  # materialize BEFORE rmtree
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    return local_df(spark, 
+    return local_df(spark,
         rows, "label string, n_docs long, sum_chars long")
 
 
@@ -1172,7 +1172,7 @@ def x_cdc_replication(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         shutil.rmtree(root_a, ignore_errors=True)
         shutil.rmtree(root_b, ignore_errors=True)
-    return local_df(spark, 
+    return local_df(spark,
         rows, "source string, n_docs long, sum_chars long")
 
 
@@ -1269,7 +1269,7 @@ def x_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         shutil.rmtree(root_a, ignore_errors=True)
         shutil.rmtree(root_b, ignore_errors=True)
-    return local_df(spark, 
+    return local_df(spark,
         rows, "label string, n_docs long, sum_chars long, "
               "zero_copy boolean, src_intact boolean")
 
@@ -1349,7 +1349,7 @@ def x_timestamp_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             rows.append((label, r["n"], r["s"], raises))
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    return local_df(spark, 
+    return local_df(spark,
         rows, "label string, n_docs long, sum_chars long, "
               "pre_epoch_raises boolean")
 
@@ -1510,7 +1510,7 @@ def x_incremental_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ("since_v2", r2["n"], r2["s"], raises, empty_ok)]
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    return local_df(spark, 
+    return local_df(spark,
         rows, "label string, n_docs long, sum_chars long, "
               "non_append_raises boolean, empty_range_empty boolean")
 
@@ -1579,7 +1579,7 @@ def x_branch_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for r in got]
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    return local_df(spark, 
+    return local_df(spark,
         rows, "side string, n_rows long, sum_chars long, "
               "min_key long, max_key long")
 

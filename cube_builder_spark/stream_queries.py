@@ -7,6 +7,8 @@ queries._PRIORITY."""
 
 from __future__ import annotations
 
+import datetime
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from .tables import load_tables
@@ -207,7 +209,7 @@ def x_stream_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(src, ignore_errors=True)
         shutil.rmtree(src + "_ckpt", ignore_errors=True)
         shutil.rmtree(root, ignore_errors=True)
-    return local_df(spark, 
+    return local_df(spark,
         rows, "source string, n_docs long, sum_chars long")
 
 
@@ -330,12 +332,15 @@ def x_stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise AssertionError(
                 "watermark drop path never engaged "
                 f"(numRowsDroppedByWatermark={n_dropped})")
-        rows = [(r["window_start"], r["n"], r["sum_chars"])
+        # collect() yields host-local naive datetimes and local_df reads
+        # naive as UTC: make them aware so any host keeps the instant
+        rows = [(r["window_start"].astimezone(datetime.timezone.utc),
+                 r["n"], r["sum_chars"])
                 for r in spark.table(name).collect()]
     finally:
         shutil.rmtree(src, ignore_errors=True)
         shutil.rmtree(stage, ignore_errors=True)
         shutil.rmtree(src + "_ckpt", ignore_errors=True)
-    return (local_df(spark, 
+    return (local_df(spark,
         rows, "window_start timestamp, n long, sum_chars long")
         .orderBy("window_start"))

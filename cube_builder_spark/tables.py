@@ -10,7 +10,10 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -31,38 +34,31 @@ FORCE_NO_BROADCAST_HINTS = False
 
 def local_df(spark: SparkSession, rows, schema) -> DataFrame:
     """``createDataFrame`` for DRIVER-LOCAL row lists that plans as a
-    JVM ``LocalRelation`` instead of a pickled-Python ``LogicalRDD``.
+    JVM ``LocalRelation``.
 
-    ``spark.createDataFrame(list, schema)`` parks the data in a Python
-    RDD, so EVERY action on the frame (and on anything joined above
-    it) schedules a Python worker task just to unpickle a handful of
-    rows — measured ~0.30 s per action at local[32] vs ~0.005 s for a
-    LocalRelation (guide §4: keep tiny frames out of the Python
-    boundary). Routing through pandas+Arrow makes Spark embed the rows
-    in the plan as a LocalRelation: same rows, same schema, no Python
-    stage, and literal data the optimizer can see.
+    ``spark.createDataFrame(list, schema)`` parks the rows in a pickled
+    Python RDD, so EVERY action on the frame (and on anything joined
+    above it) schedules a Python worker task just to unpickle a handful
+    of rows — measured ~0.30 s per action at local[32] vs ~0.005 s for a
+    LocalRelation. Here the rows become one ``pyarrow.Table``, one column
+    per schema field, which Spark embeds in the plan whatever the
+    session's Arrow settings. There is no other path:
 
-    Fidelity guard: the pandas path maps a float NaN to NULL (pandas
-    has no NaN/missing distinction), so rows containing a real NaN
-    fall back to the exact list path. Empty inputs also fall back
-    (nothing to embed; cost is irrelevant)."""
+    - ``schema`` is a DDL string (``"a long, b string"``);
+    - a dict row is read by field name (a missing key is NULL, as in
+      ``createDataFrame``); a tuple, list or ``Row`` is read by position;
+    - a float NaN stays NaN, distinct from NULL, inside arrays too;
+    - a naive ``datetime`` is UTC wall time, whatever the host or
+      session time zone;
+    - a value Arrow cannot convert to its field's type raises."""
+    struct = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(struct)
     rows = list(rows)
-
-    def _has_nan(v) -> bool:
-        if isinstance(v, float):
-            return v != v
-        if isinstance(v, (list, tuple)):
-            return any(_has_nan(x) for x in v)
-        return False
-
-    if rows and not any(_has_nan(r) for r in rows):
-        try:
-            import pandas as pd
-            return spark.createDataFrame(
-                pd.DataFrame.from_records(rows), schema=schema)
-        except Exception:
-            pass  # fall through to the exact original path
-    return spark.createDataFrame(rows, schema)
+    table = pa.Table.from_arrays([
+        pa.array([r.get(f.name) if isinstance(r, dict) else r[i]
+                  for r in rows], type=f.type)
+        for i, f in enumerate(arrow_schema)], schema=arrow_schema)
+    return spark.createDataFrame(table, schema=struct)
 
 
 def _table_bytes(sf_dir: str, name: str) -> int | None:

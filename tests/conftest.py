@@ -50,6 +50,13 @@ def duck(sf_dir):
 #    - ``BatchEvalPython`` — a row-at-a-time (pickled) Python UDF. All
 #      executor-side Python in this engine must be Arrow-batched
 #      (ArrowEvalPython / mapInPandas / applyInPandas*).
+#    - a ``LogicalRDD`` leaf of the optimized plan whose RDD lineage
+#      runs through ``PythonRDD`` — a pickled Python row source, i.e. a
+#      ``spark.createDataFrame(list)`` frame that unpickles its rows in
+#      a Python worker on every action. Driver-local rows go through
+#      ``tables.local_df`` (a ``LocalRelation``). ``localCheckpoint``
+#      leaves are ``LogicalRDD`` too, over a ``LocalCheckpointRDD``,
+#      and pass.
 #
 # 2. "broadcast": the analyzed plan holds no forced broadcast of a
 #    linearly-scaling table (``_forced_linear_broadcasts``).
@@ -141,6 +148,13 @@ def query_gate(spark, duck, sf_dir):
         if "BatchEvalPython" in plan:
             problems.append(
                 "row-at-a-time Python UDF (use Arrow-batched forms)")
+        leaves = qe.optimizedPlan().collectLeaves()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            if (leaf.nodeName() == "LogicalRDD"
+                    and "PythonRDD" in leaf.rdd().toDebugString()):
+                problems.append("pickled Python RDD source (build "
+                                "driver-local rows with tables.local_df)")
         return problems
 
     def broadcast_problems(name, qe):

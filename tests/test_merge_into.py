@@ -10,6 +10,7 @@ import os
 from pyspark.sql import functions as F
 
 from cube_builder_spark.sinks.merge import merge_into_parquet
+from cube_builder_spark.tables import local_df
 
 SCHEMA = "region string, k long, v string, n long"
 
@@ -21,14 +22,14 @@ def _rows(spark, path):
 
 def test_merge_update_insert_keep(spark, tmp_path):
     path = str(tmp_path / "t")
-    target = spark.createDataFrame(
+    target = local_df(spark,
         [("a", 1, "old1", 10), ("a", 2, "old2", 20), ("b", 3, "old3", 30)],
         SCHEMA)
     res = merge_into_parquet(spark, path, target, keys=["region", "k"],
                              partition_cols=["region"])
     assert res["created"]
 
-    source = spark.createDataFrame(
+    source = local_df(spark,
         [("a", 2, "new2", 200),      # matched -> update
          ("a", 9, "ins9", 900)],     # unmatched -> insert
         SCHEMA)
@@ -42,7 +43,7 @@ def test_merge_update_insert_keep(spark, tmp_path):
 
 def test_merge_touches_only_source_partitions(spark, tmp_path):
     path = str(tmp_path / "t")
-    target = spark.createDataFrame(
+    target = local_df(spark,
         [("a", 1, "x", 1), ("b", 2, "y", 2), ("c", 3, "z", 3)], SCHEMA)
     merge_into_parquet(spark, path, target, ["region", "k"], ["region"])
 
@@ -51,7 +52,7 @@ def test_merge_touches_only_source_partitions(spark, tmp_path):
         return sorted(os.listdir(d))
 
     before_b, before_c = listing("b"), listing("c")
-    source = spark.createDataFrame([("a", 1, "x2", 11)], SCHEMA)
+    source = local_df(spark, [("a", 1, "x2", 11)], SCHEMA)
     merge_into_parquet(spark, path, source, ["region", "k"], ["region"])
     assert listing("b") == before_b and listing("c") == before_c
     assert ("a", 1, "x2", 11) in _rows(spark, path)
@@ -61,17 +62,17 @@ def test_merge_unpartitioned_table(spark, tmp_path):
     path = str(tmp_path / "dim")
     merge_into_parquet(
         spark, path,
-        spark.createDataFrame([("a", 1, "x", 1)], SCHEMA), ["k"])
+        local_df(spark, [("a", 1, "x", 1)], SCHEMA), ["k"])
     merge_into_parquet(
         spark, path,
-        spark.createDataFrame([("a", 1, "x2", 2), ("b", 7, "w", 7)], SCHEMA),
+        local_df(spark, [("a", 1, "x2", 2), ("b", 7, "w", 7)], SCHEMA),
         ["k"])
     assert _rows(spark, path) == [("a", 1, "x2", 2), ("b", 7, "w", 7)]
 
 
 def test_merge_is_idempotent(spark, tmp_path):
     path = str(tmp_path / "t")
-    df = spark.createDataFrame([("a", 1, "x", 1), ("b", 2, "y", 2)], SCHEMA)
+    df = local_df(spark, [("a", 1, "x", 1), ("b", 2, "y", 2)], SCHEMA)
     for _ in range(3):
         merge_into_parquet(spark, path, df, ["region", "k"], ["region"])
     assert _rows(spark, path) == [("a", 1, "x", 1), ("b", 2, "y", 2)]
@@ -85,14 +86,14 @@ def test_merge_rejects_duplicate_source_keys(spark, tmp_path):
     import pytest
 
     path = str(tmp_path / "dup_tbl")
-    target = spark.createDataFrame([("r1", 1, "a")],
-                                   "region string, k long, v string")
+    target = local_df(spark, [("r1", 1, "a")],
+                      "region string, k long, v string")
     merge_into_parquet(spark, path, target, keys=["region", "k"],
                        partition_cols=["region"])
     before = sorted(map(tuple, spark.read.parquet(path).collect()))
 
-    dup = spark.createDataFrame([("r1", 1, "x"), ("r1", 1, "y")],
-                                "region string, k long, v string")
+    dup = local_df(spark, [("r1", 1, "x"), ("r1", 1, "y")],
+                   "region string, k long, v string")
     with pytest.raises(ValueError, match="duplicate key tuples"):
         merge_into_parquet(spark, path, dup, keys=["region", "k"],
                            partition_cols=["region"])

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from cube_builder_spark.sinks.snapshot import SnapshotStore
+from cube_builder_spark.tables import local_df
 
 
 def _df(spark, lo, hi):
@@ -85,9 +86,9 @@ def test_crashed_commit_leaves_table_consistent(spark, tmp_path):
 def test_snapshot_diff_classifies_changes(spark, tmp_path):
     from cube_builder_spark.sinks.snapshot import snapshot_diff
     st = SnapshotStore(str(tmp_path / "snap"))
-    v1 = st.write(spark.createDataFrame(
+    v1 = st.write(local_df(spark,
         [(1, 10), (2, 20), (3, 30)], "k long, v long"))
-    v2 = st.write(spark.createDataFrame(
+    v2 = st.write(local_df(spark,
         [(2, 20), (3, 99), (4, 40)], "k long, v long"), mode="overwrite")
     d = {r.k: r.change
          for r in snapshot_diff(st, spark, v1, v2, ["k"]).collect()}
@@ -114,9 +115,9 @@ def test_delete_keys_rewrites_only_touched_files(spark, tmp_path):
 def test_schema_evolution_read(spark, tmp_path):
     from cube_builder_spark.sinks.snapshot import read_merged_schema
     st = SnapshotStore(str(tmp_path / "snap"))
-    st.write(spark.createDataFrame([(1, 10)], "k long, v long"))
-    st.write(spark.createDataFrame([(2, 20, "x")],
-                                   "k long, v long, tag string"))
+    st.write(local_df(spark, [(1, 10)], "k long, v long"))
+    st.write(local_df(spark, [(2, 20, "x")],
+                      "k long, v long, tag string"))
     df = read_merged_schema(st, spark)
     rows = {r.k: (r.v, r.tag) for r in df.collect()}
     assert rows == {1: (10, None), 2: (20, "x")}
@@ -156,12 +157,12 @@ def test_publish_with_audit_blocks_bad_data(spark, tmp_path):
     from cube_builder_spark.quality import (AuditFailed, TableChecks,
                                             publish_with_audit)
     st = SnapshotStore(str(tmp_path / "snap"))
-    good = spark.createDataFrame([(1, 5.0), (2, 7.0)], "k long, v double")
+    good = local_df(spark, [(1, 5.0), (2, 7.0)], "k long, v double")
     checks = TableChecks(df=None, ranges={"v": (0.0, 10.0)},
                          unique=[["k"]])
     v = publish_with_audit(st, good, checks, "t")
     assert v == 1
-    bad = spark.createDataFrame([(3, 99.0), (3, 1.0)], "k long, v double")
+    bad = local_df(spark, [(3, 99.0), (3, 1.0)], "k long, v double")
     import pytest as _pytest
     with _pytest.raises(AuditFailed) as e:
         publish_with_audit(st, bad, checks, "t")
@@ -182,24 +183,24 @@ def test_publish_with_audit_advances_main_and_chains(spark, tmp_path):
     from cube_builder_spark.quality import TableChecks, publish_with_audit
 
     st = SnapshotStore(str(tmp_path / "wapchain"))
-    v1 = st.write(spark.createDataFrame([(1, 5.0)], "k long, v double"))
+    v1 = st.write(local_df(spark, [(1, 5.0)], "k long, v double"))
     checks = TableChecks(df=None, not_null=["k"])
     v2 = publish_with_audit(
-        st, spark.createDataFrame([(2, 6.0)], "k long, v double"),
+        st, local_df(spark, [(2, 6.0)], "k long, v double"),
         checks, "t")
     assert st.head("main") == v2
     assert sorted(r.k for r in st.read(spark).collect()) == [1, 2]
-    v3 = st.write(spark.createDataFrame([(3, 7.0)], "k long, v double"))
+    v3 = st.write(local_df(spark, [(3, 7.0)], "k long, v double"))
     assert st._read_manifest(v3).get("parent") == v2
     assert sorted(r.k for r in st.read(spark).collect()) == [1, 2, 3]
     # and it must chain from MAIN's head, not the globally-latest
     # version: a staging-branch commit with a higher version number
     # must not become the publish's parent
     st.create_branch("stage")
-    st.write(spark.createDataFrame([(99, 0.0)], "k long, v double"),
+    st.write(local_df(spark, [(99, 0.0)], "k long, v double"),
              branch="stage")
     v5 = publish_with_audit(
-        st, spark.createDataFrame([(4, 8.0)], "k long, v double"),
+        st, local_df(spark, [(4, 8.0)], "k long, v double"),
         checks, "t")
     assert st._read_manifest(v5).get("parent") == v3
     assert sorted(r.k for r in st.read(spark).collect()) == [1, 2, 3, 4]
@@ -213,14 +214,14 @@ def test_publish_with_audit_carries_pending_mor_deletes(spark, tmp_path):
     from cube_builder_spark.sinks.snapshot import delete_keys_mor
 
     st = SnapshotStore(str(tmp_path / "wapmor"))
-    st.write(spark.createDataFrame([(1, 5.0), (2, 6.0)],
-                                   "k long, v double"))
+    st.write(local_df(spark, [(1, 5.0), (2, 6.0)],
+                      "k long, v double"))
     delete_keys_mor(st, spark,
-                    spark.createDataFrame([(1,)], "k long"), ["k"])
+                    local_df(spark, [(1,)], "k long"), ["k"])
     assert sorted(r.k for r in st.read(spark).collect()) == [2]
     checks = TableChecks(df=None, not_null=["k"])
     publish_with_audit(
-        st, spark.createDataFrame([(3, 7.0)], "k long, v double"),
+        st, local_df(spark, [(3, 7.0)], "k long, v double"),
         checks, "t")
     # deleted key stays deleted; the new row (appended AFTER the
     # delete) is untouched by the sidecar per the sequence rule
@@ -236,11 +237,11 @@ def test_publish_with_audit_onto_branch(spark, tmp_path):
     from cube_builder_spark.quality import TableChecks, publish_with_audit
 
     st = SnapshotStore(str(tmp_path / "wapbranch"))
-    v1 = st.write(spark.createDataFrame([(1, 5.0)], "k long, v double"))
+    v1 = st.write(local_df(spark, [(1, 5.0)], "k long, v double"))
     st.create_branch("audit")
     checks = TableChecks(df=None, not_null=["k"])
     v2 = publish_with_audit(
-        st, spark.createDataFrame([(2, 6.0)], "k long, v double"),
+        st, local_df(spark, [(2, 6.0)], "k long, v double"),
         checks, "t", branch="audit")
     assert st.head("audit") == v2
     assert st.head("main") == v1
@@ -284,7 +285,7 @@ def test_delete_keys_preserves_null_key_rows(spark, tmp_path):
     NULL-key rows in a rewritten file must survive a keyed delete."""
     from cube_builder_spark.sinks.snapshot import delete_keys
     st = SnapshotStore(str(tmp_path / "t"))
-    df = spark.createDataFrame(
+    df = local_df(spark,
         [(1, "a"), (2, "b"), (None, "c"), (None, "d"), (5, "e")],
         "k int, v string")
     st.write(df.coalesce(1))
@@ -598,8 +599,8 @@ def test_incremental_mv_group_move_and_zero_drop(spark, tmp_path):
           (2, "c", 21),            # moved a -> c AND value changed
           (4, "a", 7)]             # 3 removed (b now empty), 4 added
     sch = "id long, grp string, val long"
-    st.write(spark.createDataFrame(v1, sch))
-    st.write(spark.createDataFrame(v2, sch), mode="overwrite")
+    st.write(local_df(spark, v1, sch))
+    st.write(local_df(spark, v2, sch), mode="overwrite")
     mv1 = _mv(st.read(spark, 1))
     diff = snapshot_diff(st, spark, 1, 2, ["id"], include_payload=True)
     got = incremental_mv(mv1, diff, "grp", {"sum_val": "val"})
@@ -622,7 +623,7 @@ def test_incremental_mv_matches_full_recompute_randomized(spark, tmp_path):
              for i in range(40)}
 
     st = SnapshotStore(str(tmp_path / "mvr"))
-    st.write(spark.createDataFrame(
+    st.write(local_df(spark,
         [(i, g, v) for i, (g, v) in table.items()], sch))
     mv = _mv(st.read(spark, 1))
     for step in range(3):
@@ -637,7 +638,7 @@ def test_incremental_mv_matches_full_recompute_randomized(spark, tmp_path):
         for _ in range(rng.randrange(0, 8)):                   # adds
             table[max(table, default=0) + 1] = (
                 rng.choice(groups), rng.randrange(-50, 50))
-        v = st.write(spark.createDataFrame(
+        v = st.write(local_df(spark,
             [(i, g, val) for i, (g, val) in table.items()], sch),
             mode="overwrite")
         diff = snapshot_diff(st, spark, v - 1, v, ["id"],
@@ -651,7 +652,7 @@ def test_incremental_mv_matches_full_recompute_randomized(spark, tmp_path):
 def _ev(spark, ids_days):
     """(id, ts, v) rows; ts = 2024-01-<day>."""
     import datetime
-    return spark.createDataFrame(
+    return local_df(spark,
         [(i, datetime.datetime(2024, 1, d, 12, 0), i * 10)
          for i, d in ids_days],
         "id long, ts timestamp, v long")
@@ -818,10 +819,10 @@ def test_mor_sequence_rule_reinsert_survives(spark, tmp_path):
     deleted key lives, and a later delete kills it again."""
     from cube_builder_spark.sinks.snapshot import delete_keys_mor
     st, _v2, _v3 = _mor_setup(spark, tmp_path)
-    st.write(spark.createDataFrame([(7, 777)], "id long, v long"))
+    st.write(local_df(spark, [(7, 777)], "id long, v long"))
     assert 7 in _ids(st.read(spark))
     delete_keys_mor(st, spark,
-                    spark.createDataFrame([(7,)], "id long"), ["id"])
+                    local_df(spark, [(7,)], "id long"), ["id"])
     got = _ids(st.read(spark))
     assert 7 not in got and 0 not in got and 14 not in got
 
@@ -829,10 +830,10 @@ def test_mor_sequence_rule_reinsert_survives(spark, tmp_path):
 def test_mor_null_key_rows_survive(spark, tmp_path):
     from cube_builder_spark.sinks.snapshot import delete_keys_mor
     st = SnapshotStore(str(tmp_path / "snap"))
-    st.write(spark.createDataFrame([(1, 10), (None, 20), (2, 30)],
-                                   "id long, v long"))
+    st.write(local_df(spark, [(1, 10), (None, 20), (2, 30)],
+                      "id long, v long"))
     delete_keys_mor(st, spark,
-                    spark.createDataFrame([(1,)], "id long"), ["id"])
+                    local_df(spark, [(1,)], "id long"), ["id"])
     rows = {(r.id, r.v) for r in st.read(spark).collect()}
     assert rows == {(None, 20), (2, 30)}
 
@@ -904,8 +905,8 @@ def test_mor_stream_batch_carries_deletes(spark, tmp_path):
     st = SnapshotStore(str(tmp_path / "snap"))
     st.write(_df(spark, 0, 10))
     delete_keys_mor(st, spark, spark.range(0, 3).select("id"), ["id"])
-    write_stream_batch(st, spark.createDataFrame([(1, 111)],
-                                                 "id long, v long"),
+    write_stream_batch(st, local_df(spark, [(1, 111)],
+                                    "id long, v long"),
                        batch_id=0, run_id="r1")
     got = _ids(st.read(spark))
     assert got == [1] + list(range(3, 10))
@@ -933,12 +934,12 @@ def test_minmax_mv_dirty_classification_is_bounded(spark, tmp_path):
                                                    snapshot_diff)
     sch = "id long, grp string, val long"
     st = SnapshotStore(str(tmp_path / "mvx"))
-    st.write(spark.createDataFrame(
+    st.write(local_df(spark,
         [(1, "a", 10), (2, "a", 20), (3, "a", 30),
          (4, "b", 5), (5, "b", 7)], sch))
     mv1 = _mvx(st.read(spark, 1))
     # drop a's INTERIOR value (20) and b's MIN (5)
-    st.write(spark.createDataFrame(
+    st.write(local_df(spark,
         [(1, "a", 10), (3, "a", 30), (5, "b", 7)], sch), mode="overwrite")
     diff = snapshot_diff(st, spark, 1, 2, ["id"], include_payload=True)
     dirty = {r.grp for r in minmax_dirty_groups(
@@ -953,11 +954,11 @@ def test_minmax_mv_hand_worked(spark, tmp_path):
                                                    snapshot_diff)
     sch = "id long, grp string, val long"
     st = SnapshotStore(str(tmp_path / "mvx"))
-    st.write(spark.createDataFrame(
+    st.write(local_df(spark,
         [(1, "a", 10), (2, "a", 20), (3, "b", 5), (4, "b", 9),
          (5, "c", 1)], sch))
     mv1 = _mvx(st.read(spark, 1))
-    st.write(spark.createDataFrame(
+    st.write(local_df(spark,
         [(1, "a", 10), (2, "a", 15),          # a: max 20 -> mutated 15
          (3, "d", 5), (4, "b", 9),            # b: min 5 moved to NEW grp d
          (6, "b", 100)], sch),                # b: new max; c: dies
@@ -983,7 +984,7 @@ def test_minmax_mv_matches_full_recompute_randomized(spark, tmp_path):
     table = {i: (rng.choice(groups), rng.randrange(-50, 50))
              for i in range(40)}
     st = SnapshotStore(str(tmp_path / "mvxr"))
-    st.write(spark.createDataFrame(
+    st.write(local_df(spark,
         [(i, g, v) for i, (g, v) in table.items()], sch))
     mv = _mvx(st.read(spark, 1))
     for step in range(3):
@@ -998,7 +999,7 @@ def test_minmax_mv_matches_full_recompute_randomized(spark, tmp_path):
         for _ in range(rng.randrange(0, 8)):
             table[max(table, default=0) + 1] = (
                 rng.choice(groups), rng.randrange(-50, 50))
-        v = st.write(spark.createDataFrame(
+        v = st.write(local_df(spark,
             [(i, g, val) for i, (g, val) in table.items()], sch),
             mode="overwrite")
         diff = snapshot_diff(st, spark, v - 1, v, ["id"],
@@ -1021,7 +1022,7 @@ def test_mor_composes_with_hidden_partitioning(spark, tmp_path):
     ps.set_partition_spec("day", "ts")
     rows = [(i, datetime.datetime(2024, 1, 1 + (i % 10), 12, 0), i * 10)
             for i in range(30)]
-    ps.write(spark.createDataFrame(rows, "id long, ts timestamp, v long"))
+    ps.write(local_df(spark, rows, "id long, ts timestamp, v long"))
     delete_keys_mor(st, spark, spark.range(0, 30, 3).select("id"), ["id"])
     lo, hi = datetime.datetime(2024, 1, 1), datetime.datetime(2024, 1, 4)
     df, n_read, n_total = ps.read_pruned(spark, "ts", lo, hi)
@@ -1043,7 +1044,7 @@ def test_merge_upsert_updates_inserts_and_prunes(spark, tmp_path):
     st.write(_df(spark, 0, 20).repartitionByRange(4, "id"))
     before = st._read_manifest(st.head("main"))["files"]
     # update ids 0-2 (low range), insert ids 100-101
-    upd = spark.createDataFrame(
+    upd = local_df(spark,
         [(0, 999), (1, 998), (2, 997), (100, 500), (101, 501)],
         "id long, v long")
     v, n = merge_upsert(st, spark, upd, "id")
@@ -1060,9 +1061,9 @@ def test_merge_upsert_null_key_rows_survive(spark, tmp_path):
     from cube_builder_spark.sinks.snapshot import (SnapshotStore,
                                                    merge_upsert)
     st = SnapshotStore(str(tmp_path / "snap"))
-    st.write(spark.createDataFrame([(1, 10), (None, 20)], "id long, v long"))
+    st.write(local_df(spark, [(1, 10), (None, 20)], "id long, v long"))
     merge_upsert(st, spark,
-                 spark.createDataFrame([(1, 99)], "id long, v long"), "id")
+                 local_df(spark, [(1, 99)], "id long, v long"), "id")
     rows = {(r.id, r.v) for r in st.read(spark).collect()}
     assert rows == {(1, 99), (None, 20)}
 
@@ -1076,7 +1077,7 @@ def test_merge_upsert_refuses_pending_mor_deletes(spark, tmp_path):
     delete_keys_mor(st, spark, spark.range(0, 3).select("id"), ["id"])
     with pytest.raises(ValueError, match="merge-on-read"):
         merge_upsert(st, spark,
-                     spark.createDataFrame([(5, 1)], "id long, v long"),
+                     local_df(spark, [(5, 1)], "id long, v long"),
                      "id")
 
 
@@ -1132,13 +1133,13 @@ def test_check_constraints_enforcement(spark, tmp_path):
     with _pytest.raises(ValueError):
         add_check_constraint(st, "v_pos", "v > 1")   # duplicate name
 
-    ok = spark.createDataFrame([(1, 5), (2, 7)], "k long, v long")
+    ok = local_df(spark, [(1, 5), (2, 7)], "k long, v long")
     v1 = checked_write(st, ok)
     assert st.read(spark, v1).count() == 2
 
     # violating batch: exact violation count, named constraint, and
     # NOTHING changed — head, manifest count, data files
-    bad = spark.createDataFrame([(3, -1), (4, 2), (5, 0)], "k long, v long")
+    bad = local_df(spark, [(3, -1), (4, 2), (5, 0)], "k long, v long")
     import os
     files_before = sorted(
         os.path.join(dp, f)
@@ -1156,19 +1157,19 @@ def test_check_constraints_enforcement(spark, tmp_path):
 
     # constraint ordering: first violated constraint in registration
     # order raises even if a later one is also violated
-    both_bad = spark.createDataFrame([(500, -9)], "k long, v long")
+    both_bad = local_df(spark, [(500, -9)], "k long, v long")
     with _pytest.raises(ConstraintViolation) as ei:
         checked_write(st, both_bad)
     assert ei.value.name == "v_pos"
 
     # NULL passes (SQL-standard CHECK), explicit NOT NULL guard rejects
-    nulls = spark.createDataFrame([(6, None)], "k long, v long")
+    nulls = local_df(spark, [(6, None)], "k long, v long")
     v2 = checked_write(st, nulls)
     assert st.read(spark, v2).count() == 3
     add_check_constraint(st, "v_not_null", "v IS NOT NULL AND v > 0")
     with _pytest.raises(ConstraintViolation) as ei:
-        checked_write(st, spark.createDataFrame([(7, None)],
-                                                "k long, v long"))
+        checked_write(st, local_df(spark, [(7, None)],
+                                   "k long, v long"))
     assert ei.value.name == "v_not_null"
 
 
@@ -1176,7 +1177,7 @@ def test_checked_write_without_constraints_is_plain_write(spark, tmp_path):
     from cube_builder_spark.sinks.snapshot import (SnapshotStore,
                                                    checked_write)
     st = SnapshotStore(str(tmp_path / "nochk"))
-    v = checked_write(st, spark.createDataFrame([(1, -5)], "k long, v long"))
+    v = checked_write(st, local_df(spark, [(1, -5)], "k long, v long"))
     assert st.read(spark, v).count() == 1
 
 
@@ -1188,7 +1189,7 @@ def test_scd2_merge_lifecycle(spark, tmp_path):
     from cube_builder_spark.sinks.snapshot import SnapshotStore, scd2_merge
 
     st = SnapshotStore(str(tmp_path / "scd2"))
-    init = spark.createDataFrame(
+    init = local_df(spark,
         [(1, "A", None), (2, "B", 5)],
         "k long, seg string, score long") \
         .withColumn("valid_from", F.lit("2024-01-01").cast("date")) \
@@ -1200,7 +1201,7 @@ def test_scd2_merge_lifecycle(spark, tmp_path):
 
     # k=1 unchanged (NULL score stays NULL -> NULL-safe no-op),
     # k=2 seg changes, k=3 brand new
-    upd = spark.createDataFrame(
+    upd = local_df(spark,
         [(1, "A", None), (2, "C", 5), (3, "D", 9)],
         "k long, seg string, score long")
     v, nc, ni = scd2_merge(st, spark, upd, "k", ["seg", "score"],
@@ -1221,7 +1222,7 @@ def test_scd2_merge_lifecycle(spark, tmp_path):
     assert st.head("main") == v
 
     # third change on k=2 stacks history (two closed + one current)
-    upd3 = spark.createDataFrame([(2, "E", 5)], "k long, seg string, score long")
+    upd3 = local_df(spark, [(2, "E", 5)], "k long, seg string, score long")
     v3, nc3, ni3 = scd2_merge(st, spark, upd3, "k", ["seg", "score"],
                               "2024-04-01")
     assert (nc3, ni3) == (1, 1)
@@ -1242,8 +1243,8 @@ def test_scd2_merge_same_day_change_is_in_place(spark, tmp_path):
     from cube_builder_spark.sinks.snapshot import SnapshotStore, scd2_merge
 
     st = SnapshotStore(str(tmp_path / "scd2sd"))
-    init = spark.createDataFrame([(1, "A"), (2, "B")],
-                                 "k long, seg string") \
+    init = local_df(spark, [(1, "A"), (2, "B")],
+                    "k long, seg string") \
         .withColumn("valid_from", F.lit("2024-01-05").cast("date")) \
         .withColumn("valid_to", F.lit(None).cast("date")) \
         .withColumn("is_current", F.lit(True))
@@ -1252,7 +1253,7 @@ def test_scd2_merge_same_day_change_is_in_place(spark, tmp_path):
                           F.col("valid_from").cast("string"))))
 
     # second batch, SAME effective date, k=1 changes
-    upd2 = spark.createDataFrame([(1, "A2")], "k long, seg string")
+    upd2 = local_df(spark, [(1, "A2")], "k long, seg string")
     v2, nc2, ni2 = scd2_merge(st, spark, upd2, "k", ["seg"], "2024-01-05")
     assert (nc2, ni2) == (0, 1)
     rows = sorted((r.k, r.seg, str(r.valid_from), str(r.valid_to),
@@ -1261,7 +1262,7 @@ def test_scd2_merge_same_day_change_is_in_place(spark, tmp_path):
                     (2, "B", "2024-01-05", "None", True)]
 
     # a LATER effective date still closes + inserts normally
-    upd3 = spark.createDataFrame([(1, "A3")], "k long, seg string")
+    upd3 = local_df(spark, [(1, "A3")], "k long, seg string")
     v3, nc3, ni3 = scd2_merge(st, spark, upd3, "k", ["seg"], "2024-02-01")
     assert (nc3, ni3) == (1, 1)
     k1 = sorted((r.seg, str(r.valid_from), str(r.valid_to), r.is_current)
@@ -1278,12 +1279,12 @@ def test_occ_append_branch_commits_do_not_block(spark, tmp_path):
     from cube_builder_spark.sinks.snapshot import SnapshotStore, occ_append
 
     st = SnapshotStore(str(tmp_path / "occ"))
-    one = spark.createDataFrame([(1,)], "k long")
+    one = local_df(spark, [(1,)], "k long")
     v1 = st.write(one)
     st.create_branch("stage")
-    st.write(spark.createDataFrame([(9,)], "k long"),
+    st.write(local_df(spark, [(9,)], "k long"),
              mode="overwrite", branch="stage")        # branch overwrite
-    v2, rebased = occ_append(st, spark.createDataFrame([(2,)], "k long"),
+    v2, rebased = occ_append(st, local_df(spark, [(2,)], "k long"),
                              expected_head=v1)
     assert not rebased and st.head("main") == v2
     assert st.read(spark, v2).count() == 2
@@ -1297,7 +1298,7 @@ def test_occ_append_rebase_and_conflict(spark, tmp_path):
                                                    SnapshotStore, occ_append)
 
     st = SnapshotStore(str(tmp_path / "occ2"))
-    mk = lambda k: spark.createDataFrame([(k,)], "k long")  # noqa: E731
+    mk = lambda k: local_df(spark, [(k,)], "k long")  # noqa: E731
     v1 = st.write(mk(1))
     st.write(mk(2))                                   # interloper append
     v3, rebased = occ_append(st, mk(3), expected_head=v1)
@@ -1325,7 +1326,7 @@ def test_occ_append_expired_chain_cleans_staged_files(spark, tmp_path):
                                                    SnapshotStore, occ_append)
 
     st = SnapshotStore(str(tmp_path / "occ3"))
-    mk = lambda k: spark.createDataFrame([(k,)], "k long")  # noqa: E731
+    mk = lambda k: local_df(spark, [(k,)], "k long")  # noqa: E731
     v1 = st.write(mk(1))
     st.write(mk(2))
     st.write(mk(3))
@@ -1398,7 +1399,7 @@ def test_shallow_clone_carried_mor_delete_vs_new_appends(spark, tmp_path):
     src = SnapshotStore(str(tmp_path / "msrc"))
     src.write(_df(spark, 0, 10))
     delete_keys_mor(src, spark,
-                    spark.createDataFrame([(2,), (4,)], "id long"), ["id"])
+                    local_df(spark, [(2,), (4,)], "id long"), ["id"])
     clone = shallow_clone(src, str(tmp_path / "mdst"))
     assert _ids(clone.read(spark)) == [i for i in range(10)
                                        if i not in (2, 4)]
@@ -1467,8 +1468,8 @@ def test_scd2_same_day_correction_then_later_change(spark, tmp_path):
     from cube_builder_spark.sinks.snapshot import SnapshotStore, scd2_merge
 
     st = SnapshotStore(str(tmp_path / "scd2mb"))
-    init = spark.createDataFrame([(1, "A", 10)],
-                                 "k long, seg string, score long") \
+    init = local_df(spark, [(1, "A", 10)],
+                    "k long, seg string, score long") \
         .withColumn("valid_from", F.lit("2024-03-01").cast("date")) \
         .withColumn("valid_to", F.lit(None).cast("date")) \
         .withColumn("is_current", F.lit(True))
@@ -1479,16 +1480,16 @@ def test_scd2_same_day_correction_then_later_change(spark, tmp_path):
     # batch 2: same-day correction — in place, no history row
     v2, nc2, ni2 = scd2_merge(
         st, spark,
-        spark.createDataFrame([(1, "A-fix", 11)],
-                              "k long, seg string, score long"),
+        local_df(spark, [(1, "A-fix", 11)],
+                 "k long, seg string, score long"),
         "k", ["seg", "score"], "2024-03-01")
     assert (nc2, ni2) == (0, 1)
 
     # batch 3: later-day change — closes the CORRECTED row
     v3, nc3, ni3 = scd2_merge(
         st, spark,
-        spark.createDataFrame([(1, "B", 20)],
-                              "k long, seg string, score long"),
+        local_df(spark, [(1, "B", 20)],
+                 "k long, seg string, score long"),
         "k", ["seg", "score"], "2024-03-15")
     assert (nc3, ni3) == (1, 1)
     rows = sorted((r.k, r.seg, r.score, str(r.valid_from),
@@ -1501,8 +1502,8 @@ def test_scd2_same_day_correction_then_later_change(spark, tmp_path):
     # batch 4: same-day correction of the NEW current row still works
     v4, nc4, ni4 = scd2_merge(
         st, spark,
-        spark.createDataFrame([(1, "B-fix", 21)],
-                              "k long, seg string, score long"),
+        local_df(spark, [(1, "B-fix", 21)],
+                 "k long, seg string, score long"),
         "k", ["seg", "score"], "2024-03-15")
     assert (nc4, ni4) == (0, 1)
     rows = sorted((r.k, r.seg, r.score, str(r.valid_from),
@@ -1523,7 +1524,7 @@ def test_scd2_rejects_same_batch_duplicate_keys(spark, tmp_path):
     from cube_builder_spark.sinks.snapshot import SnapshotStore, scd2_merge
 
     st = SnapshotStore(str(tmp_path / "scd2dup"))
-    init = spark.createDataFrame([(1, "A")], "k long, seg string") \
+    init = local_df(spark, [(1, "A")], "k long, seg string") \
         .withColumn("valid_from", F.lit("2024-03-01").cast("date")) \
         .withColumn("valid_to", F.lit(None).cast("date")) \
         .withColumn("is_current", F.lit(True))
@@ -1532,8 +1533,8 @@ def test_scd2_rejects_same_batch_duplicate_keys(spark, tmp_path):
                           F.col("valid_from").cast("string"))))
     head = st.head("main")
 
-    dup = spark.createDataFrame([(1, "X"), (1, "Y"), (2, "Z")],
-                                "k long, seg string")
+    dup = local_df(spark, [(1, "X"), (1, "Y"), (2, "Z")],
+                   "k long, seg string")
     with pytest.raises(ValueError, match="duplicate k values"):
         scd2_merge(st, spark, dup, "k", ["seg"], "2024-03-10")
     assert st.head("main") == head  # nothing committed
@@ -1544,15 +1545,15 @@ def test_scd2_rejects_same_batch_duplicate_keys(spark, tmp_path):
     # at-least-once upstream repeating a key with UNCHANGED attributes
     # is an idempotent replay (neither copy lands), so it must commit
     # as a plain no-op, not hard-fail.
-    replay = spark.createDataFrame([(1, "A"), (1, "A")],
-                                   "k long, seg string")
+    replay = local_df(spark, [(1, "A"), (1, "A")],
+                      "k long, seg string")
     v, nc, ni = scd2_merge(st, spark, replay, "k", ["seg"],
                            "2024-03-10")
     assert (v, nc, ni) == (head, 0, 0)
     # ...and a replayed-unchanged key alongside a genuinely changed
     # OTHER key: the unchanged duplicates drop, the change lands.
-    mixed = spark.createDataFrame([(1, "A"), (1, "A"), (2, "Z")],
-                                  "k long, seg string")
+    mixed = local_df(spark, [(1, "A"), (1, "A"), (2, "Z")],
+                     "k long, seg string")
     v2, nc2, ni2 = scd2_merge(st, spark, mixed, "k", ["seg"],
                               "2024-03-10")
     assert (nc2, ni2) == (0, 1) and v2 > head
@@ -1563,8 +1564,8 @@ def test_scd2_rejects_same_batch_duplicate_keys(spark, tmp_path):
     # change — an unordered batch can't say which) and must be
     # rejected with nothing committed (round-12 review).
     head2 = st.head("main")
-    ambiguous = spark.createDataFrame([(1, "B"), (1, "A")],
-                                      "k long, seg string")
+    ambiguous = local_df(spark, [(1, "B"), (1, "A")],
+                         "k long, seg string")
     with pytest.raises(ValueError, match="duplicate k values"):
         scd2_merge(st, spark, ambiguous, "k", ["seg"], "2024-03-12")
     assert st.head("main") == head2
@@ -1588,7 +1589,7 @@ def test_scd2_randomized_vs_reference_model(spark, tmp_path):
     def run_seed(seed: int) -> None:
         rng = random.Random(seed)
         st = SnapshotStore(str(tmp_path / f"scd2rand{seed}"))
-        init = spark.createDataFrame(
+        init = local_df(spark,
             [(k, f"s{k}", k * 10) for k in range(3)],
             "k long, seg string, score long") \
             .withColumn("valid_from", F.lit("2024-01-01").cast("date")) \
@@ -1607,7 +1608,7 @@ def test_scd2_randomized_vs_reference_model(spark, tmp_path):
             keys = rng.sample(range(6), rng.randint(1, 4))
             rows = [(k, rng.choice(["a", "b", f"s{k}"]),
                      rng.randint(0, 3) * 10) for k in keys]
-            upd = spark.createDataFrame(rows, "k long, seg string, score long")
+            upd = local_df(spark, rows, "k long, seg string, score long")
             scd2_merge(st, spark, upd, "k", ["seg", "score"], eff)
             for k, seg, score in rows:
                 hist = model.setdefault(k, [])
@@ -1646,7 +1647,7 @@ def test_scd2_rejects_retro_dated_batch(spark, tmp_path):
     from cube_builder_spark.sinks.snapshot import SnapshotStore, scd2_merge
 
     st = SnapshotStore(str(tmp_path / "scd2retro"))
-    init = spark.createDataFrame([(1, "A")], "k long, seg string") \
+    init = local_df(spark, [(1, "A")], "k long, seg string") \
         .withColumn("valid_from", F.lit("2024-03-10").cast("date")) \
         .withColumn("valid_to", F.lit(None).cast("date")) \
         .withColumn("is_current", F.lit(True))
@@ -1655,14 +1656,14 @@ def test_scd2_rejects_retro_dated_batch(spark, tmp_path):
                           F.col("valid_from").cast("string"))))
     head = st.head("main")
 
-    retro = spark.createDataFrame([(1, "B")], "k long, seg string")
+    retro = local_df(spark, [(1, "B")], "k long, seg string")
     with pytest.raises(ValueError, match="precedes the current valid_from"):
         scd2_merge(st, spark, retro, "k", ["seg"], "2024-03-01")
     assert st.head("main") == head
 
     # same retro date but attributes UNCHANGED: filtered as a no-op
     # before the retro check, nothing commits, no error
-    noop = spark.createDataFrame([(1, "A")], "k long, seg string")
+    noop = local_df(spark, [(1, "A")], "k long, seg string")
     v, nc, ni = scd2_merge(st, spark, noop, "k", ["seg"], "2024-03-01")
     assert (v, nc, ni) == (head, 0, 0)
 
@@ -1678,16 +1679,16 @@ def test_merge_upsert_rejects_duplicate_keys_allows_nulls(spark, tmp_path):
     from cube_builder_spark.sinks.snapshot import SnapshotStore, merge_upsert
 
     st = SnapshotStore(str(tmp_path / "mu_dup"))
-    st.write(spark.createDataFrame([(1, "a"), (2, "b")],
-                                   "k long, v string"))
+    st.write(local_df(spark, [(1, "a"), (2, "b")],
+                      "k long, v string"))
     head = st.head("main")
 
-    dup = spark.createDataFrame([(1, "x"), (1, "y")], "k long, v string")
+    dup = local_df(spark, [(1, "x"), (1, "y")], "k long, v string")
     with pytest.raises(ValueError, match="duplicate k values"):
         merge_upsert(st, spark, dup, "k")
     assert st.head("main") == head  # nothing committed
 
-    nulls = spark.createDataFrame(
+    nulls = local_df(spark,
         [(None, "n1"), (None, "n2"), (3, "c")], "k long, v string")
     v, _n = merge_upsert(st, spark, nulls, "k")
     rows = sorted((r.k, r.v) for r in st.read(spark, v).collect()
@@ -1716,7 +1717,7 @@ def test_occ_randomized_vs_replay_model(spark, tmp_path):
         ConcurrentCommitConflict, SnapshotStore, occ_append)
 
     def mk(seq):
-        return spark.createDataFrame([(seq, seq * 7)], "k long, v long")
+        return local_df(spark, [(seq, seq * 7)], "k long, v long")
 
     for seed in (11, 23, 47):
         st = SnapshotStore(str(tmp_path / f"occ{seed}"))
@@ -1822,7 +1823,7 @@ def test_delete_plane_randomized_vs_replay_model(spark, tmp_path):
         SnapshotStore, delete_keys, delete_keys_mor, materialize_deletes)
 
     def mk(rows):
-        return spark.createDataFrame(rows, "k long, v long")
+        return local_df(spark, rows, "k long, v long")
 
     for seed in (5, 17, 31):
         st = SnapshotStore(str(tmp_path / f"del{seed}"))
@@ -1901,7 +1902,7 @@ def test_merge_upsert_randomized_vs_dict_model(spark, tmp_path):
         rng = random.Random(seed)
         keyed = {k: k * 100 for k in range(3)}
         nulls: list[int] = []
-        v = st.write(spark.createDataFrame(
+        v = st.write(local_df(spark,
             [(k, x) for k, x in keyed.items()], "k long, x long"))
         hist = {v: (dict(keyed), list(nulls))}
         seq = 1000
@@ -1913,13 +1914,13 @@ def test_merge_upsert_randomized_vs_dict_model(spark, tmp_path):
                 batch = [(k, seq + i) for i, k in enumerate(ks)]
                 v, _n = merge_upsert(
                     st, spark,
-                    spark.createDataFrame(batch, "k long, x long"), "k")
+                    local_df(spark, batch, "k long, x long"), "k")
                 keyed.update(dict(batch))
             elif op == "upsert_null":
                 batch = [(None, seq), (rng.randrange(8), seq + 1)]
                 v, _n = merge_upsert(
                     st, spark,
-                    spark.createDataFrame(batch, "k long, x long"), "k")
+                    local_df(spark, batch, "k long, x long"), "k")
                 nulls.append(seq)
                 keyed[batch[1][0]] = seq + 1
             elif op == "delete":
@@ -1928,7 +1929,7 @@ def test_merge_upsert_randomized_vs_dict_model(spark, tmp_path):
                 keyed.pop(k, None)
             else:  # duplicate non-NULL key: atomic reject
                 head = st.head("main")
-                bad = spark.createDataFrame(
+                bad = local_df(spark,
                     [(1, seq), (1, seq + 1)], "k long, x long")
                 with pytest.raises(ValueError, match="duplicate k"):
                     merge_upsert(st, spark, bad, "k")
@@ -1971,7 +1972,7 @@ def test_branch_plane_randomized_vs_ref_model(spark, tmp_path):
     from cube_builder_spark.sinks.snapshot import branch_diff
 
     def mk(seq):
-        return spark.createDataFrame([(seq, seq * 7)], "k long, v long")
+        return local_df(spark, [(seq, seq * 7)], "k long, v long")
 
     checks = TableChecks(df=None, not_null=["k"])
 
@@ -2090,7 +2091,7 @@ def test_cdc_replication_randomized_vs_dict_model(spark, tmp_path):
         rep = SnapshotStore(str(tmp_path / f"cdc_r{seed}"))
         rng = random.Random(seed)
         model = {k: k * 10 for k in range(4)}
-        v = src.write(spark.createDataFrame(
+        v = src.write(local_df(spark,
             sorted(model.items()), "k long, x long"))
         rep.write(src.read(spark, v))
         applied = v
@@ -2102,7 +2103,7 @@ def test_cdc_replication_randomized_vs_dict_model(spark, tmp_path):
                 batch = [(next_key + i, seq + i)
                          for i in range(rng.randint(1, 3))]
                 next_key += len(batch)
-                v = src.write(spark.createDataFrame(
+                v = src.write(local_df(spark,
                     batch, "k long, x long"), mode="append")
                 model.update(dict(batch))
             elif op == "delete":
@@ -2120,7 +2121,7 @@ def test_cdc_replication_randomized_vs_dict_model(spark, tmp_path):
                          for i, k in enumerate(overwrite + fresh)]
                 v, _n = merge_upsert(
                     src, spark,
-                    spark.createDataFrame(batch, "k long, x long"), "k")
+                    local_df(spark, batch, "k long, x long"), "k")
                 model.update(dict(batch))
             seq += 100
             # replicate every version up to the new head, one diff
@@ -2134,7 +2135,7 @@ def test_cdc_replication_randomized_vs_dict_model(spark, tmp_path):
                 if removed:
                     delete_keys(rep, spark, removed, "k")
                 if upserts:
-                    merge_upsert(rep, spark, spark.createDataFrame(
+                    merge_upsert(rep, spark, local_df(spark,
                         upserts, "k long, x long"), "k")
                 applied += 1
             assert table(rep) == model == table(src), (seed, op)
@@ -2161,7 +2162,7 @@ def test_partitioned_store_randomized_prune_differential(spark, tmp_path):
     base = datetime.datetime(2024, 1, 1)
 
     def mk(rows):
-        return spark.createDataFrame(
+        return local_df(spark,
             [(k, base + datetime.timedelta(hours=h), x)
              for k, h, x in rows], "k long, ts timestamp, x long")
 
@@ -2247,7 +2248,7 @@ def test_schema_evolution_randomized_vs_dict_model(spark, tmp_path):
                 batch.append(row)
                 rows.append(dict(row))
             schema = ", ".join(f"{c} long" for c in cols)
-            df = spark.createDataFrame(
+            df = local_df(spark,
                 [tuple(r[c] for c in cols) for r in batch], schema)
             v = st.write(df, mode="append")
             model_by_version[v] = [dict(r) for r in rows]

@@ -89,8 +89,9 @@ def build_from_stac(spark, out_dir: str, cfg, stac_url: str,
             f"{collection!r}, tiles {tiles}, {start}..{end} — check the "
             "bbox/date window and collection name")
     # fan the per-asset fetch out across executors (one search can
-    # return thousands of assets; without this a single createDataFrame
-    # partition would serialize every download)
+    # return thousands of assets; without this the downloads would run
+    # in the local_df scan's partitions, split by row position rather
+    # than by scene and band)
     assets = assets.repartition(_shuffle_width(spark), "sceneid", "band")
     if grid is not None:
         from cube_builder_spark.operators.warp import warp_scenes
