@@ -61,6 +61,30 @@ def _ansi_safe_sql(node: ast.AST) -> str:
     raise BandExpressionError(f"unsupported syntax: {ast.dump(node)}")
 
 
+def _parse(expression: str) -> ast.Expression:
+    """Whitelist-check, normalise and parse a band formula."""
+    if not _EXPR_RE.match(expression):
+        raise BandExpressionError(f"unsupported band expression: {expression!r}")
+    # numpy float-literal spellings like `10000.*x` parse as SQL floats
+    # fine except trailing-dot-then-operator; normalize `123.` -> `123.0`
+    norm = re.sub(r"(\d+)\.(?!\d)", r"\1.0", expression)
+    # The whitelist guarantees the expression is also valid Python
+    # arithmetic; round-trip it through ast so `/` becomes try_divide
+    # (ANSI-session-proof — see _ansi_safe_sql).
+    try:
+        return ast.parse(norm, mode="eval")
+    except SyntaxError as exc:
+        raise BandExpressionError(f"unparseable band expression: {expression!r}") from exc
+
+
+def expression_bands(expression: str) -> list[str]:
+    """The sorted band names a formula reads. Rejects exactly what
+    ``compile_band_expression`` rejects."""
+    tree = _parse(expression)
+    _ansi_safe_sql(tree)
+    return sorted({n.id for n in ast.walk(tree) if isinstance(n, ast.Name)})
+
+
 def compile_band_expression(expression: str, band_cols: list[str],
                             nodata: float = -9999.0,
                             dtype: str = "int16") -> Column:
@@ -73,19 +97,7 @@ def compile_band_expression(expression: str, band_cols: list[str],
     ``astype(int16)`` — platform-defined garbage (−32768 on x86). We
     define that case as nodata instead.
     """
-    if not _EXPR_RE.match(expression):
-        raise BandExpressionError(f"unsupported band expression: {expression!r}")
-    # numpy float-literal spellings like `10000.*x` parse as SQL floats
-    # fine except trailing-dot-then-operator; normalize `123.` -> `123.0`
-    norm = re.sub(r"(\d+)\.(?!\d)", r"\1.0", expression)
-    # The whitelist guarantees the expression is also valid Python
-    # arithmetic; round-trip it through ast so `/` becomes try_divide
-    # (ANSI-session-proof — see _ansi_safe_sql).
-    try:
-        tree = ast.parse(norm, mode="eval")
-    except SyntaxError as exc:
-        raise BandExpressionError(f"unparseable band expression: {expression!r}") from exc
-    col = F.expr(_ansi_safe_sql(tree)).cast("double")
+    col = F.expr(_ansi_safe_sql(_parse(expression))).cast("double")
     lo, hi = DTYPE_RANGES[dtype]
     any_nodata = F.lit(False)
     for b in band_cols:

@@ -1,4 +1,4 @@
-"""End-to-end cube build — SURVEY §3.1 as ONE Spark job.
+"""End-to-end cube build — SURVEY §3.1 as one declarative DAG.
 
 Reference lifecycle (``maestro.py:439-628`` + ``tasks.py``): plan
 tile×period mosaics, fan out per-(band, date) warp_merge tasks, barrier
@@ -12,6 +12,13 @@ with shuffles exactly at the reference's process boundaries (the merge
 key and the blend key). The broker/state machine disappears into the
 DAG; incremental re-run (``tasks.py:128-182``'s file-existence reuse)
 becomes an anti-join against the already-published items table.
+
+Running it takes a handful of actions, each a few Spark jobs: the item
+count, the cube and items writes, the COG and quicklook exports and the
+job log — about 19 jobs for a build with COG export. Each plane is
+computed once per build: the merge plane and the blend plane are
+persisted for the build's actions and released at its end, and
+planning the index bands starts no job.
 
 Scale notes:
 - periods/efficacy tables are tiny → broadcast; observations shuffle
@@ -31,6 +38,7 @@ import os
 from dataclasses import dataclass, field
 from datetime import date
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -201,10 +209,13 @@ def blend_stage(merged: DataFrame, cfg: CubeJobConfig) -> DataFrame:
     merge stage's single repartition Exchange, so within one plan
     Spark's ReuseExchange computes the merge once and replays the
     shuffle output for the second branch. Callers that EXECUTE multiple
-    actions over the merge plane (build_cube) own persist/unpersist at
-    the job boundary instead — a persist taken here could never be
-    released (the stage returns a lazy frame) and leaks across a long
-    session (the round-2/3 cache-leak defect)."""
+    actions own persist/unpersist at the job boundary instead — a
+    persist taken here could never be released (the stage returns a
+    lazy frame) and would leak across a long session. ``build_cube``
+    keeps two caches: the merge plane, which the item count reads
+    first, and then, only when there are items to publish, this blend
+    plane, which the cube write, the COG export and the quicklooks
+    share."""
     qual = (merged.filter(F.col("band") == cfg.quality_band)
             .select("tile_id", "pixel_id", "date", "period",
                     F.col("value").alias("quality")))
@@ -232,19 +243,29 @@ def blend_stage(merged: DataFrame, cfg: CubeJobConfig) -> DataFrame:
 
 
 def index_stage(blended: DataFrame, cfg: CubeJobConfig) -> DataFrame:
-    """C14 expression bands: pivot the per-band composite to columns,
-    evaluate each index expression via Catalyst (F.expr — no Python
-    exec), clamp to int16, and re-attach as band rows."""
+    """C14 expression bands: widen the bands the expressions read to
+    columns in one keyed aggregation, evaluate each expression via
+    Catalyst (F.expr — no Python exec), clamp to int16, and re-attach
+    as band rows. Planning it starts no Spark job.
+
+    An index is nodata wherever ANY spectral band of the pixel is
+    nodata, read or not, so a flag over all of the pixel's rows sets
+    the read bands to nodata before the expressions run. A band that
+    no observation carries widens to NULL, so its index is nodata."""
     if not cfg.index_bands:
         return blended
-    spectral_bands = [r.band for r in blended.select("band").distinct().collect()]
-    if not spectral_bands:      # empty plan (everything reused/pruned)
-        return blended
-    wide = (blended.groupBy("tile_id", "period", "pixel_id")
-            .pivot("band", spectral_bands)
-            .agg(F.first("value")))
+    bands = sorted({b for e in cfg.index_bands.values()
+                    for b in indexes.expression_bands(e)})
+    flags = blended.groupBy("tile_id", "period", "pixel_id").agg(
+        *(F.expr(f"first(value) FILTER (WHERE band = '{b}')").alias(b)
+          for b in bands),
+        F.max(F.col("value") == cfg.nodata).alias("any_nodata"))
+    wide = flags.select(
+        "tile_id", "period", "pixel_id",
+        *(F.when(F.col("any_nodata"), F.lit(cfg.nodata)).otherwise(F.col(b)).alias(b)
+          for b in bands))
     idx = indexes.generate_band_indexes(
-        wide, cfg.index_bands, band_cols=spectral_bands, nodata=cfg.nodata)
+        wide, cfg.index_bands, band_cols=bands, nodata=cfg.nodata)
     rows = None
     for name in cfg.index_bands:
         one = idx.select(
@@ -320,7 +341,7 @@ def existing_items(spark: SparkSession, out_dir: str) -> DataFrame | None:
         return None
     try:
         return spark.read.parquet(p)
-    except Exception:
+    except AnalysisException:   # no readable parquet, e.g. a killed write's _temporary
         return None
 
 
@@ -367,10 +388,12 @@ def build_cube(spark: SparkSession, obs: DataFrame, out_dir: str,
                 F.col("tile_id").cast("long").alias("tile_id"), "pixel_id",
                 "band", "date", "period", "doy", "value", "source_idx")
     # persist the merge boundary for the duration of THIS job's actions
-    # only (blend + publish + exports all read it), released in the
-    # finally — the persist→finally-unpersist discipline of
-    # streaming/incremental.py, so a full registry run ends with zero
-    # cached RDDs.
+    # only, released in the finally — the persist→finally-unpersist
+    # discipline of streaming/incremental.py, so a full registry run
+    # ends with zero cached RDDs. Items are counted first, off the merge
+    # cache; only when there is something to publish is the blend plane
+    # planned, and it is persisted next to the merge cache, so the cube
+    # write, the COG export and the quicklooks all read one copy.
     caches = []
     if cfg.histogram_match:
         merged = merged.persist()
@@ -379,31 +402,28 @@ def build_cube(spark: SparkSession, obs: DataFrame, out_dir: str,
     merged = merged.persist()
     caches.append(merged)
     try:
-        if identity_cube:
-            # tasks.py:398-400: identity cubes skip blend — the
-            # published scenes are the merges themselves
-            cube = None
-            cube_path = os.path.join(out_dir, "identity")
-        else:
-            blended = blend_stage(merged, cfg)
-            cube = index_stage(blended, cfg)
-            cube_path = os.path.join(out_dir, "cube")
         items = publish_stage(merged, cfg)
-
         items_path = os.path.join(out_dir, "items")
         n_items = items.count()
+        # tasks.py:398-400: identity cubes skip blend — the published
+        # scenes are the merges themselves
+        cube_path = os.path.join(out_dir, "identity" if identity_cube else "cube")
+        cube = None
         if n_items:
             # dynamic partition overwrite, not append: a forced rebuild
-            # (or a failed existing_items read) re-plans already-built
+            # (or an unreadable items directory) re-plans already-built
             # units — append would duplicate every pixel and item row
             from ..streaming.incremental import upsert_partitioned
-            if cube is not None:
+            if not identity_cube:
+                blended = blend_stage(merged, cfg).persist()
+                caches.append(blended)
+                cube = index_stage(blended, cfg)
                 upsert_partitioned(cube, cube_path)
             upsert_partitioned(items, items_path)
         summary = {"cube_path": cube_path, "items_path": items_path,
                    "new_items": n_items,
                    "reused_items": 0 if done is None else done.count()}
-        if n_items and cfg.bucketed_table and cube is not None:
+        if cube is not None and cfg.bucketed_table:
             from ..sinks.bucketed import write_bucketed_cube
             n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
             write_bucketed_cube(spark.read.parquet(cube_path),
@@ -411,9 +431,9 @@ def build_cube(spark: SparkSession, obs: DataFrame, out_dir: str,
                                 os.path.join(out_dir, "cube_bucketed"),
                                 n_buckets=n_buckets)
             summary["bucketed_table"] = cfg.bucketed_table
-        if n_items and cfg.quicklook_bands and cube is not None:
+        if cube is not None and cfg.quicklook_bands:
             summary["quicklooks"] = _export_quicklooks(cube, out_dir, cfg)
-        if n_items and cfg.export_tiffs and cube is not None:
+        if cube is not None and cfg.export_tiffs:
             from ..sinks.cog import export_band_tiffs
             manifest = export_band_tiffs(cube, os.path.join(out_dir, "tiff"),
                                          cog=cfg.cog, cog_tile=cfg.cog_tile)

@@ -211,3 +211,117 @@ def test_build_cube_bucketed_store(spark, sf_dir, tmp_path):
     agg = back.groupBy("tile_id", "pixel_id").agg(F.count(F.lit(1)))
     assert not plan_has_exchange(agg)
     spark.sql("DROP TABLE IF EXISTS cube_e2e_bucketed")
+
+
+def _persistent_rdd_ids(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_index_stage_starts_no_job(spark, sf_dir):
+    """Planning the index bands reads the band names from the
+    expressions, not from the data: no Spark job runs."""
+    from cube_builder_spark.plans.build_cube import (assign_periods,
+                                                     blend_stage, index_stage,
+                                                     merge_stage, periods_df)
+    cfg = CubeJobConfig()
+    obs = synth_observations(spark, sf_dir)
+    blended = blend_stage(merge_stage(assign_periods(obs, periods_df(spark, cfg)),
+                                      cfg), cfg)
+    sc = spark.sparkContext
+    group = "test_index_stage_starts_no_job"
+    sc.setJobGroup(group, group)
+    try:
+        cube = index_stage(blended, cfg)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert "NDVI" in {r.band for r in cube.select("band").distinct().collect()}
+
+
+def test_build_releases_its_caches(spark, sf_dir, tmp_path):
+    """The merge and blend caches are released in the build's finally,
+    for a full build with COG export and for a no-op rebuild."""
+    out = str(tmp_path / "cube_cache")
+    obs = synth_observations(spark, sf_dir)
+    before = _persistent_rdd_ids(spark)
+    first = build_cube(spark, obs, out, CubeJobConfig(export_tiffs=True))
+    assert first["new_items"] > 0 and first["tiffs"] > 0
+    assert _persistent_rdd_ids(spark) - before == set()
+    again = build_cube(spark, obs, out, CubeJobConfig(export_tiffs=True))
+    assert again["new_items"] == 0 and "tiffs" not in again
+    assert _persistent_rdd_ids(spark) - before == set()
+
+
+def test_index_nodata_when_any_spectral_band_is_nodata(spark, sf_dir, tmp_path):
+    """An index is nodata where ANY spectral band is nodata, including a
+    band its expression does not read (B02 for NDVI) — the rule a pivot
+    over every band gives. An expression naming a band that no
+    observation carries yields an all-nodata band."""
+    obs = synth_observations(spark, sf_dir)
+    b02 = (obs.filter(F.col("band") == "B04")
+           .withColumn("band", F.lit("B02"))
+           .withColumn("value", F.when(F.col("pixel_id") % 7 == 0, F.lit(BAND_NODATA))
+                       .otherwise(F.col("value"))))
+    cfg = CubeJobConfig(index_bands={"NDVI": "10000 * (B8A - B04) / (B8A + B04)",
+                                     "NOBAND": "B03 - B04"})
+    res = build_cube(spark, obs.unionByName(b02), str(tmp_path / "cube_b02"), cfg)
+    cube = spark.read.parquet(res["cube_path"])
+    assert {r.band for r in cube.select("band").distinct().collect()} == {
+        "B02", "B04", "B8A", "NDVI", "NOBAND"}
+
+    bands = ["B02", "B04", "B8A", "NDVI", "NOBAND"]
+    wide = (cube.groupBy("tile_id", "period", "pixel_id")
+            .pivot("band", bands).agg(F.first("value")))
+    any_nodata = ((F.col("B02") == BAND_NODATA) | (F.col("B04") == BAND_NODATA)
+                  | (F.col("B8A") == BAND_NODATA))
+    expect = (F.when(any_nodata, F.lit(BAND_NODATA))
+              .otherwise(F.coalesce(
+                  F.least(F.greatest(
+                      (10000 * (F.col("B8A") - F.col("B04"))
+                       / F.nullif(F.col("B8A") + F.col("B04"), F.lit(0))),
+                      F.lit(-32768.0)), F.lit(32767.0)).cast("long"),
+                  F.lit(BAND_NODATA))))
+    assert wide.filter(F.col("NDVI") != expect).count() == 0
+    only_b02 = wide.filter((F.col("B02") == BAND_NODATA)
+                           & (F.col("B04") != BAND_NODATA)
+                           & (F.col("B8A") != BAND_NODATA))
+    assert only_b02.count() > 0
+    assert only_b02.filter(F.col("NDVI") != BAND_NODATA).count() == 0
+    assert wide.filter(F.col("NOBAND") != BAND_NODATA).count() == 0
+
+
+def test_cog_export_matches_cube_parquet(spark, sf_dir, tmp_path):
+    """Every exported COG's full-resolution level holds exactly the cube
+    parquet's values for its (tile, period, band), NDVI included."""
+    import os
+
+    import numpy as np
+
+    from cube_builder_spark.sources.cog_reader import CogReader
+    out = str(tmp_path / "cube_cog")
+    obs = synth_observations(spark, sf_dir)
+    res = build_cube(spark, obs, out, CubeJobConfig(export_tiffs=True))
+    cube = (spark.read.parquet(res["cube_path"])
+            .select("tile_id", "period", "band", "pixel_id", "value").toPandas())
+    groups = cube.groupby(["tile_id", "period", "band"])
+    assert "NDVI" in set(cube["band"]) and res["tiffs"] == len(groups)
+    names = set()
+    for (tile, period, band), g in groups:
+        name = f"t{int(tile):03d}_{period}_{band}.tif"
+        names.add(name)
+        got = CogReader(os.path.join(out, "tiff", name)).read_level(0).ravel()
+        want = np.full(got.size, BAND_NODATA, np.int16)
+        want[g["pixel_id"].to_numpy()] = g["value"].to_numpy(np.int16)
+        assert np.array_equal(got, want), name
+    assert set(os.listdir(os.path.join(out, "tiff"))) == names
+
+
+def test_existing_items_skips_a_leftover_write(spark, tmp_path):
+    """An items directory holding only a killed write's _temporary has
+    no readable parquet: it counts as no items."""
+    from cube_builder_spark.plans.build_cube import existing_items
+    leftover = tmp_path / "items" / "_temporary" / "0"
+    leftover.mkdir(parents=True)
+    (leftover / "part-00000.parquet").write_bytes(b"")
+    assert existing_items(spark, str(tmp_path)) is None

@@ -79,6 +79,21 @@ def test_band_expression_rejects_injection():
         compile_band_expression("B04; drop table x", ["B04"])
 
 
+def test_expression_bands_shares_the_parser():
+    """The band names come from the same parse that compiles the
+    formula, so it rejects the same inputs."""
+    import pytest
+
+    from cube_builder_spark.operators.indexes import (BandExpressionError,
+                                                      expression_bands)
+    assert expression_bands("10000.*(B8A-B04)/(B8A+B04)") == ["B04", "B8A"]
+    assert expression_bands("2.5 * (B08 - B04) / (B08 + 6 * B04 - 7.5 * B02 + 1)") \
+        == ["B02", "B04", "B08"]
+    for bad in ("abs(B04)", "B04; drop table x", "B04 ** 2", "(B04"):
+        with pytest.raises(BandExpressionError):
+            expression_bands(bad)
+
+
 def test_mosaic_packed_matches_struct_path(spark):
     """The packed-argmax fast path (HashAggregate) must select exactly
     the pixels the general struct path (SortAggregate) selects —
