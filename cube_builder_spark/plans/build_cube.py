@@ -10,8 +10,14 @@ Spark-native: the whole thing is one declarative DAG —
     → [index bands] → [publish items + partitioned cube write]
 with shuffles exactly at the reference's process boundaries (the merge
 key and the blend key). The broker/state machine disappears into the
-DAG; incremental re-run (``tasks.py:128-182``'s file-existence reuse)
-becomes an anti-join against the already-published items table.
+DAG. Incremental re-run (``tasks.py:128-182``'s file-existence reuse)
+reads the already-published ``(tile_id, period)`` units once per build
+into an in-memory set (``Published``). The file-based builds
+(``tools/build_local``, ``tools/build_stac``) use it to prune scenes
+from the listing before any scene byte is read, and return at once when
+no unit is left to build; ``build_cube`` anti-joins the observations
+against the same set, and that anti-join alone decides what gets
+published.
 
 Running it takes a handful of actions, each a few Spark jobs: the item
 count, the cube and items writes, the COG and quicklook exports and the
@@ -345,17 +351,100 @@ def existing_items(spark: SparkSession, out_dir: str) -> DataFrame | None:
         return None
 
 
+@dataclass(frozen=True)
+class Published:
+    """The ``(tile_id, period)`` units ``out_dir/items`` already holds,
+    read into an in-memory set once per build. ``n_items`` counts the
+    items rows: the summary's ``reused_items``. Units with a NULL tile
+    are left out, as no equi-join can match them."""
+    units: frozenset = frozenset()
+    n_items: int = 0
+
+    @classmethod
+    def read(cls, spark: SparkSession, out_dir: str,
+             cfg: CubeJobConfig) -> "Published":
+        """One collect of the items table. Under ``cfg.force``, or when
+        no readable items exist, nothing is read and nothing counts as
+        published."""
+        done = None if cfg.force else existing_items(spark, out_dir)
+        if done is None:
+            return cls()
+        rows = done.select("tile_id", "period").collect()
+        return cls(frozenset((r.tile_id, r.period) for r in rows
+                             if r.tile_id is not None), len(rows))
+
+    def pending(self, cfg: CubeJobConfig, scenes, tiles=None) -> list:
+        """Keys of the scenes a rebuild still has to read, from the
+        listing alone. ``scenes`` holds ``(key, date, tile_id)`` rows.
+
+        A scene is kept when some unit it could produce is not
+        published. It could produce ``(t, p)`` for every period ``p``
+        holding its date, with ``t`` every grid tile in ``tiles`` (warp
+        path) or else its own tile (decode path, an exact
+        ``(tile, period)`` prune). A scene with no date, or with no tile
+        on the decode path, is kept. The prune keeps at least every
+        scene the ``build_cube`` anti-join would keep: that anti-join
+        decides what gets published. With ``reuse_from`` the merges come
+        from another cube, not from these scenes, so every scene is
+        kept."""
+        if cfg.reuse_from:
+            return [key for key, _, _ in scenes]
+        periods = timeline_rows(cfg.schema, cfg.start, cfg.end, cfg.unit, cfg.step)
+        keep = []
+        for key, day, tile in scenes:
+            owners = tiles if tiles is not None else (tile,)
+            units = {(t, r["period"]) for r in periods
+                     if day is not None and r["start_date"] <= day <= r["end_date"]
+                     for t in owners}
+            if day is None or None in owners or not units <= self.units:
+                keep.append(key)
+        return keep
+
+    def prune(self, df: DataFrame) -> DataFrame:
+        """Drop the rows of published units (broadcast anti-join
+        against the set, a ``LocalRelation``)."""
+        if not self.units:
+            return df
+        done = local_df(df.sparkSession, sorted(self.units),
+                        "tile_id long, period string")
+        return df.join(F.broadcast(done), ["tile_id", "period"], "left_anti")
+
+
+def skip_build(spark: SparkSession, out_dir: str, cfg: CubeJobConfig,
+               published: Published) -> dict:
+    """Finish a build that has nothing to publish: its summary and its
+    job-log row."""
+    summary = _summary(out_dir, cfg, 0, published)
+    _append_job_log(spark, out_dir, cfg, summary)
+    return summary
+
+
+def _summary(out_dir: str, cfg: CubeJobConfig, new_items: int,
+             published: Published) -> dict:
+    # tasks.py:398-400: identity cubes skip blend — the published
+    # scenes are the merges themselves
+    return {"cube_path": os.path.join(
+                out_dir, "identity" if cfg.composite == "IDT" else "cube"),
+            "items_path": os.path.join(out_dir, "items"),
+            "new_items": new_items, "reused_items": published.n_items}
+
+
 def build_cube(spark: SparkSession, obs: DataFrame, out_dir: str,
-               cfg: CubeJobConfig | None = None) -> dict:
+               cfg: CubeJobConfig | None = None,
+               published: Published | None = None) -> dict:
     """Run the full pipeline; returns a small summary dict.
 
     ``obs`` columns: tile_id, pixel_id, band, date, doy, value,
     source_idx, scene_order. Incremental: (tile, period) units already
     in ``out_dir/items`` are pruned from the plan unless cfg.force —
     the Spark translation of the reference's merge-file reuse
-    (tasks.py:128-182) at the publish granularity.
+    (tasks.py:128-182) at the publish granularity. ``published`` is
+    that set when the caller has already read it (``Published.read``);
+    otherwise it is read here.
     """
     cfg = cfg or CubeJobConfig()
+    if published is None:
+        published = Published.read(spark, out_dir, cfg)
     periods = periods_df(spark, cfg)
     # IDT = identity cube: its OUTPUT is the merge plane, so the
     # identity write is implied and the blend plane is never built
@@ -367,19 +456,9 @@ def build_cube(spark: SparkSession, obs: DataFrame, out_dir: str,
 
     if cfg.reuse_from:
         required = [r.band for r in obs.select("band").distinct().collect()]
-        merged = read_reused_identity(spark, cfg, required)
-        done = existing_items(spark, out_dir)
-        if done is not None:
-            merged = merged.join(
-                F.broadcast(done.select("tile_id", "period").distinct()),
-                ["tile_id", "period"], "left_anti")
+        merged = published.prune(read_reused_identity(spark, cfg, required))
     else:
-        tagged = assign_periods(obs, periods)
-        done = None if cfg.force else existing_items(spark, out_dir)
-        if done is not None:
-            tagged = tagged.join(
-                F.broadcast(done.select("tile_id", "period").distinct()),
-                ["tile_id", "period"], "left_anti")
+        tagged = published.prune(assign_periods(obs, periods))
         merged = merge_stage(tagged, cfg, share=not write_identity)
         if write_identity:
             from ..streaming.incremental import upsert_partitioned
@@ -403,30 +482,25 @@ def build_cube(spark: SparkSession, obs: DataFrame, out_dir: str,
     caches.append(merged)
     try:
         items = publish_stage(merged, cfg)
-        items_path = os.path.join(out_dir, "items")
         n_items = items.count()
-        # tasks.py:398-400: identity cubes skip blend — the published
-        # scenes are the merges themselves
-        cube_path = os.path.join(out_dir, "identity" if identity_cube else "cube")
+        if not n_items:
+            return skip_build(spark, out_dir, cfg, published)
+        summary = _summary(out_dir, cfg, n_items, published)
+        # dynamic partition overwrite, not append: a forced rebuild
+        # (or an unreadable items directory) re-plans already-built
+        # units — append would duplicate every pixel and item row
+        from ..streaming.incremental import upsert_partitioned
         cube = None
-        if n_items:
-            # dynamic partition overwrite, not append: a forced rebuild
-            # (or an unreadable items directory) re-plans already-built
-            # units — append would duplicate every pixel and item row
-            from ..streaming.incremental import upsert_partitioned
-            if not identity_cube:
-                blended = blend_stage(merged, cfg).persist()
-                caches.append(blended)
-                cube = index_stage(blended, cfg)
-                upsert_partitioned(cube, cube_path)
-            upsert_partitioned(items, items_path)
-        summary = {"cube_path": cube_path, "items_path": items_path,
-                   "new_items": n_items,
-                   "reused_items": 0 if done is None else done.count()}
+        if not identity_cube:
+            blended = blend_stage(merged, cfg).persist()
+            caches.append(blended)
+            cube = index_stage(blended, cfg)
+            upsert_partitioned(cube, summary["cube_path"])
+        upsert_partitioned(items, summary["items_path"])
         if cube is not None and cfg.bucketed_table:
             from ..sinks.bucketed import write_bucketed_cube
             n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
-            write_bucketed_cube(spark.read.parquet(cube_path),
+            write_bucketed_cube(spark.read.parquet(summary["cube_path"]),
                                 cfg.bucketed_table,
                                 os.path.join(out_dir, "cube_bucketed"),
                                 n_buckets=n_buckets)

@@ -49,12 +49,13 @@ def classify_assets(df: DataFrame, fmt: dict = None) -> DataFrame:
             .filter(F.col("band").isNotNull() & F.col("date").isNotNull()))
 
 
-def scan_directory(spark: SparkSession, folder: str,
+def scan_directory(spark: SparkSession, folder: str | list[str],
                    fmt: dict = None, recursive: bool = True,
                    with_content: bool = False) -> DataFrame:
-    """List a raster folder into an assets DataFrame
-    (path, length, band, date). Content bytes stay out of the plan
-    unless ``with_content`` — listing-only scans never read files."""
+    """List a raster folder (or read a list of raster files) into an
+    assets DataFrame (path, length, band, date). Content bytes stay out
+    of the plan unless ``with_content`` — listing-only scans never read
+    files."""
     cols = ["path", "length"] + (["content"] if with_content else [])
     df = (spark.read.format("binaryFile")
           .option("recursiveFileLookup", str(recursive).lower())

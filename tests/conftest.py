@@ -28,6 +28,31 @@ def sf_dir():
     return SF_DIR
 
 
+@pytest.fixture
+def in_job_group(spark):
+    """``run(name, fn)`` calls ``fn()`` under the Spark job group
+    ``name`` and returns ``(result, job ids, physical plans)``: the ids
+    of the jobs it started and the plans of the SQL executions that ran
+    them."""
+    def run(name, fn):
+        sc = spark.sparkContext
+        sc.setJobGroup(name, name)
+        try:
+            result = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = set(sc.statusTracker().getJobIdsForGroup(name))
+        execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+        to_java = spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava
+        plans = [e.physicalPlanDescription() for e in
+                 (execs.apply(i) for i in range(execs.size()))
+                 if {int(j) for j in to_java(e.jobs().keySet())} & jobs]
+        return result, jobs, plans
+    return run
+
+
 @pytest.fixture(scope="session")
 def duck(sf_dir):
     from cube_builder_spark.oracle import duckdb_connection

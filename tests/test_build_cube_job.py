@@ -4,6 +4,8 @@ incremental-reuse semantics (tasks.py:128-182)."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from cube_builder_spark.pixelplane import BAND_NODATA, pixel_plane
@@ -141,26 +143,29 @@ def test_histogram_match_stage_pulls_dates_toward_best(spark, sf_dir, tmp_path):
     cfg = CubeJobConfig()
     tagged = assign_periods(obs, periods_df(spark, cfg))
     merged = merge_stage(tagged, cfg).persist()
-    matched = histogram_stage(merged, cfg)
+    try:
+        matched = histogram_stage(merged, cfg)
 
-    def stats(df):
-        return {(r.tile_id, r.period, r.date): r.m for r in
-                (df.filter((F.col("band") == "B04") & (F.col("value") != -9999))
-                 .groupBy("tile_id", "period", "date")
-                 .agg(F.avg("value").alias("m")).collect())}
+        def stats(df):
+            return {(r.tile_id, r.period, r.date): r.m for r in
+                    (df.filter((F.col("band") == "B04") & (F.col("value") != -9999))
+                     .groupBy("tile_id", "period", "date")
+                     .agg(F.avg("value").alias("m")).collect())}
 
-    before, after = stats(merged), stats(matched)
-    # same scene set either way
-    assert set(before) == set(after)
-    # at least some scenes changed (matching had effect) and the
-    # quality band never changes
-    changed = [k for k in before if abs(before[k] - after[k]) > 1e-9]
-    assert changed
-    q_before = merged.filter(F.col("band") == "SCL").agg(
-        F.sum("value")).first()[0]
-    q_after = matched.filter(F.col("band") == "SCL").agg(
-        F.sum("value")).first()[0]
-    assert q_before == q_after
+        before, after = stats(merged), stats(matched)
+        # same scene set either way
+        assert set(before) == set(after)
+        # at least some scenes changed (matching had effect) and the
+        # quality band never changes
+        changed = [k for k in before if abs(before[k] - after[k]) > 1e-9]
+        assert changed
+        q_before = merged.filter(F.col("band") == "SCL").agg(
+            F.sum("value")).first()[0]
+        q_after = matched.filter(F.col("band") == "SCL").agg(
+            F.sum("value")).first()[0]
+        assert q_before == q_after
+    finally:
+        merged.unpersist()
 
 
 def test_histogram_match_in_full_job(spark, sf_dir, tmp_path):
@@ -325,3 +330,18 @@ def test_existing_items_skips_a_leftover_write(spark, tmp_path):
     leftover.mkdir(parents=True)
     (leftover / "part-00000.parquet").write_bytes(b"")
     assert existing_items(spark, str(tmp_path)) is None
+
+
+def test_rebuild_reads_published_items_once(spark, sf_dir, tmp_path, in_job_group):
+    """A no-op re-run scans ``out_dir/items`` in one SQL execution: the
+    anti-join and ``reused_items`` both come from that one read."""
+    out = str(tmp_path / "cube_once")
+    obs = synth_observations(spark, sf_dir)
+    first = build_cube(spark, obs, out, CubeJobConfig(index_bands={}))
+    again, _, plans = in_job_group(
+        "test_rebuild_reads_published_items_once",
+        lambda: build_cube(spark, obs, out, CubeJobConfig(index_bands={})))
+    assert again["new_items"] == 0
+    assert again["reused_items"] == first["new_items"] > 0
+    scans_items = f"Location: InMemoryFileIndex [file:{os.path.join(out, 'items')}]"
+    assert len([p for p in plans if scans_items in p]) == 1

@@ -47,9 +47,15 @@ def stac_env(tmp_path_factory):
                     arr.astype(np.int16).reshape(ROWS, COLS))
                 (d / f"S2A_t{t}_{stamp}_{band}.tif").write_bytes(buf)
 
+    fetched = []
+
     class _Quiet(http.server.SimpleHTTPRequestHandler):
         def log_message(self, *a):
             pass
+
+        def send_head(self):
+            fetched.append(self.path)
+            return super().send_head()
 
     handler = lambda *a, **kw: _Quiet(*a, directory=str(d), **kw)
     srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), handler)
@@ -79,12 +85,12 @@ def stac_env(tmp_path_factory):
                         for band in ("B04", "SCL")}})
         return {"features": feats}
 
-    yield transport, calls
+    yield transport, calls, fetched
     srv.shutdown()
 
 
 def test_stac_build_equals_direct(spark, tmp_path, stac_env):
-    transport, calls = stac_env
+    transport, calls, _ = stac_env
     import sys, os
     sys.path.insert(0, os.path.join(os.path.dirname(
         os.path.dirname(os.path.abspath(__file__))), "tools"))
@@ -138,7 +144,7 @@ def test_stac_build_equals_direct(spark, tmp_path, stac_env):
 def test_cli_main_parses_and_runs(spark, tmp_path, stac_env, monkeypatch):
     """The argparse surface mirrors the reference's build command; a
     fake transport keeps it network-free."""
-    transport, _ = stac_env
+    transport, _, _ = stac_env
     import sys, os
     sys.path.insert(0, os.path.join(os.path.dirname(
         os.path.dirname(os.path.abspath(__file__))), "tools"))
@@ -225,7 +231,7 @@ def test_empty_search_fails_fast(spark, tmp_path, stac_env):
     fail-fast ``take(1)`` probe must not re-run the (eager,
     driver-side) searches: exactly one transport round per tile even
     on the failure path."""
-    transport, calls = stac_env
+    transport, calls, _ = stac_env
     n_before = len(calls)
     import os
     import sys
@@ -267,3 +273,33 @@ def test_auto_shuffle_partitions_conf():
 
     assert _shuffle_width(fake("32")) == 32
     assert _shuffle_width(fake("auto")) == 24
+
+
+def test_noop_stac_rebuild_fetches_no_asset(spark, tmp_path, stac_env):
+    """A re-run whose units are all published prunes the searched
+    assets before the fetch: it searches again but requests no band file."""
+    transport, _, fetched = stac_env
+    import os
+    import sys
+    sys.path.insert(0, os.path.join(os.path.dirname(
+        os.path.dirname(os.path.abspath(__file__))), "tools"))
+    from build_stac import build_from_stac
+
+    cfg = CubeJobConfig(cube="STAC-NOOP", composite="LCF",
+                        start=date(2020, 1, 1), end=date(2020, 1, 16),
+                        step=8, index_bands={})
+
+    def build():
+        return build_from_stac(
+            spark, str(tmp_path / "noop_out"), cfg,
+            "http://stac.invalid", "S2_L2A", ["B04", "SCL"],
+            [0, 0, 2, 1], "2020-01-01", "2020-01-16",
+            tiles=["0", "1"], transport=transport,
+            tile_bboxes={"0": [0, 0, 1, 1], "1": [1, 0, 2, 1]})
+
+    first = build()
+    assert first["new_items"] == 4 and fetched
+    n_fetched = len(fetched)
+    again = build()
+    assert (again["new_items"], again["reused_items"]) == (0, 4)
+    assert len(fetched) == n_fetched

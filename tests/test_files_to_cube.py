@@ -4,6 +4,9 @@ with true file I/O (stdlib GeoTIFF codec), no rasterio required."""
 
 from __future__ import annotations
 
+import os
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -201,3 +204,180 @@ def test_hierarchical_grids_nest(spark):
     for sm in rng.sample(grids["SM"], 25):
         parents = [md for md in grids["MD"] if contains(md, sm)]
         assert len(parents) == 1
+
+
+# -- re-runs: scenes are pruned from the listing before any scene is read ---
+
+RERUN_TILES, RERUN_ROWS, RERUN_COLS, RERUN_RES = (0, 1), 8, 8, 30.0
+RERUN_DATES = {"2020-01-01_2020-01-08": ("20200101", "20200103"),
+               "2020-01-09_2020-01-16": ("20200110", "20200112")}
+
+
+def _rerun_grid(tiles):
+    return [{"tile_id": t, "west": t * RERUN_COLS * RERUN_RES, "north": 0.0,
+             "width": RERUN_COLS, "height": RERUN_ROWS, "res": RERUN_RES}
+            for t in tiles]
+
+
+@pytest.fixture(scope="module")
+def rerun_scenes(tmp_path_factory):
+    """One georeferenced B04+SCL scene per (tile, date): two tiles, two
+    dates in each of the two default periods."""
+    d = tmp_path_factory.mktemp("rerun_scenes")
+    rng = np.random.default_rng(11)
+    for tile in RERUN_TILES:
+        for stamps in RERUN_DATES.values():
+            for stamp in stamps:
+                geo = dict(pixel_size=(RERUN_RES, RERUN_RES),
+                           origin=(tile * RERUN_COLS * RERUN_RES, 0.0),
+                           nodata=BAND_NODATA)
+                shape = (RERUN_ROWS, RERUN_COLS)
+                for band, arr in (
+                        ("B04", rng.integers(1, 3000, shape)),
+                        ("SCL", rng.integers(0, 12, shape))):
+                    (d / f"S2A_t{tile:03d}_{stamp}T000000_{band}.tif").write_bytes(
+                        write_geotiff_band(arr.astype(np.int16), **geo))
+    return str(d)
+
+
+def _build(spark, scenes, out, grid_tiles=(), **cfg):
+    from tools.build_local import build_from_directory
+    grid = dict(grid=_rerun_grid(grid_tiles), src_crs="EPSG:32722",
+                dst_crs="EPSG:32722") if grid_tiles else {}
+    return build_from_directory(spark, scenes, out,
+                                CubeJobConfig(index_bands={}, **cfg),
+                                fmt=FMT, **grid)
+
+
+@pytest.fixture(scope="module")
+def fresh_builds(spark, rerun_scenes, tmp_path_factory):
+    """One full build per path, warp (both grid tiles) and decode; each
+    re-run test starts from a copy of one."""
+    root = tmp_path_factory.mktemp("fresh")
+    out = {"warp": str(root / "warp"), "decode": str(root / "decode")}
+    built = {"warp": _build(spark, rerun_scenes, out["warp"], RERUN_TILES),
+             "decode": _build(spark, rerun_scenes, out["decode"])}
+    assert built["warp"]["new_items"] == built["decode"]["new_items"] == 4
+    return {k: (out[k], built[k]) for k in out}
+
+
+def _copy_of(fresh, path, tmp_path):
+    import shutil
+    out = str(tmp_path / path)
+    shutil.copytree(fresh[path][0], out)
+    return out
+
+
+def _read_scenes(monkeypatch, module, name):
+    """Record the scene files each call of ``module.name`` reads."""
+    import importlib
+    mod = importlib.import_module(module)
+    real, seen = getattr(mod, name), []
+
+    def spy(files, *a, **kw):
+        seen.append(sorted(os.path.basename(p) for p in files.inputFiles()))
+        return real(files, *a, **kw)
+
+    monkeypatch.setattr(mod, name, spy)
+    return seen
+
+
+def _assert_same_cube(spark, got, want):
+    key = ["tile_id", "period", "band", "pixel_id"]
+    g = spark.read.parquet(got["cube_path"]).select(*key, "value")
+    w = spark.read.parquet(want["cube_path"]).select(*key, "value")
+    assert g.count() == w.count() > 0
+    assert g.exceptAll(w).count() == 0 and w.exceptAll(g).count() == 0
+
+
+def _drop_items(out, tile="*", period="*"):
+    import glob
+    import shutil
+    gone = glob.glob(os.path.join(out, "items", f"tile_id={tile}",
+                                  f"period={period}"))
+    assert gone
+    for p in gone:
+        shutil.rmtree(p)
+
+
+def test_noop_warp_rebuild_reads_no_scene(spark, rerun_scenes, fresh_builds,
+                                          tmp_path, monkeypatch, in_job_group):
+    """A rebuild with every unit published reads no scene: a handful
+    of jobs in its job group, none of them running a Python stage, and
+    a job-log row of 0 new and all reused items."""
+    from cube_builder_spark.plans.build_cube import job_status
+    out = _copy_of(fresh_builds, "warp", tmp_path)
+    warped = _read_scenes(monkeypatch, "cube_builder_spark.operators.warp",
+                          "warp_scenes")
+    again, jobs, plans = in_job_group(
+        "test_noop_warp_rebuild",
+        lambda: _build(spark, rerun_scenes, out, RERUN_TILES))
+    assert again == {"cube_path": os.path.join(out, "cube"),
+                     "items_path": os.path.join(out, "items"),
+                     "new_items": 0, "reused_items": 4}
+    assert warped == []
+    assert 0 < len(jobs) <= 5 and plans
+    assert not [p for p in plans
+                if re.search(r"InPandas|InArrow|EvalPython", p)]
+    st = job_status(spark, out).first()
+    assert (st.n_runs, st.new_items, st.reused_items) == (2, 0, 4)
+
+
+def test_rebuild_warps_only_the_unpublished_period(spark, rerun_scenes, fresh_builds,
+                                                   tmp_path, monkeypatch):
+    out = _copy_of(fresh_builds, "warp", tmp_path)
+    period = "2020-01-09_2020-01-16"
+    _drop_items(out, period=period)
+    warped = _read_scenes(monkeypatch, "cube_builder_spark.operators.warp",
+                          "warp_scenes")
+    again = _build(spark, rerun_scenes, out, RERUN_TILES)
+    assert (again["new_items"], again["reused_items"]) == (2, 2)
+    assert warped == [sorted(
+        f"S2A_t{t:03d}_{s}T000000_{b}.tif" for t in RERUN_TILES
+        for s in RERUN_DATES[period] for b in ("B04", "SCL"))]
+    _assert_same_cube(spark, again, fresh_builds["warp"][1])
+
+
+def test_grid_growth_rebuilds_every_period(spark, rerun_scenes, fresh_builds,
+                                           tmp_path):
+    """Adding a grid tile leaves every period pending: each gains the
+    new tile, and the cube equals a fresh two-tile build."""
+    out = str(tmp_path / "grow")
+    first = _build(spark, rerun_scenes, out, RERUN_TILES[:1])
+    assert first["new_items"] == 2
+    grown = _build(spark, rerun_scenes, out, RERUN_TILES)
+    assert (grown["new_items"], grown["reused_items"]) == (2, 2)
+    items = spark.read.parquet(grown["items_path"])
+    assert {(r.tile_id, r.period) for r in items.collect()} == {
+        (t, p) for t in RERUN_TILES for p in RERUN_DATES}
+    _assert_same_cube(spark, grown, fresh_builds["warp"][1])
+
+
+def test_forced_rebuild_reads_every_scene(spark, rerun_scenes, fresh_builds,
+                                          tmp_path, monkeypatch):
+    out = _copy_of(fresh_builds, "warp", tmp_path)
+    warped = _read_scenes(monkeypatch, "cube_builder_spark.operators.warp",
+                          "warp_scenes")
+    forced = _build(spark, rerun_scenes, out, RERUN_TILES, force=True)
+    assert (forced["new_items"], forced["reused_items"]) == (4, 0)
+    assert len(warped) == 1 and len(warped[0]) == 16
+    _assert_same_cube(spark, forced, fresh_builds["warp"][1])
+
+
+def test_decode_rebuild_prunes_exact_units(spark, rerun_scenes, fresh_builds,
+                                           tmp_path, monkeypatch):
+    """Without a grid each scene names its tile, so the prune is by
+    exact (tile, period): only the dropped unit's scenes are decoded."""
+    out = _copy_of(fresh_builds, "decode", tmp_path)
+    period = "2020-01-01_2020-01-08"
+    _drop_items(out, tile=1, period=period)
+    decoded = _read_scenes(monkeypatch, "cube_builder_spark.sources.raster_reader",
+                           "decode_geotiff_pixels")
+    again = _build(spark, rerun_scenes, out)
+    assert (again["new_items"], again["reused_items"]) == (1, 3)
+    assert decoded == [sorted(f"S2A_t001_{s}T000000_{b}.tif"
+                              for s in RERUN_DATES[period]
+                              for b in ("B04", "SCL"))]
+    assert _build(spark, rerun_scenes, out)["new_items"] == 0
+    assert len(decoded) == 1
+    _assert_same_cube(spark, again, fresh_builds["decode"][1])

@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from cube_builder_spark.functions import multimodal
-from cube_builder_spark.tables import load_tables
+from cube_builder_spark.tables import load_tables, local_df
 
 
 def _docs(spark, sf_dir):
@@ -105,7 +105,10 @@ def test_stateful_sessionizer_closed_sessions(spark, tmp_path):
     t0 = datetime.datetime(2020, 1, 1, 8, 0, 0)
 
     def ev(minutes, user, value, eid):
-        return (eid, t0 + datetime.timedelta(minutes=minutes), user, "click",
+        # local_df reads a naive datetime as UTC; collect() returns host
+        # local ones, so pass the aware instant the naive one stands for
+        ts = t0 + datetime.timedelta(minutes=minutes)
+        return (eid, ts.astimezone(datetime.timezone.utc), user, "click",
                 value, "{}")
 
     rows = [
@@ -115,7 +118,8 @@ def test_stateful_sessionizer_closed_sessions(spark, tmp_path):
         ev(0, 2, 1.0, 4), ev(20, 2, 1.0, 5), ev(40, 2, 1.0, 6),
     ]
     src = str(tmp_path / "stream_src")
-    spark.createDataFrame(rows, EVENT_SCHEMA).write.parquet(src)
+    local_df(spark, rows, "event_id long, ts timestamp, user_id long, "
+             "event_type string, value double, props string").write.parquet(src)
     out = sessionize_stream(spark.readStream.schema(EVENT_SCHEMA).parquet(src))
     q = (out.writeStream.outputMode("append")
          .format("memory").queryName("sessions").start())
@@ -139,16 +143,16 @@ def test_stateful_streaming_dedup(spark, tmp_path):
     schema = "doc_id long, text string"
     src = str(tmp_path / "docs_stream")
     # batch 1: doc 10 and 11 identical, 12 unique
-    spark.createDataFrame(
-        [(11, "aaa bbb"), (10, "aaa bbb"), (12, "ccc")], schema
+    local_df(
+        spark, [(11, "aaa bbb"), (10, "aaa bbb"), (12, "ccc")], schema
     ).write.parquet(src + "/b1")
     out = dedup_stream(spark.readStream.schema(schema).parquet(src + "/*"))
     q = (out.writeStream.outputMode("append")
          .format("memory").queryName("dedup_led").start())
     q.processAllAvailable()
     # batch 2: doc 20 duplicates batch-1 content, 21 unique
-    spark.createDataFrame(
-        [(20, "aaa bbb"), (21, "ddd")], schema).write.parquet(src + "/b2")
+    local_df(
+        spark, [(20, "aaa bbb"), (21, "ddd")], schema).write.parquet(src + "/b2")
     q.processAllAvailable()
     q.stop()
     led = {r.doc_id: r for r in
@@ -281,8 +285,8 @@ def test_image_dhash_matches_reference(spark):
         rows.append((doc_id, "image/bmp", multimodal.encode_bmp(pix)))
         want[doc_id] = _ref_dhash(pix)
     rows.append((99, "audio/wav", b"not an image"))   # skipped
-    media = spark.createDataFrame(
-        rows, "doc_id long, media_type string, payload binary")
+    media = local_df(
+        spark, rows, "doc_id long, media_type string, payload binary")
     got = {r.doc_id: (r.h0, r.h1)
            for r in multimodal.image_dhash(media).collect()}
     assert got == want
@@ -313,7 +317,7 @@ def test_dhash_dup_pairs_lossless_banding(spark):
             ham = bin((a0 ^ b0)).count("1") + bin((a1 ^ b1)).count("1")
             if ham <= 6:
                 want.add((ia, ib, ham))
-    df = spark.createDataFrame(hashes, "doc_id long, h0 long, h1 long")
+    df = local_df(spark, hashes, "doc_id long, h0 long, h1 long")
     got = {(r.doc_a, r.doc_b, r.hamming)
            for r in multimodal.dhash_dup_pairs(df, max_hamming=6).collect()}
     assert got == want and len(want) > 0
@@ -358,8 +362,8 @@ def test_audio_fingerprint_matches_reference(spark):
                  multimodal.encode_wav(np.zeros(7, np.int16),
                                        multimodal.AUDIO_SRC_RATE)))  # <2 frames
     rows.append((99, "image/bmp", b"not audio"))                     # skipped
-    media = spark.createDataFrame(
-        rows, "doc_id long, media_type string, payload binary")
+    media = local_df(
+        spark, rows, "doc_id long, media_type string, payload binary")
     got = {r.doc_id: (r.fp, r.nb)
            for r in multimodal.audio_fingerprint(media).collect()}
     assert got == want and len(want) > 0
@@ -381,7 +385,7 @@ def test_audio_dup_pairs_lossless_banding(spark):
         for ib, fb, nb2 in fps[i + 1:]:
             if na == nb2 and bin(fa ^ fb).count("1") <= 1:
                 want.add((ia, ib, bin(fa ^ fb).count("1")))
-    df = spark.createDataFrame(fps, "doc_id long, fp long, nb int")
+    df = local_df(spark, fps, "doc_id long, fp long, nb int")
     got = {(r.doc_a, r.doc_b, r.hamming)
            for r in multimodal.audio_dup_pairs(df, max_hamming=1).collect()}
     assert got == want and len(want) > 0
@@ -405,8 +409,8 @@ def test_dhash_bucket_cap_bounds_degenerate_buckets(spark):
     # hashes => one bucket": the degenerate plane is then extended
     # columnar-side (1k hash rows), which exercises the identical join
     pix = np.full((6, 9, 3), 200, np.uint8)
-    media = spark.createDataFrame(
-        [(i, "image/bmp", multimodal.encode_bmp(pix)) for i in range(3)],
+    media = local_df(
+        spark, [(i, "image/bmp", multimodal.encode_bmp(pix)) for i in range(3)],
         "doc_id long, media_type string, payload binary")
     hs = multimodal.image_dhash(media).collect()
     assert len({(r.h0, r.h1) for r in hs}) == 1
@@ -416,7 +420,7 @@ def test_dhash_bucket_cap_bounds_degenerate_buckets(spark):
     # so they share no band byte with the degenerate cluster)
     a0 = h0 ^ 0xAAAAAAAA
     rows += [(2000, a0, h1 ^ 0x55555555), (2001, a0 ^ 1, h1 ^ 0x55555555)]
-    df = spark.createDataFrame(rows, "doc_id long, h0 long, h1 long")
+    df = local_df(spark, rows, "doc_id long, h0 long, h1 long")
     capped = multimodal.dhash_dup_pairs(df, max_hamming=6, max_bucket=500)
     got = {(r.doc_a, r.doc_b) for r in capped.collect()}
     assert got == {(2000, 2001)}          # cap tripped, outsiders intact
@@ -430,15 +434,15 @@ def test_audio_bucket_cap_bounds_silent_clips(spark):
     near-pair still returned. Uncapped default: full O(n²)."""
     silent = multimodal.encode_wav(np.zeros(60, np.int16),
                                    multimodal.AUDIO_SRC_RATE)
-    media = spark.createDataFrame(
-        [(i, "audio/wav", silent) for i in range(3)],
+    media = local_df(
+        spark, [(i, "audio/wav", silent) for i in range(3)],
         "doc_id long, media_type string, payload binary")
     fps = multimodal.audio_fingerprint(media).collect()
     assert len({(r.fp, r.nb) for r in fps}) == 1 and fps[0].fp == 0
     nb = fps[0].nb
     rows = [(i, 0, nb) for i in range(1000)]
     rows += [(2000, 3 << 7, nb + 1), (2001, (3 << 7) ^ 1, nb + 1)]
-    df = spark.createDataFrame(rows, "doc_id long, fp long, nb int")
+    df = local_df(spark, rows, "doc_id long, fp long, nb int")
     capped = multimodal.audio_dup_pairs(df, max_hamming=1, max_bucket=500)
     assert {(r.doc_a, r.doc_b) for r in capped.collect()} == {(2000, 2001)}
     assert multimodal.audio_dup_pairs(df).count() == 1000 * 999 // 2 + 1
@@ -455,8 +459,8 @@ def test_degenerate_media_differential(spark):
         (1, "image/bmp", multimodal.encode_bmp(const_pix)),
         (2, "image/bmp", multimodal.encode_bmp(tiny_pix)),
     ]
-    media = spark.createDataFrame(
-        rows, "doc_id long, media_type string, payload binary")
+    media = local_df(
+        spark, rows, "doc_id long, media_type string, payload binary")
     got = {r.doc_id: (r.h0, r.h1)
            for r in multimodal.image_dhash(media).collect()}
     assert got[1] == _ref_dhash(const_pix)
@@ -465,8 +469,8 @@ def test_degenerate_media_differential(spark):
 
     # silent WAV: every frame energy 0, no increase anywhere -> fp 0
     silent = np.zeros(73, np.int16)
-    media_a = spark.createDataFrame(
-        [(1, "audio/wav",
+    media_a = local_df(
+        spark, [(1, "audio/wav",
           multimodal.encode_wav(silent, multimodal.AUDIO_SRC_RATE))],
         "doc_id long, media_type string, payload binary")
     r = multimodal.audio_fingerprint(media_a).collect()[0]
@@ -475,8 +479,8 @@ def test_degenerate_media_differential(spark):
     # single-frame AVI: no frame pair -> 0 cuts, NULL max_delta/first_cut
     one = np.full((1, 4, 4, 3), 9, np.uint8)
     const3 = np.full((3, 4, 4, 3), 9, np.uint8)   # constant video: 0 cuts
-    media_v = spark.createDataFrame(
-        [(1, "video/avi", multimodal.encode_avi(one, 10)),
+    media_v = local_df(
+        spark, [(1, "video/avi", multimodal.encode_avi(one, 10)),
          (2, "video/avi", multimodal.encode_avi(const3, 10))],
         "doc_id long, media_type string, payload binary")
     vr = {r.doc_id: r for r in multimodal.video_scene_cuts(media_v).collect()}
@@ -498,8 +502,8 @@ def test_thumbnail_zero_area_guard(spark):
     # patch biWidth (offset 18) to 0 in a copy of the header
     zero_w = bytearray(good)
     zero_w[18:22] = _struct.pack("<i", 0)
-    media = spark.createDataFrame(
-        [(1, "image/bmp", good), (2, "image/bmp", bytes(zero_w))],
+    media = local_df(
+        spark, [(1, "image/bmp", good), (2, "image/bmp", bytes(zero_w))],
         "doc_id long, media_type string, payload binary")
     try:
         rows = multimodal.thumbnail_image(media, factor=2).collect()
@@ -525,8 +529,8 @@ def test_audio_vad_silent_loud_and_alternating(spark):
     alt = multimodal.encode_wav(
         np.concatenate([np.full(frame, 1000, np.int16),
                         np.zeros(frame, np.int16)] * 3), 8000)
-    media = spark.createDataFrame(
-        [(0, "audio/wav", silent), (1, "audio/wav", loud),
+    media = local_df(
+        spark, [(0, "audio/wav", silent), (1, "audio/wav", loud),
          (2, "audio/wav", alt), (3, "image/bmp", b"ignored")],
         "doc_id long, media_type string, payload binary")
     out = {r.doc_id: r for r in multimodal.audio_vad(media).collect()}

@@ -7,6 +7,10 @@
 
 Files are classified by the S4 format regexes (band + datetime from
 the filename), decoded executor-side, and run through the §3.1 job.
+A re-run into the same OUT_DIR prunes the file listing before any scene
+byte is read: scenes whose every unit is already published are not
+decoded or warped, and a re-run with nothing left to build only appends
+its job-log row (``plans.build_cube.Published``).
 """
 
 from __future__ import annotations
@@ -32,13 +36,36 @@ def build_from_directory(spark, scenes_dir: str, out_dir: str, cfg,
     (decode path). With ``grid`` (+ ``src_crs``/``dst_crs``), each
     scene is warped onto the grid tiles first — the reference's full
     warp-merge flow (processing.py:144-316) with operators/warp.py
-    doing the reprojection."""
+    doing the reprojection.
+
+    Before any scene is read, the published units of ``out_dir`` decide
+    which scenes the build still needs (``Published.pending``, over the
+    classified file listing): the others are never opened, and with
+    none left the build returns its no-op summary at once."""
     from pyspark.sql import functions as F
 
-    from cube_builder_spark.sources.local_scan import scan_directory
+    from cube_builder_spark.plans.build_cube import (Published, build_cube,
+                                                     skip_build)
+    from cube_builder_spark.sources.local_scan import (classify_assets,
+                                                       scan_directory)
     from cube_builder_spark.sources.raster_reader import decode_geotiff_pixels
+    from cube_builder_spark.tables import local_df
 
+    tile_of = F.regexp_extract("path", r"_t(\d+)_", 1)
     assets = scan_directory(spark, scenes_dir, fmt=fmt, with_content=True)
+    published = Published.read(spark, out_dir, cfg)
+    if published.units:
+        listing = classify_assets(local_df(
+            spark, [(p,) for p in assets.inputFiles()], "path string"), fmt)
+        scenes = [(r.path, r.date, int(r.tile) if r.tile else None)
+                  for r in listing.select("path", "date",
+                                          tile_of.alias("tile")).collect()]
+        keep = published.pending(
+            cfg, scenes, None if grid is None else [t["tile_id"] for t in grid])
+        if not keep:
+            return skip_build(spark, out_dir, cfg, published)
+        if len(keep) < len(scenes):
+            assets = scan_directory(spark, keep, fmt=fmt, with_content=True)
     if grid is not None:
         from cube_builder_spark.operators.warp import warp_scenes
         pixels = warp_scenes(
@@ -49,7 +76,7 @@ def build_from_directory(spark, scenes_dir: str, out_dir: str, cfg,
             extra_cols=("band", "date_s"))
     else:
         pixels = decode_geotiff_pixels(
-            assets.withColumn("tile_id", F.regexp_extract("path", r"_t(\d+)_", 1))
+            assets.withColumn("tile_id", tile_of)
             .withColumn("date_s", F.col("date").cast("string"))
             .select("path", "content", "band", "tile_id", "date_s"),
             extra_cols=["band", "tile_id", "date_s"])
@@ -61,8 +88,7 @@ def build_from_directory(spark, scenes_dir: str, out_dir: str, cfg,
            .withColumn("scene_order", F.lit(0))
            .select("tile_id", "pixel_id", "band", "date", "doy",
                    "value", "source_idx", "scene_order"))
-    from cube_builder_spark.plans.build_cube import build_cube
-    return build_cube(spark, obs, out_dir, cfg)
+    return build_cube(spark, obs, out_dir, cfg, published)
 
 
 def main(argv=None):

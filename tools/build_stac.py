@@ -9,7 +9,9 @@
 
 One STAC search per tile (S1/S2/S3 adapters), executor-side asset
 fetch + decode (ranged remote containers via sources.raster_reader),
-then the same §3.1 build DAG build-local uses.
+then the same §3.1 build DAG build-local uses. A re-run into the same
+OUT_DIR fetches only the assets of units not yet published there, and
+none when every unit is (``plans.build_cube.Published``).
 """
 
 from __future__ import annotations
@@ -34,6 +36,15 @@ def _shuffle_width(spark) -> int:
         return spark.sparkContext.defaultParallelism
 
 
+def _as(parse, text):
+    """``parse(text)``, or None when it does not parse (the prune then
+    keeps the asset)."""
+    try:
+        return parse(text)
+    except (TypeError, ValueError):
+        return None
+
+
 def build_from_stac(spark, out_dir: str, cfg, stac_url: str,
                     collection: str, bands: list[str], bbox: list[float],
                     start: str, end: str, tiles: list[str],
@@ -53,10 +64,12 @@ def build_from_stac(spark, out_dir: str, cfg, stac_url: str,
     (+ src_crs/dst_crs), each fetched scene is warped onto the grid
     tiles first — the reference's full warp-merge flow
     (processing.py:144-316), sharing operators/warp.py with
-    build_local."""
+    build_local. Like build_local, it prunes the searched assets by
+    the units already published in ``out_dir`` before any fetch."""
     from pyspark.sql import functions as F
 
-    from cube_builder_spark.plans.build_cube import build_cube
+    from cube_builder_spark.plans.build_cube import (Published, build_cube,
+                                                     skip_build)
     from cube_builder_spark.sources.stac import (StacClient,
                                                  fetch_asset_content,
                                                  fetch_asset_pixels,
@@ -88,6 +101,17 @@ def build_from_stac(spark, out_dir: str, cfg, stac_url: str,
             f"STAC search returned no items for collection "
             f"{collection!r}, tiles {tiles}, {start}..{end} — check the "
             "bbox/date window and collection name")
+    published = Published.read(spark, out_dir, cfg)
+    if published.units:
+        rows = assets.select("link", "date", "tile_id").collect()
+        keep = published.pending(
+            cfg, [(r.link, _as(date.fromisoformat, r.date), _as(int, r.tile_id))
+                  for r in rows],
+            None if grid is None else [t["tile_id"] for t in grid])
+        if not keep:
+            return skip_build(spark, out_dir, cfg, published)
+        if len(keep) < len(rows):
+            assets = assets.filter(F.col("link").isin(*keep))
     # fan the per-asset fetch out across executors (one search can
     # return thousands of assets; without this the downloads would run
     # in the local_df scan's partitions, split by row position rather
@@ -115,7 +139,7 @@ def build_from_stac(spark, out_dir: str, cfg, stac_url: str,
            .withColumn("scene_order", F.lit(0))
            .select("tile_id", "pixel_id", "band", "date", "doy",
                    "value", "source_idx", "scene_order"))
-    return build_cube(spark, obs, out_dir, cfg)
+    return build_cube(spark, obs, out_dir, cfg, published)
 
 
 def main(argv=None):
