@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from .functions import dedup
+from .functions import graph
 from .functions import similarity
 from .pipeline_queries import (  # shared SQL fragments/helpers
     _BATCH_TOPK_SQL, _CLUSTER_ITERS, _COS_AB, _EV_SQL, _IVF_BATCH_SQL,
@@ -1373,23 +1374,15 @@ def a_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: everything up to `pairs` is the capped in-array
     bucket expansion (one bucket Exchange, no self-join); the
-    symmetrization is a union of projections and the top-k a
-    src-partitioned window — keyed by vector id, never global. At
+    symmetrization is ``functions/graph.undirected`` (one evaluation
+    of the pairs) and the top-k a src-partitioned window — keyed by vector id, never global. At
     100 TB the graph build is the same cost as the dedup pass it
     shares machinery with."""
     from pyspark.sql import Window
     pairs = similarity.cosine_dup_pairs(
         _embs(spark, sf_dir), num_planes=8, threshold=0.35,
         max_bucket=256)
-    # explode symmetrization: ONE evaluation of the bucket/cosine
-    # machinery (r14 — the two-select union form ran it twice per
-    # action; label_propagation's documented pattern)
-    edges = (pairs.select(F.explode(F.array(
-        F.struct(F.col("vec_a").alias("src"),
-                 F.col("vec_b").alias("dst"), F.col("cosine")),
-        F.struct(F.col("vec_b").alias("src"),
-                 F.col("vec_a").alias("dst"), F.col("cosine"))))
-        .alias("e")).select("e.src", "e.dst", "e.cosine"))
+    edges = graph.undirected(pairs, "vec_a", "vec_b", "cosine")
     w = Window.partitionBy("src").orderBy(F.desc("cosine"), "dst")
     return (edges.withColumn("k", F.row_number().over(w).cast("long"))
             .filter(F.col("k") <= 3))
@@ -1810,14 +1803,7 @@ def a_knn_graph_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ("bucket8", pairs8), ("bucket4", pairs4))
     graphs = None
     for variant, pairs in variants:
-        # explode symmetrization — one evaluation of the bucket pass
-        # per variant (r14, the a_knn_graph fix)
-        edges = (pairs.select(F.explode(F.array(
-            F.struct(F.col("vec_a").alias("src"),
-                     F.col("vec_b").alias("dst"), F.col("cosine")),
-            F.struct(F.col("vec_b").alias("src"),
-                     F.col("vec_a").alias("dst"), F.col("cosine"))))
-            .alias("e")).select("e.src", "e.dst", "e.cosine"))
+        edges = graph.undirected(pairs, "vec_a", "vec_b", "cosine")
         top3 = (edges.withColumn("k", F.row_number().over(wk))
                 .filter(F.col("k") <= 3)
                 .select(F.lit(variant).alias("variant"), "src", "dst"))

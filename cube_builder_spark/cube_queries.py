@@ -2271,8 +2271,8 @@ def c31_region_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     to GDAL/PostGIS, image.py:665-708).
 
     Spark side (operators/regions.py): min-label propagation with
-    pointer jumping, localCheckpoint per round, looped to a driver-
-    checked fixed point — O(log max-diameter) rounds of cell-id
+    pointer jumping, looped to a driver-checked fixed point by
+    ``functions/graph.iterate`` — O(log max-diameter) rounds of cell-id
     equi-joins, the GraphX connected-components shape. The oracle is
     a genuine recursive-CTE transitive closure (UNION-deduped) with
     min() collapsing each cell's reachable set — converged labels on

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import graph
 from .text import tokens_col
 
 
@@ -323,7 +324,7 @@ def capped_plane_pairs(plane: DataFrame, max_bucket: int | None = None,
     return out
 
 
-def dup_clusters(pairs: DataFrame, iters: int = 6) -> DataFrame:
+def dup_clusters(pairs: DataFrame, iters: int) -> DataFrame:
     """Connected components over near-dup pairs → (doc_id,
     canonical_id, is_canonical): the cluster-canonicalization step
     after pair detection (keep one doc per duplicate CLUSTER, not per
@@ -337,73 +338,37 @@ def dup_clusters(pairs: DataFrame, iters: int = 6) -> DataFrame:
     whether or not components have converged — which is what makes
     this hash-checkable against a SQL oracle with the same unrolled
     steps. Near-dup clusters are near-cliques (diameter 2-3), so
-    ``iters=6`` converges with margin.
+    ``iters=6`` converges with margin; ``functions/graph.iterate``'s
+    exact early stop skips the rounds that could change nothing.
 
     Scale shape: per round, one join of the (small, pairs-derived)
     edge list with the label table and one min-groupBy — both keyed on
     doc ids, broadcast-eligible when the dup graph is small relative
-    to the corpus (the normal case). Iteration REQUIRES a lineage cut
-    per round: ``labels`` feeds the next round twice (its own side and
-    the neighbor-min side), so an uncut plan re-evaluates the upstream
-    pair detection ~2^iters times (measured 11s -> 0.9s at sf0.1 with
-    the cuts). Edges and labels are dup-graph-sized — tiny next to the
-    corpus — so the eager materialization is cheap; this is the
-    standard Spark iterative-graph pattern (GraphX checkpoints the
-    same way).
+    to the corpus (the normal case). The edge list is cut once, so the
+    rounds never re-run the upstream pair detection.
     """
-    # one evaluation of ``pairs`` (r14: the two-select unionByName form
-    # evaluated the whole upstream pair-detection subtree TWICE inside
-    # the checkpoint job — label_propagation's explode symmetrization,
-    # identical row multiset)
-    both = F.explode(F.array(
-        F.struct(F.col("doc_a").alias("s"), F.col("doc_b").alias("d")),
-        F.struct(F.col("doc_b").alias("s"), F.col("doc_a").alias("d"))))
-    edges = (pairs.select(both.alias("e")).select("e.s", "e.d")
-             .localCheckpoint(eager=True))
-    labels = (edges.select(F.col("s").alias("doc_id")).distinct()
-              .withColumn("lbl", F.col("doc_id")))
-    prev_ckpt = None
-    for i in range(iters):
-        # (round 7 note: a union+single-groupBy formulation of this
-        # round was tried and REVERTED — it forces both branches
-        # through the shuffle, while this two-step form lets AQE
-        # broadcast the tiny nbr_min join-back; measured 30% slower
-        # unified at sf0.1)
+    edges = graph.undirected(pairs, "doc_a", "doc_b").localCheckpoint(eager=True)
+    def step(labels: DataFrame) -> DataFrame:
+        # two steps, not a union + single groupBy: the union form
+        # forces both branches through the shuffle, while this one lets
+        # AQE broadcast the tiny nbr_min join-back (the unified form
+        # measured 30% slower at sf0.1)
         nbr_min = (edges.join(labels.select(F.col("doc_id").alias("d_id"),
                                             F.col("lbl").alias("d_lbl")),
-                              F.col("d") == F.col("d_id"))
-                   .groupBy("s").agg(F.min("d_lbl").alias("nmin")))
-        labels = (labels.join(nbr_min, labels["doc_id"] == nbr_min["s"])
-                  .select(F.col("doc_id"),
-                          F.least(F.col("lbl"), F.col("nmin")).alias("lbl")))
-        # cut every second round (and on the last): lineage grows 4x
-        # between cuts over a tiny cached RDD — half the checkpoint
-        # jobs of a per-round cut for the same bounded recompute
-        if i % 2 == 1 or i == iters - 1:
-            labels = labels.localCheckpoint(eager=True)
-            # EXACT early exit (optimization r14): labels only ever
-            # DECREASE (the update takes a min that includes self), so
-            # two checkpoints being equal means l = f(f(l)) with
-            # l >= f(l) >= f(f(l)) pointwise — l is already the
-            # automaton's fixpoint and every remaining round is the
-            # identity. Skipping them returns EXACTLY the
-            # ``iters``-round labels the SQL oracle unrolls (near-dup
-            # clusters are near-cliques of diameter 2-3, so this
-            # normally cuts 6 scheduled rounds to 4 — one bounded
-            # label-sized join+count every OTHER round buys the rest).
-            if prev_ckpt is not None:
-                changed = (labels.alias("n")
-                           .join(prev_ckpt.alias("p"), "doc_id")
-                           .filter(F.col("n.lbl") != F.col("p.lbl"))
-                           .limit(1).count())
-                if changed == 0:
-                    break
-            prev_ckpt = labels
+                              F.col("dst") == F.col("d_id"))
+                   .groupBy("src").agg(F.min("d_lbl").alias("nmin")))
+        return (labels.join(nbr_min, labels["doc_id"] == nbr_min["src"])
+                .select(F.col("doc_id"),
+                        F.least(F.col("lbl"), F.col("nmin")).alias("lbl")))
+
+    nodes = edges.select(F.col("src").alias("doc_id")).distinct()
+    labels, _ = graph.iterate(nodes.withColumn("lbl", F.col("doc_id")),
+                              step, iters)
     return labels.select("doc_id", F.col("lbl").alias("canonical_id"),
                          (F.col("doc_id") == F.col("lbl")).alias("is_canonical"))
 
 
-def label_propagation(pairs: DataFrame, iters: int = 4) -> DataFrame:
+def label_propagation(pairs: DataFrame, iters: int) -> DataFrame:
     """Synchronous label-propagation COMMUNITIES (Raghavan et al.
     2007; GraphFrames' labelPropagation) over an undirected pair
     graph — the mode-label sibling of ``dup_clusters``' min-label
@@ -419,40 +384,33 @@ def label_propagation(pairs: DataFrame, iters: int = 4) -> DataFrame:
     replay the identical deterministic automaton whether or not it
     has converged. Labels must fit 32 bits for the packing (doc_ids
     here do; callers with wider id domains should densify first).
+    The vote is not monotone (a lone pair swaps labels every round);
+    ``functions/graph.iterate``'s period-2 stop is exact for it too.
 
     Scale shape: same as dup_clusters — per round one join of the
     pair-graph edge list with the label table and two bounded
     groupBys ((node, lbl) counts, then the ≤deg-bounded argmax), all
-    keyed on ids, broadcast-eligible for dup-graph-sized inputs; a
-    lineage cut per round stops the upstream pair detection from
-    re-evaluating 2^iters times. The edge list is built from ONE
-    evaluation of ``pairs`` (explode to both directions — two selects
-    would evaluate the LSH subtree twice before the checkpoint).
+    keyed on ids, broadcast-eligible for dup-graph-sized inputs.
 
     Returns ``doc_id, community, community_size`` for every doc with
     at least one pair (isolated docs have no vote and keep trivial
     singleton communities — emit-side callers can union them in).
     """
-    both = F.explode(F.array(
-        F.struct(F.col("doc_a").alias("s"), F.col("doc_b").alias("d")),
-        F.struct(F.col("doc_b").alias("s"), F.col("doc_a").alias("d"))))
-    edges = (pairs.select(both.alias("e")).select("e.s", "e.d")
-             .localCheckpoint(eager=True))
-    labels = (edges.select(F.col("s").alias("id")).distinct()
-              .withColumn("lbl", F.col("id")))
+    edges = graph.undirected(pairs, "doc_a", "doc_b").localCheckpoint(eager=True)
+    nodes = edges.select(F.col("src").alias("id")).distinct()
     big = 1 << 32
-    for i in range(iters):
+
+    def step(labels: DataFrame) -> DataFrame:
         votes = (edges.join(labels.select(F.col("id").alias("d_id"),
                                           F.col("lbl").alias("d_lbl")),
-                            F.col("d") == F.col("d_id"))
-                 .groupBy(F.col("s").alias("id"), F.col("d_lbl").alias("lbl"))
+                            F.col("dst") == F.col("d_id"))
+                 .groupBy(F.col("src").alias("id"), F.col("d_lbl").alias("lbl"))
                  .agg(F.count(F.lit(1)).alias("cnt")))
         pk = F.col("cnt") * big + (F.lit(big - 1) - F.col("lbl"))
-        labels = (votes.groupBy("id").agg(F.max(pk).alias("pk"))
-                  .select("id",
-                          (F.lit(big - 1) - F.col("pk") % big).alias("lbl")))
-        if i % 2 == 1 or i == iters - 1:
-            labels = labels.localCheckpoint(eager=True)
+        return (votes.groupBy("id").agg(F.max(pk).alias("pk"))
+                .select("id", (F.lit(big - 1) - F.col("pk") % big).alias("lbl")))
+
+    labels, _ = graph.iterate(nodes.withColumn("lbl", F.col("id")), step, iters)
     w = Window.partitionBy("lbl")
     return labels.select(F.col("id").alias("doc_id"),
                          F.col("lbl").alias("community"),

@@ -8,13 +8,14 @@ footprints come from shapely hulls, ``image.py:665-708``); this is
 beyond-reference surface in the same family as the focal operators.
 
 Distributed algorithm: min-label propagation with a TREE-MIN (hook)
-step and pointer jumping, looped to a driver-checked fixed point.
+step and pointer jumping, run to a fixed point by
+``functions/graph.iterate``.
 
 - Per round: (1) NEIGHBOR-MIN — each cell takes the min of its own
-  label and its 4-neighbors' (one equi-join + map-side-combinable
-  min-groupBy); (2) TREE-MIN — the min is pushed UP the pointer
-  forest: group the stepped labels by each cell's PREVIOUS label
-  (its tree root) and give every member the root's tree-wide min;
+  label and its 4-neighbors' (one join over the edges plus a self-loop
+  per cell, so the round reads the label table once; the same groupBy
+  keeps the cell's PREVIOUS label, its tree root); (2) TREE-MIN — the
+  min is pushed UP the pointer forest: a window over each root;
   (3) one pointer JUMP for compression. Neighbor-min alone advances
   one hop per round, and even unbounded jumping can't fix its worst
   case (a boustrophedon region whose pointer trees aim AWAY from
@@ -24,14 +25,10 @@ step and pointer jumping, looped to a driver-checked fixed point.
   Beyond") adds for its logarithmic bound: a min reaching ANY member
   of a tree reaches the whole tree next step. Measured on the worst
   16x32 shapes (serpentine, staircase, random masks): <= 7 rounds.
-- Each round is localCheckpoint(eager)-ed: the label table feeds the
-  next round several times, so an uncut lineage re-derives all prior
-  rounds exponentially (the iterative-DataFrame blowup; see
-  functions/dedup.dup_clusters).
-- Convergence is checked with a bounded driver action (does ANY label
-  still change — a limit(1).count() over the tiny label table), so
-  the output is the TRUE converged component labeling regardless of
-  region shape — which is what lets a recursive-CTE oracle verify it.
+- Every step only lowers labels, so ``graph.iterate``'s period test
+  is the fixpoint test and the output is the TRUE converged labeling
+  regardless of region shape — which is what lets a recursive-CTE
+  oracle verify it. Not converging within ``_MAX_ROUNDS`` raises.
 
 At 100 TB the same loop holds: labels/edges are cell-sized tables
 partitioned on the cell id, every join is an equi-join on that id,
@@ -40,97 +37,75 @@ and the round count is log(max region diameter), not data size.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..functions import graph
 
 __all__ = ["label_regions"]
 
+_MAX_ROUNDS = 48  # far above the measured <= 7: tree-min bounds rounds by log
+# The loop is LATENCY-bound (sub-second stages over a cell-sized table):
+# default-width shuffles pay 32 tasks per stage for rows that fit in one
+# (A/B measured 5.3-14.8s -> 3.8-6.5s total with this pin).
+_PARTITIONS = 8
 
-def label_regions(cells: DataFrame, height: int, width: int,
-                  max_rounds: int = 48,
-                  n_partitions: int | None = 8) -> DataFrame:
+
+def label_regions(cells: DataFrame, height: int, width: int) -> DataFrame:
     """4-connectivity CCL over ``cells`` (tile_id, y, x).
 
     Returns one row per input cell: ``tile_id, y, x, region_id,
     region_size`` where region_id is the minimum packed cell id
     ``y * width + x`` within the cell's connected region (tile-local —
     regions never cross tiles) and region_size its cell count.
-
-    ``n_partitions`` pins the loop's parallelism: the iteration is
-    LATENCY-bound (each round is a handful of sub-second stages over
-    the cell-sized label table), so default-width shuffles pay 32
-    tasks of overhead per stage for rows that fit in one. The default
-    8 suits the capped synthetic plane; pass None at real raster
-    scale to inherit the session's shuffle width (A/B measured in one
-    session, 3 interleaved reps: 5.3-14.8s -> 3.8-6.5s total with the
-    pin plus the every-2nd-round convergence check below).
     """
     # Globally-unique packed id so every join is a single-key equi-join.
     g = (F.col("tile_id") * (height * width)
          + F.col("y") * width + F.col("x")).alias("g")
-    nodes = cells.select("tile_id", "y", "x", g)
-    if n_partitions is not None:
-        nodes = nodes.repartition(n_partitions, "g")
-    nodes = nodes.localCheckpoint(eager=True)
+    nodes = (cells.select("tile_id", "y", "x", g)
+             .repartition(_PARTITIONS, "g").localCheckpoint(eager=True))
 
     # 4-connectivity edges in id arithmetic: right neighbor is g+1
     # (guard x < width-1 so row ends don't wrap), down is g+width
     # (guard y < height-1 so tile bottoms don't wrap). Existence of
     # the neighbor is enforced by the equi self-join.
-    ids = nodes.select(F.col("g").alias("src"), "y", "x")
-    dst = nodes.select(F.col("g").alias("dst"))
+    ids = nodes.select(F.col("g").alias("a"), "y", "x")
+    nbr = nodes.select(F.col("g").alias("b"))
     right = (ids.filter(F.col("x") < width - 1)
-             .join(dst, F.col("src") + 1 == F.col("dst")))
+             .join(nbr, F.col("a") + 1 == F.col("b")))
     down = (ids.filter(F.col("y") < height - 1)
-            .join(dst, F.col("src") + width == F.col("dst")))
-    half = right.unionByName(down).select("src", "dst")
-    edges = half.unionByName(half.select(F.col("dst").alias("src"),
-                                         F.col("src").alias("dst")))
-    if n_partitions is not None:
-        edges = edges.repartition(n_partitions, "dst")
-    edges = edges.localCheckpoint(eager=True)
+            .join(nbr, F.col("a") + width == F.col("b")))
+    # plus a self-loop per cell, so one join + groupBy reads both the
+    # cell's own label and its neighbors'
+    edges = (graph.undirected(right.unionByName(down), "a", "b")
+             .unionByName(nodes.select(F.col("g").alias("src"),
+                                       F.col("g").alias("dst")))
+             .repartition(_PARTITIONS, "dst").localCheckpoint(eager=True))
 
-    labels = nodes.select("g", F.col("g").alias("lbl"))
-    for rnd in range(max_rounds):
-        # (1) neighbor-min
-        nbr_min = (edges.join(labels.select(F.col("g").alias("d_g"),
-                                            F.col("lbl").alias("d_lbl")),
-                              F.col("dst") == F.col("d_g"))
-                   .groupBy("src").agg(F.min("d_lbl").alias("nmin")))
-        stepped = (labels.join(nbr_min, labels["g"] == nbr_min["src"], "left")
-                   .select("g", F.col("lbl").alias("root"),
-                           F.least(F.col("lbl"),
-                                   F.coalesce("nmin", "lbl")).alias("s")))
-        # (2) tree-min: every member of a pointer tree adopts the
-        # tree-wide min of the stepped labels (hook the root)
-        rootmin = stepped.groupBy("root").agg(F.min("s").alias("rm"))
-        hooked = (stepped.join(rootmin, "root")
-                  .select("g", F.col("rm").alias("lbl")))
-        # (3) one pointer jump for compression (labels are node ids,
-        # so the lookup is a self-equi-join on the packed id)
-        jumped = (hooked.join(
-                      hooked.select(F.col("g").alias("p_g"),
-                                    F.col("lbl").alias("p_lbl")),
-                      F.col("lbl") == F.col("p_g"))
-                  .select("g", F.col("p_lbl").alias("lbl"))
-                  .localCheckpoint(eager=True))
-        prev = labels
-        labels = jumped
-        # convergence probe every 2nd round: the count is a driver
-        # action, and with tree-min the loop converges in ~5-7 rounds,
-        # so probing every round spends more on actions than the <=1
-        # extra round the stride can cost
-        if rnd % 2 == 1 or rnd == max_rounds - 1:
-            changed = (jumped.join(prev.select(F.col("g").alias("o_g"),
-                                               F.col("lbl").alias("o_lbl")),
-                                   F.col("g") == F.col("o_g"))
-                       .filter(F.col("lbl") != F.col("o_lbl"))
-                       .limit(1).count())
-            if changed == 0:
-                break
-    else:  # pragma: no cover - tree-min bounds rounds logarithmically
+    def step(labels: DataFrame) -> DataFrame:
+        # (1) neighbor-min, with the cell's own label as its tree root
+        nbr = (edges.join(labels.select(F.col("g").alias("d_g"),
+                                        F.col("lbl").alias("d_lbl")),
+                          F.col("dst") == F.col("d_g"))
+               .groupBy("src").agg(
+                   F.min("d_lbl").alias("s"),
+                   F.max(F.when(F.col("dst") == F.col("src"), F.col("d_lbl")))
+                   .alias("root")))
+        # (2) tree-min over each pointer tree (hook the root)
+        hooked = nbr.select(F.col("src").alias("g"),
+                            F.min("s").over(Window.partitionBy("root"))
+                            .alias("lbl"))
+        # (3) one pointer jump: a self-equi-join on the packed id
+        return (hooked.join(hooked.select(F.col("g").alias("p_g"),
+                                          F.col("lbl").alias("p_lbl")),
+                            F.col("lbl") == F.col("p_g"))
+                .select("g", F.col("p_lbl").alias("lbl")))
+
+    labels, converged = graph.iterate(
+        nodes.select("g", F.col("g").alias("lbl")), step, _MAX_ROUNDS)
+    if not converged:  # pragma: no cover - tree-min bounds rounds logarithmically
         raise RuntimeError("label_regions did not converge "
-                           f"within {max_rounds} rounds")
+                           f"within {_MAX_ROUNDS} rounds")
 
     sizes = labels.groupBy("lbl").agg(F.count(F.lit(1)).cast("long")
                                       .alias("region_size"))

@@ -534,8 +534,9 @@ FROM l{_CLUSTER_ITERS}
 def d_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-CLUSTER canonicalization: near-dup pairs (single-band
     LSH + Jaccard >= 0.5) -> connected components by min-label
-    propagation -> one canonical doc per cluster. The full-value
-    oracle replays the same fixed label rounds in SQL."""
+    propagation -> one canonical doc per cluster; the round loop is
+    ``functions/graph.iterate``. The full-value oracle replays the
+    same fixed label rounds in SQL."""
     docs = _docs(spark, sf_dir)
     sh = dedup.shingles(docs)
     pairs = dedup.lsh_near_dup_pairs(sh, bands=[["h0"]],

@@ -463,9 +463,11 @@ def build_cube(spark: SparkSession, obs: DataFrame, out_dir: str,
         if write_identity:
             from ..streaming.incremental import upsert_partitioned
             upsert_partitioned(merged, os.path.join(out_dir, "identity"))
-            merged = spark.read.parquet(os.path.join(out_dir, "identity")).select(
+            # the identity table holds every published unit too: prune
+            # it like the observations, or a re-run republishes them
+            merged = published.prune(spark.read.parquet(os.path.join(out_dir, "identity")).select(
                 F.col("tile_id").cast("long").alias("tile_id"), "pixel_id",
-                "band", "date", "period", "doy", "value", "source_idx")
+                "band", "date", "period", "doy", "value", "source_idx"))
     # persist the merge boundary for the duration of THIS job's actions
     # only, released in the finally — the persist→finally-unpersist
     # discipline of streaming/incremental.py, so a full registry run

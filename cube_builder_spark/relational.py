@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .functions import graph
 from .functions.numeric import round_half_up_long
 from .tables import broadcast_if_small as _bc, load_tables
 from .tables import local_df
@@ -2016,6 +2017,8 @@ def x_bfs_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps the lineage LINEAR in depth (lazy chaining would re-derive
     every prior frontier per step, the classic iterative-DataFrame
     blowup; GraphFrames' Pregel checkpoints for exactly this reason).
+    Edges: ``functions/graph.undirected``; the loop is not
+    ``graph.iterate``'s, as a superstep joins only the live frontier.
     At 100 TB the same loop holds: frontier and visited are vertex-
     sized (bounded by |V|, not |E| or fact rows), the per-step join
     shuffles only the live frontier, and hub skew is capped by the
@@ -2026,13 +2029,7 @@ def x_bfs_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     the O(n^2)-per-order semantics it verifies against)."""
     part = load_tables(spark, sf_dir, ["part"])["part"]
     e = _copurchase_edges(spark, sf_dir).select("pa", "pb")
-    # explode symmetrization: ONE evaluation of the (lazy) co-purchase
-    # aggregate instead of two union branches feeding the checkpoint
-    edges = (e.select(F.explode(F.array(
-                 F.struct(F.col("pa").alias("src"), F.col("pb").alias("dst")),
-                 F.struct(F.col("pb").alias("src"), F.col("pa").alias("dst"))))
-             .alias("x")).select("x.src", "x.dst")
-             .localCheckpoint(eager=True))
+    edges = graph.undirected(e, "pa", "pb").localCheckpoint(eager=True)
     frontier = (part.filter(F.col("p_size") == 50)
                 .select(F.col("p_partkey").alias("v"))
                 .localCheckpoint(eager=True))
@@ -2491,8 +2488,8 @@ def x_sssp_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     or not it has converged), so the result is by definition the
     cheapest path using at most 4 edges. Each round is one keyed
     frontier-edge join + a map-side-combinable min — the same
-    one-exchange-per-superstep shape as x_bfs_reach, with an eager
-    localCheckpoint per round keeping lineage linear in rounds. The
+    one-exchange-per-superstep shape as x_bfs_reach; the round loop
+    and its lineage cuts are ``functions/graph.iterate``'s. The
     oracle unrolls the rounds as MATERIALIZED stages (d_{r+1}
     references d_r twice — inlining would re-derive the edge set
     exponentially)."""
@@ -2500,24 +2497,19 @@ def x_sssp_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _copurchase_edges(spark, sf_dir).select(
         "pa", "pb",
         (F.lit(10) - F.least(F.col("c"), F.lit(5))).cast("long").alias("w"))
-    # explode symmetrization (one co-purchase evaluation, not two)
-    edges = (e.select(F.explode(F.array(
-                 F.struct(F.col("pa").alias("src"), F.col("pb").alias("dst"),
-                          F.col("w")),
-                 F.struct(F.col("pb").alias("src"), F.col("pa").alias("dst"),
-                          F.col("w"))))
-             .alias("x")).select("x.src", "x.dst", "x.w")
-             .localCheckpoint(eager=True))
-    dist = (part.filter(F.col("p_size") == 50)
-            .select(F.col("p_partkey").alias("v"),
-                    F.lit(0).cast("long").alias("d")))
-    for _ in range(_SSSP_ROUNDS):
+    edges = graph.undirected(e, "pa", "pb", "w").localCheckpoint(eager=True)
+    seeds = (part.filter(F.col("p_size") == 50)
+             .select(F.col("p_partkey").alias("v"),
+                     F.lit(0).cast("long").alias("d")))
+
+    def relax(dist: DataFrame) -> DataFrame:
         relaxed = (dist.join(edges, dist["v"] == edges["src"])
                    .select(F.col("dst").alias("v"),
                            (F.col("d") + F.col("w")).alias("d")))
-        dist = (dist.unionByName(relaxed)
-                .groupBy("v").agg(F.min("d").alias("d"))
-                .localCheckpoint(eager=True))
+        return (dist.unionByName(relaxed)
+                .groupBy("v").agg(F.min("d").alias("d")))
+
+    dist, _ = graph.iterate(seeds, relax, _SSSP_ROUNDS)
     return dist.select(F.col("v").alias("p_partkey"),
                        F.col("d").cast("long").alias("dist"))
 
@@ -2827,17 +2819,13 @@ def x_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
           .select(F.col("c_nationkey").alias("src"),
                   F.col("s_nationkey").alias("dst"))
           .distinct())
-    # r14: explode symmetrization + eager cut. The union-of-two-selects
-    # form re-ran the 4-table e0 join per branch, and edges feeds THREE
-    # subtrees (deg, and jk's base + two deg sides) — the uncut plan
-    # scanned lineitem/orders/customer/supplier 24x per action (plan
-    # sweep). edges is bounded at |nations|^2 rows — metadata scale —
+    # symmetrized from one evaluation of e0, then cut: edges feeds
+    # THREE subtrees (deg, and jk's base + two deg sides), and the
+    # uncut plan scanned lineitem/orders/customer/supplier 24x per
+    # action. edges is bounded at |nations|^2 rows — metadata scale —
     # so the checkpoint is the x_triangle/x_kcore discipline: one
     # 4-table join pass total.
-    both = F.explode(F.array(
-        F.struct(F.col("src"), F.col("dst")),
-        F.struct(F.col("dst").alias("src"), F.col("src").alias("dst"))))
-    edges = (e0.select(both.alias("e")).select("e.src", "e.dst")
+    edges = (graph.undirected(e0, "src", "dst")
              .distinct().localCheckpoint(eager=True))
     deg = (edges.groupBy(F.col("src").alias("node"))
            .agg(F.count(F.lit(1)).cast("long").alias("deg")))

@@ -345,3 +345,29 @@ def test_rebuild_reads_published_items_once(spark, sf_dir, tmp_path, in_job_grou
     assert again["reused_items"] == first["new_items"] > 0
     scans_items = f"Location: InMemoryFileIndex [file:{os.path.join(out, 'items')}]"
     assert len([p for p in plans if scans_items in p]) == 1
+
+
+def _files_outside_job_log(root):
+    return {os.path.relpath(os.path.join(d, f), root)
+            for d, _, names in os.walk(root) for f in names
+            if os.path.relpath(d, root).split(os.sep)[0] != "job_log"}
+
+
+def test_noop_rerun_of_identity_cube_republishes_nothing(spark, sf_dir, tmp_path):
+    """The identity table a build re-reads as its merge plane holds
+    every published unit: a no-op re-run must prune it like the
+    observations, for an IDT cube and for ``write_identity``, and
+    write no new file (the job log gains its row)."""
+    obs = synth_observations(spark, sf_dir)
+    tiles = [r.tile_id for r in obs.select("tile_id").distinct()
+             .orderBy("tile_id").limit(2).collect()]
+    obs = obs.filter(F.col("tile_id").isin(*tiles))
+    for name, cfg in [("idt", CubeJobConfig(composite="IDT", index_bands={})),
+                      ("ident", CubeJobConfig(write_identity=True,
+                                              index_bands={}))]:
+        out = str(tmp_path / name)
+        assert build_cube(spark, obs, out, cfg)["new_items"] == 4
+        files = _files_outside_job_log(out)
+        again = build_cube(spark, obs, out, cfg)
+        assert (again["new_items"], again["reused_items"]) == (0, 4), name
+        assert _files_outside_job_log(out) == files, name

@@ -9,6 +9,7 @@ import random
 from cube_builder_spark.operators.focal import focal_box_stats, focal_majority
 from cube_builder_spark.operators.regions import label_regions
 from cube_builder_spark.relational import points_in_polygons
+from cube_builder_spark.tables import local_df
 
 H, W = 10, 12
 
@@ -32,7 +33,7 @@ def test_focal_box_stats_random_vs_bruteforce(spark):
     have = {(r.tile_id, r.y, r.x): (r.n_nbrs, r.sum_nbrs, r.min_nbrs,
                                     r.max_nbrs, r.focal_mean)
             for r in focal_box_stats(
-                spark.createDataFrame(cells, ["tile_id", "y", "x", "v"]),
+                local_df(spark, cells, "tile_id long, y long, x long, v long"),
                 radius=1, height=H, width=W).collect()}
     vals = {(t, y, x): v for (t, y, x, v) in cells}
     assert set(have) == set(vals)
@@ -49,7 +50,7 @@ def test_focal_majority_random_vs_bruteforce(spark):
     cells = [(t, y, x, rnd.randint(0, 3)) for (t, y, x) in _random_masks(5, 12)]
     have = {(r.tile_id, r.y, r.x): (r.maj_class, r.maj_count, r.n_nbrs)
             for r in focal_majority(
-                spark.createDataFrame(cells, ["tile_id", "y", "x", "c"]),
+                local_df(spark, cells, "tile_id long, y long, x long, c long"),
                 n_classes=4, radius=1, height=H, width=W).collect()}
     vals = {(t, y, x): c for (t, y, x, c) in cells}
     assert set(have) == set(vals)
@@ -93,7 +94,7 @@ def test_label_regions_random_vs_unionfind(spark):
     coords = _random_masks(101, 16)
     have = {(r.tile_id, r.y, r.x): (r.region_id, r.region_size)
             for r in label_regions(
-                spark.createDataFrame(coords, ["tile_id", "y", "x"]),
+                local_df(spark, coords, "tile_id long, y long, x long"),
                 height=H, width=W).collect()}
     assert have == _py_components(coords)
 
@@ -104,7 +105,7 @@ def test_label_regions_sparse_and_dense_extremes(spark):
     coords = sparse + dense
     have = {(r.tile_id, r.y, r.x): (r.region_id, r.region_size)
             for r in label_regions(
-                spark.createDataFrame(coords, ["tile_id", "y", "x"]),
+                local_df(spark, coords, "tile_id long, y long, x long"),
                 height=H, width=W).collect()}
     assert have == _py_components(coords)
 
@@ -132,8 +133,8 @@ def test_points_in_polygons_random_vs_python(spark):
         edge_rows += [(k, *e) for e in polys[k]]
     pts = [(i, rnd.randint(-5, 65), rnd.randint(-5, 65)) for i in range(300)]
     have = {(r.pid, r.k) for r in points_in_polygons(
-        spark.createDataFrame(pts, ["pid", "px", "py"]),
-        spark.createDataFrame(edge_rows, "k int, x1 int, y1 int, x2 int, y2 int"),
+        local_df(spark, pts, "pid long, px long, py long"),
+        local_df(spark, edge_rows, "k int, x1 int, y1 int, x2 int, y2 int"),
         id_col="pid").collect()}
     want = {(pid, k) for (pid, px, py) in pts for k in polys
             if _py_pip(px, py, polys[k])}
@@ -147,7 +148,7 @@ def test_min_distance_transform_random_vs_bruteforce(spark):
              for (t, y, x) in _random_masks(61, 10)]
     have = {(r.tile_id, r.y, r.x): r.dist2
             for r in min_distance_transform(
-                spark.createDataFrame(cells, ["tile_id", "y", "x", "src"]),
+                local_df(spark, cells, "tile_id long, y long, x long, src boolean"),
                 radius=3, height=H, width=W).collect()}
     vals = {(t, y, x): s for (t, y, x, s) in cells}
     assert set(have) == set(vals)
@@ -195,7 +196,7 @@ def test_bilinear_upsample_kernel_random_vs_python(spark):
     coarse = [(t, y, x, rnd.randint(-100, 100))
               for (t, y, x) in _random_masks(59, 8, density=0.6)]
     vals = {(t, cy, cx): cv for (t, cy, cx, cv) in coarse}
-    cdf = spark.createDataFrame(coarse, ["tile_id", "cy", "cx", "cv"])
+    cdf = local_df(spark, coarse, "tile_id long, cy long, cx long, cv long")
     offs = F.array(*[F.struct(F.lit(o).alias("o"), F.lit(w).alias("w"))
                      for o, w in [(-1, 1), (0, 3), (1, 3), (2, 1)]])
     sc = (cdf.select("tile_id", "cy", "cx", "cv",

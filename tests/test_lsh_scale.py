@@ -18,10 +18,11 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from cube_builder_spark.functions import dedup
+from cube_builder_spark.tables import local_df
 
 
 def _docs(spark, rows):
-    return spark.createDataFrame(rows, "doc_id long, text string")
+    return local_df(spark, rows, "doc_id long, text string")
 
 
 BANDS = [["h0", "h1"], ["h2", "h3"]]
@@ -122,8 +123,7 @@ def test_dup_clusters_chain(spark):
     """A chain a-b, b-c plus a separate pair must form two clusters
     with min-id canonicals — the case where pairwise drop-the-higher
     over-deletes (b would kill c even though a is the keeper)."""
-    pairs = spark.createDataFrame(
-        [(1, 5), (5, 9), (20, 21)], "doc_a long, doc_b long")
+    pairs = local_df(spark, [(1, 5), (5, 9), (20, 21)], "doc_a long, doc_b long")
     out = {r.doc_id: (r.canonical_id, r.is_canonical)
            for r in dedup.dup_clusters(pairs, iters=4).collect()}
     assert out == {1: (1, True), 5: (1, False), 9: (1, False),
@@ -156,10 +156,29 @@ def test_dup_clusters_early_exit_exact(spark):
     extra = [(1, 2), (30, 31), (31, 32)]
     chain = [(100 + i, 101 + i) for i in range(13)]
     for edge_pairs, iters in [(clique + extra, 6), (chain, 4)]:
-        pairs = spark.createDataFrame(edge_pairs, "doc_a long, doc_b long")
+        pairs = local_df(spark, edge_pairs, "doc_a long, doc_b long")
         got = {r.doc_id: r.canonical_id
                for r in dedup.dup_clusters(pairs, iters=iters).collect()}
         assert got == _ref_min_label_unroll(edge_pairs, iters)
+
+
+def test_dup_clusters_early_stop_saves_jobs(spark, in_job_group):
+    """At iters=6 the clique input stops on its round-4 compare and
+    starts fewer jobs than the 14-node chain, which runs all 6 rounds;
+    neither runs a compare after its last round (each compare is one
+    execution whose plan tags the compared states with ``_side``)."""
+    clique = [(a, b) for a in range(10, 16) for b in range(a + 1, 16)]
+    chain = [(100 + i, 101 + i) for i in range(13)]
+    jobs, compares = {}, {}
+    for name, edge_pairs in [("clique", clique), ("chain", chain)]:
+        pairs = local_df(spark, edge_pairs, "doc_a long, doc_b long")
+        _, ids, plans = in_job_group(
+            f"dup_clusters_{name}",
+            lambda: dedup.dup_clusters(pairs, iters=6))
+        jobs[name] = len(ids)
+        compares[name] = sum("_side" in p for p in plans)
+    assert jobs["clique"] < jobs["chain"], jobs
+    assert compares == {"clique": 1, "chain": 1}, compares
 
 
 # ---------------------------------------------------------------------------
@@ -171,7 +190,7 @@ from cube_builder_spark.functions import similarity
 
 
 def _vecs(spark, rows):
-    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    return local_df(spark, rows, "vec_id long, embedding array<float>")
 
 
 def test_cosine_cap_applied_before_collect(spark):
@@ -260,8 +279,8 @@ def test_capped_plane_pairs_exact_cap_boundary(spark):
 
     def plane(n):
         rows = [(j, "b", ["s1", "s2", "s3"]) for j in range(n)]
-        df = spark.createDataFrame(
-            rows, "doc_id long, bucket string, shingles array<string>")
+        df = local_df(spark, rows,
+                      "doc_id long, bucket string, shingles array<string>")
         return df.select("bucket",
                          F.struct("doc_id", "shingles").alias("m"))
 
@@ -282,8 +301,8 @@ def test_cosine_pairs_exact_cap_boundary(spark):
     cap = 5
 
     def emb(n):
-        return spark.createDataFrame(
-            [(j, [0.5, -0.25, 0.125, 1.0]) for j in range(n)],
+        return local_df(
+            spark, [(j, [0.5, -0.25, 0.125, 1.0]) for j in range(n)],
             "vec_id long, embedding array<float>")
 
     at_cap = cosine_dup_pairs(emb(cap), num_planes=4, threshold=0.9,
@@ -336,7 +355,7 @@ def test_allpairs_jaccard_lossless_vs_brute_force(spark):
         want = _brute_jaccard_pairs(docs, k=2, tau=tau)
         got = {(r.doc_a, r.doc_b): r.jaccard
                for r in dedup.allpairs_jaccard(
-                   spark.createDataFrame(docs, "doc_id long, text string"),
+                   local_df(spark, docs, "doc_id long, text string"),
                    k=2, threshold=tau).collect()}
         assert got.keys() == want.keys(), (
             f"tau={tau}: missing={want.keys() - got.keys()} "
@@ -355,7 +374,7 @@ def test_blocked_entity_pairs_blocks_and_cap(spark):
         (4, "alpha widget x", "b2"),     # other block: never compared
         (5, "beta thing", "b1"),
     ]
-    df = spark.createDataFrame(rows, "id long, nm string, blk string")
+    df = local_df(spark, rows, "id long, nm string, blk string")
     df = df.withColumn("w1", F.split(F.col("nm"), " ").getItem(0))
     got = sorted((r.id_a, r.id_b, r.edit_dist) for r in
                  dedup.blocked_entity_pairs(
@@ -374,7 +393,7 @@ def test_shingle_kernels_identical(spark):
     from cube_builder_spark.functions import dedup
     rows = [(1, "a b c d e"), (2, "a"), (3, ""), (4, "x y"),
             (5, "a a a a"), (6, "w1 w2 w1 w2 w1"), (7, "a b c")]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
+    docs = local_df(spark, rows, "doc_id long, text string")
     for k in (2, 3, 5):
         hof = {r.doc_id: r.shingles for r in
                dedup.shingles(docs, k=k, kernel="hof").collect()}
@@ -407,12 +426,15 @@ def _py_lpa(pairs, iters):
 def test_label_propagation_bridge_vs_python(spark):
     """Two triangles joined by a bridge: CC sees ONE component; the
     LPA majority vote must match the python automaton exactly."""
-    pairs = [(1, 2), (2, 3), (1, 3), (10, 11), (11, 12), (10, 12), (3, 10)]
-    out = {r.doc_id: (r.community, r.community_size)
-           for r in dedup.label_propagation(
-               spark.createDataFrame(pairs, "doc_a long, doc_b long"),
-               iters=4).collect()}
-    assert out == _py_lpa(pairs, 4)
+    bridge = [(1, 2), (2, 3), (1, 3), (10, 11), (11, 12), (10, 12), (3, 10)]
+    # a lone pair swaps its two labels every round: the early stop
+    # sees period 2 and must land on the right parity
+    for pairs, iters in [(bridge, 4), ([(1, 2)], 5), ([(1, 2)], 6)]:
+        out = {r.doc_id: (r.community, r.community_size)
+               for r in dedup.label_propagation(
+                   local_df(spark, pairs, "doc_a long, doc_b long"),
+                   iters=iters).collect()}
+        assert out == _py_lpa(pairs, iters), (pairs, iters)
 
 
 def test_label_propagation_random_vs_python(spark):
@@ -422,9 +444,9 @@ def test_label_propagation_random_vs_python(spark):
     pairs = sorted({(min(a, b), max(a, b))
                     for a, b in ((rnd.choice(nodes), rnd.choice(nodes))
                                  for _ in range(120)) if a != b})
-    for iters in (1, 3, 4):
+    for iters in (1, 3, 4, 5, 7):
         out = {r.doc_id: (r.community, r.community_size)
                for r in dedup.label_propagation(
-                   spark.createDataFrame(pairs, "doc_a long, doc_b long"),
+                   local_df(spark, pairs, "doc_a long, doc_b long"),
                    iters=iters).collect()}
         assert out == _py_lpa(pairs, iters), iters

@@ -7,13 +7,13 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from cube_builder_spark.operators.regions import label_regions
+from cube_builder_spark.tables import local_df
 
 H, W = 16, 32
 
 
 def _run(spark, coords, height=H, width=W):
-    cells = spark.createDataFrame(
-        [(t, y, x) for (t, y, x) in coords], ["tile_id", "y", "x"])
+    cells = local_df(spark, coords, "tile_id long, y long, x long")
     rows = label_regions(cells, height=height, width=width).collect()
     return {(r.tile_id, r.y, r.x): (r.region_id, r.region_size) for r in rows}
 
@@ -80,12 +80,13 @@ def test_points_in_polygons_hand_geometry(spark):
     # polygon 1: concave chevron (0,0)-(10,0)-(10,10)-(5,4)-(0,10)
     ch = [(1, 0, 0, 10, 0), (1, 10, 0, 10, 10), (1, 10, 10, 5, 4),
           (1, 5, 4, 0, 10), (1, 0, 10, 0, 0)]
-    edges = spark.createDataFrame(sq + ch, "k int, x1 int, y1 int, x2 int, y2 int")
-    pts = spark.createDataFrame(
+    edges = local_df(spark, sq + ch, "k int, x1 int, y1 int, x2 int, y2 int")
+    pts = local_df(
+        spark,
         [(1, 5, 5), (2, 15, 5), (3, 5, 15), (4, -1, 5),
          (5, 5, 2),   # inside both (below the chevron notch)
          (6, 5, 8)],  # inside square, in the chevron NOTCH (outside)
-        ["pid", "px", "py"])
+        "pid long, px long, py long")
     inside = {(r.pid, r.k) for r in
               points_in_polygons(pts, edges, id_col="pid").collect()}
     assert (1, 0) in inside and (5, 0) in inside and (6, 0) in inside

@@ -2,11 +2,11 @@
 
 Usage:
   python tools/perf_probe.py plan  DIR TAG q1 q2 ... # capture explain("formatted") to DIR/<q>_<TAG>.txt
-  python tools/perf_probe.py time  N   q1 q2 ...   # min-of-N wall (collect, bench methodology)
+  python tools/perf_probe.py time  N   q1 q2 ...   # min-of-N wall + its job count (collect, bench methodology)
   python tools/perf_probe.py noop  N   q1 q2 ...   # min-of-N wall (noop sink, isolates compute from collect)
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
-Each job is labelled with the query name (guide §1.5).
+Each run is one job group named after the query; its job count is printed.
 """
 
 from __future__ import annotations
@@ -49,20 +49,26 @@ def main() -> None:
         yield from it
     spark.range(256).repartition(32).mapInPandas(_identity, "id long").count()
 
+    sc = spark.sparkContext
     for n in names:
-        runs = []
+        runs, jobs, seen = [], [], set()
         for _ in range(n_runs):
-            fn = qs[n]
-            spark.sparkContext.setJobDescription(n)
+            sc.setJobGroup(n, n)
             t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
+            df = qs[n](spark, sf_dir)
             if mode == "noop":
                 df.write.format("noop").mode("overwrite").save()
             else:
                 df.collect()
             runs.append(round(time.perf_counter() - t0, 4))
-            spark.sparkContext.setJobDescription(None)
-        print(f"{n}: min={min(runs):.3f} runs={runs}")
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            # a set difference: spark.ui.retainedJobs evicts old jobs
+            ids = set(sc.statusTracker().getJobIdsForGroup(n))
+            jobs.append(len(ids - seen))
+            seen |= ids
+        fastest = runs.index(min(runs))
+        print(f"{n}: min={min(runs):.3f} jobs={jobs[fastest]} runs={runs}")
 
 
 if __name__ == "__main__":
