@@ -459,7 +459,9 @@ def build_cube(spark: SparkSession, obs: DataFrame, out_dir: str,
         merged = published.prune(read_reused_identity(spark, cfg, required))
     else:
         tagged = published.prune(assign_periods(obs, periods))
-        merged = merge_stage(tagged, cfg, share=not write_identity)
+        # persisted below (or written as the identity table): no
+        # branch-sharing exchange
+        merged = merge_stage(tagged, cfg, share=False)
         if write_identity:
             from ..streaming.incremental import upsert_partitioned
             upsert_partitioned(merged, os.path.join(out_dir, "identity"))

@@ -115,12 +115,13 @@ def get_spark(app_name: str = "cube-builder-spark", cpus: int | None = None,
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
-    # Pre-warmed worker daemon (r15, guide §4.5): workers fork from
-    # spark_daemon.py with pandas/pyarrow already imported (COW), so a
-    # worker-pool cull mid-session costs milliseconds instead of a
-    # ~2.3 s/worker import storm. The daemon is spawned by the JVM
-    # with the inherited PYTHONPATH, so the repo root is put on it
-    # BEFORE the JVM starts.
+    # Python workers fork from spark_daemon.py, which does two jobs:
+    # its zipimporters re-read Spark's zip archives only when an
+    # archive changed (stock CPython <= 3.12 re-reads them all before
+    # every task: 144-262 ms per task on a 4-core VM), and it imports
+    # pandas/pyarrow once for all workers (~2.3 s per fresh worker
+    # otherwise). The JVM spawns the daemon with the inherited
+    # PYTHONPATH, so the repo root is put on it BEFORE the JVM starts.
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     pp = os.environ.get("PYTHONPATH", "")
     if repo_root not in pp.split(os.pathsep):
@@ -151,6 +152,16 @@ def get_spark(app_name: str = "cube-builder-spark", cpus: int | None = None,
         .config("spark.ui.retainedStages", "200")
         .config("spark.ui.retainedTasks", "5000")
         .config("spark.sql.ui.retainedExecutions", "50")
+        # Generated-class cache (static). At Spark's default of 100
+        # entries every warm op recompiles: 44-58 classes per perfbench
+        # build and 88-99 per pass of its 13 analytics queries, against
+        # 0 with a larger cache. Counted with an unbounded cache, a
+        # bench.py session compiles 2,495 distinct classes and a Tier-1
+        # session 7,377; at 2000 entries the Tier-1 session compiled
+        # 9,543 (2,166 recompiles), so the cache holds 8192. Metaspace
+        # after the bench session: 224 MB at 100 entries, 210 MB
+        # unbounded.
+        .config("spark.sql.codegen.cache.maxEntries", "8192")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         # NOTE: spark.sql.adaptive.autoBroadcastJoinThreshold is left at

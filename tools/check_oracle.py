@@ -25,6 +25,8 @@ def driver_like_spark():
              .config("spark.driver.memory",
                      os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
              .config("spark.ui.enabled", "false")
+             # display only: no \r[Stage ...] bars on the PASS lines
+             .config("spark.ui.showConsoleProgress", "false")
              .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
     return spark

@@ -6,7 +6,9 @@ Usage:
   python tools/perf_probe.py noop  N   q1 q2 ...   # min-of-N wall (noop sink, isolates compute from collect)
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
-Each run is one job group named after the query; its job count is printed.
+Each run is one job group named after the query; the fastest run's job
+count and its number of generated classes compiled (the CodegenMetrics
+count delta: 0 when every class came from the codegen cache) are printed.
 """
 
 from __future__ import annotations
@@ -50,10 +52,13 @@ def main() -> None:
     spark.range(256).repartition(32).mapInPandas(_identity, "id long").count()
 
     sc = spark.sparkContext
+    compiled = sc._jvm.org.apache.spark.metrics.source \
+        .CodegenMetrics.METRIC_COMPILATION_TIME()
     for n in names:
-        runs, jobs, seen = [], [], set()
+        runs, jobs, compiles, seen = [], [], [], set()
         for _ in range(n_runs):
             sc.setJobGroup(n, n)
+            c0 = compiled.getCount()
             t0 = time.perf_counter()
             df = qs[n](spark, sf_dir)
             if mode == "noop":
@@ -61,6 +66,7 @@ def main() -> None:
             else:
                 df.collect()
             runs.append(round(time.perf_counter() - t0, 4))
+            compiles.append(compiled.getCount() - c0)
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc._jsc.sc().listenerBus().waitUntilEmpty()
             # a set difference: spark.ui.retainedJobs evicts old jobs
@@ -68,7 +74,8 @@ def main() -> None:
             jobs.append(len(ids - seen))
             seen |= ids
         fastest = runs.index(min(runs))
-        print(f"{n}: min={min(runs):.3f} jobs={jobs[fastest]} runs={runs}")
+        print(f"{n}: min={min(runs):.3f} jobs={jobs[fastest]} "
+              f"compiles={compiles[fastest]} runs={runs}")
 
 
 if __name__ == "__main__":
