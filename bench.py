@@ -3,347 +3,34 @@
 Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
 /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"queries": {name: sec}, "sf": ...}. Each query runs three times, each
+run one ``metrics.record``, and reports the min.
+
+Drift rule: the baseline is the newest earlier BENCH_DETAIL at the same sf;
+drift is the true median now/prev ratio of the six ANCHORS, clamped at >= 1.
+A query slower than prev * drift * 1.25 is flagged with its runs (rising,
+spread) and its jobs and compiles next to the baseline's, so a flag shows
+whether the job count or the compile count moved.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import re
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
 
+from cube_builder_spark.metrics import record, warm_python_workers
 from cube_builder_spark.queries import all_queries
 from cube_builder_spark.session import get_spark
 
 # Headline set: one per operator family — relational joins/aggs, blend
 # family, mosaic, dedup/similarity/text, sinks, streaming-analogue and
 # composed pipelines at scale. Grows with coverage.
-# Investigated REGRESSIONS entries: once a flagged query has had a
-# same-session investigation, its verdict rides along in the movers
-# record (annotation, never suppression — the entry still prints).
-# r10 investigation of the five r9 flags (x_snapshot_cdc, c41, c42,
-# c43, e_rfm): the r9 "prev" (BENCH_DETAIL refresh at c25439e) and
-# "now" (driver bench at d96ef65) ran BYTE-IDENTICAL code for every
-# flagged query (the intervening commits were pure additions — zero
-# deleted/modified lines in cube_builder_spark/), and a fresh r10
-# min-of-3 at sf0.1 reproduced the "now" values (0.785/0.405/0.438/
-# 0.501/0.325), so the deltas are cross-session host drift, not a
-# code regression. Nothing to revert.
-# Each verdict is scoped to the BASELINE ROUND it investigated: it
-# attaches to a movers entry only when the tripwire's baseline comes
-# from that round, so a genuine regression in a later round of the
-# same query is never mislabeled as already-investigated noise.
-_NOISE_R9 = ("r10 A/B: code byte-identical across both r9 runs; "
-             "fresh min-of-3 reproduces 'now' — cross-session drift")
-# Same verdict for the two r10 flags vs the r9 baseline: zero changed
-# lines on either code path this round (git diff d96ef65..HEAD over
-# blend.py / corpus_queries.py is empty) and an interleaved min-of-5
-# reproduces the flagged values (c3 0.123s, t_repetition 0.451s).
-# t_repetition_profile has swung 1.57 -> 0.30 -> 0.46 across sessions
-# with no code change — this host's documented noise band.
-_NOISE_R10 = ("r10 A/B: no code change on this path since r9; "
-              "interleaved min-of-5 reproduces 'now' — host drift")
-AB_VERDICTS = {
-    ("x_snapshot_cdc", 9): _NOISE_R9,
-    ("c41_pansharpen", 9): _NOISE_R9,
-    ("c42_bilinear_upsample", 9): _NOISE_R9,
-    ("c43_terrain_indexes", 9): _NOISE_R9,
-    ("e_rfm_segmentation", 9): _NOISE_R9,
-    ("c3_blend_med", 9): _NOISE_R10,
-    ("t_repetition_profile", 9): _NOISE_R10,
-    # end-of-round flags, same verdict: untouched code, interleaved
-    # min-of-5 reproduces 'now' (r6 0.262s vs prev 0.201; d_simhash
-    # 0.649s vs prev 0.495) while flag identity rotated across three
-    # same-session runs — steal-wave noise, nothing to revert
-    ("r6_groupby_collect_timeline", 9): _NOISE_R10,
-    ("d_simhash", 9): _NOISE_R10,
-    # r11 A/B of the one dangling r10 flag (+0.04s absolute): c23's
-    # code path is byte-identical d96ef65..HEAD (the only cube_queries
-    # diff since r9 is a comment block on x_cube_reuse), and a fresh
-    # interleaved min-of-5 at sf0.1 spread 0.244..1.22s while the q1
-    # anchor swung 0.38..1.63s in the same loop — this host's
-    # steal-wave noise band dwarfs the flagged delta. Nothing to
-    # revert; scoped to BOTH baselines the identical code spans.
-    ("c23_pixel_anomaly", 9): (
-        "r11 A/B: code byte-identical since r9; interleaved min-of-5 "
-        "spread 0.24-1.22s with anchor swinging 4x — host drift"),
-    ("c23_pixel_anomaly", 10): (
-        "r11 A/B: code byte-identical since r9; interleaved min-of-5 "
-        "spread 0.24-1.22s with anchor swinging 4x — host drift"),
-    # Pre-annotated INTENTIONAL change (round 11): global_rank now
-    # materializes its range shuffle once (eager localCheckpoint) to
-    # close the re-sample divergence hazard (r10 ADVICE medium).
-    # Interleaved A/B at sf0.1 (min-of-4, two passes): pre-fix
-    # 1.20-1.65s vs fixed 1.49-1.80s — ~0.3s absolute for the three
-    # per-metric checkpoints; the remaining delta vs r10's 0.77s
-    # record is host drift (the PRE-FIX code also reads 1.2-1.6s in
-    # this session). Correctness over 0.3s: keep.
-    ("e_rfm_segmentation_scalable", 10): (
-        "r11: intentional — global_rank one-time range-shuffle "
-        "materialization (re-sample hazard fix, ADVICE r10); A/B "
-        "pre-fix 1.20 vs fixed 1.49 min at sf0.1, rest is host drift"),
-    # r11 end-of-round flags: both functions AST-identical to the r10
-    # commit (verified by parsing b72cbdc's module and comparing
-    # ast.dump of each function), interleaved min-of-5 reproduces the
-    # flagged values (c21 0.253s with the q1 anchor itself swinging
-    # 0.38-0.63 vs its 0.414 baseline; d_fuzzy 0.479s while q1
-    # simultaneously read FASTER than baseline — the steal waves on
-    # this host are per-core bursty, not uniform, so anchor
-    # normalization under-corrects fan-out-heavy queries). Nothing to
-    # revert.
-    # r11 sf0.01 SIDECAR note (not per-query verdicts — the finding is
-    # session-level): the refreshed sidecar flagged ~40 queries at a
-    # near-uniform +26-70% vs the r10 sidecar with anchors flat
-    # (drift 1.017). Investigated by diffing the SAME-DAY pre-split
-    # vs post-split r11 sidecar runs: post-split is FASTER (82.3s ->
-    # 65.9s, median per-query ratio 0.78), so the round-11 code —
-    # including the module split — regressed nothing; the r10 sidecar
-    # baseline was simply recorded on a quieter host, and the anchor
-    # median under-corrects when steal waves are non-uniform. The
-    # sf0.1 record (the graded scale) shows only the three annotated
-    # flags below.
-    ("c21_pixel_trend", 10): (
-        "r11 A/B: function AST-identical to r10; interleaved min-of-5 "
-        "reproduces 'now' while the anchor swings 1.7x — host drift"),
-    ("d_fuzzy_join_ed1", 10): (
-        "r11 A/B: function AST-identical to r10; interleaved min-of-5 "
-        "reproduces 'now'; non-uniform steal wave (anchor concurrently "
-        "faster than baseline) — host drift"),
-    # Round-14 INTENTIONAL change (verdict r13 #6): t_bm25_topk no
-    # longer tokenizes per query — it reads the term-hash-partitioned
-    # postings store through a PartitionFilters prune (the hybrid's
-    # path, plan-pinned in tests/test_plan_shape.py). Warm steady-state
-    # measured 0.60s -> ~0.97s at sf0.1 (store read path replaces the
-    # in-plan explode) and the first run additionally pays the shared
-    # one-time index build; the buy-in is at scale — BENCH_SF1 shows
-    # the pruned-read family near-flat at 10x data, and the build
-    # amortizes across the whole lexical family. Known trade, not a
-    # regression to revert.
-    ("m_image_dhash_dups", 13): (
-        "r14 A/B: code byte-identical since r13 (no diff hunks over "
-        "the dhash query or functions/multimodal.py this round); the "
-        "flagged runs [75.7/21.6/20.8s] sat in a host wave where the "
-        "SCAN-family anchors drifted 7.2x (q1 0.64->3.47); solo "
-        "min-of-5 right after: 2.06s with q1 at 0.80 (1.26x) — "
-        "normalized ~1.6 vs prev 1.38, inside the band. Host noise, "
-        "nothing to revert"),
-    ("t_bm25_topk", 13): (
-        "r14: intentional rewire through the pruned postings store "
-        "(verdict r13 #6); warm 0.60->~0.97s + shared one-time index "
-        "build on the first run; near-flat at 10x in BENCH_SF1 — "
-        "architecture trade, documented in the docstring"),
-    ("a_hybrid_rrf_scalable", 13): (
-        "r14: shares the richer round-14 store build (tf + doclen "
-        "denormalization) — warm path unchanged in plan, first run "
-        "carries the heavier shared build; BENCH_SF1 slope ~1.2"),
-    ("a_hybrid_recall_eval", 13): (
-        "r14: same shared store-build note as a_hybrid_rrf_scalable; "
-        "warm steady-state reproduces r13's ~4.0s in a dedicated "
-        "probe (BENCH_SF1 note records the warmup series)"),
-    # Round-14 optimization: INTENTIONAL eager cut of the shared
-    # calendar-/activity-bounded rollup in three events queries whose
-    # uncut plans scanned events twice per action (guide §2.4). At
-    # sf0.1 the checkpoint job is a ~0.1-0.2s constant on sub-second
-    # queries (double-interleaved A/B: dau_mau 0.62->0.82 one order,
-    # 0.82->0.83 the other; p90 0.52->0.59 / 0.66->0.59; acf
-    # 0.73->0.77 / 1.10->0.77 — flat to +0.2s constant), while the
-    # removed second events scan is the term that grows with data.
-    # Known local-scale trade, not a regression to revert.
-    ("e_dau_mau_stickiness", 13): (
-        "r14: intentional eager cut of the (user, day) activity frame "
-        "— 2 events scans -> 1 per action; ~0.1-0.2s checkpoint "
-        "constant at sf0.1, scan term removed at scale"),
-    ("e_rolling_p90", 13): (
-        "r14: intentional eager cut of the daily rollup — 2 events "
-        "scans -> 1 per action; ~0.1s checkpoint constant at sf0.1"),
-    ("e_acf_daily", 13): (
-        "r14: intentional eager cut of the daily rollup — 2 events "
-        "scans -> 1 per action; ~0.1s checkpoint constant at sf0.1"),
-}
-# Backfilled adjudication (round 12, verdict r11 #6) of the 14 flags
-# the driver's FINAL r11 run left dangling — that run landed AFTER the
-# round's last commit (committed record 73.7s @ drift 1.27 vs the
-# driver's 101.9s @ drift 1.558, the noisiest end-of-round host on
-# record), so no verdict could have been in-file. r12 evidence, per
-# the established discipline: every flagged function is AST-IDENTICAL
-# to the r10 commit b72cbdc (ast.dump compare, re-run this session
-# across the module split — stream/storage/ann queries resolved to
-# their r10 pipeline_queries.py home), and the judge's independent
-# quieter-host interleaved A/B of the five worst (p_token_budget_mix
-# 0.71s, e_stream_suite 1.63s, m_image_dhash_dups 1.41s,
-# m_media_metadata 0.53s, p_sequence_pack 0.26s vs 1.60/2.57/2.94/
-# 1.41/0.66 flagged) settles them at the r10-record noise band; the
-# r12 interleaved min-of-4 spot-check of the remaining NINE reads the
-# same signature — q1 anchor 0.91x (FASTER than its r10 record) while
-# the nine AST-identical queries settle at 1.4-2.2x r10
-# (c24 0.60s, p_decontaminate 1.02, x_snapshot_cdc 0.89, e_rfm 0.48,
-# a_ann_mmr 1.47, e_ewma 0.34, e_holt 0.37, x_row_column 0.43,
-# x_hll_sliding 0.93), i.e. below their flagged values and wholly
-# unexplained by the scan-bound anchor. Verdict for all 14: host
-# drift at anchor-drift
-# 1.558 with per-core-bursty steal the single scan-bound anchor
-# under-corrects — exactly the instrument gap the round-12
-# multi-family anchors close. Nothing to revert.
-_R11_TAIL = ("r12 backfill: AST-identical to r10 b72cbdc; r11 final "
-             "run at record-noisiest drift 1.558; quiet-host A/B "
-             "(judge + r12 spot-check) reads r10-band — host drift")
-AB_VERDICTS.update({
-    (q, 10): _R11_TAIL for q in [
-        "c24_temporal_smooth", "m_image_dhash_dups", "p_decontaminate",
-        "p_sequence_pack", "p_token_budget_mix", "m_media_metadata",
-        "e_stream_suite", "x_snapshot_cdc", "e_rfm_segmentation",
-        "a_ann_mmr_rerank", "e_ewma_daily", "e_holt_forecast",
-        "x_row_column_policy", "x_hll_sliding_window"]})
-# r12 session flags vs the r11 baseline: a mid-run contention wave on
-# an otherwise QUIET host (anchors at 0.3-1.0x!) multiplied three
-# time-ADJACENT queries 2-7x inside one bench pass (d_embedding's
-# three runs read 4.3/7.3/7.8 — rising, the wave signature). All
-# three are AST-identical to the r11 commit 42848f3, and a fresh
-# interleaved min-of-5 on the same host reads every one FASTER than
-# its r11 baseline (d_embedding 1.05 vs 1.23, d_simhash 0.72 vs
-# 0.80, x_hll_distinct 1.30 vs 1.48). Nothing to revert. Note for
-# the instrument: family anchors measure plan-shape sensitivity, not
-# TIME-locality — a wave confined to one stretch of the run evades
-# them by construction; min-of-3 already bounds the damage and the
-# flag+adjudicate discipline handles the rest.
-_R12_WAVE = ("r12 A/B: AST-identical to r11; interleaved min-of-5 "
-             "reads FASTER than the r11 baseline — a time-localized "
-             "mid-run contention wave (rising within-query runs), "
-             "host noise")
-AB_VERDICTS.update({
-    ("d_embedding_cosine_dups", 11): _R12_WAVE,
-    ("d_simhash", 11): _R12_WAVE,
-    ("x_hll_distinct", 11): _R12_WAVE,
-    # the documented session-to-session oscillator (swings recorded
-    # since r9: 1.57 -> 0.30 -> 0.46 -> 0.58 -> 1.08 with zero code
-    # change): r12 AST-identical to 42848f3, min-of-5 reads 0.65 —
-    # inside its own historical band, below the 1.08 flagged
-    ("t_repetition_profile", 11): (
-        "r12 A/B: AST-identical to r11; min-of-5 0.65s vs 1.08 "
-        "flagged — the documented t_repetition noise band"),
-    # sf0.01 sidecar tail flags, +0.11/+0.07s ABSOLUTE on sub-second
-    # queries: both sat in the 14-query r11 host-drift cohort (AST-
-    # identical since r10, re-verified r12), and the r12 sf0.1
-    # interleaved spot-check read them at their band (e_ewma 0.34,
-    # e_holt 0.37) — sub-noise deltas, nothing to revert
-    ("e_ewma_daily", 11): (
-        "r12: +0.11s absolute on a 0.17s query; AST-identical since "
-        "r10, sf0.1 interleaved A/B at band — noise"),
-    ("e_holt_forecast", 11): (
-        "r12: +0.07s absolute on a 0.26s query; AST-identical since "
-        "r10, sf0.1 interleaved A/B at band — noise"),
-})
-
-# r13 session flags vs the r12 baseline: this session's host runs
-# visibly slower and burstier than r12's record host (anchors 1.13-
-# 1.24x, spread 0.895-1.373 — q1 itself FASTER while q6 reads 1.37x),
-# and a mid-run contention wave multiplied the Python-worker-heavy
-# stretch 3-7x (m_image_dhash runs 23.0/12.1/8.5 — falling as the
-# wave passed; d_allpairs' third run spiked 23.9s against mins of
-# 4-6). Evidence, per the established discipline: git diff r12..HEAD
-# over every file feeding the flagged queries (functions/dedup.py,
-# operators/, plans/, pixelplane.py, tables.py) is EMPTY — this
-# round's only engine-wide diff is two inert session.py additions —
-# and an idle-host interleaved min-of-5 immediately after the run
-# reads every flagged query at 1-2.4x its r12 record (m_image 1.34
-# vs 8.48 flagged, d_embedding 1.44 vs 5.72, d_allpairs 2.85 vs
-# 4.24, p_cube_build 2.21 vs 2.97, d_dup_clusters 2.56 vs 2.68)
-# while the q1 anchor concurrently reads BELOW its r12 baseline
-# (0.46 vs 0.58) — the per-core-bursty steal signature the anchor
-# median under-corrects (r11/r12 record). Nothing to revert.
-_R13_WAVE = ("r13 A/B: code paths byte-identical to r12 (git diff "
-             "empty); idle-host interleaved min-of-5 reads 1-2.4x the "
-             "r12 record with the q1 anchor concurrently FASTER than "
-             "baseline — bursty steal + a mid-run wave, host noise")
-AB_VERDICTS.update({
-    (q, 12): _R13_WAVE for q in [
-        "q8_market_share", "r12_rollup_revenue", "x_bloom_prune_join",
-        "x_zorder_bbox_prune", "d_minhash_lsh_pairs",
-        "d_allpairs_jaccard", "m_image_dhash_dups",
-        "d_embedding_cosine_dups", "d_repeated_spans",
-        "d_dup_clusters", "p_cube_build_e2e"]})
-# Second r13 wave, adjudicated in-session: a LATE-RUN sustained wave
-# in one full-bench pass multiplied the round-11/12 tail 2-15x
-# (t_vocab_growth runs 11.1/16.1/6.9 vs its 0.45 record;
-# c49_local_moran's third run spiked 12.0s) while the early q1 anchor
-# read its normal 0.52-0.84. Idle-host interleaved min-of-5
-# immediately after: t_vocab 1.05, e_dau_mau 0.76, a_hybrid_search
-# 1.13, a_hybrid_rrf_scalable 1.66, c49 1.27, e_cusum 0.47 — all at
-# 1.5-2.5x their r12-host records with q1 concurrently FASTER than
-# baseline (0.485 vs 0.582): the same non-uniform steal band, and a
-# clean re-run settled the record at drift 1.119 with only
-# e_did_analysis (0.65 vs 0.28) and t_vocab (0.75 vs 0.45) left
-# unexcused — both AST-identical to r12, both inside their measured
-# this-session idle bands. Nothing to revert.
-_R13_WAVE2 = ("r13 A/B: AST-identical to r12; late-run wave (rising "
-              "multi-second runs, q1 anchor normal); idle interleaved "
-              "min-of-5 at the session band with q1 concurrently "
-              "faster than baseline — host noise")
-AB_VERDICTS.update({
-    (q, 12): _R13_WAVE2 for q in [
-        "t_vocab_growth", "e_dau_mau_stickiness", "a_hybrid_search_rrf",
-        "a_hybrid_rrf_scalable", "c49_local_moran",
-        "e_cusum_changepoint", "e_did_analysis", "e_kaplan_meier",
-        "t_perplexity_buckets", "e_lorenz_gini", "c47_morans_i",
-        "c48_hotspots_gi", "t_ngram_novelty", "e_range_frame_spend",
-        "p_shard_manifest", "p_global_shuffle", "e_frequent_paths",
-        "x_branch_diff", "e_peak_concurrency", "e_cohort_ltv",
-        "e_rfm_segmentation_scalable", "x_hll_sliding_window",
-        "e_ewma_daily", "e_rfm_segmentation", "x_hll_distinct",
-        "c40_cloud_distance", "c3_blend_med", "x_row_column_policy",
-        "t_cooccurrence_pmi"]})
-# Third r13 batch (the 114.4s run at drift 1.212 that benched the
-# 12 new round-13 queries): five dangling flags, same adjudication —
-# every flagged function AST-IDENTICAL to r12 commit 6ad917b
-# (ast.dump compare re-run in-session), and an idle interleaved
-# min-of-5 at sf0.1 settles all five WELL below their flagged values
-# (c22 0.79 vs 0.97 flagged, t_repetition 0.575 vs 1.39 — its run
-# array read 1.5/6.2/1.4, the documented noise band of this query —
-# t_lm 1.07 vs 2.41, t_dsir 1.23 vs 1.48, m_media 0.49 vs 0.65)
-# while the residual ~1.3-1.4x over the r12 records matches the
-# run's own anchor drift 1.212 with q1 reading 0.401 in the same
-# loop. Host drift; nothing to revert.
-_R13_WAVE3 = ("r13 A/B: AST-identical to r12 (6ad917b); idle "
-              "interleaved min-of-5 well below flagged values, "
-              "residual matches anchor drift 1.212 — host noise")
-AB_VERDICTS.update({
-    (q, 12): _R13_WAVE3 for q in [
-        "c22_gap_fill", "t_repetition_profile", "t_lm_doc_likelihood",
-        "t_dsir_importance", "m_media_metadata"]})
-# Fourth r13 batch (the end-of-round 127.8s refresh at drift 1.269,
-# shuffle-family anchors 1.80x, spread 0.88-2.11 — the burstiest run
-# of the session): five new dangling flags, same evidence chain —
-# all five functions AST-IDENTICAL to r12 6ad917b (ast.dump compare
-# re-run in-session) and an idle interleaved min-of-5 immediately
-# after settles each FAR below its flagged value (e_stream_suite
-# 1.38s vs 6.90 flagged — micro-batch trigger waits amplify steal;
-# t_inverted_index 0.80 vs 1.03, a_ann_batch_topk 0.47 vs 0.66,
-# r6 0.35 vs 0.44, c43 0.74 vs 0.88) while the scan-bound q1 anchor
-# concurrently reads FASTER than its r12 record (0.477 vs 0.582) —
-# the per-core-bursty steal signature the shuffle-family drift row
-# (1.80x) independently corroborates. Host noise; nothing to revert.
-_R13_WAVE4 = ("r13 A/B: AST-identical to r12; idle interleaved "
-              "min-of-5 far below flagged values with q1 concurrently "
-              "faster than baseline; shuffle-family drift 1.80x in the "
-              "same run — bursty steal, host noise")
-AB_VERDICTS.update({
-    (q, 12): _R13_WAVE4 for q in [
-        "r6_groupby_collect_timeline", "a_ann_batch_topk",
-        "t_inverted_index", "e_stream_suite", "c43_terrain_indexes"]})
-# r13 sf0.01 SIDECAR note (session-level, the r11-sidecar precedent —
-# not per-query verdicts): the end-of-round sidecar refresh (105.1s /
-# 160 queries, drift 1.226) flagged 11 rows; 7 carry this round's
-# wave verdicts already, and the 4 dangling (c1_mosaic_first_valid
-# 0.25→0.41, d_simhash 0.39→0.69, q2 0.57→0.95, r11_multiway
-# 0.18→0.28) are sub-second ABSOLUTE deltas elevated near-uniformly
-# ~1.6x on the same session whose sf0.1 record needed four host-noise
-# wave adjudications — the r12 sidecar baseline was a quieter host.
-# All four functions are AST-identical to r12 (the session-wide
-# ast.dump sweep covered their modules); nothing to revert.
-
 HEADLINE = [
     "q1_pricing_summary",
     "q3_shipping_priority",
@@ -523,7 +210,7 @@ HEADLINE = [
 # a tripwire can diff. e_trajectory_hausdorff_pruned costs 16.1s at
 # sf0.1 (itself a measured 6.9x win over the 110.5s exact twin — the
 # interleaved A/B in its docstring), so it is benched in the sf0.01
-# sidecar: the detail file is sf-keyed and _previous_bench_queries
+# sidecar: the detail file is sf-keyed and _previous_detail
 # only baselines same-sf records, so a regression of the prune
 # front-end (whose silent failure mode is "falls back to near-exact
 # cost") flags on the next sf0.01 run instead of going undetected.
@@ -532,247 +219,149 @@ EXTRA_BY_SF = {
 }
 
 
+# Drift anchors: two scan-bound, two shuffle-bound and two Python-worker
+# queries, so a host load wave on any one plan family moves the median.
+ANCHORS = ["q1_pricing_summary", "q6_forecast_revenue",
+           "q18_large_orders", "r6_groupby_collect_timeline",
+           "m_media_metadata", "k1_cog_structure"]
+RECORD_FIELDS = ("construct_s", "action_s", "construct_jobs", "action_jobs",
+                 "compiles")
+
+
 def _round_files(pattern: str, sf_suffixed: bool = False) -> list[tuple[int, str]]:
-    """``sf_suffixed=False`` matches only the driver-scale records
-    (``..._rN.json``); ``True`` matches only the sf-suffixed sidecars
-    (``..._rN_sfX.json``). They are kept separate so a local probe
-    can never masquerade as the round's sf0.1 record — sidecars are
-    only consulted by the tripwire when the CURRENT run's sf matches
-    theirs (the sf-field check in _previous_bench_queries)."""
-    import glob
-    import re
-    here = os.path.dirname(os.path.abspath(__file__))
+    """``(round, path)`` of the files matching ``pattern``, oldest first.
+    ``sf_suffixed=False`` matches only the sf0.1 records
+    (``..._rN.json``), ``True`` only the sf-suffixed ones
+    (``..._rN_sfX.json``), so a local probe never passes as the round's
+    sf0.1 record."""
     rx = r"_r(\d+)_sf[\d.]+\.json$" if sf_suffixed else r"_r(\d+)\.json$"
     out = []
-    for p in glob.glob(os.path.join(here, pattern)):
+    for p in glob.glob(os.path.join(HERE, pattern)):
         m = re.search(rx, p)
         if m:
             out.append((int(m.group(1)), p))
     return sorted(out)
 
 
-def _previous_bench_queries(sf) -> tuple[dict[str, float], int | None]:
-    """Per-query mins from the newest available record AT THE SAME
-    SCALE FACTOR, PREFERRING ``BENCH_DETAIL_r*.json`` (written by this
-    script — always complete) over the driver's ``BENCH_r*.json``
-    (whose 2 KB stdout-tail capture truncated r8's map to
-    ``parsed: null``). The sf match matters: a local sf0.01 probe must
-    not become the baseline a driver sf0.1 run diffs against. Records
-    without an sf field (pre-round-9) are assumed to be the driver's
-    0.1. Empty dict when absent.
-
-    Only rounds strictly BELOW the current one qualify: the current
-    round's own detail file is overwritten by every in-round rerun,
-    so using it would let small per-run regressions ratchet through a
-    round unflagged (round-9 advisor finding) — the tripwire must diff
-    against the PRIOR round's settled baseline.
-
-    Returns (per-query mins, baseline round) — the round scopes
-    AB_VERDICTS so an investigation verdict can never mislabel a
-    LATER round's genuine regression as already-investigated noise."""
-    cur = _current_round()
-    candidates: list[tuple[int, int, str]] = []
-    # rank detail files above driver records at the same round; the
-    # sf-suffixed sidecars join the pool (round 11) because a
-    # non-driver-scale run would otherwise NEVER find a baseline —
-    # the sf-field match below still guarantees a sidecar can only
-    # baseline a run at ITS OWN scale.
-    for rnd, path in _round_files("BENCH_DETAIL_r*.json"):
-        if rnd < cur:
-            candidates.append((rnd, 1, path))
-    for rnd, path in _round_files("BENCH_DETAIL_r*_sf*.json",
-                                  sf_suffixed=True):
-        if rnd < cur:
-            candidates.append((rnd, 1, path))
-    for rnd, path in _round_files("BENCH_r*.json"):
-        if rnd < cur:
-            candidates.append((rnd, 0, path))
-    for rnd, kind, path in sorted(candidates, reverse=True):
-        try:
-            with open(path) as fh:
-                rec = json.load(fh)
-            if kind == 1:
-                body = rec
-            else:
-                body = rec.get("parsed") or {}
-            qs = body.get("queries") or {}
-            rec_sf = body.get("sf", 0.1)
-        except (OSError, ValueError):
-            continue
-        if qs and rec_sf == sf:
-            return {k: float(v) for k, v in qs.items()}, rnd
-    return {}, None
-
-
 def _current_round() -> int:
-    """The round this bench run belongs to: the driver records
-    BENCH_r{N}.json at round END, so while round N runs the newest
-    record on disk is N-1. Detail files are deliberately NOT counted:
-    local re-runs within a round then overwrite the same detail file,
-    and the driver's end-of-round run writes the final version."""
+    """BENCH_r{N}.json is written at the END of round N, so while round
+    N runs the newest one on disk is N-1."""
     recs = _round_files("BENCH_r*.json")
     return (max(r for r, _ in recs) + 1) if recs else 1
 
 
+def _previous_detail(sf) -> tuple[dict[str, float], dict[str, dict]]:
+    """``(per-query mins, per-query records)`` of the newest
+    BENCH_DETAIL from an EARLIER round at the same scale factor (records
+    without an sf field are sf0.1); empty dicts when there is none. The
+    current round's own file is skipped: every in-round rerun rewrites
+    it, so diffing against it would let small regressions ratchet
+    through a round unflagged."""
+    cur = _current_round()
+    paths = [(rnd, p) for rnd, p in
+             _round_files("BENCH_DETAIL_r*.json")
+             + _round_files("BENCH_DETAIL_r*_sf*.json", sf_suffixed=True)
+             if rnd < cur]
+    for _rnd, path in sorted(paths, reverse=True):
+        try:
+            with open(path) as fh:
+                rec = json.load(fh)
+        except (OSError, ValueError):
+            continue
+        qs = rec.get("queries") or {}
+        if qs and rec.get("sf", 0.1) == sf:
+            return ({k: float(v) for k, v in qs.items()},
+                    rec.get("records") or {})
+    return {}, {}
 
 
-def drift_report(timings: dict, prev: dict, prev_round,
-                 all_runs: dict | None = None):
-    """Multi-family anchor calibration + regression flags — extracted
-    from main() in round 12 so the instrument itself is unit-testable
-    (tests/test_bench_drift.py): given this run's per-query mins and
-    the baseline round's, returns (anchor_rec, movers). See the
-    inline commentary for the model.
+def _median(xs: list[float]) -> float:
+    xs = sorted(xs)
+    mid = len(xs) // 2
+    return xs[mid] if len(xs) % 2 else (xs[mid - 1] + xs[mid]) / 2.0
 
-    ``all_runs`` (round-13, verdict #2): the per-query raw run arrays.
-    Family anchors measure PLAN-SHAPE sensitivity, not TIME-locality —
-    a contention wave confined to one stretch of the run evades them
-    by construction (the r12 d_simhash-class flags: within-query runs
-    rising 4.3/7.3/7.8 while every anchor sat at 0.3-1.0x). The wave's
-    signature is already in the raw arrays, so each flag now carries
-    it: ``runs`` (the raw array), ``runs_rising`` (strictly monotone
-    increase — a query heating up DURING its own min-of-3 is
-    contention arriving, not a plan regression, which would shift all
-    three runs together), and ``runs_spread`` (max/min). A flag with
-    runs_rising=true and a large spread is the hand-A/B-was-noise
-    shape; the adjudicator still decides, but the statistic rides the
-    REGRESSIONS line instead of needing a BENCH_DETAIL exhumation."""
+
+def drift_report(timings: dict, prev: dict, all_runs: dict | None = None,
+                 records: dict | None = None,
+                 prev_records: dict | None = None):
+    """``(anchor_rec, movers)`` for this run's per-query mins against
+    the baseline's ``prev`` (the rule is in the module docstring);
+    ``(None, {})`` without a baseline. ``all_runs`` adds each flag's
+    run statistics: a query heating up DURING its own min-of-3
+    (``runs_rising``, a large ``runs_spread``) is load arriving, while a
+    plan regression shifts all three runs together. ``records`` and
+    ``prev_records`` add each flag's jobs and compiles."""
     if not prev:
         return None, {}
-    all_runs = all_runs or {}
-    # Environment calibration (round-8, rebuilt round-12): the r7
-    # record ran on a loaded machine and the raw tripwire flagged
-    # 10+ queries that controlled re-timing showed flat; rounds
-    # 9-11 then showed the SINGLE-family anchor median
-    # under-corrects because this host's steal waves are
-    # per-core-BURSTY, not uniform — a scan-bound 3-partition
-    # anchor rides out a wave that multiplies a 32-way fan-out
-    # query, so every noisy end-of-round run produced a 15-flag
-    # storm needing hand adjudication (r11 verdict #2). Anchors
-    # now span the three plan families whose host sensitivity
-    # differs: scan-bound whole-stage-codegen, shuffle-bound
-    # exchange-heavy, and Python-worker/Arrow fan-out. Per-family
-    # drift = median of that family's anchor ratios; the applied
-    # (flag-gating) drift stays the conservative ALL-anchor median
-    # — clamped >= 1 so calibration can only EXCUSE load, never
-    # amplify a regression — but each flag now carries its
-    # per-family normalized pct and an `excused_by` list naming
-    # every family whose drift explains the delta (<= the 25%
-    # threshold). AST-identical host noise is machine-dismissible:
-    # a flag with a non-empty excused_by needs no hand A/B unless
-    # the query's code actually changed.
-    families = {
-        "scan": ["q1_pricing_summary", "q6_forecast_revenue"],
-        "shuffle": ["q18_large_orders",
-                    "r6_groupby_collect_timeline"],
-        "udf": ["m_media_metadata", "k1_cog_structure"],
-    }
-
-    def _median(xs: list[float]) -> float:
-        # TRUE median (round-12 review): xs[len//2] on the
-        # 2-anchor families picked the MAX of the pair, inflating
-        # fam_drift and letting one bursty anchor auto-excuse a
-        # genuine regression in its family
-        xs = sorted(xs)
-        mid = len(xs) // 2
-        return (xs[mid] if len(xs) % 2
-                else (xs[mid - 1] + xs[mid]) / 2.0)
-
-    fam_drift: dict[str, float] = {}
-    all_ratios = []
-    for fam, anchors in families.items():
-        rs = [timings[a] / prev[a] for a in anchors
-              if a in timings and a in prev and prev[a] > 0.02]
-        if rs:
-            fam_drift[fam] = _median(rs)
-            all_ratios.extend(rs)
-    all_ratios.sort()
-    drift = _median(all_ratios) if all_ratios else 1.0
+    all_runs, records = all_runs or {}, records or {}
+    prev_records = prev_records or {}
+    ratios = sorted(timings[a] / prev[a] for a in ANCHORS
+                    if a in timings and a in prev and prev[a] > 0.02)
+    drift = _median(ratios) if ratios else 1.0
+    # clamped: calibration can excuse load, never amplify a regression
     drift_c = max(1.0, drift)
 
     def _flag(n, t):
-        fam_norm = {
-            fam: round(100.0 * (t / (prev[n] * max(1.0, fd))
-                                - 1.0), 1)
-            for fam, fd in fam_drift.items()}
-        rec = {
-            "prev": prev[n], "now": round(t, 3),
-            "pct": round(100.0 * (t - prev[n]) / prev[n], 1),
-            "norm_pct": round(
-                100.0 * (t / (prev[n] * drift_c) - 1.0), 1),
-            "fam_norm_pct": fam_norm,
-            "excused_by": sorted(
-                f for f, p in fam_norm.items() if p <= 25.0),
-            **({"verdict": AB_VERDICTS[(n, prev_round)]}
-               if (n, prev_round) in AB_VERDICTS else {})}
+        flag = {"prev": prev[n], "now": round(t, 3),
+                "pct": round(100.0 * (t - prev[n]) / prev[n], 1),
+                "norm_pct": round(100.0 * (t / (prev[n] * drift_c) - 1.0), 1)}
         runs = all_runs.get(n)
         if runs and len(runs) >= 2:
-            rec["runs"] = [round(r, 3) for r in runs]
-            rec["runs_rising"] = all(
-                b > a for a, b in zip(runs, runs[1:]))
-            rec["runs_spread"] = round(
-                max(runs) / max(min(runs), 1e-9), 2)
-        return rec
+            flag["runs"] = [round(r, 3) for r in runs]
+            flag["runs_rising"] = all(b > a for a, b in zip(runs, runs[1:]))
+            flag["runs_spread"] = round(max(runs) / max(min(runs), 1e-9), 2)
+        for key, recs in (("", records), ("prev_", prev_records)):
+            rec = recs.get(n)
+            if rec:
+                flag[key + "jobs"] = rec["construct_jobs"] + rec["action_jobs"]
+                flag[key + "compiles"] = rec["compiles"]
+        return flag
 
-    movers = {
-        n: _flag(n, t)
-        for n, t in timings.items()
-        if n in prev and prev[n] > 0.05
-        and t > prev[n] * drift_c * 1.25}
-    n_unexcused = sum(1 for m in movers.values()
-                      if not m["excused_by"]
-                      and "verdict" not in m)
-    n_wave_suspect = sum(1 for m in movers.values()
-                         if m.get("runs_rising"))
+    movers = {n: _flag(n, t) for n, t in timings.items()
+              if n in prev and prev[n] > 0.05 and t > prev[n] * drift_c * 1.25}
     anchor_rec = {
         "anchors": {a: {"prev": prev.get(a), "now": timings.get(a)}
-                    for fam in families.values() for a in fam},
-        "family_drift": {f: round(d, 3)
-                         for f, d in fam_drift.items()},
-        "spread": ([round(all_ratios[0], 3),
-                    round(all_ratios[-1], 3)]
-                   if all_ratios else None),
+                    for a in ANCHORS},
+        "spread": [round(ratios[0], 3), round(ratios[-1], 3)] if ratios else None,
         "drift": round(drift, 3),
         "applied": round(drift_c, 3),
-        "n_unexcused": n_unexcused,
-        "n_wave_suspect": n_wave_suspect}
+        "n_wave_suspect": sum(1 for m in movers.values() if m.get("runs_rising"))}
     return anchor_rec, movers
 
 
 def detail_record(timings: dict, all_runs: dict, anchor_rec, movers,
-                  sf_val) -> dict:
-    """The COMPLETE round record written to BENCH_DETAIL_r{N}.json.
-
-    The driver's BENCH_r{N}.json keeps only a ~2 KB stdout tail, which
-    truncated 7 of r13's 11 REGRESSIONS flags mid-record (verdict r13
-    #8) — so the detail file, not stdout, is the durable home of the
-    full flag map: per-query mins, raw run arrays, anchor calibration,
-    and EVERY regression flag with its adjudication verdict.
-    tests/test_bench_drift.py pins these fields so a refactor cannot
-    silently drop the audit trail again."""
+                  sf_val, records: dict | None = None) -> dict:
+    """The complete record written to BENCH_DETAIL_r{N}.json. The
+    round's BENCH_r{N}.json keeps only a ~2 KB stdout tail of the run,
+    so this file, not stdout, is the durable home of the per-query mins, the raw runs, the
+    fastest run's ``records`` and every regression flag."""
     total = round(sum(timings.values()), 4)
-    first_total = round(sum(r[0] for r in all_runs.values()), 4)
-    worst = sorted(timings, key=timings.get, reverse=True)[:5]
     return {
         "metric": "headline_queries_total",
         "value": total,
         "unit": "sec",
-        "total_cold": first_total,
+        "total_cold": round(sum(r[0] for r in all_runs.values()), 4),
         "total_warm": total,
-        "worst5": worst,
+        "worst5": sorted(timings, key=timings.get, reverse=True)[:5],
         "runs_per_query": 3,
         "agg": "min",
         "sf": sf_val,
         "queries": {k: round(v, 3) for k, v in timings.items()},
         "all_runs": all_runs,
+        "records": records or {},
         "anchor_drift": anchor_rec,
         "regressions": movers,
     }
 
 
+def _collect(df):
+    df.collect()  # the rows are dropped: only the time counts
+
+
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     spark = get_spark("bench")
     queries = all_queries()
     try:
@@ -780,75 +369,41 @@ def main():
     except ValueError:
         extra = []
     names = [n for n in HEADLINE + extra if n in queries]
-    # warm the JVM + parquet footers once so timings measure the queries
+    # warm the JVM and parquet footers, then the Python workers, so the
+    # timings measure the queries
     queries[names[0]](spark, sf_dir).collect()
-    # ...and spawn the Python UDF workers + Arrow channels (otherwise the
-    # first pandas-UDF query is charged ~3s of worker startup)
-    def _identity(it):
-        yield from it
-    spark.range(256).repartition(32).mapInPandas(_identity, "id long").count()
-    # Each query runs three times and reports the min: the first
-    # execution carries one-off plan-compilation/JIT cost, and this
-    # box shows intermittent host CPU-steal waves (measured up to
-    # 15%/s) that can multiply any single run — min-of-3 measures the
-    # steady-state latency a production job sees while staying robust
-    # to one wave. All runs are recorded for transparency.
-    timings, all_runs = {}, {}
+    warm_python_workers(spark)
+    # min-of-3: the first run carries one-off planning/JIT cost, and
+    # host CPU-steal waves can multiply any single run
+    timings, all_runs, records = {}, {}, {}
     for name in names:
-        runs = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            queries[name](spark, sf_dir).collect()
-            runs.append(round(time.perf_counter() - t0, 4))
-        timings[name] = min(runs)
-        all_runs[name] = runs
+        recs = [record(spark, name, lambda: queries[name](spark, sf_dir),
+                       _collect) for _ in range(3)]
+        runs = [round(r.construct_s + r.action_s, 4) for r in recs]
+        fastest = recs[runs.index(min(runs))]
+        timings[name], all_runs[name] = min(runs), runs
+        records[name] = {f: round(getattr(fastest, f), 4)
+                         for f in RECORD_FIELDS}
     total = round(sum(timings.values()), 4)
-    # Report BOTH aggregates: `value` (min-of-3) is the steady-state a
-    # production job sees; `total_cold` is what one cold job pays — a
-    # plan that only looks good warm is hiding one-off cost (e.g. an
-    # eager materialization inside the first action), so the cold
-    # trend must stay visible at the top level.
-    first_total = round(sum(r[0] for r in all_runs.values()), 4)
-    # Per-run transparency goes on its OWN earlier line: the driver
-    # captures only a ~2 KB stdout TAIL, and embedding all_runs in the
-    # final JSON line pushed its head past the capture window (r5's
-    # record has parsed:null). The contract line prints LAST and is
-    # kept compact (3-decimal mins) so the tail always contains —
-    # and can parse — the whole thing.
+    # BENCH_r{N}.json keeps only a ~2 KB stdout TAIL: the diagnostics go
+    # on earlier lines and the compact contract line prints LAST.
     print("ALL_RUNS " + json.dumps(all_runs))
-    # Per-query regression tripwire (round-7): diff each min against
-    # the newest BENCH_r*.json with a parsed queries map and print
-    # >25% movers on their own line — r6's q5/c1 drifts went unnoticed
-    # for a round because only the totals were eyeballed. Printed
-    # BEFORE the contract line so the 2 KB tail capture keeps the
-    # contract JSON intact.
-    sf_val0 = float(sf) if sf.replace(".", "").isdigit() else sf
-    prev, prev_round = _previous_bench_queries(sf_val0)
-    anchor_rec, movers = drift_report(timings, prev, prev_round,
-                                      all_runs=all_runs)
+    prev, prev_records = _previous_detail(sf_val)
+    anchor_rec, movers = drift_report(timings, prev, all_runs, records,
+                                      prev_records)
     if prev:
         print("ANCHOR_DRIFT " + json.dumps(anchor_rec, separators=(",", ":")))
         print("REGRESSIONS " + json.dumps(movers, separators=(",", ":")))
     sys.stdout.flush()
-    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    # Full record goes to BENCH_DETAIL_r{N}.json — the driver's stdout
-    # capture keeps only a ~2 KB TAIL, and r8's full per-query map in the
-    # final line pushed its own head out of the window (BENCH_r08 has
-    # parsed:null; the anchor/REGRESSIONS diagnostics were lost with it).
-    # The contract line printed below stays compact (totals + worst5 +
-    # drift + detail pointer) so it ALWAYS parses; the tripwire's
-    # baseline reads the detail file first (_previous_bench_queries).
     rnd = _current_round()
-    # non-driver scales get an sf-suffixed name that the baseline
-    # reader's _r(\d+).json$ filter ignores — a local sf0.01 probe
-    # never masquerades as the round's sf0.1 record
+    # scales other than sf0.1 get an sf-suffixed name
     detail_name = (f"BENCH_DETAIL_r{rnd:02d}.json" if sf_val == 0.1
                    else f"BENCH_DETAIL_r{rnd:02d}_sf{sf}.json")
-    detail = detail_record(timings, all_runs, anchor_rec, movers, sf_val)
+    detail = detail_record(timings, all_runs, anchor_rec, movers, sf_val,
+                           records)
     worst = detail["worst5"]
     try:
-        here = os.path.dirname(os.path.abspath(__file__))
-        with open(os.path.join(here, detail_name), "w") as fh:
+        with open(os.path.join(HERE, detail_name), "w") as fh:
             json.dump(detail, fh, separators=(",", ":"))
             fh.write("\n")
     except OSError as exc:  # bench must still report if the repo is RO
@@ -857,7 +412,7 @@ def main():
         "metric": "headline_queries_total",
         "value": total,
         "unit": "sec",
-        "total_cold": first_total,
+        "total_cold": detail["total_cold"],
         "total_warm": total,
         "worst5": {w: round(timings[w], 3) for w in worst},
         "n_queries": len(timings),

@@ -11,11 +11,20 @@ logical results — the programmatic form of reading `.explain()`.
 Driver-side only and bounded by plan size; call AFTER an action so
 the metrics are populated (AQE finalizes the plan on first
 execution).
+
+``record`` is the per-query recorder every harness shares (bench.py,
+tools/perf_probe.py, tools/check_oracle.py, the test gate): one job
+group per query, with the construction and the action timed, and
+their jobs and codegen compiles counted, separately.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import time
+from dataclasses import dataclass, field
+from typing import Any, Callable
+
+from pyspark.sql import DataFrame, SparkSession
 
 
 def collect_metrics(df: DataFrame) -> list[dict]:
@@ -76,3 +85,77 @@ def spill_bytes(df: DataFrame) -> int:
     """Total disk spill — nonzero means partitions exceeded executor
     memory: repartition finer or raise parallelism."""
     return metric_total(df, "spillSize")
+
+
+@dataclass(frozen=True)
+class Record:
+    """What one :func:`record` call did. ``result`` is the action's
+    return value, or the built value when there was no action."""
+    result: Any
+    construct_s: float
+    action_s: float
+    construct_jobs: int
+    action_jobs: int
+    compiles: int
+    _spark: SparkSession = field(repr=False, compare=False)
+    _job_ids: frozenset = field(repr=False, compare=False)
+
+    def plans(self) -> list[str]:
+        """The physical plans of the SQL executions that ran this
+        record's jobs, read from the SQL status store (which keeps only
+        the session's newest ``spark.sql.ui.retainedExecutions``)."""
+        execs = (self._spark._jsparkSession.sharedState().statusStore()
+                 .executionsList())
+        to_java = self._spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava
+        return [e.physicalPlanDescription() for e in
+                (execs.apply(i) for i in range(execs.size()))
+                if {int(j) for j in to_java(e.jobs().keySet())} & self._job_ids]
+
+
+def record(spark: SparkSession, name: str, build: Callable[[], Any],
+           action: Callable[[Any], Any] | None = None) -> Record:
+    """Run ``build()`` and then ``action(result)`` under the job group
+    ``name``. Job counts are set differences of the group's job ids
+    (``spark.ui.retainedJobs`` evicts old ones), so a second record
+    under the same name counts only its own jobs; the listener bus is
+    drained between the phases, outside the timed regions."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    compiled = (sc._jvm.org.apache.spark.metrics.source.CodegenMetrics
+                .METRIC_COMPILATION_TIME())
+
+    def job_ids() -> set[int]:
+        bus.waitUntilEmpty()
+        return set(sc.statusTracker().getJobIdsForGroup(name))
+
+    seen = job_ids()
+    sc.setJobGroup(name, name)
+    try:
+        c0 = compiled.getCount()
+        t0 = time.perf_counter()
+        result = build()
+        construct_s = time.perf_counter() - t0
+        built = job_ids()
+        action_s = 0.0
+        if action is not None:
+            t0 = time.perf_counter()
+            result = action(result)
+            action_s = time.perf_counter() - t0
+        compiles = compiled.getCount() - c0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    done = job_ids()
+    return Record(result, construct_s, action_s, len(built - seen),
+                  len(done - built), compiles, spark, frozenset(done - seen))
+
+
+def _identity(batches):
+    yield from batches
+
+
+def warm_python_workers(spark: SparkSession) -> None:
+    """Start the session's Python workers and their Arrow channels
+    (an identity ``mapInPandas`` over 32 partitions), so the first
+    pandas-UDF query a harness times is not charged their start-up."""
+    spark.range(256).repartition(32).mapInPandas(_identity, "id long").count()

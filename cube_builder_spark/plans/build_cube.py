@@ -141,17 +141,14 @@ def merge_stage(obs: DataFrame, cfg: CubeJobConfig,
         "tile_id", "pixel_id", "band", "date", "period", "doy",
         F.col("merge_value").alias("value"),
         F.col("datasource").alias("source_idx"))
-    # Close the stage with an Exchange on the chain keys: the blend
-    # stage consumes this frame from three branches (quality filter,
-    # spectral filter, efficacy agg). Branches share work only at an
-    # Exchange boundary (AQE stage reuse) — without this one they
-    # branch above the mosaic aggregation and recompute it per branch
-    # (the agg itself has no Exchange: it reuses the input clustering).
-    # Same hash keys, so everything downstream still chains
-    # shuffle-free. Measured at sf0.1: blend cold 5.3s -> 2.1s with no
-    # persist/cache involved. Callers that immediately materialize the
-    # merge (identity write, persist) pass share=False — the exchange
-    # would be dead weight in front of their own repartition.
+    # Physical planning drops this trailing repartition (Spark 4.1.2):
+    # its child is already hash-partitioned on the same keys and count,
+    # so it adds no Exchange. It does keep a consumer's rename (the
+    # blend stage's ``value AS quality``) a separate Project above the
+    # mosaic aggregate instead of folding it into the aggregate's
+    # results, so dropping it changes p_cube_build_e2e's plan text.
+    # Callers that materialize the merge themselves (identity write,
+    # persist) pass share=False.
     return out.repartition(n, "tile_id", "pixel_id") if share else out
 
 

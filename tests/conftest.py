@@ -30,27 +30,10 @@ def sf_dir():
 
 @pytest.fixture
 def in_job_group(spark):
-    """``run(name, fn)`` calls ``fn()`` under the Spark job group
-    ``name`` and returns ``(result, job ids, physical plans)``: the ids
-    of the jobs it started and the plans of the SQL executions that ran
-    them."""
-    def run(name, fn):
-        sc = spark.sparkContext
-        sc.setJobGroup(name, name)
-        try:
-            result = fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        jobs = set(sc.statusTracker().getJobIdsForGroup(name))
-        execs = spark._jsparkSession.sharedState().statusStore().executionsList()
-        to_java = spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava
-        plans = [e.physicalPlanDescription() for e in
-                 (execs.apply(i) for i in range(execs.size()))
-                 if {int(j) for j in to_java(e.jobs().keySet())} & jobs]
-        return result, jobs, plans
-    return run
+    """``run(name, fn)`` -> the ``metrics.record`` of ``fn()``, run
+    under the Spark job group ``name``."""
+    from cube_builder_spark.metrics import record
+    return lambda name, fn: record(spark, name, fn)
 
 
 @pytest.fixture(scope="session")
@@ -89,8 +72,13 @@ def duck(sf_dir):
 #    when the query has no oracle.
 #
 # Queries whose CONSTRUCTION runs bounded driver-side jobs (centroid
-# collects, bloom builds, checkpoints) pay those jobs once per query.
+# collects, bloom builds, checkpoints) pay those jobs once per query;
+# each build is a ``metrics.record`` under the query's job group, and
+# the session's terminal summary lists the costliest constructions.
 # ---------------------------------------------------------------------------
+
+# query name -> (construction seconds, construction jobs), per session
+_CONSTRUCTIONS = pytest.StashKey[dict]()
 
 # A ``F.broadcast()`` hint on an unfiltered scan of a table that grows
 # with scale factor (customer/supplier/part/orders/lineitem/events/
@@ -154,16 +142,18 @@ def _outcome(check):
 
 
 @pytest.fixture(scope="session")
-def query_gate(spark, duck, sf_dir):
+def query_gate(request, spark, duck, sf_dir):
     """``query_gate(name, check)`` -> the problem list of one check
     ("plan", "broadcast" or "oracle") on the query's single build;
     raises what the build or the check raised."""
     from cube_builder_spark import tables
+    from cube_builder_spark.metrics import record
     from cube_builder_spark.oracle import compare
     from cube_builder_spark.queries import all_oracles, all_queries
 
     queries, oracles = all_queries(), all_oracles()
     results = {}
+    constructions = request.config.stash.setdefault(_CONSTRUCTIONS, {})
 
     def plan_problems(qe):
         plan = qe.executedPlan().toString()
@@ -209,9 +199,11 @@ def query_gate(spark, duck, sf_dir):
 
     def run(name):
         try:
-            sdf = queries[name](spark, sf_dir)
+            rec = record(spark, name, lambda: queries[name](spark, sf_dir))
         except Exception as e:
             return dict.fromkeys(("plan", "broadcast", "oracle"), e)
+        constructions[name] = (rec.construct_s, rec.construct_jobs)
+        sdf = rec.result
         qe = sdf._jdf.queryExecution()
         return {"plan": _outcome(lambda: plan_problems(qe)),
                 "broadcast": _outcome(lambda: broadcast_problems(name, qe)),
@@ -226,3 +218,13 @@ def query_gate(spark, duck, sf_dir):
         return outcome
 
     return gate
+
+
+def pytest_terminal_summary(terminalreporter, config):
+    constructions = config.stash.get(_CONSTRUCTIONS, {})
+    if not constructions:
+        return
+    costliest = sorted(constructions.items(), key=lambda kv: -kv[1][0])[:15]
+    terminalreporter.section("costliest query constructions (query_gate)")
+    for name, (seconds, jobs) in costliest:
+        terminalreporter.write_line(f"{seconds:8.2f}s {jobs:4d} jobs  {name}")

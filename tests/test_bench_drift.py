@@ -1,7 +1,7 @@
-"""bench.py's drift instrument — the multi-family anchor calibration
-(round 12). The instrument decides which regressions a human must
-investigate, so its own logic needs pins: true medians, clamp-at-1,
-per-family excusal, and verdict attachment."""
+"""bench.py's drift instrument: the anchor-median calibration and the
+regression flags. The instrument decides which regressions a human must
+investigate, so its own logic needs pins: true medians, clamp-at-1, the
+run statistics and the jobs/compiles evidence on each flag."""
 
 from __future__ import annotations
 
@@ -16,9 +16,7 @@ _SPEC = importlib.util.spec_from_file_location(
 bench = importlib.util.module_from_spec(_SPEC)
 _SPEC.loader.exec_module(bench)
 
-ANCHORS = ["q1_pricing_summary", "q6_forecast_revenue",
-           "q18_large_orders", "r6_groupby_collect_timeline",
-           "m_media_metadata", "k1_cog_structure"]
+ANCHORS = bench.ANCHORS
 
 
 def _base(prev_val=1.0, now_mult=1.0):
@@ -28,30 +26,28 @@ def _base(prev_val=1.0, now_mult=1.0):
 
 
 def test_no_prev_means_no_report():
-    assert bench.drift_report({"q": 1.0}, {}, None) == (None, {})
+    assert bench.drift_report({"q": 1.0}, {}) == (None, {})
 
 
 def test_uniform_host_drift_excuses_everything():
     prev, now = _base(1.0, 1.6)            # every anchor 1.6x slower
     prev["slow_q"] = 1.0
     now["slow_q"] = 1.7                    # within the host band
-    rec, movers = bench.drift_report(now, prev, 11)
+    rec, movers = bench.drift_report(now, prev)
     assert rec["applied"] == pytest.approx(1.6)
-    assert rec["family_drift"] == {"scan": 1.6, "shuffle": 1.6,
-                                   "udf": 1.6}
     assert movers == {}                    # 1.7 < 1.6 * 1.25
-    assert rec["n_unexcused"] == 0
 
 
 def test_family_drift_is_true_median_not_max():
-    """Round-12 review: rs[len//2] on a 2-anchor family picked the
-    MAX. One bursty scan anchor (1.5x) with a flat partner (1.0x)
-    must yield family drift 1.25, not 1.5."""
+    """xs[len//2] on an even anchor count picks the upper middle. Three
+    bursty anchors (1.5x) with three flat ones (1.0x) must yield drift
+    1.25, not 1.5."""
     prev, now = _base(1.0, 1.0)
-    now["q1_pricing_summary"] = 1.5        # bursty
-    rec, _ = bench.drift_report(now, prev, 11)
-    assert rec["family_drift"]["scan"] == pytest.approx(1.25)
-    assert rec["family_drift"]["shuffle"] == pytest.approx(1.0)
+    for a in ANCHORS[::2]:
+        now[a] = 1.5                       # bursty
+    rec, _ = bench.drift_report(now, prev)
+    assert rec["drift"] == pytest.approx(1.25)
+    assert rec["spread"] == [1.0, 1.5]
 
 
 def test_speedup_never_amplifies():
@@ -60,47 +56,15 @@ def test_speedup_never_amplifies():
     prev, now = _base(1.0, 0.5)
     prev["same_q"] = 1.0
     now["same_q"] = 1.1
-    rec, movers = bench.drift_report(now, prev, 11)
+    rec, movers = bench.drift_report(now, prev)
     assert rec["applied"] == 1.0
     assert "same_q" not in movers          # 1.1 < 1 * 1.25
 
 
-def test_per_family_excusal_and_unexcused_count():
-    """A shuffle-wave host: shuffle anchors at 1.6x, others flat. A
-    +50% regression is excused by the shuffle family only; a +150%
-    one is excused by nothing and counts as unexcused."""
-    prev, now = _base(1.0, 1.0)
-    now["q18_large_orders"] = 1.6
-    now["r6_groupby_collect_timeline"] = 1.6
-    prev["wavey_q"], now["wavey_q"] = 1.0, 1.5
-    prev["broken_q"], now["broken_q"] = 1.0, 2.5
-    rec, movers = bench.drift_report(now, prev, 11)
-    assert movers["wavey_q"]["excused_by"] == ["shuffle"]
-    assert movers["broken_q"]["excused_by"] == []
-    assert rec["n_unexcused"] == 1
-    # the per-family ratios ride on every flag for the adjudicator
-    assert set(movers["wavey_q"]["fam_norm_pct"]) == \
-        {"scan", "shuffle", "udf"}
-
-
-def test_verdict_attaches_only_for_matching_baseline_round():
-    prev, now = _base(1.0, 1.0)
-    name = next(iter(bench.AB_VERDICTS))[0]
-    rnd = next(iter(bench.AB_VERDICTS))[1]
-    prev[name], now[name] = 1.0, 3.0
-    _rec, movers = bench.drift_report(now, prev, rnd)
-    assert "verdict" in movers[name]
-    _rec, movers = bench.drift_report(now, prev, rnd + 77)
-    assert "verdict" not in movers[name]
-    # a verdict-carrying flag does not count as unexcused
-    _rec2, movers2 = bench.drift_report(now, prev, rnd)
-    assert _rec2["n_unexcused"] == 0
-
-
 def test_runs_rising_wave_signature_rides_the_flag():
-    """Round-13 (verdict r12 #2): a time-localized contention wave
-    multiplies a query's runs with a RISING within-query profile while
-    the anchors sit flat — the one shape the family model cannot see.
+    """A time-localized contention wave multiplies a query's runs with
+    a RISING within-query profile while the anchors sit flat — the one
+    shape the anchor median cannot see.
     The per-run arrays already record it; the flag must carry
     runs / runs_rising / runs_spread so adjudication reads the
     REGRESSIONS line, not a BENCH_DETAIL exhumation."""
@@ -109,7 +73,7 @@ def test_runs_rising_wave_signature_rides_the_flag():
     prev["flat_q"], now["flat_q"] = 1.0, 2.0
     runs = {"waved_q": [4.3, 7.3, 7.8],       # the r12 d_simhash shape
             "flat_q": [2.2, 2.0, 2.1]}        # a real plan regression
-    rec, movers = bench.drift_report(now, prev, 11, all_runs=runs)
+    rec, movers = bench.drift_report(now, prev, all_runs=runs)
     assert movers["waved_q"]["runs_rising"] is True
     assert movers["waved_q"]["runs"] == [4.3, 7.3, 7.8]
     assert movers["waved_q"]["runs_spread"] == pytest.approx(1.81, abs=0.01)
@@ -123,9 +87,28 @@ def test_runs_stats_absent_without_run_arrays():
     above, a detail-file replay) gets flags without the run stats."""
     prev, now = _base(1.0, 1.0)
     prev["slow_q"], now["slow_q"] = 1.0, 2.0
-    _rec, movers = bench.drift_report(now, prev, 11)
+    _rec, movers = bench.drift_report(now, prev)
     assert "runs_rising" not in movers["slow_q"]
     assert "runs" not in movers["slow_q"]
+
+
+def test_flag_carries_jobs_and_compiles_of_both_records():
+    """A flag shows whether the job or the compile count moved: this
+    run's counts always, the baseline's where its record has them."""
+    prev, now = _base(1.0, 1.0)
+    prev["moved_q"], now["moved_q"] = 1.0, 2.0
+    prev["new_q"], now["new_q"] = 1.0, 2.0
+    rec = {"construct_s": 0.5, "action_s": 1.5, "construct_jobs": 2,
+           "action_jobs": 3, "compiles": 4}
+    records = {"moved_q": rec, "new_q": rec}
+    prev_records = {"moved_q": dict(rec, construct_jobs=1, compiles=0)}
+    _rec, movers = bench.drift_report(now, prev, records=records,
+                                      prev_records=prev_records)
+    assert {k: movers["moved_q"][k] for k in
+            ("jobs", "compiles", "prev_jobs", "prev_compiles")} == \
+        {"jobs": 5, "compiles": 4, "prev_jobs": 4, "prev_compiles": 0}
+    assert (movers["new_q"]["jobs"], movers["new_q"]["compiles"]) == (5, 4)
+    assert "prev_jobs" not in movers["new_q"]
 
 
 # --- detail_record: the durable flag map (round 14, verdict r13 #8) ---------
@@ -137,19 +120,21 @@ DETAIL_FIELDS = ("queries", "all_runs", "anchor_drift", "regressions",
 def test_detail_record_carries_complete_flag_map():
     """BENCH_r13.json's stdout tail truncated 7/11 REGRESSIONS flags;
     the detail file is the durable record — pin that detail_record()
-    passes EVERY flag through verbatim (verdict included) alongside
-    the raw run arrays the adjudicator needs."""
+    passes EVERY flag through verbatim alongside the raw run arrays and
+    the per-query records."""
     timings = {"a": 1.0, "b": 2.0}
     runs = {"a": [1.2, 1.0, 1.1], "b": [2.0, 2.4, 2.2]}
     movers = {"b": {"prev": 1.0, "now": 2.0, "pct": 100.0,
-                    "verdict": "host drift", "runs": [2.0, 2.4, 2.2],
+                    "runs": [2.0, 2.4, 2.2], "jobs": 3, "compiles": 0,
                     "runs_rising": False, "runs_spread": 1.2}}
     anchor = {"drift": 1.0, "applied": 1.0}
-    rec = bench.detail_record(timings, runs, anchor, movers, 0.1)
-    for field in DETAIL_FIELDS:
+    records = {q: dict.fromkeys(bench.RECORD_FIELDS, 0) for q in timings}
+    rec = bench.detail_record(timings, runs, anchor, movers, 0.1, records)
+    for field in DETAIL_FIELDS + ("records",):
         assert field in rec, field
     assert rec["regressions"] == movers          # verbatim, no trim
     assert rec["all_runs"] == runs
+    assert rec["records"] == records
     assert rec["worst5"] == ["b", "a"]
     assert rec["total_warm"] == 3.0
     assert rec["total_cold"] == pytest.approx(3.2)

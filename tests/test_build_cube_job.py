@@ -222,7 +222,7 @@ def _persistent_rdd_ids(spark):
     return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
 
-def test_index_stage_starts_no_job(spark, sf_dir):
+def test_index_stage_starts_no_job(spark, sf_dir, in_job_group):
     """Planning the index bands reads the band names from the
     expressions, not from the data: no Spark job runs."""
     from cube_builder_spark.plans.build_cube import (assign_periods,
@@ -232,16 +232,10 @@ def test_index_stage_starts_no_job(spark, sf_dir):
     obs = synth_observations(spark, sf_dir)
     blended = blend_stage(merge_stage(assign_periods(obs, periods_df(spark, cfg)),
                                       cfg), cfg)
-    sc = spark.sparkContext
-    group = "test_index_stage_starts_no_job"
-    sc.setJobGroup(group, group)
-    try:
-        cube = index_stage(blended, cfg)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
-    assert "NDVI" in {r.band for r in cube.select("band").distinct().collect()}
+    rec = in_job_group("test_index_stage_starts_no_job",
+                       lambda: index_stage(blended, cfg))
+    assert rec.construct_jobs == 0
+    assert "NDVI" in {r.band for r in rec.result.select("band").distinct().collect()}
 
 
 def test_build_releases_its_caches(spark, sf_dir, tmp_path):
@@ -338,9 +332,10 @@ def test_rebuild_reads_published_items_once(spark, sf_dir, tmp_path, in_job_grou
     out = str(tmp_path / "cube_once")
     obs = synth_observations(spark, sf_dir)
     first = build_cube(spark, obs, out, CubeJobConfig(index_bands={}))
-    again, _, plans = in_job_group(
+    rec = in_job_group(
         "test_rebuild_reads_published_items_once",
         lambda: build_cube(spark, obs, out, CubeJobConfig(index_bands={})))
+    again, plans = rec.result, rec.plans()
     assert again["new_items"] == 0
     assert again["reused_items"] == first["new_items"] > 0
     scans_items = f"Location: InMemoryFileIndex [file:{os.path.join(out, 'items')}]"

@@ -9,11 +9,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from cube_builder_spark import corpus_queries as cq
+from cube_builder_spark.tables import local_df
 
 
 def _mini_docs(spark, rows):
-    return spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string,"
+    return local_df(
+        spark, rows, "doc_id long, text string, lang string, source string,"
               " n_chars long")
 
 
@@ -109,10 +110,10 @@ def test_repetition_profile_short_docs(spark, patched_docs):
 
 
 def test_tfidf_topterms_semantics(spark, patched_docs):
-    docs = spark.createDataFrame(
-        [(1, "apple apple banana common", "en", "s", 25),
-         (2, "cherry common", "en", "s", 13),
-         (3, "common date date date", "en", "s", 21)],
+    docs = local_df(
+        spark, [(1, "apple apple banana common", "en", "s", 25),
+                (2, "cherry common", "en", "s", 13),
+                (3, "common date date date", "en", "s", 21)],
         "doc_id long, text string, lang string, source string, n_chars long")
     patched_docs(docs)
     out = cq.t_tfidf_topterms(spark, "ignored")
@@ -131,8 +132,8 @@ def test_tfidf_topterms_semantics(spark, patched_docs):
 def test_inverted_index_cap_and_counts(spark, patched_docs):
     n = cq._POSTING_CAP + 7
     rows = [(i, "stop uniq%d" % i, "en", "s", 10) for i in range(n)]
-    patched_docs(spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string,"
+    patched_docs(local_df(
+        spark, rows, "doc_id long, text string, lang string, source string,"
               " n_chars long"))
     out = {r.term: r for r in
            cq.t_inverted_index(spark, "ignored").collect()}
@@ -187,8 +188,8 @@ def test_pii_scrub_redacts_everything(spark, sf_dir):
 
 def test_doc_chunks_cover_and_overlap(spark, patched_docs):
     text = " ".join(f"w{i}" for i in range(80))   # 80 tokens
-    patched_docs(spark.createDataFrame(
-        [(1, text, "en", "s", len(text)), (2, "a b", "en", "s", 3)],
+    patched_docs(local_df(
+        spark, [(1, text, "en", "s", len(text)), (2, "a b", "en", "s", 3)],
         "doc_id long, text string, lang string, source string,"
         " n_chars long"))
     rows = sorted(cq.p_doc_chunks(spark, "ignored").collect(),
@@ -213,9 +214,9 @@ def test_doc_chunks_cover_and_overlap(spark, patched_docs):
 
 
 def test_corpus_report_semantics(spark, patched_docs):
-    patched_docs(spark.createDataFrame(
-        [(1, "x y", "en", "s1", 3), (2, "x y", "en", "s1", 3),
-         (3, "z", "en", "s1", 1), (4, "q r s", "de", "s2", 5)],
+    patched_docs(local_df(
+        spark, [(1, "x y", "en", "s1", 3), (2, "x y", "en", "s1", 3),
+                (3, "z", "en", "s1", 1), (4, "q r s", "de", "s2", 5)],
         "doc_id long, text string, lang string, source string,"
         " n_chars long"))
     rows = {(r.lang, r.source): r
@@ -246,7 +247,7 @@ def test_repeated_spans_merges_and_caps(spark):
     from cube_builder_spark.functions.dedup import repeated_spans
 
     shared = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    docs = spark.createDataFrame([
+    docs = local_df(spark, [
         (1, f"one two three {shared} four five"),
         (2, f"{shared} six seven eight nine ten eleven"),
         (3, "completely different words with no overlap at all here ok"),
@@ -259,8 +260,8 @@ def test_repeated_spans_merges_and_caps(spark):
     assert got[2] == (1, 10, 3)
     assert 3 not in got
     # max_df cap: the same gram in 3 docs with max_df=2 is dropped
-    docs3 = spark.createDataFrame(
-        [(i, shared) for i in range(1, 4)], "doc_id long, text string")
+    docs3 = local_df(
+        spark, [(i, shared) for i in range(1, 4)], "doc_id long, text string")
     assert repeated_spans(docs3, k=8, max_df=2).collect() == []
     assert len(repeated_spans(docs3, k=8, max_df=3).collect()) == 3
 
@@ -274,7 +275,7 @@ def test_repeated_spans_distinct_islands(spark):
     run_a = "a1 a2 a3 a4 a5 a6 a7 a8"          # exactly one 8-gram
     run_b = "b1 b2 b3 b4 b5 b6 b7 b8"
     gap = " ".join(f"g{i}" for i in range(12))
-    docs = spark.createDataFrame([
+    docs = local_df(spark, [
         (1, f"{run_a} {gap} {run_b}"),
         (2, f"x0 {run_a} y0"),
         (3, f"z0 z1 {run_b}"),
@@ -294,7 +295,7 @@ def test_lm_doc_likelihood_hand_computed(spark, monkeypatch, tmp_path):
     doc of one-off transitions."""
     import cube_builder_spark.corpus_queries as cq
 
-    docs = spark.createDataFrame([
+    docs = local_df(spark, [
         (1, "a b a b"), (2, "a b c"), (3, "c a")],
         "doc_id long, text string")
     monkeypatch.setattr(cq, "_docs", lambda s, d: docs)
@@ -317,7 +318,7 @@ def test_dsir_importance_hand_computed(spark, monkeypatch):
     the hand-derived fixed-point ratios exactly."""
     import cube_builder_spark.corpus_queries as cq
 
-    docs = spark.createDataFrame([
+    docs = local_df(spark, [
         (1, "src1", "x y x y"),     # target doc: (x,y)x2 (y,x)x1
         (2, "src1", "x y"),         # target doc: (x,y)x1
         (3, "src9", "x y q"),       # raw doc sharing the target bigram
@@ -348,8 +349,8 @@ def test_token_budget_mix_caps_and_rates(spark, monkeypatch):
     import cube_builder_spark.pipeline_queries as pq
 
     # src1 (weight 40): tiny supply -> capped; src9 (weight 10): big
-    docs = spark.createDataFrame(
-        [(1, "src1", "a b c")]                     # 3 tokens
+    docs = local_df(
+        spark, [(1, "src1", "a b c")]              # 3 tokens
         + [(i, "src9", "w " * 9 + "w") for i in range(2, 12)],  # 10x10
         "doc_id long, source string, text string")
     monkeypatch.setattr(pq, "_docs", lambda s, d: docs)
@@ -378,8 +379,8 @@ def test_bpe_train_hand_computed_with_overlaps(spark, monkeypatch):
     iterations see merged symbols."""
     import cube_builder_spark.corpus_queries as cq
 
-    docs = spark.createDataFrame(
-        [(1, "aaaa ab"), (2, "aaaa"), (3, "ab ab")],
+    docs = local_df(
+        spark, [(1, "aaaa ab"), (2, "aaaa"), (3, "ab ab")],
         "doc_id long, text string")
     monkeypatch.setattr(cq, "_docs", lambda s, d: docs)
     monkeypatch.setattr(cq, "_BPE_K", 3)
@@ -402,8 +403,8 @@ def test_zonal_stats_exact_on_constructed_plane(spark, monkeypatch):
     rows = [(0, 0, 1, 10), (0, 63, 1, 30),     # zone 0
             (0, 64, 1, 100), (0, 70, 1, -9999),  # zone 1 (one nodata)
             (1, 5, 2, 7)]                      # other tile/doy
-    plane = spark.createDataFrame(
-        rows, "tile_id long, pixel_id long, doy long, value long")
+    plane = local_df(
+        spark, rows, "tile_id long, pixel_id long, doy long, value long")
     monkeypatch.setattr(cq, "pixel_plane", lambda s, d: plane)
     got = {(r.tile_id, r.zone_id, r.doy): r
            for r in cq.c25_zonal_stats(spark, "x").collect()}

@@ -309,14 +309,14 @@ def test_noop_warp_rebuild_reads_no_scene(spark, rerun_scenes, fresh_builds,
     out = _copy_of(fresh_builds, "warp", tmp_path)
     warped = _read_scenes(monkeypatch, "cube_builder_spark.operators.warp",
                           "warp_scenes")
-    again, jobs, plans = in_job_group(
-        "test_noop_warp_rebuild",
-        lambda: _build(spark, rerun_scenes, out, RERUN_TILES))
-    assert again == {"cube_path": os.path.join(out, "cube"),
+    rec = in_job_group("test_noop_warp_rebuild",
+                       lambda: _build(spark, rerun_scenes, out, RERUN_TILES))
+    plans = rec.plans()
+    assert rec.result == {"cube_path": os.path.join(out, "cube"),
                      "items_path": os.path.join(out, "items"),
                      "new_items": 0, "reused_items": 4}
     assert warped == []
-    assert 0 < len(jobs) <= 5 and plans
+    assert 0 < rec.construct_jobs <= 5 and plans
     assert not [p for p in plans
                 if re.search(r"InPandas|InArrow|EvalPython", p)]
     st = job_status(spark, out).first()

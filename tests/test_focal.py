@@ -8,10 +8,11 @@ from pyspark.sql import functions as F
 
 from cube_builder_spark.operators.focal import (
     focal_box_stats, focal_majority, pyramid_levels)
+from cube_builder_spark.tables import local_df
 
 
 def _cells(spark, rows, cols=("tile_id", "y", "x", "v")):
-    return spark.createDataFrame(rows, list(cols))
+    return local_df(spark, rows, ", ".join(f"{c} long" for c in cols))
 
 
 def test_focal_mean_full_grid_center_and_corner(spark):
@@ -114,7 +115,7 @@ def test_focal_gradients_ramp_and_flat(spark):
     # four interior cells have complete neighborhoods
     rows = [(0, y, x, 10 * x) for y in range(4) for x in range(4)]
     out = {(r.y, r.x): r for r in focal_gradients(
-        spark.createDataFrame(rows, ["tile_id", "y", "x", "v"]),
+        _cells(spark, rows),
         height=4, width=4).collect()}
     assert set(out) == {(1, 1), (1, 2), (2, 1), (2, 2)}
     for r in out.values():
@@ -123,14 +124,14 @@ def test_focal_gradients_ramp_and_flat(spark):
     # flat plane -> zero gradient
     flat = [(0, y, x, 7) for y in range(3) for x in range(3)]
     out2 = focal_gradients(
-        spark.createDataFrame(flat, ["tile_id", "y", "x", "v"]),
+        _cells(spark, flat),
         height=3, width=3).collect()
     assert len(out2) == 1 and (out2[0].gx, out2[0].gy) == (0, 0)
     # a nodata hole suppresses every cell whose kernel touches it
     holed = [(0, y, x, 1) for y in range(4) for x in range(4)
              if (y, x) != (1, 1)]
     out3 = focal_gradients(
-        spark.createDataFrame(holed, ["tile_id", "y", "x", "v"]),
+        _cells(spark, holed),
         height=4, width=4).collect()
     assert {(r.y, r.x) for r in out3} == set()
 
@@ -141,7 +142,7 @@ def test_focal_median_despeckle_and_even_count(spark):
     rows = [(0, y, x, 1000 if (y, x) == (1, 1) else 10)
             for y in range(3) for x in range(3)]
     out = {(r.y, r.x): r for r in focal_median(
-        spark.createDataFrame(rows, ["tile_id", "y", "x", "v"]),
+        _cells(spark, rows),
         height=3, width=3).collect()}
     assert (out[(1, 1)].median_v, out[(1, 1)].n_nbrs) == (10, 9)
     # corner sees [10, 10, 10, 1000] -> lower median (2nd of 4) = 10
@@ -149,7 +150,7 @@ def test_focal_median_despeckle_and_even_count(spark):
     # even-count lower-median rule on distinct values: [1,2,3,4] -> 2
     rows2 = [(0, 0, 0, 1), (0, 0, 1, 2), (0, 1, 0, 3), (0, 1, 1, 4)]
     out2 = {(r.y, r.x): r.median_v for r in focal_median(
-        spark.createDataFrame(rows2, ["tile_id", "y", "x", "v"]),
+        _cells(spark, rows2),
         height=2, width=2).collect()}
     assert out2 == {(0, 0): 2, (0, 1): 2, (1, 0): 2, (1, 1): 2}
 
@@ -157,7 +158,7 @@ def test_focal_median_despeckle_and_even_count(spark):
 # D8 flow routing (round 9) ----------------------------------------------------
 
 def _cells_df(spark, rows):
-    return spark.createDataFrame(rows, "tile_id long, y long, x long, v long")
+    return local_df(spark, rows, "tile_id long, y long, x long, v long")
 
 
 def test_flow_direction_ramp_and_ties(spark):
@@ -270,10 +271,9 @@ def test_flow_routing_matches_python_reference_random_grids(spark):
                 dy, dx = off[d]
                 cur = (cur[0] + dy, cur[1] + dx)
 
-        df = spark.createDataFrame(
-            [(0, y, x, v) for (y, x), v in cells.items()],
-            "tile_id long, y long, x long, v long")
-        dirs = flow_direction(df, h, w)
+        dirs = flow_direction(
+            _cells_df(spark, [(0, y, x, v) for (y, x), v in cells.items()]),
+            h, w)
         got_dir = {(r.y, r.x): r.fdir for r in dirs.collect()}
         assert got_dir == ref_dir, (trial, h, w)
         got_acc = {(r.y, r.x): r.acc
@@ -292,8 +292,8 @@ def test_region_metrics_hand_worked(spark):
 
     # square at (0..1, 0..1); lone cell at (5,5); L at (3,3),(4,3),(4,4)
     pts = [(0, 0), (0, 1), (1, 0), (1, 1), (5, 5), (3, 3), (4, 3), (4, 4)]
-    mask = spark.createDataFrame([(0, y, x) for y, x in pts],
-                                 "tile_id long, y long, x long")
+    mask = local_df(spark, [(0, y, x) for y, x in pts],
+                    "tile_id long, y long, x long")
     labels = label_regions(mask, height=_GRID_H, width=_GRID_W)
     sc = _scatter(mask.withColumn("v", F.lit(1)), 1, _GRID_H, _GRID_W, ["v"])
     ortho = sc.filter((F.abs(F.col("o_dy")) + F.abs(F.col("o_dx"))) == 1)
@@ -320,7 +320,7 @@ def test_min_distance_transform_vs_bruteforce(spark):
     src = {(0, 0), (3, 5), (7, 2)}
     rows = [(0, y, x, (y, x) in src) for y in range(H) for x in range(W)]
     out = {(r.y, r.x): r.dist2 for r in min_distance_transform(
-        spark.createDataFrame(rows, ["tile_id", "y", "x", "src"]),
+        local_df(spark, rows, "tile_id long, y long, x long, src boolean"),
         radius=2, height=H, width=W).collect()}
     assert len(out) == H * W
     for y in range(H):
@@ -339,7 +339,7 @@ def test_min_distance_transform_tiles_do_not_leak(spark):
     from cube_builder_spark.operators.focal import min_distance_transform
     rows = [(0, 0, 0, True), (1, 0, 1, False)]
     out = {(r.tile_id, r.y, r.x): r.dist2 for r in min_distance_transform(
-        spark.createDataFrame(rows, ["tile_id", "y", "x", "src"]),
+        local_df(spark, rows, "tile_id long, y long, x long, src boolean"),
         radius=3).collect()}
     assert out[(0, 0, 0)] == 0
     assert out[(1, 0, 1)] == 49          # sentinel: no source in ITS tile
@@ -349,7 +349,8 @@ def test_min_distance_transform_keeps_passenger_columns(spark):
     from cube_builder_spark.operators.focal import min_distance_transform
     rows = [(0, 0, 0, True, 7), (0, 0, 1, False, 9)]
     out = min_distance_transform(
-        spark.createDataFrame(rows, ["tile_id", "y", "x", "src", "c"]),
+        local_df(spark, rows,
+                 "tile_id long, y long, x long, src boolean, c long"),
         radius=1, sentinel=99)
     got = {(r.y, r.x): (r.c, r.dist2) for r in out.collect()}
     assert got == {(0, 0): (7, 0), (0, 1): (9, 1)}

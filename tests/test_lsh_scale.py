@@ -172,11 +172,10 @@ def test_dup_clusters_early_stop_saves_jobs(spark, in_job_group):
     jobs, compares = {}, {}
     for name, edge_pairs in [("clique", clique), ("chain", chain)]:
         pairs = local_df(spark, edge_pairs, "doc_a long, doc_b long")
-        _, ids, plans = in_job_group(
-            f"dup_clusters_{name}",
-            lambda: dedup.dup_clusters(pairs, iters=6))
-        jobs[name] = len(ids)
-        compares[name] = sum("_side" in p for p in plans)
+        rec = in_job_group(f"dup_clusters_{name}",
+                           lambda: dedup.dup_clusters(pairs, iters=6))
+        jobs[name] = rec.construct_jobs
+        compares[name] = sum("_side" in p for p in rec.plans())
     assert jobs["clique"] < jobs["chain"], jobs
     assert compares == {"clique": 1, "chain": 1}, compares
 

@@ -1,11 +1,16 @@
-"""Execution-metrics introspection: scan rows, shuffle volume, spill."""
+"""Execution-metrics introspection: scan rows, shuffle volume, spill,
+and the per-query recorder."""
 
 from __future__ import annotations
 
+import dataclasses
+
+import pytest
 from pyspark.sql import functions as F
 
-from cube_builder_spark.metrics import (collect_metrics, metric_total,
-                                        shuffle_bytes, spill_bytes)
+from cube_builder_spark.metrics import (Record, collect_metrics,
+                                        metric_total, record, shuffle_bytes,
+                                        spill_bytes)
 from cube_builder_spark.tables import load_tables
 
 
@@ -41,3 +46,42 @@ def test_broadcast_join_reports_no_big_shuffle(spark, sf_dir):
     j.collect()
     # broadcast join: shuffle volume limited to the final 1-row agg
     assert shuffle_bytes(j) < 1 << 16
+
+
+# --- metrics.record: the one per-query recorder ----------------------------
+
+def _checkpointed(spark):
+    return spark.range(0, 64, 1, 4).localCheckpoint(eager=True)
+
+
+def test_record_schema_and_phase_job_counts(spark):
+    assert [f.name for f in dataclasses.fields(Record)
+            if not f.name.startswith("_")] == [
+        "result", "construct_s", "action_s", "construct_jobs",
+        "action_jobs", "compiles"]
+    rec = record(spark, "test_record_schema", lambda: _checkpointed(spark),
+                 lambda df: df.collect())
+    assert rec.construct_jobs == 1
+    assert rec.action_jobs >= 1
+    assert len(rec.result) == 64
+    assert rec.construct_s > 0 and rec.action_s > 0 and rec.compiles >= 0
+    assert rec.plans()
+    built = record(spark, "test_record_no_action", lambda: _checkpointed(spark))
+    assert (built.action_s, built.action_jobs) == (0.0, 0)
+    assert built.result.count() == 64
+
+
+def test_record_clears_the_job_group_when_the_build_raises(spark):
+    def build():
+        raise ValueError("boom")
+    with pytest.raises(ValueError):
+        record(spark, "test_record_raises", build)
+    assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None
+
+
+def test_second_record_under_one_name_counts_only_its_own_jobs(spark):
+    first = record(spark, "test_record_twice", lambda: _checkpointed(spark),
+                   lambda df: df.collect())
+    second = record(spark, "test_record_twice", lambda: _checkpointed(spark))
+    assert first.construct_jobs == second.construct_jobs == 1
+    assert second.action_jobs == 0

@@ -16,11 +16,12 @@ from pyspark.sql import functions as F
 
 from cube_builder_spark.functions.ranking import (exact_global_ntile,
                                                   global_rank, ntile_expr)
+from cube_builder_spark.tables import local_df
 
 
 def test_global_rank_matches_single_partition(spark):
     rows = [(i, (i * 7919) % 101, (i * 104729) % 7) for i in range(500)]
-    df = spark.createDataFrame(rows, "id long, v long, g long")
+    df = local_df(spark, rows, "id long, v long, g long")
     order = [F.col("v").desc(), F.col("id").asc()]
     got = {r["id"]: r["_gr"]
            for r in global_rank(df, order, 8).collect()}
@@ -33,7 +34,7 @@ def test_global_rank_matches_single_partition(spark):
 def test_ntile_expr_matches_sql_ntile(spark):
     for n, k in [(1, 4), (3, 4), (4, 4), (5, 4), (103, 4), (100, 7),
                  (2, 5), (6, 3)]:
-        df = spark.createDataFrame([(i,) for i in range(1, n + 1)],
+        df = local_df(spark, [(i,) for i in range(1, n + 1)],
                                    "r long")
         got = (df.withColumn("_n", F.lit(n).cast("long"))
                .select("r", ntile_expr("r", "_n", k).alias("t"))
@@ -47,7 +48,7 @@ def test_ntile_expr_matches_sql_ntile(spark):
 
 def test_exact_global_ntile_end_to_end(spark):
     rows = [(i, (i * 31) % 17) for i in range(97)]
-    df = spark.createDataFrame(rows, "id long, v long")
+    df = local_df(spark, rows, "id long, v long")
     order = [F.col("v").asc(), F.col("id").asc()]
     got = {r["id"]: r["q"]
            for r in exact_global_ntile(df, order, 4, 8, "q").collect()}
@@ -128,7 +129,7 @@ def test_global_rank_hypothesis_fuzz(spark):
     )
     def check(vals, n_parts):
         rows = [(i, v) for i, v in enumerate(vals)]
-        df = spark.createDataFrame(rows, "id long, v long")
+        df = local_df(spark, rows, "id long, v long")
         order = [F.col("v").desc(), F.col("id").asc()]
         got = {r["id"]: (r["_gr"], r["_n"])
                for r in global_rank(df, order, n_parts).collect()}
@@ -151,7 +152,7 @@ def test_global_rank_durable_equals_checkpoint_path(spark):
     before the parquet write) while reading from files, not an
     ExistingRDD."""
     rows = [(i, (i * 7919) % 101) for i in range(500)]
-    df = spark.createDataFrame(rows, "id long, v long")
+    df = local_df(spark, rows, "id long, v long")
     order = [F.col("v").desc(), F.col("id").asc()]
     ckpt = global_rank(df, order, 8)
     dur = global_rank(df, order, 8, durable=True)
@@ -166,7 +167,7 @@ def test_global_rank_durable_equals_checkpoint_path(spark):
 
 def test_exact_global_ntile_durable_passthrough(spark):
     rows = [(i, (i * 31) % 17) for i in range(97)]
-    df = spark.createDataFrame(rows, "id long, v long")
+    df = local_df(spark, rows, "id long, v long")
     order = [F.col("v").asc(), F.col("id").asc()]
     got = sorted(map(tuple, exact_global_ntile(
         df, order, 4, 8, "q", durable=True).select("id", "q").collect()))
@@ -185,7 +186,7 @@ def test_global_rank_durable_honors_session_scratch_root(spark, tmp_path):
     from cube_builder_spark import session as sess
 
     rows = [(i, (i * 13) % 29) for i in range(200)]
-    df = spark.createDataFrame(rows, "id long, v long")
+    df = local_df(spark, rows, "id long, v long")
     order = [F.col("v").asc(), F.col("id").asc()]
     root = str(tmp_path / "shared-scratch")
     import os
@@ -227,7 +228,7 @@ def test_global_cumsum_equals_single_partition_window(spark):
     from cube_builder_spark.functions.ranking import global_cumsum
 
     rows = [(i, (i * 7919) % 101, 1 + (i * 13) % 37) for i in range(700)]
-    df = spark.createDataFrame(rows, "id long, v long, w long")
+    df = local_df(spark, rows, "id long, v long, w long")
     order = [F.col("v").desc(), F.col("id").asc()]
     got = {r.id: r.cum for r in global_cumsum(df, order, "w", 8,
                                               out="cum").collect()}

@@ -147,10 +147,9 @@ def main() -> None:
         raise SystemExit(f"unknown queries: {missing}")
 
     spark = get_spark()
-    # warm the Python workers once so the first pandas-UDF query at the
-    # small scale doesn't carry the ~3s spawn cost into its slope
-    spark.range(32).repartition(32).selectExpr("id").mapInPandas(
-        lambda it: it, "id long").count()
+    # the first pandas-UDF query at the small scale must not carry the
+    # worker spawn cost into its slope
+    metrics.warm_python_workers(spark)
 
     record: dict = {"metric": "scale_slope_10x", "unit": "ratio",
                     "small_dir": args.small, "big_dir": args.big,

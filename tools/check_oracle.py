@@ -1,6 +1,9 @@
 """Local replica of the driver's DuckDB-oracle correctness gate.
 
 Usage: python tools/check_oracle.py [sf_dir] [query_name ...]
+
+Each query is built and checked as one ``metrics.record`` under a job
+group named after it.
 """
 
 from __future__ import annotations
@@ -10,6 +13,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from cube_builder_spark.metrics import record
 from cube_builder_spark.oracle import compare, duckdb_connection
 from cube_builder_spark.queries import all_oracles, all_queries
 
@@ -42,27 +46,24 @@ def main():
     for name, fn in sorted(queries.items()):
         if only and name not in only:
             continue
+
+        def check(sdf):
+            try:
+                if name not in oracles:
+                    return f"SKIP {name}: no oracle (rows-only: {sdf.count()} rows)"
+                problems = compare(sdf, con, oracles[name])
+            except Exception as e:
+                return f"FAIL {name}: {e}"
+            if problems:
+                return f"FAIL {name}: " + "; ".join(problems)
+            return f"PASS {name}"
         try:
-            sdf = fn(spark, sf_dir)
+            line = record(spark, name, lambda: fn(spark, sf_dir), check).result
         except Exception as e:
-            print(f"FAIL {name}: spark build error: {e}")
-            n_fail += 1
-            continue
-        if name not in oracles:
-            print(f"SKIP {name}: no oracle (rows-only: {sdf.count()} rows)")
-            continue
-        try:
-            problems = compare(sdf, con, oracles[name])
-        except Exception as e:
-            print(f"FAIL {name}: {e}")
-            n_fail += 1
-            continue
-        if problems:
-            print(f"FAIL {name}: " + "; ".join(problems))
-            n_fail += 1
-        else:
-            print(f"PASS {name}")
-            n_pass += 1
+            line = f"FAIL {name}: spark build error: {e}"
+        print(line)
+        n_pass += line.startswith("PASS")
+        n_fail += line.startswith("FAIL")
     print(f"\n{n_pass} passed, {n_fail} failed")
     sys.exit(1 if n_fail else 0)
 

@@ -6,19 +6,19 @@ Usage:
   python tools/perf_probe.py noop  N   q1 q2 ...   # min-of-N wall (noop sink, isolates compute from collect)
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
-Each run is one job group named after the query; the fastest run's job
-count and its number of generated classes compiled (the CodegenMetrics
-count delta: 0 when every class came from the codegen cache) are printed.
+Each run is one ``metrics.record`` under a job group named after the
+query; the fastest run's job count and its number of generated classes
+compiled (0 when every class came from the codegen cache) are printed.
 """
 
 from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from cube_builder_spark.metrics import record, warm_python_workers
 from cube_builder_spark.queries import all_queries
 from cube_builder_spark.session import get_spark
 
@@ -44,39 +44,24 @@ def main() -> None:
         return
 
     n_runs = int(arg2)
-    # warm JVM + python workers like bench.py does
+    # warm the JVM and the Python workers like bench.py does
     qs[names[0]](spark, sf_dir).collect()
+    warm_python_workers(spark)
 
-    def _identity(it):
-        yield from it
-    spark.range(256).repartition(32).mapInPandas(_identity, "id long").count()
+    def action(df):  # the rows are dropped: only the time counts
+        if mode == "noop":
+            df.write.format("noop").mode("overwrite").save()
+        else:
+            df.collect()
 
-    sc = spark.sparkContext
-    compiled = sc._jvm.org.apache.spark.metrics.source \
-        .CodegenMetrics.METRIC_COMPILATION_TIME()
     for n in names:
-        runs, jobs, compiles, seen = [], [], [], set()
-        for _ in range(n_runs):
-            sc.setJobGroup(n, n)
-            c0 = compiled.getCount()
-            t0 = time.perf_counter()
-            df = qs[n](spark, sf_dir)
-            if mode == "noop":
-                df.write.format("noop").mode("overwrite").save()
-            else:
-                df.collect()
-            runs.append(round(time.perf_counter() - t0, 4))
-            compiles.append(compiled.getCount() - c0)
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc._jsc.sc().listenerBus().waitUntilEmpty()
-            # a set difference: spark.ui.retainedJobs evicts old jobs
-            ids = set(sc.statusTracker().getJobIdsForGroup(n))
-            jobs.append(len(ids - seen))
-            seen |= ids
-        fastest = runs.index(min(runs))
-        print(f"{n}: min={min(runs):.3f} jobs={jobs[fastest]} "
-              f"compiles={compiles[fastest]} runs={runs}")
-
+        recs = [record(spark, n, lambda: qs[n](spark, sf_dir), action)
+                for _ in range(n_runs)]
+        runs = [round(r.construct_s + r.action_s, 4) for r in recs]
+        fastest = recs[runs.index(min(runs))]
+        print(f"{n}: min={min(runs):.3f} "
+              f"jobs={fastest.construct_jobs + fastest.action_jobs} "
+              f"compiles={fastest.compiles} runs={runs}")
 
 if __name__ == "__main__":
     main()
